@@ -27,6 +27,18 @@ ENGINE_CONF: dict[str, str] = {
     "spark.sql.shuffle.partitions": "32",
     "spark.sql.autoBroadcastJoinThreshold": "64m",
     "spark.sql.streaming.stateStore.stateSchemaCheck": "true",
+    # All checkpoint I/O (offset/commit/source logs, state stores,
+    # operator metadata) goes through the Hadoop FileSystem API. The
+    # default FileContext manager renames via getFileLinkStatus, which
+    # on file:// shells out `readlink` per call (~4x the process spawns
+    # per checkpoint file). Same on-disk layout, so old checkpoints
+    # resume; on file:// both managers check-then-rename. Keep the
+    # checksummed LocalFileSystem (RawLocalFileSystem drops .crc
+    # verification). Chosen for file:// checkpoints only: HDFS or
+    # object-store deployments must re-evaluate it (SCALE.md §3).
+    "spark.sql.streaming.checkpointFileManagerClass":
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager",
     "spark.serializer": "org.apache.spark.serializer.KryoSerializer",
     "spark.ui.enabled": "false",
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
@@ -144,7 +156,8 @@ def tune_session(spark: SparkSession) -> SparkSession:
     """
     for k in ("spark.sql.session.timeZone",
               "spark.sql.adaptive.enabled",
-              "spark.sql.execution.arrow.pyspark.enabled"):
+              "spark.sql.execution.arrow.pyspark.enabled",
+              "spark.sql.streaming.checkpointFileManagerClass"):
         try:
             spark.conf.set(k, ENGINE_CONF[k])
         except Exception:

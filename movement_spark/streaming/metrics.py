@@ -12,6 +12,7 @@ df.observe() metrics flowing through QueryProgress.observedMetrics.
 from __future__ import annotations
 
 import json
+import os
 import time
 from dataclasses import dataclass, field
 
@@ -44,6 +45,47 @@ def with_lineage(df: DataFrame) -> DataFrame:
     return df2.withColumn("_partition_id", cols[0])
 
 
+def _jvm_pid() -> int | None:
+    """Pid of the Spark JVM when this process launched it as a child
+    (classic local PySpark); None for a JVM it did not start."""
+    from pyspark import SparkContext
+
+    pid = getattr(getattr(SparkContext._gateway, "proc", None), "pid", None)
+    if pid is None:
+        return None
+    try:
+        with open(f"/proc/{pid}/stat") as f:
+            ppid = int(f.read().rsplit(")", 1)[1].split()[1])
+    except OSError:
+        return None
+    return pid if ppid == os.getpid() else None
+
+
+def _spawn_counters(pid: int | None) -> tuple[int, int] | None:
+    """(reaped-child CPU ticks of ``pid``, host fork count) now, or None.
+
+    The first is ``cutime + cstime`` from /proc/<pid>/stat: CPU of the
+    children the JVM has waited for — the commands it forks (Hadoop's
+    local file system shells out ``chmod``/``readlink``). PySpark's
+    Python daemon outlives the query, so its workers are not in it. The
+    second is the ``processes`` line of /proc/stat: forks since boot,
+    counted host-wide (every process on the machine, not only ours)."""
+    if pid is None:
+        return None
+    try:
+        with open(f"/proc/{pid}/stat") as f:
+            fields = f.read().rsplit(")", 1)[1].split()
+        with open("/proc/stat") as f:
+            forks = next(int(line.split()[1]) for line in f
+                         if line.startswith("processes "))
+    except (OSError, StopIteration):
+        return None
+    return int(fields[13]) + int(fields[14]), forks
+
+
+_CLK_TCK = os.sysconf("SC_CLK_TCK")
+
+
 @dataclass
 class ProgressRecord:
     batch_id: int
@@ -63,12 +105,17 @@ class RuntimeMetricsListener(StreamingQueryListener):
     def __init__(self, log: bool = False):
         self.records: list[ProgressRecord] = []
         self.total_rows = 0
-        self.started_at = time.time()
         self._log = log
+        self._mark_start()
+
+    def _mark_start(self):
+        self.started_at = time.time()
+        self._jvm_pid = _jvm_pid()
+        self._spawns_at_start = _spawn_counters(self._jvm_pid)
 
     # StreamingQueryListener interface ---------------------------------
     def onQueryStarted(self, event):
-        self.started_at = time.time()
+        self._mark_start()
 
     def onQueryProgress(self, event):
         p = json.loads(event.progress.json)
@@ -103,7 +150,17 @@ class RuntimeMetricsListener(StreamingQueryListener):
 
     # StatusMonitor-style summary ---------------------------------------
     def summary(self) -> dict:
+        """Totals since query start. ``forked_cpu_s`` is the CPU of the
+        commands the Spark JVM forked and reaped; ``forks`` counts
+        process spawns HOST-WIDE (other work on the machine adds to
+        it). Both are None when the JVM is not a local child process."""
         elapsed = max(time.time() - self.started_at, 1e-9)
+        start, now = self._spawns_at_start, _spawn_counters(self._jvm_pid)
+        if start is None or now is None:
+            forked_cpu_s = forks = None
+        else:
+            forked_cpu_s = (now[0] - start[0]) / _CLK_TCK
+            forks = now[1] - start[1]
         return {
             "io_ops": self.total_rows,
             "batches": len(self.records),
@@ -113,4 +170,6 @@ class RuntimeMetricsListener(StreamingQueryListener):
                                   default=0),
             "rows_dropped_late": sum(r.rows_dropped_late
                                      for r in self.records),
+            "forked_cpu_s": forked_cpu_s,
+            "forks": forks,
         }

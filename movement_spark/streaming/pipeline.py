@@ -1790,19 +1790,22 @@ def run_streaming_neardup_monitor(spark: SparkSession, sf_dir: str,
 
     if sig_mode == "staged":
         stage = _resolve_stage(spark, sf_dir, stage_dir, "ndsig")
-        # fail FAST on a sig-free stage: parquet schema projection
+        # fail FAST on a sig-free stage file: parquet schema projection
         # would silently read the missing column as NULL for every
         # row, collapsing each (window, source) into one giant "dup"
-        # group — plausible-looking, completely wrong output
-        sample = next((f for f in sorted(os.listdir(stage))
-                       if f.endswith(".parquet")), None)
-        if sample is not None and "sig" not in {
-                f.name for f in pq.ParquetFile(
-                    os.path.join(stage, sample)).schema_arrow}:
+        # group — plausible-looking, completely wrong output. EVERY
+        # file's footer is checked (footers only, cheap): one sig-free
+        # file among signature files is just as wrong, and a dataset-
+        # level schema reflects only the first file.
+        sig_free = [f for f in sorted(os.listdir(stage))
+                    if f.endswith(".parquet") and "sig" not in
+                    pq.read_schema(os.path.join(stage, f)).names]
+        if sig_free:
             raise ValueError(
                 f"sig_mode='staged' needs a signature-enriched stage "
-                f"(with_sig=True / 'ndsig' variant); {stage} has no "
-                f"'sig' column")
+                f"(with_sig=True / 'ndsig' variant); {stage} has "
+                f"{len(sig_free)} file(s) with no 'sig' column, e.g. "
+                f"{sig_free[0]}")
         src = read_token_stream(spark, stage, files_per_trigger,
                                 schema=NDSIG_STREAM_SCHEMA)
         sig_col = F.col("sig")

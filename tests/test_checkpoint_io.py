@@ -1,0 +1,199 @@
+"""Checkpoint I/O path: which file manager writes the checkpoint, what it
+costs in forked processes, and exactly-once across real SIGKILLs.
+
+Every streaming checkpoint file (offset and commit logs, source logs,
+state-store deltas, operator metadata) goes through the checkpoint file
+manager ENGINE_CONF pins. These tests pin that choice, bound its process
+spawns, kill a stateful pipeline's whole process group inside
+foreachBatch and resume it, and resume a checkpoint written under
+Spark's default manager.
+"""
+
+import os
+import shutil
+import signal
+import subprocess
+import sys
+import tempfile
+
+import pyarrow.parquet as pq
+import pytest
+
+from movement_spark.streaming.metrics import RuntimeMetricsListener
+from movement_spark.streaming.pipeline import (
+    run_streaming_dedup_join_window, stage_token_stream)
+
+CHILD = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                     "sigkill_child.py")
+MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
+_PKG = "org.apache.spark.sql.execution.streaming.checkpointing."
+# spelled out, not imported from session.py: the tripwire must trip when
+# the engine's setting changes
+FILE_SYSTEM_MANAGER = _PKG + "FileSystemBasedCheckpointFileManager"
+FILE_CONTEXT_MANAGER = _PKG + "FileContextBasedCheckpointFileManager"
+# Process spawns per checkpoint file written, on one dedup_join drain:
+# ~10.6 under the FileContext manager (a `readlink` per status call plus
+# a `chmod` per created file), ~2.7 under the FileSystem one (`chmod`
+# only). The bound sits between them; the count is host-wide, so other
+# work on the machine can only push a drain toward failing, not passing.
+MAX_SPAWNS_PER_CHECKPOINT_FILE = 6.0
+
+
+def _mkdir():
+    return tempfile.mkdtemp(prefix="ms_ckio_")
+
+
+def _manager(spark, path: str):
+    """The manager Spark builds for a checkpoint at ``path`` from this
+    session's Hadoop conf — the call every checkpoint writer makes."""
+    jvm = spark._jvm
+    return (jvm.org.apache.spark.sql.execution.streaming.checkpointing
+            .CheckpointFileManager.create(
+                jvm.org.apache.hadoop.fs.Path(path),
+                spark._jsparkSession.sessionState().newHadoopConf()))
+
+
+def _manager_class(spark, path: str) -> str:
+    return _manager(spark, path).getClass().getName()
+
+
+def _rows(df) -> list[tuple]:
+    return sorted(tuple(r) for r in df.collect())
+
+
+def _committed_rows(sink_dir: str) -> int:
+    """Physical rows across the sink's committed epochs: a replayed
+    batch that landed twice would count twice here even where the
+    keyed merge-on-read hides it."""
+    return sum(
+        pq.ParquetDataset(os.path.join(sink_dir, d)).read(columns=[]).num_rows
+        for d in os.listdir(sink_dir)
+        if d.startswith("epoch=")
+        and os.path.exists(os.path.join(sink_dir, d, "_SUCCESS")))
+
+
+def _n_files(d: str) -> int:
+    return sum(len(files) for _, _, files in os.walk(d))
+
+
+@pytest.fixture(scope="module")
+def dup_stage(spark, sf_dir):
+    """The benchmark's shape at fixture scale: every chunk staged
+    twice (at-least-once delivery) for the dedup → join → window
+    chain."""
+    stage = _mkdir()
+    stage_token_stream(spark, sf_dir, stage, duplicate_factor=2)
+    return stage
+
+
+@pytest.fixture(scope="module")
+def clean(spark, sf_dir, dup_stage):
+    """The uninterrupted run's sink contents."""
+    return _rows(run_streaming_dedup_join_window(
+        spark, sf_dir, stage_dir=dup_stage, sink_dir=_mkdir(),
+        checkpoint_dir=_mkdir()))
+
+
+def test_session_uses_filesystem_checkpoint_manager(spark):
+    """Tripwire: the manager every checkpoint writer gets from this
+    session is the FileSystem-based one, and the files it writes are
+    checksummed (a .crc sidecar — RawLocalFileSystem would drop it)."""
+    d = _mkdir()
+    assert _manager_class(spark, d) == FILE_SYSTEM_MANAGER
+    out = _manager(spark, d).createAtomic(
+        spark._jvm.org.apache.hadoop.fs.Path(os.path.join(d, "0")), False)
+    out.write(7)
+    out.close()
+    assert sorted(os.listdir(d)) == [".0.crc", "0"]
+
+
+def test_checkpoint_writes_spawn_few_processes(spark, sf_dir, dup_stage):
+    """Tripwire: a stateful drain's process spawns per checkpoint file
+    written stay below the bound that separates the FileSystem manager
+    from the FileContext one, as the listener's engine-side counters
+    report them."""
+    lst, ck = RuntimeMetricsListener(), _mkdir()
+    run_streaming_dedup_join_window(spark, sf_dir, stage_dir=dup_stage,
+                                    sink_dir=_mkdir(), checkpoint_dir=ck,
+                                    listener=lst)
+    s = lst.summary()
+    assert s["forked_cpu_s"] is not None and s["forked_cpu_s"] >= 0
+    n_files = _n_files(ck)
+    assert n_files > 100, n_files  # three state stores x 8 partitions
+    assert s["forks"] / n_files < MAX_SPAWNS_PER_CHECKPOINT_FILE, \
+        (s["forks"], n_files)
+
+
+def _reap_group(pgid: int) -> None:
+    """SIGKILL whatever is left in the process group (nothing, when the
+    child's own kill landed)."""
+    try:
+        os.killpg(pgid, signal.SIGKILL)
+    except ProcessLookupError:
+        pass
+
+
+@pytest.mark.parametrize("point", ["before_write", "after_write"])
+def test_sigkill_in_foreach_batch_resumes_exactly_once(spark, sf_dir,
+                                                       dup_stage, clean,
+                                                       point):
+    """A real crash: the pipeline runs in a child process that SIGKILLs
+    its whole process group (Python process and Spark JVM) inside
+    foreachBatch of the flush batch — before the sink's epoch write, or
+    after it but before the commit log. Resuming here on the same stage,
+    sink and checkpoint must give the clean run's result, with every
+    window written once."""
+    sink_dir, ck = _mkdir(), _mkdir()
+    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g")
+    with tempfile.TemporaryFile() as err:
+        proc = subprocess.Popen(
+            [sys.executable, CHILD, dup_stage, sink_dir, ck, point, "1"],
+            start_new_session=True, env=env, stdout=subprocess.DEVNULL,
+            stderr=err)
+        try:
+            rc = proc.wait(timeout=600)
+        finally:
+            _reap_group(proc.pid)
+        err.seek(0)
+        assert rc == -signal.SIGKILL, err.read()[-4000:].decode(
+            errors="replace")
+    # the kill landed where it was aimed: batch 1 planned, not committed,
+    # and its epoch written only when killed after the write
+    assert os.path.exists(os.path.join(ck, "offsets", "1"))
+    assert not os.path.exists(os.path.join(ck, "commits", "1"))
+    assert os.path.exists(os.path.join(sink_dir, "epoch=1", "_SUCCESS")) \
+        == (point == "after_write")
+    got = _rows(run_streaming_dedup_join_window(
+        spark, sf_dir, stage_dir=dup_stage, sink_dir=sink_dir,
+        checkpoint_dir=ck))
+    assert got == clean
+    assert _committed_rows(sink_dir) == len(clean)
+
+
+def test_filecontext_checkpoint_resumes_under_filesystem_manager(
+        spark, sf_dir, dup_stage, clean):
+    """The on-disk layout is the same under both managers: a checkpoint
+    (offset/commit logs, state-store deltas and their checksum files)
+    written by Spark's default FileContext manager over the first half
+    of the stage resumes under the FileSystem manager over the rest and
+    gives the clean run's result."""
+    files = sorted(os.listdir(dup_stage))
+    stage, sink_dir, ck = _mkdir(), _mkdir(), _mkdir()
+    for f in files[: len(files) // 2]:
+        shutil.copy2(os.path.join(dup_stage, f), os.path.join(stage, f))
+    engine_manager = spark.conf.get(MANAGER_CONF)
+    spark.conf.set(MANAGER_CONF, FILE_CONTEXT_MANAGER)
+    try:
+        assert _manager_class(spark, ck) == FILE_CONTEXT_MANAGER
+        run_streaming_dedup_join_window(spark, sf_dir, stage_dir=stage,
+                                        sink_dir=sink_dir, checkpoint_dir=ck)
+    finally:
+        spark.conf.set(MANAGER_CONF, engine_manager)
+    assert _manager_class(spark, ck) == FILE_SYSTEM_MANAGER
+    for f in files[len(files) // 2:]:
+        shutil.copy2(os.path.join(dup_stage, f), os.path.join(stage, f))
+    got = _rows(run_streaming_dedup_join_window(
+        spark, sf_dir, stage_dir=stage, sink_dir=sink_dir,
+        checkpoint_dir=ck))
+    assert got == clean
+    assert _committed_rows(sink_dir) == len(clean)

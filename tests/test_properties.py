@@ -255,13 +255,39 @@ def test_duplicate_ngram_coverage_matches_model(spark, seed):
     assert got == expected
 
 
+def _doc_id(d, null_at):
+    """Generated doc_id: index ``null_at`` is a NULL doc_id."""
+    return None if d == null_at else f"d{d}"
+
+
+def _scrub_manifest(rows, covered):
+    """Per-source (n_docs, total, docs_scrubbed, removed, bps) of a
+    scrub model's covered (source, doc, seq, pos) set; every source
+    present, bps = removed*10000 // max(total, 1). Doc counts skip a
+    NULL doc_id, as the operators' countDistinct does."""
+    from collections import defaultdict
+
+    per_src = defaultdict(lambda: [set(), 0, set(), 0])
+    for source, doc, seq, toks in rows:
+        st = per_src[source]
+        st[0].add(doc)
+        st[1] += len(toks)
+    for source, doc, seq, pos in covered:
+        st = per_src[source]
+        st[2].add(doc)
+        st[3] += 1
+    return {s: (len(d - {None}), t, len(ds - {None}), r,
+                r * 10000 // max(t, 1))
+            for s, (d, t, ds, r) in per_src.items()}
+
+
 def _model_exsub(rows, k):
     """Pure-Python exact_substring_scrub: a position is removed iff
     some k-gram instance covering it has >= 2 EXACT occurrences
     corpus-wide (instance count — the Lee-et-al. reduction); per-source
     (n_docs, total, docs_scrubbed, removed, bps) with every source
     present and bps = removed*10000 // max(total, 1)."""
-    from collections import Counter, defaultdict
+    from collections import Counter
 
     grams = Counter()
     inst = []
@@ -275,17 +301,7 @@ def _model_exsub(rows, k):
         if grams[g] >= 2:
             covered.update((source, doc, seq, pos)
                            for pos in range(p, p + k))
-    per_src = defaultdict(lambda: [set(), 0, set(), 0])
-    for source, doc, seq, toks in rows:
-        st = per_src[source]
-        st[0].add(doc)
-        st[1] += len(toks)
-    for source, doc, seq, pos in covered:
-        st = per_src[source]
-        st[2].add(doc)
-        st[3] += 1
-    return {s: (len(d), t, len(ds), r, r * 10000 // max(t, 1))
-            for s, (d, t, ds, r) in per_src.items()}
+    return _scrub_manifest(rows, covered)
 
 
 @SET
@@ -302,8 +318,10 @@ def test_exact_substring_scrub_matches_model(spark, seed):
     from movement_spark.operators.dedup import exact_substring_scrub
 
     rng = random.Random(seed)
+    # doc index 3 is a NULL doc_id: its positions scrub like any
+    # other shard's, but countDistinct never counts it as a doc
     rows = [
-        (f"s{rng.randrange(2)}", f"d{rng.randrange(3)}", i,
+        (f"s{rng.randrange(2)}", _doc_id(rng.randrange(4), null_at=3), i,
          [rng.randrange(3) for _ in range(rng.randrange(8))])
         for i in range(rng.randrange(1, 7))
     ]
@@ -339,17 +357,7 @@ def _model_span_scrub(rows):
         if len(docs_per_gram[g]) >= 2:
             covered.update((source, doc, seq, pos)
                            for pos in range(p, p + 3))
-    per_src = defaultdict(lambda: [set(), 0, set(), 0])
-    for source, doc, seq, toks in rows:
-        st = per_src[source]
-        st[0].add(doc)
-        st[1] += len(toks)
-    for source, doc, seq, pos in covered:
-        st = per_src[source]
-        st[2].add(doc)
-        st[3] += 1
-    return {s: (len(d), t, len(ds), r, r * 10000 // max(t, 1))
-            for s, (d, t, ds, r) in per_src.items()}
+    return _scrub_manifest(rows, covered)
 
 
 @SET
@@ -370,8 +378,8 @@ def test_dup_span_scrub_matches_model(spark, seed):
     # only under that invariant
     rows = []
     for i in range(rng.randrange(1, 7)):
-        d = rng.randrange(4)
-        rows.append((f"s{d % 2}", f"d{d}", i,
+        d = rng.randrange(5)  # d=4: a NULL doc_id (one census group)
+        rows.append((f"s{d % 2}", _doc_id(d, null_at=4), i,
                      [rng.randrange(4) for _ in range(rng.randrange(8))]))
     expected = _model_span_scrub(rows)
     toks = spark.createDataFrame(

@@ -337,6 +337,9 @@ def test_metrics_listener_counts_rows(spark, sf_dir):
     # auto trigger pacing: all-but-last files, then the final sentinel
     assert s["batches"] >= 2
     assert s["avg_rows_per_sec"] > 0
+    # spawn attribution: the test session's JVM is this process's child
+    assert s["forked_cpu_s"] is not None and s["forked_cpu_s"] >= 0
+    assert s["forks"] is not None and s["forks"] >= 0
 
 
 def test_results_invariant_to_microbatch_boundaries(spark, sf_dir):
@@ -1218,6 +1221,30 @@ def test_neardup_staged_rejects_sig_free_stage(spark, sf_dir):
     with pytest.raises(ValueError, match="signature-enriched"):
         run_streaming_neardup_monitor(
             spark, sf_dir, stage_dir=plain, sink_dir=_mkdir(),
+            checkpoint_dir=_mkdir(), sig_mode="staged")
+
+
+def test_neardup_staged_rejects_one_sig_free_file(spark, sf_dir):
+    """The staged-mode guard reads every stage file's footer: ONE
+    sig-free file landed among signature files (a stage written
+    incrementally across versions) must raise too — a guard that
+    sampled only the first file, or a dataset schema taken from it,
+    would pass and read that file's rows as NULL sig."""
+    from movement_spark.streaming.pipeline import (
+        run_streaming_neardup_monitor, stage_token_stream)
+
+    stage, plain = _mkdir(), _mkdir()
+    stage_token_stream(spark, sf_dir, stage, with_sig=True)
+    stage_token_stream(spark, sf_dir, plain, sentinel=False)
+    files = sorted(f for f in os.listdir(stage) if f.endswith(".parquet"))
+    odd = sorted(f for f in os.listdir(plain) if f.endswith(".parquet"))[0]
+    # sorts after the first signature file, before the sentinels
+    shutil.copy2(os.path.join(plain, odd),
+                 os.path.join(stage, files[0].replace(".parquet",
+                                                      "_v1.parquet")))
+    with pytest.raises(ValueError, match="1 file"):
+        run_streaming_neardup_monitor(
+            spark, sf_dir, stage_dir=stage, sink_dir=_mkdir(),
             checkpoint_dir=_mkdir(), sig_mode="staged")
 
 
