@@ -19,6 +19,13 @@ On top of the reference's dataflow surface, the engine carries the
 relational/streaming operators the north rule requires (windows,
 watermarks, stateful joins) and a training-data toolbox (dedup,
 similarity search, text analysis, multimodal plumbing).
+
+Importing the package makes ``importlib.invalidate_caches()`` re-read a
+zip/jar directory only when the archive changed on disk
+(``movement_spark.zipimport_stat``); PySpark's Python workers call it
+on every task.
 """
+
+from movement_spark import zipimport_stat  # noqa: F401  (installs the wrap)
 
 __version__ = "0.1.0"

@@ -61,6 +61,15 @@ def _jvm_pid() -> int | None:
     return pid if ppid == os.getpid() else None
 
 
+def _stat_fields(pid: int) -> list[str] | None:
+    """The fields of /proc/<pid>/stat after the command name."""
+    try:
+        with open(f"/proc/{pid}/stat") as f:
+            return f.read().rsplit(")", 1)[1].split()
+    except OSError:
+        return None
+
+
 def _spawn_counters(pid: int | None) -> tuple[int, int] | None:
     """(reaped-child CPU ticks of ``pid``, host fork count) now, or None.
 
@@ -72,15 +81,48 @@ def _spawn_counters(pid: int | None) -> tuple[int, int] | None:
     counted host-wide (every process on the machine, not only ours)."""
     if pid is None:
         return None
+    fields = _stat_fields(pid)
+    if fields is None:
+        return None
     try:
-        with open(f"/proc/{pid}/stat") as f:
-            fields = f.read().rsplit(")", 1)[1].split()
         with open("/proc/stat") as f:
             forks = next(int(line.split()[1]) for line in f
                          if line.startswith("processes "))
     except (OSError, StopIteration):
         return None
     return int(fields[13]) + int(fields[14]), forks
+
+
+def _python_counters(jvm: int | None) -> dict[int, int] | None:
+    """Python CPU ticks now of each live ``pyspark.daemon`` child of the
+    JVM, by daemon pid, or None when the JVM is not this process's child.
+
+    The JVM runs one daemon per worker environment (SQL and RDD stages
+    get separate ones). A daemon's ticks are its ``utime + stime +
+    cutime + cstime`` (the workers it has forked and reaped count) plus
+    ``utime + stime`` of its live workers, which stay up across tasks and
+    queries."""
+    if jvm is None:
+        return None
+    stats = {}
+    for name in os.listdir("/proc"):
+        fields = _stat_fields(int(name)) if name.isdigit() else None
+        if fields is not None:
+            stats[int(name)] = fields
+    ticks = {}
+    for pid, fields in stats.items():
+        if int(fields[1]) != jvm:
+            continue
+        try:
+            with open(f"/proc/{pid}/cmdline", "rb") as f:
+                if b"pyspark.daemon" not in f.read():
+                    continue
+        except OSError:
+            continue
+        ticks[pid] = sum(int(x) for x in fields[11:15]) + sum(
+            int(w[11]) + int(w[12]) for w in stats.values()
+            if int(w[1]) == pid)
+    return ticks
 
 
 _CLK_TCK = os.sysconf("SC_CLK_TCK")
@@ -112,6 +154,7 @@ class RuntimeMetricsListener(StreamingQueryListener):
         self.started_at = time.time()
         self._jvm_pid = _jvm_pid()
         self._spawns_at_start = _spawn_counters(self._jvm_pid)
+        self._python_at_start = _python_counters(self._jvm_pid)
 
     # StreamingQueryListener interface ---------------------------------
     def onQueryStarted(self, event):
@@ -153,14 +196,22 @@ class RuntimeMetricsListener(StreamingQueryListener):
         """Totals since query start. ``forked_cpu_s`` is the CPU of the
         commands the Spark JVM forked and reaped; ``forks`` counts
         process spawns HOST-WIDE (other work on the machine adds to
-        it). Both are None when the JVM is not a local child process."""
+        it); ``python_cpu_s`` is the CPU of PySpark's Python daemon and
+        its workers. All three are None when the JVM is not a local
+        child process."""
         elapsed = max(time.time() - self.started_at, 1e-9)
         start, now = self._spawns_at_start, _spawn_counters(self._jvm_pid)
         if start is None or now is None:
-            forked_cpu_s = forks = None
+            forked_cpu_s = forks = python_cpu_s = None
         else:
             forked_cpu_s = (now[0] - start[0]) / _CLK_TCK
             forks = now[1] - start[1]
+            py0 = self._python_at_start
+            # a daemon started since query start counts from zero
+            python_cpu_s = sum(
+                t - py0.get(pid, 0)
+                for pid, t in _python_counters(self._jvm_pid).items()
+            ) / _CLK_TCK
         return {
             "io_ops": self.total_rows,
             "batches": len(self.records),
@@ -172,4 +223,5 @@ class RuntimeMetricsListener(StreamingQueryListener):
                                      for r in self.records),
             "forked_cpu_s": forked_cpu_s,
             "forks": forks,
+            "python_cpu_s": python_cpu_s,
         }

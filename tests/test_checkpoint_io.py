@@ -1,20 +1,27 @@
 """Checkpoint I/O path: which file manager writes the checkpoint, what it
-costs in forked processes, and exactly-once across real SIGKILLs.
+costs in forked processes, and exactly-once across real SIGKILLs; and
+the zip directories a Python worker re-reads per task.
 
 Every streaming checkpoint file (offset and commit logs, source logs,
 state-store deltas, operator metadata) goes through the checkpoint file
 manager ENGINE_CONF pins. These tests pin that choice, bound its process
 spawns, kill a stateful pipeline's whole process group inside
 foreachBatch and resume it, and resume a checkpoint written under
-Spark's default manager.
+Spark's default manager. PySpark's worker calls
+``importlib.invalidate_caches()`` per task; two tests pin that a zip
+importer re-reads its archive only when the archive changed
+(``movement_spark.zipimport_stat``), in this process and in a worker.
 """
 
+import importlib
 import os
 import shutil
 import signal
 import subprocess
 import sys
 import tempfile
+import zipfile
+import zipimport
 
 import pyarrow.parquet as pq
 import pytest
@@ -122,6 +129,78 @@ def test_checkpoint_writes_spawn_few_processes(spark, sf_dir, dup_stage):
     assert n_files > 100, n_files  # three state stores x 8 partitions
     assert s["forks"] / n_files < MAX_SPAWNS_PER_CHECKPOINT_FILE, \
         (s["forks"], n_files)
+
+
+def test_zip_importer_rereads_only_a_changed_archive(monkeypatch):
+    """An unchanged archive's directory is not re-read on invalidation,
+    a replaced one is (its new content imports), a deleted one raises
+    nothing."""
+    import movement_spark  # noqa: F401  (installs the wrap)
+
+    d, mod = _mkdir(), "ms_zipimport_probe"
+    archive = os.path.join(d, "probe.zip")
+
+    def write(version: int) -> None:
+        tmp = archive + ".tmp"
+        with zipfile.ZipFile(tmp, "w") as zf:
+            zf.writestr(f"{mod}.py", f"VERSION = {version}\n")
+        os.replace(tmp, archive)
+
+    write(1)
+    monkeypatch.syspath_prepend(archive)
+    monkeypatch.delitem(sys.modules, mod, raising=False)
+    try:
+        m = importlib.import_module(mod)
+        assert m.VERSION == 1
+        importlib.invalidate_caches()  # learns the key
+        reads, stdlib_read = [], zipimport._read_directory
+        monkeypatch.setattr(zipimport, "_read_directory",
+                            lambda a: reads.append(a) or stdlib_read(a))
+        importlib.invalidate_caches()
+        assert reads == []
+        write(2)
+        importlib.invalidate_caches()
+        assert reads.count(archive) == 1, reads
+        assert importlib.reload(m).VERSION == 2
+        os.remove(archive)
+        importlib.invalidate_caches()
+    finally:
+        sys.modules.pop(mod, None)
+        sys.path_importer_cache.pop(archive, None)
+
+
+def test_python_worker_rereads_no_zip_directory(spark):
+    """Tripwire: once a worker has imported the engine, as unpickling an
+    engine UDF does, a second ``importlib.invalidate_caches()`` re-reads
+    no zip directory (without the wrap it re-reads one per zip importer,
+    17 to 21 in a worker, ~0.2 CPU-s per task)."""
+    def probe(batches):
+        import importlib
+        import sys
+        import zipimport
+
+        import pandas as pd
+
+        import movement_spark.operators.ordering  # noqa: F401
+
+        importlib.invalidate_caches()
+        reads, stdlib_read = [], zipimport._read_directory
+        zipimport._read_directory = \
+            lambda a: reads.append(a) or stdlib_read(a)
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = stdlib_read
+        n_zip = sum(isinstance(f, zipimport.zipimporter)
+                    for f in sys.path_importer_cache.values())
+        for _ in batches:
+            pass
+        yield pd.DataFrame({"n_zip": [n_zip], "rereads": [len(reads)]})
+
+    (row,) = spark.range(1, numPartitions=1).mapInPandas(
+        probe, "n_zip long, rereads long").collect()
+    assert row.n_zip > 0, row  # the worker has zip importers to re-read
+    assert row.rereads == 0, row
 
 
 def _reap_group(pgid: int) -> None:

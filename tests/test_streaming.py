@@ -340,6 +340,22 @@ def test_metrics_listener_counts_rows(spark, sf_dir):
     # spawn attribution: the test session's JVM is this process's child
     assert s["forked_cpu_s"] is not None and s["forked_cpu_s"] >= 0
     assert s["forks"] is not None and s["forks"] >= 0
+    assert s["python_cpu_s"] is not None and s["python_cpu_s"] >= 0
+
+
+def test_metrics_listener_charges_python_workers(spark, sf_dir):
+    """python_cpu_s counts the CPU of the Python daemons' workers: a
+    run through the applyInPandasWithState assembler uses some, also
+    with the RDD API's daemon (started first here) up beside the SQL
+    one."""
+    from movement_spark.streaming.pipeline import run_streaming_ordered_merge
+
+    spark.sparkContext.parallelize([1]).map(lambda x: x).count()
+    listener = RuntimeMetricsListener()
+    run_streaming_ordered_merge(spark, sf_dir, sink_dir=_mkdir(),
+                                checkpoint_dir=_mkdir(), listener=listener,
+                                mode="python")
+    assert listener.summary()["python_cpu_s"] > 0
 
 
 def test_results_invariant_to_microbatch_boundaries(spark, sf_dir):
