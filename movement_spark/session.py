@@ -8,11 +8,16 @@ Spark configuration.
 
 from __future__ import annotations
 
+import glob
+import hashlib
 import os
+import shutil
+import subprocess
 import tempfile
 import zipfile
 from contextlib import contextmanager
 
+import pyspark
 from pyspark.sql import SparkSession
 
 # Defaults chosen for the sandbox (local[N], single JVM). On a real cluster
@@ -32,10 +37,11 @@ ENGINE_CONF: dict[str, str] = {
     # default FileContext manager renames via getFileLinkStatus, which
     # on file:// shells out `readlink` per call (~4x the process spawns
     # per checkpoint file). Same on-disk layout, so old checkpoints
-    # resume; on file:// both managers check-then-rename. Keep the
+    # resume; on file:// both managers check-then-rename. Keep a
     # checksummed LocalFileSystem (RawLocalFileSystem drops .crc
-    # verification). Chosen for file:// checkpoints only: HDFS or
-    # object-store deployments must re-evaluate it (SCALE.md §3).
+    # verification; see _in_process_chmod_jar). Chosen for file://
+    # checkpoints only: HDFS or object-store deployments must
+    # re-evaluate it (SCALE.md §3).
     "spark.sql.streaming.checkpointFileManagerClass":
         "org.apache.spark.sql.execution.streaming.checkpointing."
         "FileSystemBasedCheckpointFileManager",
@@ -56,6 +62,13 @@ def get_spark(app_name: str = "movement_spark", master: str | None = None,
         master = f"local[{cpus}]" if cpus else "local[*]"
     b = SparkSession.builder.appName(app_name).master(master)
     conf = dict(ENGINE_CONF)
+    # The file:// file system class must be on the JVM's classpath at
+    # launch, so a host without javac, and a session built outside this
+    # function (tune_session, spark-submit), keep Hadoop's default.
+    jar = _in_process_chmod_jar()
+    if jar is not None:
+        conf["spark.driver.extraClassPath"] = jar
+        conf["spark.hadoop.fs.file.impl"] = IN_PROCESS_CHMOD_FS
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():
@@ -63,6 +76,56 @@ def get_spark(app_name: str = "movement_spark", master: str | None = None,
     spark = b.getOrCreate()
     ensure_shipped(spark)
     return spark
+
+
+IN_PROCESS_CHMOD_FS = "movement_spark.jvm.InProcessChmodLocalFileSystem"
+
+
+def _in_process_chmod_jar() -> str | None:
+    """The jar holding ``IN_PROCESS_CHMOD_FS``, or None without ``javac``.
+
+    Hadoop's local file system, without native IO, forks a ``chmod`` per
+    created file or directory: about 820 per ``dedup_join`` drain, each a
+    process plus a stderr-reader thread in the JVM. The class keeps the
+    checksummed file system and does the chmod(2) in the JVM. It is
+    compiled once by the ``javac`` of the JDK that runs Spark, against
+    that Spark's Hadoop jar, into a jar in the temp directory named by a
+    hash of the source and that jar's name; the jar is renamed into
+    place, so concurrent processes never see a partial one.
+    """
+    java_home = os.environ.get("JAVA_HOME")
+    javac = (os.path.join(java_home, "bin", "javac") if java_home
+             else shutil.which("javac"))
+    # the Spark home PySpark launches the JVM from
+    spark_home = (os.environ.get("SPARK_HOME")
+                  or os.path.dirname(pyspark.__file__))
+    hadoop = glob.glob(os.path.join(spark_home, "jars",
+                                    "hadoop-client-api-*.jar"))
+    if not javac or not os.path.exists(javac) or not hadoop:
+        return None
+    source = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm",
+                          "InProcessChmodLocalFileSystem.java")
+    with open(source, "rb") as f:
+        key = hashlib.sha256(
+            f.read() + os.path.basename(hadoop[0]).encode()).hexdigest()
+    jar = os.path.join(tempfile.gettempdir(),
+                       f"movement_spark_fs_{key[:16]}.jar")
+    if os.path.exists(jar):
+        return jar
+    with tempfile.TemporaryDirectory() as build:
+        classes = os.path.join(build, "classes")
+        # a one-off compile: C1 only and the serial GC halve its CPU
+        subprocess.run([javac, "-J-XX:TieredStopAtLevel=1",
+                        "-J-XX:+UseSerialGC", "-nowarn", "-cp", hadoop[0],
+                        "-d", classes, source], check=True)
+        tmp = os.path.join(build, "fs.jar")
+        with zipfile.ZipFile(tmp, "w") as zf:
+            for root, _dirs, files in os.walk(classes):
+                for fn in files:
+                    full = os.path.join(root, fn)
+                    zf.write(full, os.path.relpath(full, classes))
+        os.replace(tmp, jar)
+    return jar
 
 
 def ensure_shipped(spark: SparkSession) -> None:

@@ -70,15 +70,19 @@ def _stat_fields(pid: int) -> list[str] | None:
         return None
 
 
-def _spawn_counters(pid: int | None) -> tuple[int, int] | None:
-    """(reaped-child CPU ticks of ``pid``, host fork count) now, or None.
+def _jvm_counters(pid: int | None) -> tuple[int, int, int] | None:
+    """(own CPU ticks of ``pid``, its reaped-child CPU ticks, host clone
+    count) now, or None.
 
-    The first is ``cutime + cstime`` from /proc/<pid>/stat: CPU of the
-    children the JVM has waited for — the commands it forks (Hadoop's
-    local file system shells out ``chmod``/``readlink``). PySpark's
+    The first is ``utime + stime`` from /proc/<pid>/stat: every thread
+    of the JVM, live or ended, so task threads, GC and the JIT compiler
+    threads all count. The second is ``cutime + cstime``: CPU of the
+    children the JVM has waited for, the commands it forks (Hadoop's
+    stock local file system shells out ``chmod``/``readlink``). PySpark's
     Python daemon outlives the query, so its workers are not in it. The
-    second is the ``processes`` line of /proc/stat: forks since boot,
-    counted host-wide (every process on the machine, not only ours)."""
+    third is the ``processes`` line of /proc/stat: every clone since
+    boot, threads as well as processes, counted host-wide (every process
+    on the machine, not only ours)."""
     if pid is None:
         return None
     fields = _stat_fields(pid)
@@ -90,7 +94,8 @@ def _spawn_counters(pid: int | None) -> tuple[int, int] | None:
                          if line.startswith("processes "))
     except (OSError, StopIteration):
         return None
-    return int(fields[13]) + int(fields[14]), forks
+    return (int(fields[11]) + int(fields[12]),
+            int(fields[13]) + int(fields[14]), forks)
 
 
 def _python_counters(jvm: int | None) -> dict[int, int] | None:
@@ -153,7 +158,7 @@ class RuntimeMetricsListener(StreamingQueryListener):
     def _mark_start(self):
         self.started_at = time.time()
         self._jvm_pid = _jvm_pid()
-        self._spawns_at_start = _spawn_counters(self._jvm_pid)
+        self._jvm_at_start = _jvm_counters(self._jvm_pid)
         self._python_at_start = _python_counters(self._jvm_pid)
 
     # StreamingQueryListener interface ---------------------------------
@@ -193,19 +198,22 @@ class RuntimeMetricsListener(StreamingQueryListener):
 
     # StatusMonitor-style summary ---------------------------------------
     def summary(self) -> dict:
-        """Totals since query start. ``forked_cpu_s`` is the CPU of the
-        commands the Spark JVM forked and reaped; ``forks`` counts
-        process spawns HOST-WIDE (other work on the machine adds to
-        it); ``python_cpu_s`` is the CPU of PySpark's Python daemon and
-        its workers. All three are None when the JVM is not a local
-        child process."""
+        """Totals since query start. ``jvm_cpu_s`` is the Spark JVM's own
+        CPU, every thread (task threads, GC and JIT compilation
+        included); ``forked_cpu_s`` is the CPU of the commands it forked
+        and reaped; ``forks`` counts clones HOST-WIDE, threads as well
+        as processes (other work on the machine adds to it);
+        ``python_cpu_s`` is the CPU of PySpark's Python daemon and its
+        workers. All four are None when the JVM is not a local child
+        process."""
         elapsed = max(time.time() - self.started_at, 1e-9)
-        start, now = self._spawns_at_start, _spawn_counters(self._jvm_pid)
+        start, now = self._jvm_at_start, _jvm_counters(self._jvm_pid)
         if start is None or now is None:
-            forked_cpu_s = forks = python_cpu_s = None
+            jvm_cpu_s = forked_cpu_s = forks = python_cpu_s = None
         else:
-            forked_cpu_s = (now[0] - start[0]) / _CLK_TCK
-            forks = now[1] - start[1]
+            jvm_cpu_s = (now[0] - start[0]) / _CLK_TCK
+            forked_cpu_s = (now[1] - start[1]) / _CLK_TCK
+            forks = now[2] - start[2]
             py0 = self._python_at_start
             # a daemon started since query start counts from zero
             python_cpu_s = sum(
@@ -221,6 +229,7 @@ class RuntimeMetricsListener(StreamingQueryListener):
                                   default=0),
             "rows_dropped_late": sum(r.rows_dropped_late
                                      for r in self.records),
+            "jvm_cpu_s": jvm_cpu_s,
             "forked_cpu_s": forked_cpu_s,
             "forks": forks,
             "python_cpu_s": python_cpu_s,

@@ -1,22 +1,26 @@
-"""Checkpoint I/O path: which file manager writes the checkpoint, what it
-costs in forked processes, and exactly-once across real SIGKILLs; and
-the zip directories a Python worker re-reads per task.
+"""Checkpoint I/O path: which file manager and file system write the
+checkpoint, what they cost in forked processes, and exactly-once across
+real SIGKILLs; and the zip directories a Python worker re-reads per
+task.
 
 Every streaming checkpoint file (offset and commit logs, source logs,
 state-store deltas, operator metadata) goes through the checkpoint file
-manager ENGINE_CONF pins. These tests pin that choice, bound its process
-spawns, kill a stateful pipeline's whole process group inside
-foreachBatch and resume it, and resume a checkpoint written under
-Spark's default manager. PySpark's worker calls
-``importlib.invalidate_caches()`` per task; two tests pin that a zip
-importer re-reads its archive only when the archive changed
-(``movement_spark.zipimport_stat``), in this process and in a worker.
+manager ENGINE_CONF pins, over the checksummed local file system
+``get_spark`` installs for ``file://`` (``chmod`` done in the JVM).
+These tests pin both choices, bound their process spawns, kill a
+stateful pipeline's whole process group inside foreachBatch and resume
+it, and resume a checkpoint written under Spark's default manager.
+PySpark's worker calls ``importlib.invalidate_caches()`` per task; two
+tests pin that a zip importer re-reads its archive only when the
+archive changed (``movement_spark.zipimport_stat``), in this process
+and in a worker.
 """
 
 import importlib
 import os
 import shutil
 import signal
+import stat
 import subprocess
 import sys
 import tempfile
@@ -26,7 +30,9 @@ import zipimport
 import pyarrow.parquet as pq
 import pytest
 
-from movement_spark.streaming.metrics import RuntimeMetricsListener
+from movement_spark.session import _in_process_chmod_jar
+from movement_spark.streaming.metrics import (RuntimeMetricsListener,
+                                              _jvm_counters, _jvm_pid)
 from movement_spark.streaming.pipeline import (
     run_streaming_dedup_join_window, stage_token_stream)
 
@@ -38,11 +44,15 @@ _PKG = "org.apache.spark.sql.execution.streaming.checkpointing."
 # the engine's setting changes
 FILE_SYSTEM_MANAGER = _PKG + "FileSystemBasedCheckpointFileManager"
 FILE_CONTEXT_MANAGER = _PKG + "FileContextBasedCheckpointFileManager"
-# Process spawns per checkpoint file written, on one dedup_join drain:
-# ~10.6 under the FileContext manager (a `readlink` per status call plus
-# a `chmod` per created file), ~2.7 under the FileSystem one (`chmod`
-# only). The bound sits between them; the count is host-wide, so other
-# work on the machine can only push a drain toward failing, not passing.
+LOCAL_FS = "movement_spark.jvm.InProcessChmodLocalFileSystem"
+# Clones (/proc/stat `processes`: threads as well as processes) per
+# checkpoint file written, on one dedup_join drain over Hadoop's stock
+# local file system, which costs a `chmod` process and a stderr-reader
+# thread per created file or directory: ~10.6 under the FileContext
+# manager (plus a `readlink` per status call), ~2.7 under the FileSystem
+# one. With the chmod done in the JVM: ~0.4-0.7 (threads only). The
+# bound sits between the managers; the count is host-wide, so other work
+# on the machine can only push a drain toward failing, not passing.
 MAX_SPAWNS_PER_CHECKPOINT_FILE = 6.0
 
 
@@ -62,6 +72,15 @@ def _manager(spark, path: str):
 
 def _manager_class(spark, path: str) -> str:
     return _manager(spark, path).getClass().getName()
+
+
+def _local_fs(spark):
+    """The file system every writer gets for ``file://`` paths from this
+    session's Hadoop conf."""
+    jvm = spark._jvm
+    return jvm.org.apache.hadoop.fs.FileSystem.get(
+        jvm.java.net.URI("file:///"),
+        spark._jsparkSession.sessionState().newHadoopConf())
 
 
 def _rows(df) -> list[tuple]:
@@ -114,17 +133,62 @@ def test_session_uses_filesystem_checkpoint_manager(spark):
     assert sorted(os.listdir(d)) == [".0.crc", "0"]
 
 
+def test_session_local_fs_is_checksummed_in_process_chmod(spark):
+    """Tripwire: ``file://`` resolves to the engine's file system, which
+    is still a checksummed one (it writes and verifies .crc sidecars)."""
+    fs = _local_fs(spark)
+    assert fs.getClass().getName() == LOCAL_FS
+    assert spark._jvm.java.lang.Class.forName(
+        "org.apache.hadoop.fs.ChecksumFileSystem").isInstance(fs)
+
+
+def test_set_permission_sets_exact_mode_without_forking(spark):
+    """setPermission sets exactly the mode asked for, special bits
+    included, and 200 calls fork nothing: the JVM's reaped-child CPU
+    does not move (Hadoop's stock chmod costs a process per call)."""
+    jvm, d = spark._jvm, _mkdir()
+    f = os.path.join(d, "part")
+    open(f, "w").close()
+    fs, path = _local_fs(spark), jvm.org.apache.hadoop.fs.Path
+    perm = jvm.org.apache.hadoop.fs.permission.FsPermission.valueOf
+    fs.setPermission(path(f), perm("-rw-r-----"))
+    fs.setPermission(path(d), perm("drwxrwxrwt"))
+    assert stat.S_IMODE(os.stat(f).st_mode) == 0o640
+    assert stat.S_IMODE(os.stat(d).st_mode) == 0o1777
+    reaped = _jvm_counters(_jvm_pid())[1]
+    for _ in range(200):
+        fs.setPermission(path(f), perm("-rw-r-----"))
+    assert _jvm_counters(_jvm_pid())[1] == reaped
+
+
+def test_file_system_jar_compiles_once(monkeypatch):
+    """The jar is compiled into the temp directory on the first call and
+    reused, not rebuilt, on the next; it holds the file system class and
+    its raw file system."""
+    monkeypatch.setattr(tempfile, "tempdir", _mkdir())
+    jar = _in_process_chmod_jar()
+    assert os.path.dirname(jar) == tempfile.tempdir
+    mtime = os.stat(jar).st_mtime_ns
+    assert _in_process_chmod_jar() == jar
+    assert os.stat(jar).st_mtime_ns == mtime
+    cls = LOCAL_FS.replace(".", "/")
+    with zipfile.ZipFile(jar) as zf:
+        assert {cls + ".class", cls + "$Raw.class"} <= set(zf.namelist())
+
+
 def test_checkpoint_writes_spawn_few_processes(spark, sf_dir, dup_stage):
-    """Tripwire: a stateful drain's process spawns per checkpoint file
-    written stay below the bound that separates the FileSystem manager
-    from the FileContext one, as the listener's engine-side counters
-    report them."""
+    """Tripwire: a stateful drain's clones per checkpoint file written
+    stay below the bound that separates the FileSystem manager from the
+    FileContext one, and the JVM forks no command worth measuring (each
+    created file or directory cost a `chmod` process over Hadoop's stock
+    local file system), as the listener's engine-side counters report
+    them."""
     lst, ck = RuntimeMetricsListener(), _mkdir()
     run_streaming_dedup_join_window(spark, sf_dir, stage_dir=dup_stage,
                                     sink_dir=_mkdir(), checkpoint_dir=ck,
                                     listener=lst)
     s = lst.summary()
-    assert s["forked_cpu_s"] is not None and s["forked_cpu_s"] >= 0
+    assert s["forked_cpu_s"] is not None and s["forked_cpu_s"] < 0.05, s
     n_files = _n_files(ck)
     assert n_files > 100, n_files  # three state stores x 8 partitions
     assert s["forks"] / n_files < MAX_SPAWNS_PER_CHECKPOINT_FILE, \
@@ -221,7 +285,8 @@ def test_sigkill_in_foreach_batch_resumes_exactly_once(spark, sf_dir,
     foreachBatch of the flush batch — before the sink's epoch write, or
     after it but before the commit log. Resuming here on the same stage,
     sink and checkpoint must give the clean run's result, with every
-    window written once."""
+    window written once. Both the killed run and the resume write over
+    the engine's in-process-chmod file system."""
     sink_dir, ck = _mkdir(), _mkdir()
     env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g")
     with tempfile.TemporaryFile() as err:
@@ -255,7 +320,10 @@ def test_filecontext_checkpoint_resumes_under_filesystem_manager(
     (offset/commit logs, state-store deltas and their checksum files)
     written by Spark's default FileContext manager over the first half
     of the stage resumes under the FileSystem manager over the rest and
-    gives the clean run's result."""
+    gives the clean run's result. FileContext goes through Hadoop's own
+    ``LocalFs``, not ``fs.file.impl``, so the first half is written with
+    the stock forked chmod and the resume over the engine's
+    in-process-chmod file system."""
     files = sorted(os.listdir(dup_stage))
     stage, sink_dir, ck = _mkdir(), _mkdir(), _mkdir()
     for f in files[: len(files) // 2]:

@@ -337,7 +337,8 @@ def test_metrics_listener_counts_rows(spark, sf_dir):
     # auto trigger pacing: all-but-last files, then the final sentinel
     assert s["batches"] >= 2
     assert s["avg_rows_per_sec"] > 0
-    # spawn attribution: the test session's JVM is this process's child
+    # CPU attribution: the test session's JVM is this process's child
+    assert s["jvm_cpu_s"] is not None and s["jvm_cpu_s"] > 0
     assert s["forked_cpu_s"] is not None and s["forked_cpu_s"] >= 0
     assert s["forks"] is not None and s["forks"] >= 0
     assert s["python_cpu_s"] is not None and s["python_cpu_s"] >= 0
