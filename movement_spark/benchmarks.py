@@ -259,7 +259,7 @@ def drift_monitor_throughput(spark: SparkSession, stage_dir: str,
     per-row stateful pipeline (every token explodes into the bucketed
     histogram state, vs one row per sequence in the throughput agg) —
     plus its read-side TVD fold. State partitions are pinned by
-    _run_to_sink itself."""
+    the pipeline's _drain itself."""
     from movement_spark.streaming.pipeline import (
         run_streaming_drift_monitor)
 

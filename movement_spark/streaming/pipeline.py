@@ -33,13 +33,14 @@ import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (
     ArrayType, FloatType, IntegerType, LongType, StringType, StructField,
     StructType, TimestampType,
 )
 
-from movement_spark.operators.ordering import ordered_doc_assembler
+from movement_spark.operators.ordering import (
+    doc_digest_cols, ordered_doc_assembler, ordered_doc_assembler_jvm)
 from movement_spark.sinks.idempotent import IdempotentKeyedSink
 from movement_spark.sources.tokens import token_sequences, EPOCH_2026, TS_MOD
 from movement_spark.streaming.metrics import RuntimeMetricsListener, observed
@@ -197,17 +198,18 @@ def stage_token_stream(spark: SparkSession, sf_dir: str, stage_dir: str,
     return n_rows
 
 
-# The straggler fixture's event-time cut: rows before EPOCH_2026 +
-# STRAGGLER_WIN_SEC are eligible to be held back. Shared by the stager
-# and run_streaming_late_repair's damaged-window derivation — one
-# constant so the two sides of the drop-then-repair contract cannot
+# The straggler fixture: rows before EPOCH_2026 + STRAGGLER_WIN_SEC
+# whose did is a multiple of STRAGGLER_MOD are held back. Shared by the
+# stager and run_streaming_late_repair's damaged-window derivation — one
+# definition so the two sides of the drop-then-repair contract cannot
 # drift apart.
 STRAGGLER_WIN_SEC = 300
+STRAGGLER_MOD = 7
 
 
 def stage_token_stream_with_stragglers(spark: SparkSession, sf_dir: str,
                                        stage_dir: str, n_chunks: int = 6,
-                                       straggler_mod: int = 7
+                                       straggler_mod: int = STRAGGLER_MOD
                                        ) -> tuple[int, int]:
     """Stage the token table with a deterministic subset of
     FIRST-WINDOW rows held back into a straggler file delivered after
@@ -259,11 +261,12 @@ def _auto_trigger(stage_dir: str) -> int:
 
 def read_token_stream(spark: SparkSession, stage_dir: str,
                       files_per_trigger: int | None = None,
-                      schema: StructType | None = None) -> DataFrame:
+                      schema: StructType | str | None = None) -> DataFrame:
     """THE file-source read convention (schema + pacing + parquet) —
     every pipeline reads staged chunks through here so an option change
     (e.g. maxFileAge) can never diverge per-pipeline. ``schema``
-    overrides for signature-enriched stages (NDSIG_STREAM_SCHEMA)."""
+    overrides STREAM_SCHEMA for the other staged layouts
+    (NDSIG_STREAM_SCHEMA, EVENTS_SCHEMA, EMB_STREAM_SCHEMA)."""
     if files_per_trigger is None:
         files_per_trigger = _auto_trigger(stage_dir)
     return (
@@ -275,16 +278,43 @@ def read_token_stream(spark: SparkSession, stage_dir: str,
 
 STATE_PARTITIONS = 8  # pinned deployment constant (see CLAUDE.md / SCALE.md)
 
+# Pipeline tuning: one value per pipeline, not a per-call option. The
+# registry's oracle SQL hard-codes the same windows, gaps and cuts, so
+# an override could only desynchronize a pipeline from its oracle.
+WATERMARK = "10 minutes"  # event-time delay of every token-stream pipeline
+WIDTH = "5 minutes"  # tumbling window; the sliding window slides by it
+SLIDING_WIDTH = "10 minutes"
+ROLLUP_WIDTH = "1 hour"  # window_rollup's coarse window over WIDTH partials
+SESSION_GAP = "90 seconds"
+MAX_GAP_SEC = 60  # stream-stream interval joins pair shards within ±this
+EVENTS_WINDOW = "1 day"  # the events pipelines' window AND watermark
+HIST_BUCKETS = 64  # drift and quantile monitors' histogram width
+LEN_BUCKET_WIDTH = 2  # quantile monitor: n_tok values per length bucket
+BACKFILL_CUT_SEC = 1800  # backfill handoff: the stream owns windows from here
+LEADERBOARD_TOP_N = 3
+THROTTLE_TIMEOUT_SEC = 120.0
 
-def _run_to_sink(result: DataFrame, sink: IdempotentKeyedSink,
-                 checkpoint_dir: str, listener=None,
-                 output_mode: str = "append", batch_fn=None):
+
+def _tmp(prefix: str) -> str:
+    return tempfile.mkdtemp(prefix=prefix)
+
+
+def _sink(sink_dir: str | None, *keys: str) -> IdempotentKeyedSink:
+    return IdempotentKeyedSink(sink_dir or _tmp("ms_sink_"), list(keys))
+
+
+def _drain(result: DataFrame, sink: IdempotentKeyedSink,
+           checkpoint_dir: str | None, listener=None,
+           output_mode: str = "append",
+           batch_fn=None) -> IdempotentKeyedSink:
     """Start → drain (availableNow) → clean up — THE one
-    run-and-cleanup dance for every foreachBatch pipeline.
-    ``batch_fn`` overrides the sink's foreach_batch (multi-sink
-    fan-out); the listener is detached in a finally so a failing query
-    can't leak it onto the shared SparkSession where it would receive
-    every later query's events.
+    run-and-cleanup dance for every foreachBatch pipeline. Returns
+    ``sink`` for the caller's read; the caller builds it because the
+    backfill handoff and late repair write batch epochs into the same
+    sink before or after the stream. ``batch_fn`` overrides the sink's
+    foreach_batch (multi-sink fan-out); the listener is detached in a
+    finally so a failing query can't leak it onto the shared
+    SparkSession where it would receive every later query's events.
 
     Stateful shuffle partitions are scoped to the pinned deployment
     constant around query START (the value is captured into the
@@ -304,7 +334,7 @@ def _run_to_sink(result: DataFrame, sink: IdempotentKeyedSink,
             .outputMode(output_mode)
             .foreachBatch(batch_fn if batch_fn is not None
                           else sink.foreach_batch)
-            .option("checkpointLocation", checkpoint_dir)
+            .option("checkpointLocation", checkpoint_dir or _tmp("ms_ck_"))
             .trigger(availableNow=True)
             .start()
         )
@@ -313,10 +343,90 @@ def _run_to_sink(result: DataFrame, sink: IdempotentKeyedSink,
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         if listener is not None:
             spark.streams.removeListener(listener)
+    return sink
 
 
-def _tmp(prefix: str) -> str:
-    return tempfile.mkdtemp(prefix=prefix)
+def _flushed() -> Column:
+    """THE sentinel cut: a predicate on the WINDOW column ``w``. A
+    filter on any other column (e.g. source) is pushed by the optimizer
+    through the aggregate AND the EventTimeWatermark node down to the
+    scan, so the sentinel would never advance the watermark. The window
+    predicate rewrites to window(ts) — it references the event-time
+    column, which blocks pushdown below the watermark."""
+    return F.col("w.start") < F.timestamp_seconds(
+        F.lit(EPOCH_2026 + TS_MOD + 3600))
+
+
+def _window_agg(df: DataFrame, window: Column, keys: list, aggs: list,
+                cut: Column | None) -> DataFrame:
+    """The windowed aggregate every windowed pipeline shares: group by
+    (window AS w, *keys), aggregate, keep the rows
+    ``cut`` admits (None in update mode, which needs no flush), and
+    project (ws = window start in epoch seconds, *keys, *aggs)."""
+    out = df.groupBy(window.alias("w"), *keys).agg(*aggs)
+    if cut is not None:
+        out = out.where(cut)
+    return out.select(F.unix_timestamp("w.start").alias("ws"),
+                      *out.columns[1:])
+
+
+def _seq_totals() -> list:
+    """n_seq, sum_tok: the throughput totals of the tumbling family,
+    backfill, late repair and the leaderboard."""
+    return [F.count("*").alias("n_seq"),
+            F.sum("n_tok").cast("bigint").alias("sum_tok")]
+
+
+def _pair_totals() -> list:
+    """n_pairs, pair_tok over joined (n_tok_a, n_tok_b) shard pairs."""
+    return [F.count("*").alias("n_pairs"),
+            F.sum(F.col("n_tok_a") + F.col("n_tok_b")).cast("bigint")
+            .alias("pair_tok")]
+
+
+def _session_agg(df: DataFrame) -> DataFrame:
+    """Per-doc_id session windows (SESSION_GAP) → session_start,
+    session_end (= last event + gap, like the batch
+    session_token_windows oracle), n_shard, sum_tok. The sentinel rows
+    form their own far-future sessions, cut on the window column."""
+    return (
+        df.groupBy(F.session_window("ts", SESSION_GAP).alias("w"), "doc_id")
+        .agg(F.count("*").alias("n_shard"),
+             F.sum("n_tok").cast("bigint").alias("sum_tok"))
+        .where(_flushed())
+        .select("doc_id",
+                F.unix_timestamp("w.start").alias("session_start"),
+                F.unix_timestamp("w.end").alias("session_end"),
+                F.col("n_shard").cast("bigint").alias("n_shard"),
+                "sum_tok")
+    )
+
+
+def _assembled(spark: SparkSession, stage: str,
+               emit_incomplete: bool = False) -> DataFrame:
+    """The stateful-Python per-doc assembler over a staged stream.
+    Sentinel rows flow through the stateful stage (their doc completes
+    immediately) and are dropped after it — filtering earlier would be
+    pushed below the watermark node and stall the flush. The timeout
+    must cover a doc's max event-time span: shard timestamps within one
+    doc can wrap the full TS_MOD hour, so the grace period is TS_MOD +
+    slack — state still stays O(open docs)."""
+    shards = read_token_stream(spark, stage).select(
+        "doc_id", "seq", "tokens", "n_shards", "ts")
+    return (
+        ordered_doc_assembler(shards, watermark=WATERMARK,
+                              timeout_ms=(TS_MOD + 120) * 1000,
+                              emit_incomplete=emit_incomplete)
+        .where(F.col("doc_id") != SENTINEL)
+    )
+
+
+def _merged_docs(out: DataFrame) -> DataFrame:
+    """Read-side projection of both ordered-merge paths: the merged doc
+    row as the batch merged_doc_check oracle shapes it."""
+    return out.select(
+        "doc_id", F.col("n_shard").cast("int").alias("n_shard"),
+        "total_tok", *doc_digest_cols())
 
 
 _INTERVAL_UNITS = {"second": 1, "seconds": 1, "minute": 60, "minutes": 60,
@@ -336,10 +446,11 @@ def _interval_seconds(width: str) -> int:
                      f"use '<n> {'/'.join(sorted(set(_INTERVAL_UNITS)))}'")
 
 
-# Per-process staged-input cache: the 11 oracle-gated streaming pipelines
-# share one staged drop per (sf_dir, variant) instead of re-staging per
-# query — staging is setup, not the operator under test, and the driver's
-# correctness sweep runs every pipeline in one process.
+# Per-process staged-input cache: every streaming pipeline that resolves
+# its stage with no explicit dir shares one staged drop per (sf_dir,
+# variant) instead of re-staging per query — staging is setup, not the
+# operator under test, and the registry's correctness sweep runs every
+# pipeline in one process.
 _SHARED_STAGES: dict[tuple[str, str], str] = {}
 
 
@@ -359,6 +470,10 @@ def _stage_variant(spark: SparkSession, sf_dir: str, dest: str,
         stage_token_stream(spark, sf_dir, dest, gap_docs=True)
     elif variant == "ndsig":
         stage_token_stream(spark, sf_dir, dest, with_sig=True)
+    elif variant == "stragglers":
+        stage_token_stream_with_stragglers(spark, sf_dir, dest)
+    elif variant == "embeddings":
+        stage_embedding_stream(spark, sf_dir, dest)
     else:
         raise ValueError(f"unknown stage variant {variant!r}")
 
@@ -414,8 +529,6 @@ def _stage_union_dirs(spark: SparkSession, sf_dir: str, stage: str) -> None:
 
 
 def run_streaming_tumbling(spark: SparkSession, sf_dir: str,
-                           width: str = "5 minutes",
-                           watermark: str = "10 minutes",
                            stage_dir: str | None = None,
                            sink_dir: str | None = None,
                            checkpoint_dir: str | None = None,
@@ -426,32 +539,15 @@ def run_streaming_tumbling(spark: SparkSession, sf_dir: str,
     (same shape/oracle as the batch tumbling query)."""
     stage = _resolve_stage(spark, sf_dir, stage_dir)
     src = read_token_stream(spark, stage, files_per_trigger)
-    # NOTE: the sentinel must be dropped by a predicate on the WINDOW
-    # column. A filter on any other column (e.g. source) is pushed by the
-    # optimizer through the aggregate AND the EventTimeWatermark node down
-    # to the scan, so the sentinel would never advance the watermark. The
-    # window predicate rewrites to window(ts) — it references the
-    # event-time column, which blocks pushdown below the watermark.
-    flush_cut = F.timestamp_seconds(F.lit(EPOCH_2026 + TS_MOD + 3600))
-    agg = (
-        observed(src)
-        .withWatermark("ts", watermark)
-        .groupBy(F.window("ts", width).alias("w"), "source")
-        .agg(F.count("*").alias("n_seq"),
-             F.sum("n_tok").cast("bigint").alias("sum_tok"))
-        .where(F.col("w.start") < flush_cut)
-        .select(F.unix_timestamp("w.start").alias("ws"), "source",
-                "n_seq", "sum_tok")
-    )
-    sink = IdempotentKeyedSink(sink_dir or _tmp("ms_sink_"), ["ws", "source"])
-    _run_to_sink(agg, sink, checkpoint_dir or _tmp("ms_ck_"), listener)
-    return sink.read(spark)
+    agg = _window_agg(observed(src).withWatermark("ts", WATERMARK),
+                      F.window("ts", WIDTH), ["source"], _seq_totals(),
+                      _flushed())
+    return _drain(agg, _sink(sink_dir, "ws", "source"), checkpoint_dir,
+                  listener).read(spark)
 
 
 def run_streaming_drift_monitor(spark: SparkSession, sf_dir: str,
-                                width: str = "5 minutes",
-                                watermark: str = "10 minutes",
-                                buckets: int = 64,
+                                width: str = WIDTH,
                                 stage_dir: str | None = None,
                                 sink_dir: str | None = None,
                                 checkpoint_dir: str | None = None,
@@ -465,7 +561,7 @@ def run_streaming_drift_monitor(spark: SparkSession, sf_dir: str,
     crawl-drift surveillance as a deployed pipeline.
 
     The production trick is the bucket: a drift monitor never keys
-    streaming state by raw token — the ``buckets``-wide histogram pins
+    streaming state by raw token — the HIST_BUCKETS-wide histogram pins
     state at windows × sources × buckets rows (corpus- and
     vocab-independent) and its TVD lower-bounds the true one, which is
     the alerting direction you want. The token explode must be
@@ -474,32 +570,23 @@ def run_streaming_drift_monitor(spark: SparkSession, sf_dir: str,
     watermark (the dedup/filter sentinel corollary extended to
     generators) — outer keeps them as NULL-token rows that the window
     predicate cuts, per the CLAUDE.md invariant."""
+    from movement_spark.operators.dataset import window_drift_tvd
+
     width_sec = _interval_seconds(width)  # fail fast, pre-stage
     stage = _resolve_stage(spark, sf_dir, stage_dir)
     src = read_token_stream(spark, stage, files_per_trigger)
-    flush_cut = F.timestamp_seconds(F.lit(EPOCH_2026 + TS_MOD + 3600))
-    hist = (
-        src.withWatermark("ts", watermark)
-        .select("ts", "source", F.explode_outer("tokens").alias("t"))
-        .groupBy(F.window("ts", width).alias("w"), "source",
-                 (F.col("t") % buckets).alias("bucket"))
-        .agg(F.count("*").alias("cnt"))
-        .where(F.col("w.start") < flush_cut)
-        .select(F.unix_timestamp("w.start").alias("ws"), "source",
-                "bucket", "cnt")
-    )
-    sink = IdempotentKeyedSink(sink_dir or _tmp("msdr_sink_"),
-                               ["ws", "source", "bucket"])
-    _run_to_sink(hist, sink, checkpoint_dir or _tmp("msdr_ck_"), listener)
-    from movement_spark.operators.dataset import window_drift_tvd
+    hist = _window_agg(
+        src.withWatermark("ts", WATERMARK)
+        .select("ts", "source", F.explode_outer("tokens").alias("t")),
+        F.window("ts", width),
+        ["source", (F.col("t") % HIST_BUCKETS).alias("bucket")],
+        [F.count("*").alias("cnt")], _flushed())
+    sink = _drain(hist, _sink(sink_dir, "ws", "source", "bucket"),
+                  checkpoint_dir, listener)
     return window_drift_tvd(sink.read(spark), width_sec=width_sec)
 
 
 def run_streaming_quantile_monitor(spark: SparkSession, sf_dir: str,
-                                   width: str = "5 minutes",
-                                   watermark: str = "10 minutes",
-                                   bucket_width: int = 2,
-                                   buckets: int = 64,
                                    stage_dir: str | None = None,
                                    sink_dir: str | None = None,
                                    checkpoint_dir: str | None = None,
@@ -515,43 +602,34 @@ def run_streaming_quantile_monitor(spark: SparkSession, sf_dir: str,
 
     This is the histogram-quantile sketch's streaming form: streaming
     state holds only the additive counter grid (windows × sources ×
-    ``buckets`` rows — row-volume-independent, the same state-pinning
+    HIST_BUCKETS rows — row-volume-independent, the same state-pinning
     trick as the drift monitor), and the exact percentile an absolute
     answer would need is replaced by a one-bucket-width deterministic
     bracket, which is what a tail-latency alert actually consumes. No
     explode: each sequence contributes ONE bucket via arithmetic on
     n_tok, so the plan is aggregate-only above the watermark and the
     sentinel is cut by the window predicate per the CLAUDE.md rule."""
+    from movement_spark.operators.sketches import histogram_quantile_fold
+
     stage = _resolve_stage(spark, sf_dir, stage_dir)
     src = read_token_stream(spark, stage, files_per_trigger)
-    flush_cut = F.timestamp_seconds(F.lit(EPOCH_2026 + TS_MOD + 3600))
-    hist = (
-        src.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", width).alias("w"), "source",
-                 F.least(F.expr(f"n_tok div {bucket_width}"),
-                         F.lit(buckets - 1)).alias("bucket"))
-        .agg(F.count("*").alias("cnt"))
-        .where(F.col("w.start") < flush_cut)
-        .select(F.unix_timestamp("w.start").alias("ws"), "source",
-                "bucket", "cnt")
-    )
-    sink = IdempotentKeyedSink(sink_dir or _tmp("msq_sink_"),
-                               ["ws", "source", "bucket"])
-    _run_to_sink(hist, sink, checkpoint_dir or _tmp("msq_ck_"), listener)
-    from movement_spark.operators.sketches import histogram_quantile_fold
+    bucket = F.least(F.expr(f"n_tok div {LEN_BUCKET_WIDTH}"),
+                     F.lit(HIST_BUCKETS - 1)).alias("bucket")
+    hist = _window_agg(src.withWatermark("ts", WATERMARK),
+                       F.window("ts", WIDTH), ["source", bucket],
+                       [F.count("*").alias("cnt")], _flushed())
+    sink = _drain(hist, _sink(sink_dir, "ws", "source", "bucket"),
+                  checkpoint_dir, listener)
     return histogram_quantile_fold(sink.read(spark), ["ws", "source"],
-                                   width=bucket_width, n_alias="n_seq")
+                                   width=LEN_BUCKET_WIDTH, n_alias="n_seq")
 
 
 def run_streaming_cms_monitor(spark: SparkSession, sf_dir: str,
-                              width: str = "5 minutes",
-                              watermark: str = "10 minutes",
                               stage_dir: str | None = None,
                               sink_dir: str | None = None,
                               checkpoint_dir: str | None = None,
                               listener=None,
-                              files_per_trigger: int | None = None,
-                              watch: tuple[int, ...] | None = None
+                              files_per_trigger: int | None = None
                               ) -> DataFrame:
     """Streaming count-min frequency monitor: per-(window, source)
     d×w CMS counter grids through the exactly-once sink; reading the
@@ -576,32 +654,22 @@ def run_streaming_cms_monitor(spark: SparkSession, sf_dir: str,
 
     stage = _resolve_stage(spark, sf_dir, stage_dir)
     src = read_token_stream(spark, stage, files_per_trigger)
-    flush_cut = F.timestamp_seconds(F.lit(EPOCH_2026 + TS_MOD + 3600))
     probes = F.array(*[
         F.struct(F.lit(j).alias("j"), _cms_cell(F.col("t"), j).alias("cell"))
         for j in range(CMS_D)])
-    grid = (
-        src.withWatermark("ts", watermark)
+    grid = _window_agg(
+        src.withWatermark("ts", WATERMARK)
         .select("ts", "source", F.explode_outer("tokens").alias("t"))
-        .select("ts", "source", F.explode(probes).alias("h"))
-        .groupBy(F.window("ts", width).alias("w"), "source",
-                 F.col("h.j").alias("j"), F.col("h.cell").alias("cell"))
-        .agg(F.count("*").alias("cnt"))
-        .where(F.col("w.start") < flush_cut)
-        .select(F.unix_timestamp("w.start").alias("ws"), "source",
-                "j", "cell", "cnt")
-    )
-    sink = IdempotentKeyedSink(sink_dir or _tmp("mscms_sink_"),
-                               ["ws", "source", "j", "cell"])
-    _run_to_sink(grid, sink, checkpoint_dir or _tmp("mscms_ck_"), listener)
-    return cms_watch_estimates(sink.read(spark), ["ws", "source"],
-                               watch or CMS_WATCH)
+        .select("ts", "source", F.explode(probes).alias("h")),
+        F.window("ts", WIDTH),
+        ["source", F.col("h.j").alias("j"), F.col("h.cell").alias("cell")],
+        [F.count("*").alias("cnt")], _flushed())
+    sink = _drain(grid, _sink(sink_dir, "ws", "source", "j", "cell"),
+                  checkpoint_dir, listener)
+    return cms_watch_estimates(sink.read(spark), ["ws", "source"], CMS_WATCH)
 
 
 def run_streaming_backfill_handoff(spark: SparkSession, sf_dir: str,
-                                   width: str = "5 minutes",
-                                   watermark: str = "10 minutes",
-                                   cut_sec: int = 1800,
                                    stage_dir: str | None = None,
                                    sink_dir: str | None = None,
                                    checkpoint_dir: str | None = None,
@@ -626,47 +694,27 @@ def run_streaming_backfill_handoff(spark: SparkSession, sf_dir: str,
     predicate on the WINDOW column (composed with the flush cut), so it
     stays above the EventTimeWatermark per the CLAUDE.md sentinel rule.
     """
-    width_sec = _interval_seconds(width)
-    cut_ts = EPOCH_2026 + cut_sec
-    sink = IdempotentKeyedSink(sink_dir or _tmp("msbf_sink_"),
-                               ["ws", "source"])
+    cut_ts = EPOCH_2026 + BACKFILL_CUT_SEC
+    sink = _sink(sink_dir, "ws", "source")
 
     # -- batch backfill: history + ONE overlap window past the cut ----
-    t = token_sequences(spark, sf_dir)
-    backfill = (
-        t.groupBy(F.window("ts", width).alias("w"), "source")
-        .agg(F.count("*").alias("n_seq"),
-             F.sum("n_tok").cast("bigint").alias("sum_tok"))
-        .where(F.col("w.start")
-               < F.timestamp_seconds(F.lit(cut_ts + width_sec)))
-        .select(F.unix_timestamp("w.start").alias("ws"), "source",
-                "n_seq", "sum_tok")
-    )
+    overlap = F.timestamp_seconds(F.lit(cut_ts + _interval_seconds(WIDTH)))
+    backfill = _window_agg(token_sequences(spark, sf_dir),
+                           F.window("ts", WIDTH), ["source"], _seq_totals(),
+                           F.col("w.start") < overlap)
     sink.foreach_batch(backfill, epoch_id=-1)
 
     # -- streaming tail: windows at/after the cut ----------------------
     stage = _resolve_stage(spark, sf_dir, stage_dir)
     src = read_token_stream(spark, stage, files_per_trigger)
-    flush_cut = F.timestamp_seconds(F.lit(EPOCH_2026 + TS_MOD + 3600))
-    agg = (
-        observed(src)
-        .withWatermark("ts", watermark)
-        .groupBy(F.window("ts", width).alias("w"), "source")
-        .agg(F.count("*").alias("n_seq"),
-             F.sum("n_tok").cast("bigint").alias("sum_tok"))
-        .where((F.col("w.start") < flush_cut)
-               & (F.col("w.start") >= F.timestamp_seconds(F.lit(cut_ts))))
-        .select(F.unix_timestamp("w.start").alias("ws"), "source",
-                "n_seq", "sum_tok")
-    )
-    _run_to_sink(agg, sink, checkpoint_dir or _tmp("msbf_ck_"), listener)
-    return sink.read(spark)
+    tail = F.col("w.start") >= F.timestamp_seconds(F.lit(cut_ts))
+    agg = _window_agg(observed(src).withWatermark("ts", WATERMARK),
+                      F.window("ts", WIDTH), ["source"], _seq_totals(),
+                      _flushed() & tail)
+    return _drain(agg, sink, checkpoint_dir, listener).read(spark)
 
 
 def run_streaming_late_repair(spark: SparkSession, sf_dir: str,
-                              width: str = "5 minutes",
-                              watermark: str = "10 minutes",
-                              straggler_mod: int = 7,
                               stage_dir: str | None = None,
                               sink_dir: str | None = None,
                               checkpoint_dir: str | None = None,
@@ -693,52 +741,36 @@ def run_streaming_late_repair(spark: SparkSession, sf_dir: str,
     aggregate (the damaged-window predicate reaches the scan), so a
     year-long timeline pays one partition-pruned scan per repair, not
     a full-history replay; the upsert is one appended epoch."""
-    stage = stage_dir or _tmp("mslr_stage_")
-    if _n_stage_files(stage) == 0:
-        stage_token_stream_with_stragglers(spark, sf_dir, stage,
-                                           straggler_mod=straggler_mod)
+    stage = _resolve_stage(spark, sf_dir, stage_dir, "stragglers")
     src = read_token_stream(spark, stage, files_per_trigger=1)
-    flush_cut = F.timestamp_seconds(F.lit(EPOCH_2026 + TS_MOD + 3600))
-    agg = (
-        observed(src)
-        .withWatermark("ts", watermark)
-        .groupBy(F.window("ts", width).alias("w"), "source")
-        .agg(F.count("*").alias("n_seq"),
-             F.sum("n_tok").cast("bigint").alias("sum_tok"))
-        .where(F.col("w.start") < flush_cut)
-        .select(F.unix_timestamp("w.start").alias("ws"), "source",
-                "n_seq", "sum_tok")
-    )
-    sink = IdempotentKeyedSink(sink_dir or _tmp("mslr_sink_"),
-                               ["ws", "source"])
-    _run_to_sink(agg, sink, checkpoint_dir or _tmp("mslr_ck_"), listener)
+    agg = _window_agg(observed(src).withWatermark("ts", WATERMARK),
+                      F.window("ts", WIDTH), ["source"], _seq_totals(),
+                      _flushed())
+    sink = _drain(agg, _sink(sink_dir, "ws", "source"), checkpoint_dir,
+                  listener)
 
     # -- batch repair: recompute ONLY the straggler-damaged windows ----
     # (window() is a grouping construct, not joinable — the prune key is
     # the same tumbling arithmetic as an ordinary column)
-    width_sec = _interval_seconds(width)
+    width_sec = _interval_seconds(WIDTH)
     t = token_sequences(spark, sf_dir, keep_did=True)
     win_start = (F.floor(F.unix_timestamp("ts") / width_sec)
                  * width_sec).cast("bigint")
     first_win = (F.col("ts")
                  < F.timestamp_seconds(F.lit(EPOCH_2026 + STRAGGLER_WIN_SEC)))
-    damaged = (t.where(first_win & (F.col("did") % straggler_mod == 0))
+    damaged = (t.where(first_win & (F.col("did") % STRAGGLER_MOD == 0))
                .select(win_start.alias("ws0")).distinct())
     repair = (
         t.withColumn("ws", win_start)
         .join(F.broadcast(damaged), F.col("ws") == F.col("ws0"))
         .groupBy("ws", "source")
-        .agg(F.count("*").alias("n_seq"),
-             F.sum("n_tok").cast("bigint").alias("sum_tok"))
-        .select("ws", "source", "n_seq", "sum_tok")
+        .agg(*_seq_totals())
     )
     sink.foreach_batch(repair, epoch_id=sink.next_patch_epoch())
     return sink.read(spark)
 
 
 def run_streaming_loglog_monitor(spark: SparkSession, sf_dir: str,
-                                 width: str = "5 minutes",
-                                 watermark: str = "10 minutes",
                                  stage_dir: str | None = None,
                                  sink_dir: str | None = None,
                                  checkpoint_dir: str | None = None,
@@ -765,24 +797,18 @@ def run_streaming_loglog_monitor(spark: SparkSession, sf_dir: str,
 
     stage = _resolve_stage(spark, sf_dir, stage_dir)
     src = read_token_stream(spark, stage, files_per_trigger)
-    flush_cut = F.timestamp_seconds(F.lit(EPOCH_2026 + TS_MOD + 3600))
     a, b = CMS_AB[0]
     hv = f"(({a}L * cast(t as bigint) + {b}) % {CMS_P})"
-    grid = (
-        src.withWatermark("ts", watermark)
+    grid = _window_agg(
+        src.withWatermark("ts", WATERMARK)
         .select("ts", "source", F.explode_outer("tokens").alias("t"))
         .select("ts", "source",
                 F.expr(f"{hv} % {LL_M}").alias("reg"),
-                F.expr(f"length(bin({hv} div {LL_M}))").alias("bl"))
-        .groupBy(F.window("ts", width).alias("w"), "source", "reg")
-        .agg(F.max("bl").alias("max_bl"))
-        .where(F.col("w.start") < flush_cut)
-        .select(F.unix_timestamp("w.start").alias("ws"), "source",
-                "reg", "max_bl")
-    )
-    sink = IdempotentKeyedSink(sink_dir or _tmp("msll_sink_"),
-                               ["ws", "source", "reg"])
-    _run_to_sink(grid, sink, checkpoint_dir or _tmp("msll_ck_"), listener)
+                F.expr(f"length(bin({hv} div {LL_M}))").alias("bl")),
+        F.window("ts", WIDTH), ["source", "reg"],
+        [F.max("bl").alias("max_bl")], _flushed())
+    sink = _drain(grid, _sink(sink_dir, "ws", "source", "reg"),
+                  checkpoint_dir, listener)
     return loglog_window_fold(sink.read(spark), ["ws", "source"])
 
 
@@ -851,14 +877,9 @@ def run_streaming_ann_ingest(spark: SparkSession, sf_dir: str,
         spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet")))
         .where(F.col("vec_id") < n_centroids)
         .select(F.col("vec_id").alias("cent_id"), F.col("q").alias("cv")))
-    stage = stage_dir or _tmp("msai_stage_")
-    if _n_stage_files(stage) == 0:
-        stage_embedding_stream(spark, sf_dir, stage)
-    if files_per_trigger is None:
-        files_per_trigger = _auto_trigger(stage)
-    src = (spark.readStream.schema(EMB_STREAM_SCHEMA)
-           .option("maxFilesPerTrigger", files_per_trigger)
-           .parquet(stage))
+    stage = _resolve_stage(spark, sf_dir, stage_dir, "embeddings")
+    src = read_token_stream(spark, stage, files_per_trigger,
+                            schema=EMB_STREAM_SCHEMA)
     if assign == "arrow":
         assigned = ivf_assign_arrow(src, cents=cents, keep=("label",))
     else:
@@ -866,8 +887,7 @@ def run_streaming_ann_ingest(spark: SparkSession, sf_dir: str,
             quantized(src).select("vec_id", "q", "label"),
             cents, keep=("label",))
     out = assigned.select("vec_id", "label", "cent_id")
-    sink = IdempotentKeyedSink(sink_dir or _tmp("msai_sink_"), ["vec_id"])
-    _run_to_sink(out, sink, checkpoint_dir or _tmp("msai_ck_"), listener)
+    sink = _drain(out, _sink(sink_dir, "vec_id"), checkpoint_dir, listener)
     return (
         sink.read(spark)
         .groupBy("cent_id")
@@ -878,8 +898,6 @@ def run_streaming_ann_ingest(spark: SparkSession, sf_dir: str,
 
 
 def run_streaming_dedup(spark: SparkSession, sf_dir: str,
-                        width: str = "5 minutes",
-                        watermark: str = "10 minutes",
                         stage_dir: str | None = None,
                         sink_dir: str | None = None,
                         checkpoint_dir: str | None = None,
@@ -894,20 +912,12 @@ def run_streaming_dedup(spark: SparkSession, sf_dir: str,
     """
     stage = _resolve_stage(spark, sf_dir, stage_dir, "dedup")
     src = read_token_stream(spark, stage)
-    flush_cut = F.timestamp_seconds(F.lit(EPOCH_2026 + TS_MOD + 3600))
-    agg = (
-        src.withWatermark("ts", watermark)
-        .dropDuplicatesWithinWatermark(["doc_id", "seq"])
-        .groupBy(F.window("ts", width).alias("w"), "source")
-        .agg(F.count("*").alias("n_seq"),
-             F.sum("n_tok").cast("bigint").alias("sum_tok"))
-        .where(F.col("w.start") < flush_cut)
-        .select(F.unix_timestamp("w.start").alias("ws"), "source",
-                "n_seq", "sum_tok")
-    )
-    sink = IdempotentKeyedSink(sink_dir or _tmp("msd_sink_"), ["ws", "source"])
-    _run_to_sink(agg, sink, checkpoint_dir or _tmp("msd_ck_"), listener)
-    return sink.read(spark)
+    agg = _window_agg(
+        src.withWatermark("ts", WATERMARK)
+        .dropDuplicatesWithinWatermark(["doc_id", "seq"]),
+        F.window("ts", WIDTH), ["source"], _seq_totals(), _flushed())
+    return _drain(agg, _sink(sink_dir, "ws", "source"), checkpoint_dir,
+                  listener).read(spark)
 
 
 EVENTS_SCHEMA = ("event_id BIGINT, ts TIMESTAMP, user_id BIGINT, "
@@ -942,8 +952,6 @@ def stage_events_stream(spark: SparkSession, sf_dir: str,
 
 
 def run_streaming_union(spark: SparkSession, sf_dir: str,
-                        width: str = "5 minutes",
-                        watermark: str = "10 minutes",
                         stage_dir: str | None = None,
                         sink_dir: str | None = None,
                         checkpoint_dir: str | None = None,
@@ -959,24 +967,14 @@ def run_streaming_union(spark: SparkSession, sf_dir: str,
     a_dir, b_dir = os.path.join(stage, "a"), os.path.join(stage, "b")
     src = read_token_stream(spark, a_dir).unionByName(
         read_token_stream(spark, b_dir))
-    flush_cut = F.timestamp_seconds(F.lit(EPOCH_2026 + TS_MOD + 3600))
-    agg = (
-        src.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", width).alias("w"), "source")
-        .agg(F.count("*").alias("n_seq"),
-             F.sum("n_tok").cast("bigint").alias("sum_tok"))
-        .where(F.col("w.start") < flush_cut)
-        .select(F.unix_timestamp("w.start").alias("ws"), "source",
-                "n_seq", "sum_tok")
-    )
-    sink = IdempotentKeyedSink(sink_dir or _tmp("msg_sink_"), ["ws", "source"])
-    _run_to_sink(agg, sink, checkpoint_dir or _tmp("msg_ck_"), listener)
-    return sink.read(spark)
+    agg = _window_agg(src.withWatermark("ts", WATERMARK),
+                      F.window("ts", WIDTH), ["source"], _seq_totals(),
+                      _flushed())
+    return _drain(agg, _sink(sink_dir, "ws", "source"), checkpoint_dir,
+                  listener).read(spark)
 
 
 def run_streaming_events(spark: SparkSession, sf_dir: str,
-                         width: str = "1 day",
-                         watermark: str = "1 day",
                          stage_dir: str | None = None,
                          sink_dir: str | None = None,
                          checkpoint_dir: str | None = None,
@@ -986,29 +984,20 @@ def run_streaming_events(spark: SparkSession, sf_dir: str,
     float column stays oracle-exact where a streamed SUM of doubles
     would not be)."""
     stage = _resolve_stage(spark, sf_dir, stage_dir, "events")
-    src = (spark.readStream.schema(EVENTS_SCHEMA)
-           .option("maxFilesPerTrigger", _auto_trigger(stage))
-           .parquet(stage))
+    src = read_token_stream(spark, stage, schema=EVENTS_SCHEMA)
     flush_cut = F.lit(EVENTS_FLUSH_TS.to_pydatetime()).cast("timestamp")
-    agg = (
-        src.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", width).alias("w"), "event_type")
-        .agg(F.count("*").alias("n_events"),
-             F.round(F.min("value"), 6).alias("min_v"),
-             F.round(F.max("value"), 6).alias("max_v"))
-        .where(F.col("w.start") < flush_cut)
-        .select(F.unix_timestamp("w.start").alias("ws"), "event_type",
-                "n_events", "min_v", "max_v")
-    )
-    sink = IdempotentKeyedSink(sink_dir or _tmp("msev_sink_"),
-                               ["ws", "event_type"])
-    _run_to_sink(agg, sink, checkpoint_dir or _tmp("msev_ck_"), listener)
-    return sink.read(spark)
+    agg = _window_agg(
+        src.withWatermark("ts", EVENTS_WINDOW),
+        F.window("ts", EVENTS_WINDOW), ["event_type"],
+        [F.count("*").alias("n_events"),
+         F.round(F.min("value"), 6).alias("min_v"),
+         F.round(F.max("value"), 6).alias("max_v")],
+        F.col("w.start") < flush_cut)
+    return _drain(agg, _sink(sink_dir, "ws", "event_type"), checkpoint_dir,
+                  listener).read(spark)
 
 
 def run_streaming_update_mode(spark: SparkSession, sf_dir: str,
-                              width: str = "5 minutes",
-                              watermark: str = "10 minutes",
                               stage_dir: str | None = None,
                               sink_dir: str | None = None,
                               checkpoint_dir: str | None = None,
@@ -1024,23 +1013,13 @@ def run_streaming_update_mode(spark: SparkSession, sf_dir: str,
     oracle-equal, which this query proves."""
     stage = _resolve_stage(spark, sf_dir, stage_dir, "nosentinel")
     src = read_token_stream(spark, stage)
-    agg = (
-        src.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", width).alias("w"), "source")
-        .agg(F.count("*").alias("n_seq"),
-             F.sum("n_tok").cast("bigint").alias("sum_tok"))
-        .select(F.unix_timestamp("w.start").alias("ws"), "source",
-                "n_seq", "sum_tok")
-    )
-    sink = IdempotentKeyedSink(sink_dir or _tmp("msu_sink_"), ["ws", "source"])
-    _run_to_sink(agg, sink, checkpoint_dir or _tmp("msu_ck_"),
-                 listener=listener, output_mode="update")
-    return sink.read(spark)
+    agg = _window_agg(src.withWatermark("ts", WATERMARK),
+                      F.window("ts", WIDTH), ["source"], _seq_totals(), None)
+    return _drain(agg, _sink(sink_dir, "ws", "source"), checkpoint_dir,
+                  listener, output_mode="update").read(spark)
 
 
 def run_streaming_enriched(spark: SparkSession, sf_dir: str,
-                           width: str = "5 minutes",
-                           watermark: str = "10 minutes",
                            stage_dir: str | None = None,
                            sink_dir: str | None = None,
                            checkpoint_dir: str | None = None,
@@ -1062,26 +1041,15 @@ def run_streaming_enriched(spark: SparkSession, sf_dir: str,
                 "lang")
     )
     src = read_token_stream(spark, stage)
-    flush_cut = F.timestamp_seconds(F.lit(EPOCH_2026 + TS_MOD + 3600))
-    agg = (
-        src.withWatermark("ts", watermark)
-        .join(F.broadcast(dim), "doc_id", "left")
-        .groupBy(F.window("ts", width).alias("w"), "lang")
-        .agg(F.count("*").alias("n_seq"),
-             F.sum("n_tok").cast("bigint").alias("sum_tok"))
-        .where(F.col("w.start") < flush_cut)
-        .select(F.unix_timestamp("w.start").alias("ws"), "lang",
-                "n_seq", "sum_tok")
-    )
-    sink = IdempotentKeyedSink(sink_dir or _tmp("mse_sink_"), ["ws", "lang"])
-    _run_to_sink(agg, sink, checkpoint_dir or _tmp("mse_ck_"), listener)
-    return sink.read(spark)
+    agg = _window_agg(
+        src.withWatermark("ts", WATERMARK)
+        .join(F.broadcast(dim), "doc_id", "left"),
+        F.window("ts", WIDTH), ["lang"], _seq_totals(), _flushed())
+    return _drain(agg, _sink(sink_dir, "ws", "lang"), checkpoint_dir,
+                  listener).read(spark)
 
 
 def run_streaming_sliding(spark: SparkSession, sf_dir: str,
-                          width: str = "10 minutes",
-                          slide: str = "5 minutes",
-                          watermark: str = "10 minutes",
                           stage_dir: str | None = None,
                           sink_dir: str | None = None,
                           checkpoint_dir: str | None = None,
@@ -1093,24 +1061,14 @@ def run_streaming_sliding(spark: SparkSession, sf_dir: str,
     idempotent."""
     stage = _resolve_stage(spark, sf_dir, stage_dir)
     src = read_token_stream(spark, stage)
-    flush_cut = F.timestamp_seconds(F.lit(EPOCH_2026 + TS_MOD + 3600))
-    agg = (
-        src.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", width, slide).alias("w"), "source")
-        .agg(F.count("*").alias("n_seq"),
-             F.sum("n_tok").cast("bigint").alias("sum_tok"))
-        .where(F.col("w.start") < flush_cut)
-        .select(F.unix_timestamp("w.start").alias("ws"), "source",
-                "n_seq", "sum_tok")
-    )
-    sink = IdempotentKeyedSink(sink_dir or _tmp("msl_sink_"), ["ws", "source"])
-    _run_to_sink(agg, sink, checkpoint_dir or _tmp("msl_ck_"), listener)
-    return sink.read(spark)
+    agg = _window_agg(src.withWatermark("ts", WATERMARK),
+                      F.window("ts", SLIDING_WIDTH, WIDTH), ["source"],
+                      _seq_totals(), _flushed())
+    return _drain(agg, _sink(sink_dir, "ws", "source"), checkpoint_dir,
+                  listener).read(spark)
 
 
 def run_streaming_session(spark: SparkSession, sf_dir: str,
-                          gap: str = "90 seconds",
-                          watermark: str = "10 minutes",
                           stage_dir: str | None = None,
                           sink_dir: str | None = None,
                           checkpoint_dir: str | None = None,
@@ -1119,33 +1077,15 @@ def run_streaming_session(spark: SparkSession, sf_dir: str,
     merges per-key activity separated by < gap into one state-store
     session; results emit in append mode once the watermark closes the
     session. Matches the batch session_token_windows oracle
-    (session_end = last event + gap). The sentinel rows form their own
-    far-future sessions and are cut by a predicate on the WINDOW column
-    (a non-window predicate would be pushed below the watermark node and
-    stall the flush — see run_streaming_tumbling's NOTE)."""
+    (session_end = last event + gap)."""
     stage = _resolve_stage(spark, sf_dir, stage_dir)
     src = read_token_stream(spark, stage)
-    flush_cut = F.timestamp_seconds(F.lit(EPOCH_2026 + TS_MOD + 3600))
-    sess = (
-        src.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("w"), "doc_id")
-        .agg(F.count("*").alias("n_shard"),
-             F.sum("n_tok").cast("bigint").alias("sum_tok"))
-        .where(F.col("w.start") < flush_cut)
-        .select("doc_id",
-                F.unix_timestamp("w.start").alias("session_start"),
-                F.unix_timestamp("w.end").alias("session_end"),
-                F.col("n_shard").cast("bigint").alias("n_shard"),
-                "sum_tok")
-    )
-    sink = IdempotentKeyedSink(sink_dir or _tmp("mss_sink_"),
-                               ["doc_id", "session_start"])
-    _run_to_sink(sess, sink, checkpoint_dir or _tmp("mss_ck_"), listener)
-    return sink.read(spark)
+    sess = _session_agg(src.withWatermark("ts", WATERMARK))
+    return _drain(sess, _sink(sink_dir, "doc_id", "session_start"),
+                  checkpoint_dir, listener).read(spark)
 
 
 def run_streaming_ordered_merge(spark: SparkSession, sf_dir: str,
-                                watermark: str = "10 minutes",
                                 stage_dir: str | None = None,
                                 sink_dir: str | None = None,
                                 checkpoint_dir: str | None = None,
@@ -1167,41 +1107,24 @@ def run_streaming_ordered_merge(spark: SparkSession, sf_dir: str,
     (run_streaming_incomplete_audit builds on it).
 
     Both paths produce the identical order-sensitive digest as the
-    batch merged_doc_check oracle (each is independently driver-gated:
-    streaming_ordered_merge / streaming_ordered_merge_jvm)."""
+    batch merged_doc_check oracle. Both registry rows
+    (streaming_ordered_merge, streaming_ordered_merge_jvm) run the JVM
+    path; the Python path is pinned by the ``mode="python"`` tests and
+    by perfbench's live_cep reference check."""
     if mode == "jvm":
         return run_streaming_ordered_merge_jvm(
-            spark, sf_dir, watermark=watermark, stage_dir=stage_dir,
-            sink_dir=sink_dir, checkpoint_dir=checkpoint_dir,
-            listener=listener)
+            spark, sf_dir, stage_dir=stage_dir, sink_dir=sink_dir,
+            checkpoint_dir=checkpoint_dir, listener=listener)
     if mode != "python":
         raise ValueError(
             f"mode must be 'jvm' or 'python', got {mode!r}")
-    stage = _resolve_stage(spark, sf_dir, stage_dir)
-    src = read_token_stream(spark, stage)
-    # Sentinel rows flow through the stateful stage (their doc completes
-    # immediately) and are dropped after it — filtering earlier would be
-    # pushed below the watermark node and stall the flush.
-    shards = src.select("doc_id", "seq", "tokens", "n_shards", "ts")
-    # timeout must cover a doc's max event-time span: shard timestamps
-    # within one doc can wrap the full TS_MOD hour, so the grace period is
-    # TS_MOD + slack — state still stays O(open docs).
-    merged = (
-        ordered_doc_assembler(shards, watermark=watermark,
-                              timeout_ms=(TS_MOD + 120) * 1000)
-        .where(F.col("doc_id") != SENTINEL)
-    )
-    sink = IdempotentKeyedSink(sink_dir or _tmp("mso_sink_"), ["doc_id"])
-    _run_to_sink(merged, sink, checkpoint_dir or _tmp("mso_ck_"), listener)
-    out = sink.read(spark)
-    from movement_spark.operators.ordering import doc_digest_cols
-    return out.select(
-        "doc_id", F.col("n_shard").cast("int").alias("n_shard"),
-        "total_tok", *doc_digest_cols())
+    merged = _assembled(spark, _resolve_stage(spark, sf_dir, stage_dir))
+    sink = _drain(merged, _sink(sink_dir, "doc_id"), checkpoint_dir,
+                  listener)
+    return _merged_docs(sink.read(spark))
 
 
 def run_streaming_ordered_merge_jvm(spark: SparkSession, sf_dir: str,
-                                    watermark: str = "10 minutes",
                                     stage_dir: str | None = None,
                                     sink_dir: str | None = None,
                                     checkpoint_dir: str | None = None,
@@ -1214,30 +1137,22 @@ def run_streaming_ordered_merge_jvm(spark: SparkSession, sf_dir: str,
     guarantee. Output digest matches the batch merged_doc_check oracle —
     the same rows the stateful-Python path emits, proving the two
     assembler implementations interchangeable."""
-    from movement_spark.operators.ordering import ordered_doc_assembler_jvm
-
     stage = _resolve_stage(spark, sf_dir, stage_dir)
     src = read_token_stream(spark, stage)
     shards = src.select("doc_id", "seq", "tokens", "ts")
-    flush_cut = F.timestamp_seconds(F.lit(EPOCH_2026 + TS_MOD + 3600))
     merged = (
-        ordered_doc_assembler_jvm(shards, watermark=watermark)
-        .where(F.col("w.start") < flush_cut)  # sentinel cut: window col ONLY
+        ordered_doc_assembler_jvm(shards, watermark=WATERMARK)
+        .where(_flushed())
         .drop("w")
     )
-    sink = IdempotentKeyedSink(sink_dir or _tmp("msoj_sink_"), ["doc_id"])
-    _run_to_sink(merged, sink, checkpoint_dir or _tmp("msoj_ck_"), listener)
-    out = sink.read(spark)
-    from movement_spark.operators.ordering import doc_digest_cols
-    return out.select(
-        "doc_id", F.col("n_shard").cast("int").alias("n_shard"),
-        "total_tok", *doc_digest_cols())
+    sink = _drain(merged, _sink(sink_dir, "doc_id"), checkpoint_dir,
+                  listener)
+    return _merged_docs(sink.read(spark))
 
 
 def run_throttled_ingest(spark: SparkSession, stage_dir: str,
                          expected_rows: int, delay_ms: int = 1500,
-                         checkpoint_dir: str | None = None,
-                         timeout_sec: float = 120.0):
+                         checkpoint_dir: str | None = None):
     """Rate-limited source — the ThrottledGraph analog
     (extensions/tinkerpop/.../ThrottledGraph.java:50-58 wraps every
     addVertex/vertices/edges call in RuntimeUtil.stall(delay)).
@@ -1248,9 +1163,10 @@ def run_throttled_ingest(spark: SparkSession, stage_dir: str,
     between batch STARTS — the engine stalls the source, the query plan
     is untouched, and removing the throttle is a config change, exactly
     like unwrapping ThrottledGraph. Runs until ``expected_rows`` have
-    been admitted, then stops; returns the RuntimeMetricsListener whose
-    per-batch ``ts_iso`` records prove the pacing (tests assert
-    consecutive non-empty batch starts are >= ~delay apart).
+    been admitted (or THROTTLE_TIMEOUT_SEC passes), then stops; returns
+    the RuntimeMetricsListener whose per-batch ``ts_iso`` records prove
+    the pacing (tests assert consecutive non-empty batch starts are >=
+    ~delay apart).
     """
     listener = RuntimeMetricsListener()
     # listener registration and query start inside the try: a setup
@@ -1266,7 +1182,7 @@ def run_throttled_ingest(spark: SparkSession, stage_dir: str,
             .trigger(processingTime=f"{delay_ms} milliseconds")
             .start()
         )
-        deadline = time.time() + timeout_sec
+        deadline = time.time() + THROTTLE_TIMEOUT_SEC
         while listener.total_rows < expected_rows:
             # surface a dead query's real error instead of spinning the
             # whole timeout and reporting a generic row-count stall
@@ -1275,7 +1191,7 @@ def run_throttled_ingest(spark: SparkSession, stage_dir: str,
             if time.time() > deadline:
                 raise TimeoutError(
                     f"throttled ingest saw {listener.total_rows}/"
-                    f"{expected_rows} rows within {timeout_sec}s")
+                    f"{expected_rows} rows within {THROTTLE_TIMEOUT_SEC}s")
             time.sleep(delay_ms / 1000.0 / 4)
     finally:
         if q is not None:
@@ -1285,13 +1201,13 @@ def run_throttled_ingest(spark: SparkSession, stage_dir: str,
     return listener
 
 
-def _parity_shard_streams(src: DataFrame, watermark: str,
-                          max_gap_sec: int, keep_sentinels: bool):
+def _parity_shard_streams(src: DataFrame, keep_sentinels: bool):
     """Even/odd shard split + interval-join condition — the shared,
     parity-critical core of the stream-stream join family
-    (inner = shard_join, left/full = the outer pipelines): one
-    definition of the seq-parity predicates and the ±max_gap condition
-    so a boundary change cannot silently miss one variant.
+    (inner = shard_join, left/full = the outer pipelines, and the
+    join→window chains): one definition of the seq-parity predicates
+    and the ±MAX_GAP_SEC condition so a boundary change cannot silently
+    miss one variant.
 
     ``keep_sentinels``: the OUTER joins must let the flush sentinels
     FLOW THROUGH both watermark operators (outer emission needs the min
@@ -1310,26 +1226,25 @@ def _parity_shard_streams(src: DataFrame, watermark: str,
         src.where(even_pred)
         .select("doc_id", F.col("seq").alias("seq_a"),
                 F.col("n_tok").alias("n_tok_a"), F.col("ts").alias("ts_a"))
-        .withWatermark("ts_a", watermark)
+        .withWatermark("ts_a", WATERMARK)
     )
     odd = (
         src.where(odd_pred)
         .select(F.col("doc_id").alias("doc_id_b"),
                 F.col("seq").alias("seq_b"),
                 F.col("n_tok").alias("n_tok_b"), F.col("ts").alias("ts_b"))
-        .withWatermark("ts_b", watermark)
+        .withWatermark("ts_b", WATERMARK)
     )
+    gap = F.expr(f"INTERVAL {MAX_GAP_SEC} SECONDS")
     cond = (
         (even.doc_id == odd.doc_id_b)
-        & (odd.ts_b >= even.ts_a - F.expr(f"INTERVAL {max_gap_sec} SECONDS"))
-        & (odd.ts_b <= even.ts_a + F.expr(f"INTERVAL {max_gap_sec} SECONDS"))
+        & (odd.ts_b >= even.ts_a - gap)
+        & (odd.ts_b <= even.ts_a + gap)
     )
     return even, odd, cond
 
 
 def run_streaming_shard_join(spark: SparkSession, sf_dir: str,
-                             watermark: str = "10 minutes",
-                             max_gap_sec: int = 60,
                              stage_dir: str | None = None,
                              sink_dir: str | None = None,
                              checkpoint_dir: str | None = None,
@@ -1339,35 +1254,25 @@ def run_streaming_shard_join(spark: SparkSession, sf_dir: str,
     pairs matches the batch shard_pair_join oracle."""
     stage = _resolve_stage(spark, sf_dir, stage_dir)
     src = read_token_stream(spark, stage).where(F.col("source") != SENTINEL)
-    even, odd, cond = _parity_shard_streams(
-        src, watermark, max_gap_sec, keep_sentinels=False)
+    even, odd, cond = _parity_shard_streams(src, keep_sentinels=False)
     pairs = even.join(odd, cond, "inner") \
         .select("doc_id", "seq_a", "seq_b", "n_tok_a", "n_tok_b")
-    sink = IdempotentKeyedSink(sink_dir or _tmp("msj_sink_"),
-                               ["doc_id", "seq_a", "seq_b"])
-    _run_to_sink(pairs, sink, checkpoint_dir or _tmp("msj_ck_"), listener)
-    out = sink.read(spark)
-    return (
-        out.groupBy("doc_id")
-        .agg(F.count("*").alias("n_pairs"),
-             F.sum(F.col("n_tok_a") + F.col("n_tok_b")).cast("bigint")
-             .alias("pair_tok"))
-    )
+    sink = _drain(pairs, _sink(sink_dir, "doc_id", "seq_a", "seq_b"),
+                  checkpoint_dir, listener)
+    return sink.read(spark).groupBy("doc_id").agg(*_pair_totals())
 
 
 def run_streaming_left_join(spark: SparkSession, sf_dir: str,
-                            watermark: str = "10 minutes",
-                            max_gap_sec: int = 60,
                             stage_dir: str | None = None,
                             sink_dir: str | None = None,
                             checkpoint_dir: str | None = None,
                             listener=None) -> DataFrame:
     """Watermarked stream-stream LEFT OUTER join: even shards that find
-    no odd partner within ±max_gap MUST still be emitted (with nulls) —
-    but only once the watermark proves no partner can still arrive.
-    This is the outer-emission contract Spark adds on top of the inner
-    join: unmatched left state is held until watermark > ts_a + gap,
-    then released exactly once.
+    no odd partner within ±MAX_GAP_SEC MUST still be emitted (with
+    nulls) — but only once the watermark proves no partner can still
+    arrive. This is the outer-emission contract Spark adds on top of
+    the inner join: unmatched left state is held until watermark >
+    ts_a + gap, then released exactly once.
 
     Sentinel discipline differs from every other pipeline here: the
     flush sentinels must FLOW THROUGH both watermark operators (outer
@@ -1383,15 +1288,13 @@ def run_streaming_left_join(spark: SparkSession, sf_dir: str,
     """
     stage = _resolve_stage(spark, sf_dir, stage_dir)
     src = read_token_stream(spark, stage)
-    even, odd, cond = _parity_shard_streams(
-        src, watermark, max_gap_sec, keep_sentinels=True)
+    even, odd, cond = _parity_shard_streams(src, keep_sentinels=True)
     joined = even.join(odd, cond, "left_outer").select(
         "doc_id", "seq_a", "n_tok_a",
         F.coalesce("seq_b", F.lit(-1)).alias("seq_b"),
         F.coalesce("n_tok_b", F.lit(0)).alias("n_tok_b"))
-    sink = IdempotentKeyedSink(sink_dir or _tmp("mslj_sink_"),
-                               ["doc_id", "seq_a", "seq_b"])
-    _run_to_sink(joined, sink, checkpoint_dir or _tmp("mslj_ck_"), listener)
+    sink = _drain(joined, _sink(sink_dir, "doc_id", "seq_a", "seq_b"),
+                  checkpoint_dir, listener)
     # sentinel pairs DO reach the sink (they match each other and emit
     # as ordinary join output); cut them here, outside the plan
     out = sink.read(spark).where(F.col("doc_id") != SENTINEL)
@@ -1408,7 +1311,6 @@ def run_streaming_left_join(spark: SparkSession, sf_dir: str,
 
 
 def run_streaming_incomplete_audit(spark: SparkSession, sf_dir: str,
-                                   watermark: str = "10 minutes",
                                    stage_dir: str | None = None,
                                    sink_dir: str | None = None,
                                    checkpoint_dir: str | None = None,
@@ -1422,19 +1324,11 @@ def run_streaming_incomplete_audit(spark: SparkSession, sf_dir: str,
     derives arithmetically from the drop rule.
     """
     stage = _resolve_stage(spark, sf_dir, stage_dir, variant="gaps")
-    src = read_token_stream(spark, stage)
-    shards = src.select("doc_id", "seq", "tokens", "n_shards", "ts")
-    merged = (
-        ordered_doc_assembler(shards, watermark=watermark,
-                              timeout_ms=(TS_MOD + 120) * 1000,
-                              emit_incomplete=True)
-        .where(F.col("doc_id") != SENTINEL)
-    )
-    sink = IdempotentKeyedSink(sink_dir or _tmp("msi_sink_"), ["doc_id"])
-    _run_to_sink(merged, sink, checkpoint_dir or _tmp("msi_ck_"), listener)
-    out = sink.read(spark)
+    merged = _assembled(spark, stage, emit_incomplete=True)
+    sink = _drain(merged, _sink(sink_dir, "doc_id"), checkpoint_dir,
+                  listener)
     return (
-        out.where(F.col("total_tok") < 0)
+        sink.read(spark).where(F.col("total_tok") < 0)
         .select("doc_id",
                 F.col("n_shard").cast("int").alias("n_received"),
                 (-F.col("total_tok")).cast("int").alias("expected"))
@@ -1442,8 +1336,6 @@ def run_streaming_incomplete_audit(spark: SparkSession, sf_dir: str,
 
 
 def run_streaming_dedup_sessions(spark: SparkSession, sf_dir: str,
-                                 gap: str = "90 seconds",
-                                 watermark: str = "10 minutes",
                                  stage_dir: str | None = None,
                                  sink_dir: str | None = None,
                                  checkpoint_dir: str | None = None,
@@ -1462,28 +1354,13 @@ def run_streaming_dedup_sessions(spark: SparkSession, sf_dir: str,
     """
     stage = _resolve_stage(spark, sf_dir, stage_dir, "dedup")
     src = read_token_stream(spark, stage)
-    flush_cut = F.timestamp_seconds(F.lit(EPOCH_2026 + TS_MOD + 3600))
-    sess = (
-        src.withWatermark("ts", watermark)
-        .dropDuplicatesWithinWatermark(["doc_id", "seq"])
-        .groupBy(F.session_window("ts", gap).alias("w"), "doc_id")
-        .agg(F.count("*").alias("n_shard"),
-             F.sum("n_tok").cast("bigint").alias("sum_tok"))
-        .where(F.col("w.start") < flush_cut)
-        .select("doc_id",
-                F.unix_timestamp("w.start").alias("session_start"),
-                F.unix_timestamp("w.end").alias("session_end"),
-                F.col("n_shard").cast("bigint").alias("n_shard"),
-                "sum_tok")
-    )
-    sink = IdempotentKeyedSink(sink_dir or _tmp("msds_sink_"),
-                               ["doc_id", "session_start"])
-    _run_to_sink(sess, sink, checkpoint_dir or _tmp("msds_ck_"), listener)
-    return sink.read(spark)
+    sess = _session_agg(src.withWatermark("ts", WATERMARK)
+                        .dropDuplicatesWithinWatermark(["doc_id", "seq"]))
+    return _drain(sess, _sink(sink_dir, "doc_id", "session_start"),
+                  checkpoint_dir, listener).read(spark)
 
 
 def run_streaming_leaderboard(spark: SparkSession, sf_dir: str,
-                              top_n: int = 3,
                               stage_dir: str | None = None,
                               sink_dir: str | None = None,
                               checkpoint_dir: str | None = None,
@@ -1495,22 +1372,18 @@ def run_streaming_leaderboard(spark: SparkSession, sf_dir: str,
     state is one row per key, updates supersede, no watermark or
     sentinel involved, and the end state must equal the batch totals.
     """
+    from pyspark.sql.window import Window
+
     stage = _resolve_stage(spark, sf_dir, stage_dir, "nosentinel")
     src = read_token_stream(spark, stage)
-    totals = (
-        src.groupBy("source")
-        .agg(F.count("*").alias("n_seq"),
-             F.sum("n_tok").cast("bigint").alias("sum_tok"))
-    )
-    sink = IdempotentKeyedSink(sink_dir or _tmp("mslb_sink_"), ["source"])
-    _run_to_sink(totals, sink, checkpoint_dir or _tmp("mslb_ck_"),
-                 listener=listener, output_mode="update")
-    from pyspark.sql.window import Window
-    out = sink.read(spark)
+    totals = src.groupBy("source").agg(*_seq_totals())
+    sink = _drain(totals, _sink(sink_dir, "source"), checkpoint_dir,
+                  listener, output_mode="update")
     w = Window.orderBy(F.desc("sum_tok"), F.asc("source"))
     return (
-        out.withColumn("lb_rank", F.row_number().over(w).cast("int"))
-        .where(F.col("lb_rank") <= top_n)
+        sink.read(spark)
+        .withColumn("lb_rank", F.row_number().over(w).cast("int"))
+        .where(F.col("lb_rank") <= LEADERBOARD_TOP_N)
         .select("source", F.col("n_seq").cast("bigint").alias("n_seq"),
                 "sum_tok", "lb_rank")
     )
@@ -1518,7 +1391,6 @@ def run_streaming_leaderboard(spark: SparkSession, sf_dir: str,
 
 def run_streaming_fanout(spark: SparkSession, sf_dir: str,
                          stage_dir: str | None = None,
-                         archive_dir: str | None = None,
                          sink_dir: str | None = None,
                          checkpoint_dir: str | None = None,
                          listener=None) -> DataFrame:
@@ -1546,37 +1418,34 @@ def run_streaming_fanout(spark: SparkSession, sf_dir: str,
 
     stage = _resolve_stage(spark, sf_dir, stage_dir, "nosentinel")
     src = read_token_stream(spark, stage)
-    archive = archive_dir or _tmp("msfo_arch_")
-    counters = AdditiveKeyedSink(sink_dir or _tmp("msfo_sink_"),
+    archive = _tmp("msfo_arch_")
+    counters = AdditiveKeyedSink(sink_dir or _tmp("ms_sink_"),
                                  ["source"], ["n_seq", "sum_tok"])
 
     def _fanout(batch: DataFrame, epoch_id: int) -> None:
+        # unpersist in a finally: a failed write must not leave the
+        # micro-batch cached on the shared session
         batch.persist()
-        (batch.write.mode("overwrite")
-         .parquet(os.path.join(archive, f"epoch={epoch_id}")))
-        partials = (
-            batch.groupBy("source")
-            .agg(F.count("*").cast("bigint").alias("n_seq"),
-                 F.sum("n_tok").cast("bigint").alias("sum_tok")))
-        counters.foreach_batch(partials, epoch_id)
-        batch.unpersist()
+        try:
+            (batch.write.mode("overwrite")
+             .parquet(os.path.join(archive, f"epoch={epoch_id}")))
+            partials = batch.groupBy("source").agg(*_seq_totals())
+            counters.foreach_batch(partials, epoch_id)
+        finally:
+            batch.unpersist()
 
-    _run_to_sink(src, counters, checkpoint_dir or _tmp("msfo_ck_"),
-                 listener=listener, batch_fn=_fanout)
-    totals = counters.read(spark)
+    _drain(src, counters, checkpoint_dir, listener, batch_fn=_fanout)
     archived = (
         spark.read.parquet(archive)
         .groupBy("source").agg(F.count("*").cast("bigint")
                                .alias("n_archived")))
     return (
-        totals.join(archived, "source")
+        counters.read(spark).join(archived, "source")
         .select("source", "n_seq", "sum_tok", "n_archived")
     )
 
 
 def run_streaming_full_outer_join(spark: SparkSession, sf_dir: str,
-                                  watermark: str = "10 minutes",
-                                  max_gap_sec: int = 60,
                                   stage_dir: str | None = None,
                                   sink_dir: str | None = None,
                                   checkpoint_dir: str | None = None,
@@ -1593,17 +1462,15 @@ def run_streaming_full_outer_join(spark: SparkSession, sf_dir: str,
     """
     stage = _resolve_stage(spark, sf_dir, stage_dir)
     src = read_token_stream(spark, stage)
-    even, odd, cond = _parity_shard_streams(
-        src, watermark, max_gap_sec, keep_sentinels=True)
+    even, odd, cond = _parity_shard_streams(src, keep_sentinels=True)
     joined = even.join(odd, cond, "full_outer").select(
         F.coalesce(F.col("doc_id"), F.col("doc_id_b")).alias("doc_id"),
         F.coalesce("seq_a", F.lit(-1)).alias("seq_a"),
         F.coalesce("n_tok_a", F.lit(0)).alias("n_tok_a"),
         F.coalesce("seq_b", F.lit(-1)).alias("seq_b"),
         F.coalesce("n_tok_b", F.lit(0)).alias("n_tok_b"))
-    sink = IdempotentKeyedSink(sink_dir or _tmp("msfj_sink_"),
-                               ["doc_id", "seq_a", "seq_b"])
-    _run_to_sink(joined, sink, checkpoint_dir or _tmp("msfj_ck_"), listener)
+    sink = _drain(joined, _sink(sink_dir, "doc_id", "seq_a", "seq_b"),
+                  checkpoint_dir, listener)
     out = sink.read(spark).where(F.col("doc_id") != SENTINEL)
     return (
         out.groupBy("doc_id")
@@ -1620,9 +1487,6 @@ def run_streaming_full_outer_join(spark: SparkSession, sf_dir: str,
 
 
 def run_streaming_join_then_window(spark: SparkSession, sf_dir: str,
-                                   watermark: str = "10 minutes",
-                                   max_gap_sec: int = 60,
-                                   width: str = "5 minutes",
                                    stage_dir: str | None = None,
                                    sink_dir: str | None = None,
                                    checkpoint_dir: str | None = None,
@@ -1645,57 +1509,39 @@ def run_streaming_join_then_window(spark: SparkSession, sf_dir: str,
     """
     stage = _resolve_stage(spark, sf_dir, stage_dir)
     src = read_token_stream(spark, stage)
-    even, odd, cond = _parity_shard_streams(
-        src, watermark, max_gap_sec, keep_sentinels=True)
-    flush_cut = F.timestamp_seconds(F.lit(EPOCH_2026 + TS_MOD + 3600))
-    agg = (
-        even.join(odd, cond, "inner")
-        .groupBy(F.window("ts_a", width).alias("w"))
-        .agg(F.count("*").alias("n_pairs"),
-             F.sum(F.col("n_tok_a") + F.col("n_tok_b")).cast("bigint")
-             .alias("pair_tok"))
-        .where(F.col("w.start") < flush_cut)
-        .select(F.unix_timestamp("w.start").alias("ws"),
-                "n_pairs", "pair_tok")
-    )
-    sink = IdempotentKeyedSink(sink_dir or _tmp("msjw_sink_"), ["ws"])
-    _run_to_sink(agg, sink, checkpoint_dir or _tmp("msjw_ck_"), listener)
-    return sink.read(spark)
+    even, odd, cond = _parity_shard_streams(src, keep_sentinels=True)
+    agg = _window_agg(even.join(odd, cond, "inner"), F.window("ts_a", WIDTH),
+                      [], _pair_totals(), _flushed())
+    return _drain(agg, _sink(sink_dir, "ws"), checkpoint_dir,
+                  listener).read(spark)
 
 
 def run_streaming_pattern_match(spark: SparkSession, sf_dir: str,
-                                pattern: str = "v+cp",
-                                watermark: str = "1 day",
                                 stage_dir: str | None = None,
                                 sink_dir: str | None = None,
                                 checkpoint_dir: str | None = None,
                                 files_per_trigger: int | None = None,
                                 listener=None) -> DataFrame:
     """Streaming CEP row-pattern matching over the events stream: the
-    stateful matcher (operators/patterns.py:user_pattern_stats) closes
-    each user's activity episode on event-time timeout and emits the
-    MATCH_RECOGNIZE stats row; the sink is keyed by user_id. Sentinel
-    rows become the user_id = -1 episode and are dropped after the
-    stateful stage (a post-stage filter cannot be pushed below the
-    watermark through a Python stage)."""
+    stateful matcher (operators/patterns.py:user_pattern_stats, with
+    its default pattern) closes each user's activity episode on
+    event-time timeout and emits the MATCH_RECOGNIZE stats row; the
+    sink is keyed by user_id. Sentinel rows become the user_id = -1
+    episode and are dropped after the stateful stage (a post-stage
+    filter cannot be pushed below the watermark through a Python
+    stage)."""
     from movement_spark.operators.patterns import user_pattern_stats
 
     stage = _resolve_stage(spark, sf_dir, stage_dir, "events")
-    src = (spark.readStream.schema(EVENTS_SCHEMA)
-           .option("maxFilesPerTrigger",
-                   files_per_trigger or _auto_trigger(stage))
-           .parquet(stage))
-    stats = user_pattern_stats(src, pattern=pattern, watermark=watermark) \
+    src = read_token_stream(spark, stage, files_per_trigger,
+                            schema=EVENTS_SCHEMA)
+    stats = user_pattern_stats(src, watermark=EVENTS_WINDOW) \
         .where(F.col("user_id") >= 0)
-    sink = IdempotentKeyedSink(sink_dir or _tmp("mspm_sink_"), ["user_id"])
-    _run_to_sink(stats, sink, checkpoint_dir or _tmp("mspm_ck_"), listener)
-    return sink.read(spark)
+    return _drain(stats, _sink(sink_dir, "user_id"), checkpoint_dir,
+                  listener).read(spark)
 
 
 def run_streaming_window_rollup(spark: SparkSession, sf_dir: str,
-                                fine: str = "5 minutes",
-                                coarse: str = "1 hour",
-                                watermark: str = "10 minutes",
                                 stage_dir: str | None = None,
                                 sink_dir: str | None = None,
                                 checkpoint_dir: str | None = None,
@@ -1716,33 +1562,21 @@ def run_streaming_window_rollup(spark: SparkSession, sf_dir: str,
     cutting between the two aggs would push below the first window)."""
     stage = _resolve_stage(spark, sf_dir, stage_dir)
     src = read_token_stream(spark, stage)
-    flush_cut = F.timestamp_seconds(F.lit(EPOCH_2026 + TS_MOD + 3600))
     fine_agg = (
-        src.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", fine).alias("w5"), "source")
-        .agg(F.count("*").alias("n_seq"),
-             F.sum("n_tok").cast("bigint").alias("sum_tok"))
+        src.withWatermark("ts", WATERMARK)
+        .groupBy(F.window("ts", WIDTH).alias("w5"), "source")
+        .agg(*_seq_totals())
     )
-    coarse_agg = (
-        fine_agg
-        .groupBy(F.window(F.col("w5"), coarse).alias("w"), "source")
-        .agg(F.count("*").alias("n_fine"),
-             F.sum("n_seq").cast("bigint").alias("n_seq"),
-             F.sum("sum_tok").cast("bigint").alias("sum_tok"))
-        .where(F.col("w.start") < flush_cut)
-        .select(F.unix_timestamp("w.start").alias("ws"), "source",
-                "n_fine", "n_seq", "sum_tok")
-    )
-    sink = IdempotentKeyedSink(sink_dir or _tmp("mswr_sink_"),
-                               ["ws", "source"])
-    _run_to_sink(coarse_agg, sink, checkpoint_dir or _tmp("mswr_ck_"),
-                 listener)
-    return sink.read(spark)
+    coarse_agg = _window_agg(
+        fine_agg, F.window(F.col("w5"), ROLLUP_WIDTH), ["source"],
+        [F.count("*").alias("n_fine"),
+         F.sum("n_seq").cast("bigint").alias("n_seq"),
+         F.sum("sum_tok").cast("bigint").alias("sum_tok")], _flushed())
+    return _drain(coarse_agg, _sink(sink_dir, "ws", "source"),
+                  checkpoint_dir, listener).read(spark)
 
 
 def run_streaming_neardup_monitor(spark: SparkSession, sf_dir: str,
-                                  width: str = "5 minutes",
-                                  watermark: str = "10 minutes",
                                   stage_dir: str | None = None,
                                   sink_dir: str | None = None,
                                   checkpoint_dir: str | None = None,
@@ -1813,34 +1647,28 @@ def run_streaming_neardup_monitor(spark: SparkSession, sf_dir: str,
         stage = _resolve_stage(spark, sf_dir, stage_dir)
         src = read_token_stream(spark, stage, files_per_trigger)
         sig_col = F.expr(shard_signature_expr())
-    flush_cut = F.timestamp_seconds(F.lit(EPOCH_2026 + TS_MOD + 3600))
     per_sig = (
         src.withColumn("sig", sig_col)
-        .withWatermark("ts", watermark)
-        .groupBy(F.window("ts", width).alias("w5"), "source", "sig")
+        .withWatermark("ts", WATERMARK)
+        .groupBy(F.window("ts", WIDTH).alias("w5"), "source", "sig")
         .agg(F.count("*").alias("n"))
     )
     mon = (
         per_sig
-        .groupBy(F.window(F.col("w5"), width).alias("w"), "source")
+        .groupBy(F.window(F.col("w5"), WIDTH).alias("w"), "source")
         .agg(F.sum("n").cast("bigint").alias("n_seq"),
              F.count("*").cast("bigint").alias("n_distinct_sig"))
-        .where(F.col("w.start") < flush_cut)
+        .where(_flushed())
         .select(F.unix_timestamp("w.start").alias("ws"), "source",
                 "n_seq", "n_distinct_sig",
                 (F.col("n_seq") - F.col("n_distinct_sig"))
                 .cast("bigint").alias("n_dup_seq"))
     )
-    sink = IdempotentKeyedSink(sink_dir or _tmp("msnd_sink_"),
-                               ["ws", "source"])
-    _run_to_sink(mon, sink, checkpoint_dir or _tmp("msnd_ck_"), listener)
-    return sink.read(spark)
+    return _drain(mon, _sink(sink_dir, "ws", "source"), checkpoint_dir,
+                  listener).read(spark)
 
 
 def run_streaming_dedup_join_window(spark: SparkSession, sf_dir: str,
-                                    watermark: str = "10 minutes",
-                                    max_gap_sec: int = 60,
-                                    width: str = "5 minutes",
                                     stage_dir: str | None = None,
                                     sink_dir: str | None = None,
                                     checkpoint_dir: str | None = None,
@@ -1861,38 +1689,11 @@ def run_streaming_dedup_join_window(spark: SparkSession, sf_dir: str,
     the window-column predicate as in every windowed pipeline."""
     stage = _resolve_stage(spark, sf_dir, stage_dir, "dedup")
     src = read_token_stream(spark, stage)
-    is_sent = F.col("source") == SENTINEL
-    even = (
-        src.where((F.col("seq") % 2 == 0) | is_sent)
-        .select("doc_id", F.col("seq").alias("seq_a"),
-                F.col("n_tok").alias("n_tok_a"), F.col("ts").alias("ts_a"))
-        .withWatermark("ts_a", watermark)
-        .dropDuplicatesWithinWatermark(["doc_id", "seq_a"])
-    )
-    odd = (
-        src.where((F.col("seq") % 2 == 1) | is_sent)
-        .select(F.col("doc_id").alias("doc_id_b"),
-                F.col("seq").alias("seq_b"),
-                F.col("n_tok").alias("n_tok_b"), F.col("ts").alias("ts_b"))
-        .withWatermark("ts_b", watermark)
-        .dropDuplicatesWithinWatermark(["doc_id_b", "seq_b"])
-    )
-    cond = (
-        (even.doc_id == odd.doc_id_b)
-        & (odd.ts_b >= even.ts_a - F.expr(f"INTERVAL {max_gap_sec} SECONDS"))
-        & (odd.ts_b <= even.ts_a + F.expr(f"INTERVAL {max_gap_sec} SECONDS"))
-    )
-    flush_cut = F.timestamp_seconds(F.lit(EPOCH_2026 + TS_MOD + 3600))
-    agg = (
-        even.join(odd, cond, "inner")
-        .groupBy(F.window("ts_a", width).alias("w"))
-        .agg(F.count("*").alias("n_pairs"),
-             F.sum(F.col("n_tok_a") + F.col("n_tok_b")).cast("bigint")
-             .alias("pair_tok"))
-        .where(F.col("w.start") < flush_cut)
-        .select(F.unix_timestamp("w.start").alias("ws"),
-                "n_pairs", "pair_tok")
-    )
-    sink = IdempotentKeyedSink(sink_dir or _tmp("msdjw_sink_"), ["ws"])
-    _run_to_sink(agg, sink, checkpoint_dir or _tmp("msdjw_ck_"), listener)
-    return sink.read(spark)
+    even, odd, cond = _parity_shard_streams(src, keep_sentinels=True)
+    pairs = (even.dropDuplicatesWithinWatermark(["doc_id", "seq_a"])
+             .join(odd.dropDuplicatesWithinWatermark(["doc_id_b", "seq_b"]),
+                   cond, "inner"))
+    agg = _window_agg(pairs, F.window("ts_a", WIDTH), [], _pair_totals(),
+                      _flushed())
+    return _drain(agg, _sink(sink_dir, "ws"), checkpoint_dir,
+                  listener).read(spark)

@@ -154,22 +154,58 @@ def test_ordered_merge_defaults_to_jvm_bulk_path(monkeypatch):
         P.run_streaming_ordered_merge(None, "/nonexistent", mode="latency")
 
 
-def test_cep_module_gates_cleanly(spark, sf_dir):
-    """transformWithStateInPandas needs google.protobuf (broken in this
-    sandbox): the operator must refuse with a clear error, or — where the
-    runtime exists — build a streaming DataFrame."""
-    import pytest as _pytest
-    from movement_spark.streaming import cep
-    from movement_spark.streaming.pipeline import (
-        read_token_stream, stage_token_stream)
-    stage = _mkdir()
-    stage_token_stream(spark, sf_dir, stage, n_chunks=2)
-    src = read_token_stream(spark, stage)
-    if cep._runtime_available():
-        assert cep.doc_completion(src).isStreaming
-    else:
-        with _pytest.raises(NotImplementedError):
-            cep.doc_completion(src)
+def test_read_stream_only_in_read_token_stream():
+    """One source rule: every pipeline reads its staged files through
+    read_token_stream, so a file-source option (pacing, schema) cannot
+    diverge per pipeline. No other function in the module may touch
+    ``readStream``."""
+    import ast
+
+    from movement_spark.streaming import pipeline as P
+
+    tree = ast.parse(open(P.__file__).read())
+    readers = set()
+    for fn in ast.walk(tree):
+        if isinstance(fn, ast.FunctionDef) and any(
+                isinstance(n, ast.Attribute) and n.attr == "readStream"
+                for n in ast.walk(fn)):
+            readers.add(fn.name)
+    assert readers == {"read_token_stream"}, readers
+
+
+def test_fanout_failed_write_leaves_nothing_cached(spark, sf_dir,
+                                                   monkeypatch):
+    """The fan-out persists each micro-batch for its two writes; a
+    failing archive write must still unpersist it, or the batch stays
+    cached on the shared session after the query dies. The archive dir
+    is replaced by a regular file, so the real parquet write fails."""
+    from pyspark.errors import StreamingQueryException
+
+    from movement_spark.sources import tokens
+    from movement_spark.streaming import pipeline as P
+
+    real_tmp = P._tmp
+
+    def tmp(prefix):
+        path = real_tmp(prefix)
+        if prefix.startswith("msfo_arch_"):
+            os.rmdir(path)
+            open(path, "w").close()
+        return path
+
+    # staging persists the token table: stage first, then start from an
+    # empty cache (dropping the module's memo too, so later callers
+    # re-derive and re-persist it)
+    P.shared_stage(spark, sf_dir, "nosentinel")
+    spark.catalog.clearCache()
+    tokens._TOKEN_CACHE.clear()
+    monkeypatch.setattr(P, "_tmp", tmp)
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    assert cache.isEmpty()
+    with pytest.raises(StreamingQueryException):
+        P.run_streaming_fanout(spark, sf_dir, sink_dir=_mkdir(),
+                               checkpoint_dir=_mkdir())
+    assert cache.isEmpty(), "failed fan-out batch left cached"
 
 
 def test_sink_compact_preserves_merge_on_read_view(spark):
