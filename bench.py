@@ -119,8 +119,9 @@ def main() -> None:
                                      "max": round(st["max"], 3),
                                      "runs": st["runs"]}
 
-    # Streaming throughput. state_partitions pinned at 8: stateful
-    # shuffle layout is a deployment constant sized to key cardinality
+    # Streaming throughput. State partitions are pinned at
+    # STATE_PARTITIONS (8) by the pipelines' drain: stateful shuffle
+    # layout is a deployment constant sized to key cardinality
     # (windows × sources), NOT something that grows with cores — same
     # methodology as bench/scaling.py. Leaving it at 2×cpus costs ~4× in
     # per-batch state-store commit overhead at this key count.
@@ -138,7 +139,6 @@ def main() -> None:
             sink_dir=os.path.join(work, "sink"),
             checkpoint_dir=os.path.join(work, "ck"),
             files_per_trigger=8,
-            state_partitions=8,
         )
         shutil.rmtree(work, ignore_errors=True)
         return out

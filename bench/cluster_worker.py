@@ -23,7 +23,6 @@ def main() -> None:
     ap.add_argument("--rows", type=int, required=True)
     ap.add_argument("--reps", type=int, default=2)
     ap.add_argument("--files-per-trigger", type=int, default=256)
-    ap.add_argument("--state-partitions", type=int, default=8)
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
@@ -42,7 +41,6 @@ def main() -> None:
             sink_dir=os.path.join(work, "sink"),
             checkpoint_dir=os.path.join(work, "ck"),
             files_per_trigger=args.files_per_trigger,
-            state_partitions=args.state_partitions,
         )
         shutil.rmtree(work, ignore_errors=True)
         if best is None or r["elapsed_sec"] < best["elapsed_sec"]:

@@ -71,7 +71,7 @@ def main() -> None:
         spark, warm_stage, warm_rows,
         sink_dir=os.path.join(work, "warm_sink"),
         checkpoint_dir=os.path.join(work, "warm_ck"),
-        files_per_trigger=8, state_partitions=8)
+        files_per_trigger=8)
 
     stage = os.path.join(work, "stage")
     n_rows = stage_synth_stream(spark, n_docs, stage, n_files=64)
@@ -87,7 +87,7 @@ def main() -> None:
             spark, stage, n_rows,
             sink_dir=os.path.join(work, f"base_sink_{tag}"),
             checkpoint_dir=os.path.join(work, f"base_ck_{tag}"),
-            files_per_trigger=8, state_partitions=8)
+            files_per_trigger=8)
 
     base = _base_run("a")
 
@@ -106,13 +106,13 @@ def main() -> None:
     ck = os.path.join(work, "resume_ck")
     run1 = streaming_throughput(
         spark, part_stage, n_rows, sink_dir=sink_dir, checkpoint_dir=ck,
-        files_per_trigger=8, state_partitions=8)
+        files_per_trigger=8)
     windows_after_kill = run1["windows_emitted"]
     for f in data_files[cut:] + sentinels:
         shutil.copy2(os.path.join(stage, f), os.path.join(part_stage, f))
     run2 = streaming_throughput(
         spark, part_stage, n_rows, sink_dir=sink_dir, checkpoint_dir=ck,
-        files_per_trigger=8, state_partitions=8)
+        files_per_trigger=8)
 
     base2 = _base_run("b")
 

@@ -4,6 +4,12 @@ The authoritative metric (BASELINE.md): sustained sequences/sec and
 tokens/sec through the windowed stateful pipeline, plus scaling
 efficiency >= 0.8 from N to 4N parallelism (evidenced as local[N] vs
 local[4N] — see bench/scaling.py).
+
+The streaming benches keep no engine of their own: they read through
+``pipeline.read_token_stream``, build from the pipelines' plan fragments
+(flush cut, windowed aggregate, assemblers, WATERMARK/WIDTH) and run
+through ``pipeline._drain``, which pins STATE_PARTITIONS; their
+RuntimeMetricsListener attaches through ``metrics.listening``.
 """
 
 from __future__ import annotations
@@ -12,10 +18,12 @@ import time
 
 from pyspark.sql import SparkSession, functions as F
 
-from movement_spark.sinks.idempotent import IdempotentKeyedSink
-from movement_spark.sources.tokens import EPOCH_2026, TS_MOD
-from movement_spark.streaming.metrics import RuntimeMetricsListener
-from movement_spark.streaming.pipeline import STREAM_SCHEMA
+from movement_spark.streaming.metrics import listening
+from movement_spark.streaming.pipeline import (
+    WATERMARK, WIDTH, _assembled, _assembled_jvm, _drain, _flushed, _sink,
+    _seq_totals, _window_agg, read_token_stream)
+
+SIG_PROBES = 16  # xxhash64 probes in streaming_throughput's signature
 
 # Headline queries for bench.py — a representative slice of the engine:
 # the north-rule token pipeline, a stateful ordering check, joins/aggs
@@ -66,49 +74,19 @@ def time_query_stats(fn, spark: SparkSession, sf_dir: str,
 def cep_assembler_throughput(spark: SparkSession, stage_dir: str,
                              n_rows: int, sink_dir: str,
                              checkpoint_dir: str, mode: str = "jvm",
-                             files_per_trigger: int = 16,
-                             state_partitions: int = 8) -> dict:
+                             files_per_trigger: int = 16) -> dict:
     """Throughput of the per-doc ordered-assembly stage (the PHASE
     barrier) over a staged stream, in either implementation:
     ``mode="python"`` = applyInPandasWithState emit-on-complete CEP;
     ``mode="jvm"`` = session-window streaming aggregate (the zero-Python
-    throughput path). Same sink/checkpoint discipline as the main
-    streaming bench; used by bench.py (per-round sub-metric) and
-    bench/cep_throughput.py (standalone A/B)."""
-    from movement_spark.operators.ordering import (
-        ordered_doc_assembler, ordered_doc_assembler_jvm)
-    from movement_spark.streaming.pipeline import (
-        SENTINEL, read_token_stream)
-
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        src = read_token_stream(spark, stage_dir, files_per_trigger)
-        if mode == "jvm":
-            flush_cut = F.timestamp_seconds(F.lit(EPOCH_2026 + TS_MOD + 3600))
-            merged = (
-                ordered_doc_assembler_jvm(
-                    src.select("doc_id", "seq", "tokens", "ts"))
-                .where(F.col("w.start") < flush_cut)
-                .drop("w")
-            )
-        else:
-            merged = (
-                ordered_doc_assembler(
-                    src.select("doc_id", "seq", "tokens", "n_shards", "ts"),
-                    watermark="10 minutes", timeout_ms=(TS_MOD + 120) * 1000)
-                .where(F.col("doc_id") != SENTINEL)
-            )
-        sink = IdempotentKeyedSink(sink_dir, ["doc_id"])
-        t0 = time.perf_counter()
-        q = (merged.writeStream.outputMode("append")
-             .foreachBatch(sink.foreach_batch)
-             .option("checkpointLocation", checkpoint_dir)
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
-        elapsed = time.perf_counter() - t0
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    throughput path). The pipelines' own assembler fragments and drain;
+    used by bench.py (per-round sub-metric) and bench/cep_throughput.py
+    (standalone A/B)."""
+    src = read_token_stream(spark, stage_dir, files_per_trigger)
+    merged = _assembled_jvm(src) if mode == "jvm" else _assembled(src)
+    t0 = time.perf_counter()
+    sink = _drain(merged, _sink(sink_dir, "doc_id"), checkpoint_dir)
+    elapsed = time.perf_counter() - t0
     docs_out = sink.read(spark).count()
     return {
         "mode": mode,
@@ -119,90 +97,53 @@ def cep_assembler_throughput(spark: SparkSession, stage_dir: str,
     }
 
 
+def _steady(records) -> tuple[int, float]:
+    """Steady-state rate: drop the first batch (JIT + state-store open)
+    and the last (flush/no-data tail) and divide mid-run rows by mid-run
+    trigger time — the sustained-throughput number the north rule asks
+    for, robust to micro-batch count at small inputs where the whole-run
+    rate is overhead-dominated (VERDICT r01). Returns (mid-run batches,
+    rows/s)."""
+    recs = sorted(records, key=lambda r: r.batch_id)
+    mid = recs[1:-1] if len(recs) >= 3 else recs
+    mid_sec = sum(r.duration_ms for r in mid) / 1000.0
+    rate = (sum(r.num_input_rows for r in mid) / mid_sec
+            if mid_sec > 0 else 0.0)
+    return len(mid), rate
+
+
 def streaming_throughput(spark: SparkSession, stage_dir: str, n_rows: int,
                          sink_dir: str, checkpoint_dir: str,
-                         files_per_trigger: int = 8,
-                         watermark: str = "10 minutes",
-                         width: str = "5 minutes",
-                         sig_probes: int = 16,
-                         state_partitions: int | None = None) -> dict:
+                         files_per_trigger: int = 8) -> dict:
     """One full windowed-stateful streaming run over a staged stream;
     returns sequences/sec + tokens/sec (sustained, whole-run).
 
-    The pipeline is the engine's flagship ingest pass: per-shard k-probe
-    content signature (k = sig_probes = MINHASH_K-style LSH fingerprint,
+    The pipeline is the engine's flagship ingest pass: per-shard
+    SIG_PROBES-probe content signature (MINHASH_K-style LSH fingerprint,
     native xxhash64 — allocation-free, whole-stage-codegen) combined per
     window, plus the per-source token-throughput aggregate, through the
-    exactly-once keyed sink.
-
-    ``state_partitions`` pins the stateful shuffle layout. Like Kafka
+    exactly-once keyed sink. The stateful shuffle layout is the pinned
+    STATE_PARTITIONS that ``_drain`` sets around query start: like Kafka
     topic partitions, state layout is a deployment constant sized once —
     NOT something that grows with executor count — so scaling runs keep
     it fixed while scan/map parallelism scales with cores.
     """
-    listener = RuntimeMetricsListener()
-    spark.streams.addListener(listener)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        return _streaming_throughput_inner(
-            spark, stage_dir, n_rows, sink_dir, checkpoint_dir,
-            files_per_trigger, watermark, width, sig_probes, listener)
-    finally:
-        # restore shared-session state even when the query dies —
-        # a leaked 8-partition layout would skew every later measurement
-        spark.streams.removeListener(listener)
-        if state_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-
-
-def _streaming_throughput_inner(spark, stage_dir, n_rows, sink_dir,
-                                checkpoint_dir, files_per_trigger,
-                                watermark, width, sig_probes,
-                                listener) -> dict:
-    src = (
-        spark.readStream.schema(STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", files_per_trigger)
-        .parquet(stage_dir)
-    )
-    flush_cut = F.timestamp_seconds(F.lit(EPOCH_2026 + TS_MOD + 3600))
-    sig = " ^ ".join(f"xxhash64({j}, tokens)" for j in range(sig_probes))
-    agg = (
+    src = read_token_stream(spark, stage_dir, files_per_trigger)
+    sig = " ^ ".join(f"xxhash64({j}, tokens)" for j in range(SIG_PROBES))
+    agg = _window_agg(
         src.selectExpr("ts", "source", "n_tok", f"({sig}) as sig")
-        .withWatermark("ts", watermark)
-        .groupBy(F.window("ts", width).alias("w"), "source")
-        .agg(F.count("*").alias("n_seq"),
-             F.sum("n_tok").cast("bigint").alias("sum_tok"),
-             F.expr("bit_xor(sig)").alias("sig_xor"))
-        .where(F.col("w.start") < flush_cut)
-        .select(F.unix_timestamp("w.start").alias("ws"), "source",
-                "n_seq", "sum_tok", "sig_xor")
-    )
-    sink = IdempotentKeyedSink(sink_dir, ["ws", "source"])
-    t0 = time.perf_counter()
-    q = (
-        agg.writeStream.outputMode("append")
-        .foreachBatch(sink.foreach_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    elapsed = time.perf_counter() - t0
-    out = sink.read(spark)
-    emitted = out.count()
-    total_tok = out.agg(F.sum("sum_tok")).collect()[0][0]
-    # Steady-state rate: drop the first batch (JIT + state-store open)
-    # and the last (flush/no-data tail) and divide mid-run rows by
-    # mid-run trigger time — the sustained-throughput number the north
-    # rule asks for, robust to micro-batch count at small inputs where
-    # the whole-run rate is overhead-dominated (VERDICT r01).
-    recs = sorted(listener.records, key=lambda r: r.batch_id)
-    mid = recs[1:-1] if len(recs) >= 3 else recs
-    mid_rows = sum(r.num_input_rows for r in mid)
-    mid_sec = sum(r.duration_ms for r in mid) / 1000.0
-    steady_seq = mid_rows / mid_sec if mid_sec > 0 else 0.0
+        .withWatermark("ts", WATERMARK),
+        F.window("ts", WIDTH), ["source"],
+        _seq_totals() + [F.expr("bit_xor(sig)").alias("sig_xor")],
+        _flushed())
+    with listening(spark) as listener:
+        t0 = time.perf_counter()
+        sink = _drain(agg, _sink(sink_dir, "ws", "source"), checkpoint_dir)
+        elapsed = time.perf_counter() - t0
+        out = sink.read(spark)
+        emitted = out.count()
+        total_tok = out.agg(F.sum("sum_tok")).collect()[0][0]
+    steady_batches, steady_seq = _steady(listener.records)
     tok_per_row = (total_tok or 0) / n_rows if n_rows else 0.0
     return {
         "elapsed_sec": round(elapsed, 3),
@@ -211,7 +152,7 @@ def _streaming_throughput_inner(spark, stage_dir, n_rows, sink_dir,
         "tok_per_sec": round((total_tok or 0) / elapsed, 1),
         "seq_per_sec_steady": round(steady_seq, 1),
         "tok_per_sec_steady": round(steady_seq * tok_per_row, 1),
-        "steady_batches": len(mid),
+        "steady_batches": steady_batches,
         "windows_emitted": emitted,
         "batches": len(listener.records),
         "sum_tok": int(total_tok or 0),
@@ -227,26 +168,22 @@ def _monitor_throughput(spark: SparkSession, runner, stage_dir: str,
     measure differently. ``summarize(out)`` returns the monitor's own
     read-side fields and runs INSIDE the timed region: each monitor's
     read-side fold is part of its contract, so it belongs in elapsed."""
-    listener = RuntimeMetricsListener()
-    t0 = time.perf_counter()
-    out = runner(
-        spark, sf_dir="", stage_dir=stage_dir, sink_dir=sink_dir,
-        checkpoint_dir=checkpoint_dir, listener=listener,
-        files_per_trigger=files_per_trigger)
-    extra = summarize(out)
-    elapsed = time.perf_counter() - t0
-    recs = sorted(listener.records, key=lambda r: r.batch_id)
-    mid = recs[1:-1] if len(recs) >= 3 else recs
-    mid_rows = sum(r.num_input_rows for r in mid)
-    mid_sec = sum(r.duration_ms for r in mid) / 1000.0
+    with listening(spark) as listener:
+        t0 = time.perf_counter()
+        out = runner(
+            spark, sf_dir="", stage_dir=stage_dir, sink_dir=sink_dir,
+            checkpoint_dir=checkpoint_dir,
+            files_per_trigger=files_per_trigger)
+        extra = summarize(out)
+        elapsed = time.perf_counter() - t0
+    steady_batches, steady_seq = _steady(listener.records)
     return {
         "elapsed_sec": round(elapsed, 3),
         "rows_in": n_rows,
         "seq_per_sec": round(n_rows / elapsed, 1),
-        "seq_per_sec_steady": round(mid_rows / mid_sec, 1)
-        if mid_sec > 0 else 0.0,
-        "steady_batches": len(mid),
-        "batches": len(recs),
+        "seq_per_sec_steady": round(steady_seq, 1),
+        "steady_batches": steady_batches,
+        "batches": len(listener.records),
         **extra,
     }
 

@@ -82,18 +82,15 @@ def _run_with_status(name: str, conf: dict, quiet: bool = False):
 
     from movement_spark.jobs import run_job_async, task_status, wait_task
     from movement_spark.session import get_spark
-    from movement_spark.streaming.metrics import (
-        STATUS_FORMAT, RuntimeMetricsListener)
+    from movement_spark.streaming.metrics import STATUS_FORMAT, listening
 
     spark = get_spark(app_name=f"movement_spark_{name}")
-    listener = RuntimeMetricsListener()
-    spark.streams.addListener(listener)
-    # conf= (dict channel), never **conf: user-controlled keys like
-    # 'name' or 'spark' in a properties file would collide with the
-    # positional parameters and TypeError instead of running the job
-    task_id = run_job_async(name, spark=spark, conf=conf)
-    last, t0 = 0, time.time()
-    try:
+    with listening(spark) as listener:
+        # conf= (dict channel), never **conf: user-controlled keys like
+        # 'name' or 'spark' in a properties file would collide with the
+        # positional parameters and TypeError instead of running the job
+        task_id = run_job_async(name, spark=spark, conf=conf)
+        last, t0 = 0, time.time()
         while task_status(task_id)["status"] == "RUNNING":
             time.sleep(1.0)
             if quiet:
@@ -103,8 +100,6 @@ def _run_with_status(name: str, conf: dict, quiet: bool = False):
             print(STATUS_FORMAT % (total, total - last, 1.0, total / elapsed),
                   file=sys.stderr)
             last = total
-    finally:
-        spark.streams.removeListener(listener)
     return wait_task(task_id)
 
 

@@ -105,15 +105,13 @@ def _job_load_csv(spark: SparkSession, conf: dict) -> dict:
 def _job_bench(spark: SparkSession, conf: dict) -> dict:
     from movement_spark.benchmarks import streaming_throughput
     from movement_spark.sources.synth import stage_synth_stream
-    from movement_spark.streaming.pipeline import STATE_PARTITIONS
     work = tempfile.mkdtemp(prefix="ms_benchjob_")
     n_docs = int(conf.get("bench.docs", "100000"))
     stage = os.path.join(work, "stage")
     rows = stage_synth_stream(spark, n_docs, stage, n_files=64)
     return streaming_throughput(
         spark, stage, rows, os.path.join(work, "sink"),
-        os.path.join(work, "ck"), files_per_trigger=16,
-        state_partitions=STATE_PARTITIONS)
+        os.path.join(work, "ck"), files_per_trigger=16)
 
 
 def _job_compact(spark: SparkSession, conf: dict) -> dict:

@@ -114,8 +114,14 @@ def token_sequences(spark: SparkSession, sf_dir: str,
                     F.lit(EPOCH_2026) + (F.col("did") * 37 + F.col("seq") * 11) % TS_MOD
                 ).alias("ts"),
             )
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+        )
         _TOKEN_CACHE[key] = base
+    # a memo hit may be a frame that clearCache() or an unpersist
+    # dropped: ask the session's cache manager, and persist it again
+    # when it holds nothing
+    level = base.storageLevel
+    if not (level.useMemory or level.useDisk or level.useOffHeap):
+        base.persist(StorageLevel.MEMORY_AND_DISK)
     return base if keep_did else base.drop("did")
 
 

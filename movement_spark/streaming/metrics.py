@@ -14,6 +14,7 @@ from __future__ import annotations
 import json
 import os
 import time
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, functions as F
@@ -234,3 +235,18 @@ class RuntimeMetricsListener(StreamingQueryListener):
             "forks": forks,
             "python_cpu_s": python_cpu_s,
         }
+
+
+@contextmanager
+def listening(spark):
+    """Attach a fresh RuntimeMetricsListener to every streaming query
+    ``spark`` runs inside the block, and yield it. THE one place a
+    listener meets a session: it is detached in a finally, so a failing
+    query cannot leave it on the shared session, where it would receive
+    every later query's events."""
+    listener = RuntimeMetricsListener()
+    spark.streams.addListener(listener)
+    try:
+        yield listener
+    finally:
+        spark.streams.removeListener(listener)

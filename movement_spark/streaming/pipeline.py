@@ -21,29 +21,49 @@ data; it advances the watermark through the EventTimeWatermark node and
 is filtered out before any aggregation, so every real window flushes and
 the sentinel never appears in output. (Spark runs a final no-data batch
 to emit — spark.sql.streaming.noDataMicroBatches must stay enabled.)
+
+The runners are rows of one table: ``@_runner(...)`` declares a row's
+sink keys, stage variant, read schema, output mode, read-side fold and
+keywords over its plan builder, and ``run`` is the one body (resolve
+the stage → read → build → drain → fold). A runner whose shape a row
+cannot express is a small function over the same pieces.
 """
 
 from __future__ import annotations
 
+import functools
+import inspect
 import os
 import tempfile
 import time
+from dataclasses import dataclass
+from types import SimpleNamespace
+from typing import Callable
 
 import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 from pyspark.sql.types import (
     ArrayType, FloatType, IntegerType, LongType, StringType, StructField,
     StructType, TimestampType,
 )
 
+from movement_spark.operators.dataset import window_drift_tvd
+from movement_spark.operators.dedup import shard_signature_expr
 from movement_spark.operators.ordering import (
     doc_digest_cols, ordered_doc_assembler, ordered_doc_assembler_jvm)
-from movement_spark.sinks.idempotent import IdempotentKeyedSink
+from movement_spark.operators.patterns import user_pattern_stats
+from movement_spark.operators.similarity import (
+    _argmax_dot_assign, ivf_assign_arrow, quantized)
+from movement_spark.operators.sketches import (
+    CMS_AB, CMS_D, CMS_P, CMS_WATCH, LL_M, _cms_cell, cms_watch_estimates,
+    histogram_quantile_fold, loglog_window_fold)
+from movement_spark.sinks.idempotent import (
+    AdditiveKeyedSink, IdempotentKeyedSink)
 from movement_spark.sources.tokens import token_sequences, EPOCH_2026, TS_MOD
-from movement_spark.streaming.metrics import RuntimeMetricsListener, observed
+from movement_spark.streaming.metrics import listening, observed
 
 STREAM_SCHEMA = StructType([
     StructField("doc_id", StringType()),
@@ -187,7 +207,6 @@ def stage_token_stream(spark: SparkSession, sf_dir: str, stage_dir: str,
     df = df.drop("did")
     sentinel_rows = _token_sentinel_rows
     if with_sig:
-        from movement_spark.operators.dedup import shard_signature_expr
         df = df.withColumn(
             "sig", F.expr(shard_signature_expr()).cast("long"))
         sentinel_rows = _ndsig_sentinel_rows
@@ -239,6 +258,55 @@ def stage_token_stream_with_stragglers(spark: SparkSession, sf_dir: str,
     _emit_sentinel_files(stage_dir, next_idx + 1, base,
                          _token_sentinel_rows)
     return n_rows, n_strag
+
+
+EVENTS_SCHEMA = ("event_id BIGINT, ts TIMESTAMP, user_id BIGINT, "
+                 "event_type STRING, value DOUBLE, props STRING")
+EVENTS_FLUSH_TS = pd.Timestamp("2024-03-01")  # beyond the Jan-2024 data
+
+
+def stage_events_stream(spark: SparkSession, sf_dir: str,
+                        stage_dir: str, n_chunks: int = 6) -> int:
+    """Stage the driver-provided events table as event-time-ordered chunk
+    files plus flush sentinels — the same WorkChunkDriver-as-files shape
+    as stage_token_stream, over a REAL (non-derived) table. Distributed
+    (repartitionByRange write), like the token stager."""
+    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    n_rows, next_idx, base = _distribute_chunks(
+        ev, stage_dir, n_chunks, ["ts", "event_id"])
+    arrow_schema = pa.schema([
+        ("event_id", pa.int64()), ("ts", pa.timestamp("us")),
+        ("user_id", pa.int64()), ("event_type", pa.string()),
+        ("value", pa.float64()), ("props", pa.string()),
+    ])
+
+    def _rows(k: int):
+        return pd.DataFrame({
+            "event_id": [-1], "ts": [EVENTS_FLUSH_TS + pd.Timedelta(minutes=k)],
+            "user_id": [-1], "event_type": [SENTINEL], "value": [0.0],
+            "props": ["{}"],
+        }), arrow_schema
+
+    _emit_sentinel_files(stage_dir, next_idx, base, _rows)
+    return n_rows
+
+
+EMB_STREAM_SCHEMA = StructType([
+    StructField("vec_id", LongType()),
+    StructField("embedding", ArrayType(FloatType())),
+    StructField("label", IntegerType()),
+])
+
+
+def stage_embedding_stream(spark: SparkSession, sf_dir: str,
+                           stage_dir: str, n_chunks: int = 6) -> int:
+    """Stage the embeddings table as ordered chunk files (one vec_id
+    slice per file). No sentinel files: the ANN-ingest pipeline is
+    STATELESS (no watermark, no windowed state), so nothing needs a
+    flush — availableNow drains every staged file and stops."""
+    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
+    n_rows, _, _ = _distribute_chunks(emb, stage_dir, n_chunks, ["vec_id"])
+    return n_rows
 
 
 def _n_stage_files(stage_dir: str) -> int:
@@ -304,17 +372,15 @@ def _sink(sink_dir: str | None, *keys: str) -> IdempotentKeyedSink:
 
 
 def _drain(result: DataFrame, sink: IdempotentKeyedSink,
-           checkpoint_dir: str | None, listener=None,
-           output_mode: str = "append",
+           checkpoint_dir: str | None, output_mode: str = "append",
            batch_fn=None) -> IdempotentKeyedSink:
     """Start → drain (availableNow) → clean up — THE one
     run-and-cleanup dance for every foreachBatch pipeline. Returns
     ``sink`` for the caller's read; the caller builds it because the
     backfill handoff and late repair write batch epochs into the same
     sink before or after the stream. ``batch_fn`` overrides the sink's
-    foreach_batch (multi-sink fan-out); the listener is detached in a
-    finally so a failing query can't leak it onto the shared
-    SparkSession where it would receive every later query's events.
+    foreach_batch (multi-sink fan-out). Listeners are a session concern:
+    callers that want one attach it with ``metrics.listening``.
 
     Stateful shuffle partitions are scoped to the pinned deployment
     constant around query START (the value is captured into the
@@ -324,8 +390,6 @@ def _drain(result: DataFrame, sink: IdempotentKeyedSink,
     state-store commit fan-out ~4x at oracle scale). The ambient value
     is restored for the caller's batch plans."""
     spark = result.sparkSession
-    if listener is not None:
-        spark.streams.addListener(listener)
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(STATE_PARTITIONS))
     try:
@@ -341,8 +405,6 @@ def _drain(result: DataFrame, sink: IdempotentKeyedSink,
         q.awaitTermination()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        if listener is not None:
-            spark.streams.removeListener(listener)
     return sink
 
 
@@ -402,8 +464,7 @@ def _session_agg(df: DataFrame) -> DataFrame:
     )
 
 
-def _assembled(spark: SparkSession, stage: str,
-               emit_incomplete: bool = False) -> DataFrame:
+def _assembled(src: DataFrame, emit_incomplete: bool = False) -> DataFrame:
     """The stateful-Python per-doc assembler over a staged stream.
     Sentinel rows flow through the stateful stage (their doc completes
     immediately) and are dropped after it — filtering earlier would be
@@ -411,13 +472,23 @@ def _assembled(spark: SparkSession, stage: str,
     must cover a doc's max event-time span: shard timestamps within one
     doc can wrap the full TS_MOD hour, so the grace period is TS_MOD +
     slack — state still stays O(open docs)."""
-    shards = read_token_stream(spark, stage).select(
-        "doc_id", "seq", "tokens", "n_shards", "ts")
     return (
-        ordered_doc_assembler(shards, watermark=WATERMARK,
-                              timeout_ms=(TS_MOD + 120) * 1000,
-                              emit_incomplete=emit_incomplete)
+        ordered_doc_assembler(
+            src.select("doc_id", "seq", "tokens", "n_shards", "ts"),
+            watermark=WATERMARK, timeout_ms=(TS_MOD + 120) * 1000,
+            emit_incomplete=emit_incomplete)
         .where(F.col("doc_id") != SENTINEL)
+    )
+
+
+def _assembled_jvm(src: DataFrame) -> DataFrame:
+    """The all-JVM session-window assembler over a staged stream, its
+    sentinel sessions cut on the window column."""
+    return (
+        ordered_doc_assembler_jvm(src.select("doc_id", "seq", "tokens", "ts"),
+                                  watermark=WATERMARK)
+        .where(_flushed())
+        .drop("w")
     )
 
 
@@ -528,32 +599,91 @@ def _stage_union_dirs(spark: SparkSession, sf_dir: str, stage: str) -> None:
         _sh.copy2(os.path.join(full, f), os.path.join(b_dir, f))
 
 
-def run_streaming_tumbling(spark: SparkSession, sf_dir: str,
-                           stage_dir: str | None = None,
-                           sink_dir: str | None = None,
-                           checkpoint_dir: str | None = None,
-                           files_per_trigger: int | None = None,
-                           listener=None) -> DataFrame:
+@dataclass(frozen=True)
+class _Row:
+    """One streaming runner as data: the parts in which the runners
+    differ. ``run`` is the shape they share."""
+    build: Callable  # (src, a) -> the streaming result plan
+    keys: tuple  # the keyed sink's merge keys
+    variant: str  # stage variant (_resolve_stage)
+    schema: StructType | str | None  # read schema; None = STREAM_SCHEMA
+    output_mode: str
+    fold: Callable | None  # (sink table, a) -> result; None = the table
+    gears: tuple  # stage sub-directories read as ONE unioned stream
+
+
+def run(row: _Row, spark: SparkSession, sf_dir: str,
+        stage_dir: str | None = None, sink_dir: str | None = None,
+        checkpoint_dir: str | None = None, **options) -> DataFrame:
+    """THE runner body: resolve the row's stage variant → read it → build
+    the row's plan → drain it into the row's keyed sink → read the sink
+    through the row's fold. ``options`` are the runner's own keywords
+    (``files_per_trigger`` paces the read); the plan builder and the
+    fold see them, with spark, sf_dir and the resolved stage, as the
+    attributes of ``a``."""
+    stage = _resolve_stage(spark, sf_dir, stage_dir, row.variant)
+    a = SimpleNamespace(spark=spark, sf_dir=sf_dir, stage=stage, **options)
+    dirs = [os.path.join(stage, g) for g in row.gears] or [stage]
+    src = functools.reduce(DataFrame.unionByName, [
+        read_token_stream(spark, d, options.get("files_per_trigger"),
+                          schema=row.schema) for d in dirs])
+    sink = _drain(row.build(src, a), _sink(sink_dir, *row.keys),
+                  checkpoint_dir, row.output_mode)
+    out = sink.read(spark)
+    return out if row.fold is None else row.fold(out, a)
+
+
+def _runner(*keys: str, variant: str = "base",
+            schema: StructType | str | None = None,
+            output_mode: str = "append", fold: Callable | None = None,
+            gears: tuple = (), **options):
+    """Declare one table row. The decorated function is the row's plan
+    builder ``(src, a) -> plan``; the name it defines becomes the runner
+    ``(spark, sf_dir, stage_dir=None, sink_dir=None,
+    checkpoint_dir=None, **options)`` over ``run``, with the builder's
+    name and docstring. ``options`` are the runner's own keywords with
+    their defaults."""
+    def make(build: Callable) -> Callable:
+        row = _Row(build, keys, variant, schema, output_mode, fold, gears)
+        req = inspect.Parameter.empty
+        sig = inspect.Signature([
+            inspect.Parameter(name, inspect.Parameter.POSITIONAL_OR_KEYWORD,
+                              default=default)
+            for name, default in [
+                ("spark", req), ("sf_dir", req), ("stage_dir", None),
+                ("sink_dir", None), ("checkpoint_dir", None),
+                *options.items()]])
+
+        def runner(*args, **kwargs) -> DataFrame:
+            bound = sig.bind(*args, **kwargs)
+            bound.apply_defaults()
+            return run(row, **bound.arguments)
+
+        functools.update_wrapper(runner, build)
+        runner.__signature__ = sig
+        return runner
+    return make
+
+
+def _throughput(src: DataFrame, cut: Column) -> DataFrame:
+    """The observed tumbling per-source throughput aggregate of the
+    flagship, the backfill handoff's tail and the late repair."""
+    return _window_agg(observed(src).withWatermark("ts", WATERMARK),
+                       F.window("ts", WIDTH), ["source"], _seq_totals(), cut)
+
+
+@_runner("ws", "source", files_per_trigger=None)
+def run_streaming_tumbling(src, a):
     """Streaming flagship: watermarked tumbling per-source token
     throughput through the exactly-once sink; returns final sink table
     (same shape/oracle as the batch tumbling query)."""
-    stage = _resolve_stage(spark, sf_dir, stage_dir)
-    src = read_token_stream(spark, stage, files_per_trigger)
-    agg = _window_agg(observed(src).withWatermark("ts", WATERMARK),
-                      F.window("ts", WIDTH), ["source"], _seq_totals(),
-                      _flushed())
-    return _drain(agg, _sink(sink_dir, "ws", "source"), checkpoint_dir,
-                  listener).read(spark)
+    return _throughput(src, _flushed())
 
 
-def run_streaming_drift_monitor(spark: SparkSession, sf_dir: str,
-                                width: str = WIDTH,
-                                stage_dir: str | None = None,
-                                sink_dir: str | None = None,
-                                checkpoint_dir: str | None = None,
-                                listener=None,
-                                files_per_trigger: int | None = None
-                                ) -> DataFrame:
+@_runner("ws", "source", "bucket", width=WIDTH, files_per_trigger=None,
+         fold=lambda out, a: window_drift_tvd(
+             out, width_sec=_interval_seconds(a.width)))
+def run_streaming_drift_monitor(src, a):
     """Streaming distribution-drift monitor: per-(window, source)
     BUCKETED token histograms through the exactly-once sink; reading
     the sink folds consecutive windows into an exact integer TVD per
@@ -570,29 +700,19 @@ def run_streaming_drift_monitor(spark: SparkSession, sf_dir: str,
     watermark (the dedup/filter sentinel corollary extended to
     generators) — outer keeps them as NULL-token rows that the window
     predicate cuts, per the CLAUDE.md invariant."""
-    from movement_spark.operators.dataset import window_drift_tvd
-
-    width_sec = _interval_seconds(width)  # fail fast, pre-stage
-    stage = _resolve_stage(spark, sf_dir, stage_dir)
-    src = read_token_stream(spark, stage, files_per_trigger)
-    hist = _window_agg(
+    _interval_seconds(a.width)  # fail fast, before the query starts
+    return _window_agg(
         src.withWatermark("ts", WATERMARK)
         .select("ts", "source", F.explode_outer("tokens").alias("t")),
-        F.window("ts", width),
+        F.window("ts", a.width),
         ["source", (F.col("t") % HIST_BUCKETS).alias("bucket")],
         [F.count("*").alias("cnt")], _flushed())
-    sink = _drain(hist, _sink(sink_dir, "ws", "source", "bucket"),
-                  checkpoint_dir, listener)
-    return window_drift_tvd(sink.read(spark), width_sec=width_sec)
 
 
-def run_streaming_quantile_monitor(spark: SparkSession, sf_dir: str,
-                                   stage_dir: str | None = None,
-                                   sink_dir: str | None = None,
-                                   checkpoint_dir: str | None = None,
-                                   listener=None,
-                                   files_per_trigger: int | None = None
-                                   ) -> DataFrame:
+@_runner("ws", "source", "bucket", files_per_trigger=None,
+         fold=lambda out, a: histogram_quantile_fold(
+             out, ["ws", "source"], width=LEN_BUCKET_WIDTH, n_alias="n_seq"))
+def run_streaming_quantile_monitor(src, a):
     """Streaming latency/size-distribution monitor: per-(window,
     source) sequence-length HISTOGRAMS through the exactly-once sink,
     folded at read into p50/p90/p99 lower edges
@@ -609,28 +729,17 @@ def run_streaming_quantile_monitor(spark: SparkSession, sf_dir: str,
     explode: each sequence contributes ONE bucket via arithmetic on
     n_tok, so the plan is aggregate-only above the watermark and the
     sentinel is cut by the window predicate per the CLAUDE.md rule."""
-    from movement_spark.operators.sketches import histogram_quantile_fold
-
-    stage = _resolve_stage(spark, sf_dir, stage_dir)
-    src = read_token_stream(spark, stage, files_per_trigger)
     bucket = F.least(F.expr(f"n_tok div {LEN_BUCKET_WIDTH}"),
                      F.lit(HIST_BUCKETS - 1)).alias("bucket")
-    hist = _window_agg(src.withWatermark("ts", WATERMARK),
+    return _window_agg(src.withWatermark("ts", WATERMARK),
                        F.window("ts", WIDTH), ["source", bucket],
                        [F.count("*").alias("cnt")], _flushed())
-    sink = _drain(hist, _sink(sink_dir, "ws", "source", "bucket"),
-                  checkpoint_dir, listener)
-    return histogram_quantile_fold(sink.read(spark), ["ws", "source"],
-                                   width=LEN_BUCKET_WIDTH, n_alias="n_seq")
 
 
-def run_streaming_cms_monitor(spark: SparkSession, sf_dir: str,
-                              stage_dir: str | None = None,
-                              sink_dir: str | None = None,
-                              checkpoint_dir: str | None = None,
-                              listener=None,
-                              files_per_trigger: int | None = None
-                              ) -> DataFrame:
+@_runner("ws", "source", "j", "cell", files_per_trigger=None,
+         fold=lambda out, a: cms_watch_estimates(
+             out, ["ws", "source"], CMS_WATCH))
+def run_streaming_cms_monitor(src, a):
     """Streaming count-min frequency monitor: per-(window, source)
     d×w CMS counter grids through the exactly-once sink; reading the
     sink answers watchlist-token frequency estimates per window
@@ -649,32 +758,22 @@ def run_streaming_cms_monitor(spark: SparkSession, sf_dir: str,
     be explode_outer (empty sentinel arrays), the probe explode is
     over a constant-length array (safe), and the sentinel's NULL-cell
     groups are cut by the window predicate per the CLAUDE.md rule."""
-    from movement_spark.operators.sketches import (
-        CMS_D, CMS_WATCH, _cms_cell, cms_watch_estimates)
-
-    stage = _resolve_stage(spark, sf_dir, stage_dir)
-    src = read_token_stream(spark, stage, files_per_trigger)
     probes = F.array(*[
         F.struct(F.lit(j).alias("j"), _cms_cell(F.col("t"), j).alias("cell"))
         for j in range(CMS_D)])
-    grid = _window_agg(
+    return _window_agg(
         src.withWatermark("ts", WATERMARK)
         .select("ts", "source", F.explode_outer("tokens").alias("t"))
         .select("ts", "source", F.explode(probes).alias("h")),
         F.window("ts", WIDTH),
         ["source", F.col("h.j").alias("j"), F.col("h.cell").alias("cell")],
         [F.count("*").alias("cnt")], _flushed())
-    sink = _drain(grid, _sink(sink_dir, "ws", "source", "j", "cell"),
-                  checkpoint_dir, listener)
-    return cms_watch_estimates(sink.read(spark), ["ws", "source"], CMS_WATCH)
 
 
 def run_streaming_backfill_handoff(spark: SparkSession, sf_dir: str,
                                    stage_dir: str | None = None,
                                    sink_dir: str | None = None,
-                                   checkpoint_dir: str | None = None,
-                                   listener=None,
-                                   files_per_trigger: int | None = None
+                                   checkpoint_dir: str | None = None
                                    ) -> DataFrame:
     """Kappa-style batch→stream HANDOFF into one exactly-once sink:
     history windows are backfilled by a batch aggregate over the table
@@ -705,20 +804,17 @@ def run_streaming_backfill_handoff(spark: SparkSession, sf_dir: str,
     sink.foreach_batch(backfill, epoch_id=-1)
 
     # -- streaming tail: windows at/after the cut ----------------------
-    stage = _resolve_stage(spark, sf_dir, stage_dir)
-    src = read_token_stream(spark, stage, files_per_trigger)
+    src = read_token_stream(spark, _resolve_stage(spark, sf_dir, stage_dir))
     tail = F.col("w.start") >= F.timestamp_seconds(F.lit(cut_ts))
-    agg = _window_agg(observed(src).withWatermark("ts", WATERMARK),
-                      F.window("ts", WIDTH), ["source"], _seq_totals(),
-                      _flushed() & tail)
-    return _drain(agg, sink, checkpoint_dir, listener).read(spark)
+    return _drain(_throughput(src, _flushed() & tail), sink,
+                  checkpoint_dir).read(spark)
 
 
 def run_streaming_late_repair(spark: SparkSession, sf_dir: str,
                               stage_dir: str | None = None,
                               sink_dir: str | None = None,
-                              checkpoint_dir: str | None = None,
-                              listener=None) -> DataFrame:
+                              checkpoint_dir: str | None = None
+                              ) -> DataFrame:
     """Lambda-style LATE-DATA REPAIR over the exactly-once sink: the
     stream drops rows that arrive after the watermark passed their
     window (the correct streaming behavior — unbounded lateness means
@@ -743,11 +839,8 @@ def run_streaming_late_repair(spark: SparkSession, sf_dir: str,
     a full-history replay; the upsert is one appended epoch."""
     stage = _resolve_stage(spark, sf_dir, stage_dir, "stragglers")
     src = read_token_stream(spark, stage, files_per_trigger=1)
-    agg = _window_agg(observed(src).withWatermark("ts", WATERMARK),
-                      F.window("ts", WIDTH), ["source"], _seq_totals(),
-                      _flushed())
-    sink = _drain(agg, _sink(sink_dir, "ws", "source"), checkpoint_dir,
-                  listener)
+    sink = _drain(_throughput(src, _flushed()),
+                  _sink(sink_dir, "ws", "source"), checkpoint_dir)
 
     # -- batch repair: recompute ONLY the straggler-damaged windows ----
     # (window() is a grouping construct, not joinable — the prune key is
@@ -770,13 +863,9 @@ def run_streaming_late_repair(spark: SparkSession, sf_dir: str,
     return sink.read(spark)
 
 
-def run_streaming_loglog_monitor(spark: SparkSession, sf_dir: str,
-                                 stage_dir: str | None = None,
-                                 sink_dir: str | None = None,
-                                 checkpoint_dir: str | None = None,
-                                 listener=None,
-                                 files_per_trigger: int | None = None
-                                 ) -> DataFrame:
+@_runner("ws", "source", "reg",
+         fold=lambda out, a: loglog_window_fold(out, ["ws", "source"]))
+def run_streaming_loglog_monitor(src, a):
     """Streaming distinct-token monitor: per-(window, source) LogLog
     register grids through the exactly-once sink, folded at read into
     the integral sketch estimate (operators/sketches.py:
@@ -792,14 +881,9 @@ def run_streaming_loglog_monitor(spark: SparkSession, sf_dir: str,
     is both bounded AND exactly-once-safe for free. Sentinel corollary:
     explode_outer keeps the empty-array flush rows; their NULL-register
     groups are cut by the window predicate per the CLAUDE.md rule."""
-    from movement_spark.operators.sketches import (
-        CMS_AB, CMS_P, LL_M, loglog_window_fold)
-
-    stage = _resolve_stage(spark, sf_dir, stage_dir)
-    src = read_token_stream(spark, stage, files_per_trigger)
-    a, b = CMS_AB[0]
-    hv = f"(({a}L * cast(t as bigint) + {b}) % {CMS_P})"
-    grid = _window_agg(
+    mul, add = CMS_AB[0]
+    hv = f"(({mul}L * cast(t as bigint) + {add}) % {CMS_P})"
+    return _window_agg(
         src.withWatermark("ts", WATERMARK)
         .select("ts", "source", F.explode_outer("tokens").alias("t"))
         .select("ts", "source",
@@ -807,37 +891,15 @@ def run_streaming_loglog_monitor(spark: SparkSession, sf_dir: str,
                 F.expr(f"length(bin({hv} div {LL_M}))").alias("bl")),
         F.window("ts", WIDTH), ["source", "reg"],
         [F.max("bl").alias("max_bl")], _flushed())
-    sink = _drain(grid, _sink(sink_dir, "ws", "source", "reg"),
-                  checkpoint_dir, listener)
-    return loglog_window_fold(sink.read(spark), ["ws", "source"])
 
 
-EMB_STREAM_SCHEMA = StructType([
-    StructField("vec_id", LongType()),
-    StructField("embedding", ArrayType(FloatType())),
-    StructField("label", IntegerType()),
-])
-
-
-def stage_embedding_stream(spark: SparkSession, sf_dir: str,
-                           stage_dir: str, n_chunks: int = 6) -> int:
-    """Stage the embeddings table as ordered chunk files (one vec_id
-    slice per file). No sentinel files: the ANN-ingest pipeline is
-    STATELESS (no watermark, no windowed state), so nothing needs a
-    flush — availableNow drains every staged file and stops."""
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-    n_rows, _, _ = _distribute_chunks(emb, stage_dir, n_chunks, ["vec_id"])
-    return n_rows
-
-
-def run_streaming_ann_ingest(spark: SparkSession, sf_dir: str,
-                             n_centroids: int = 16,
-                             stage_dir: str | None = None,
-                             sink_dir: str | None = None,
-                             checkpoint_dir: str | None = None,
-                             listener=None,
-                             files_per_trigger: int | None = None,
-                             assign: str = "arrow") -> DataFrame:
+@_runner("vec_id", variant="embeddings", schema=EMB_STREAM_SCHEMA,
+         n_centroids=16, assign="arrow",
+         fold=lambda out, a: out.groupBy("cent_id").agg(
+             F.count("*").alias("n_vecs"),
+             F.sum("vec_id").cast("bigint").alias("sum_vec_id"),
+             F.countDistinct("label").cast("int").alias("n_labels")))
+def run_streaming_ann_ingest(src, a):
     """Streaming IVF index ingest: a live embedding stream is assigned
     to a FROZEN coarse codebook micro-batch by micro-batch (the
     stream-static broadcast form of similarity.ivf_assign_incremental)
@@ -870,38 +932,21 @@ def run_streaming_ann_ingest(spark: SparkSession, sf_dir: str,
     token shards; the codebook-frozen contract mirrors
     ivf_assign_incremental (pinned by test_ivf_incremental_equals_rebuild).
     """
-    from movement_spark.operators.similarity import (
-        _argmax_dot_assign, ivf_assign_arrow, quantized)
-
     cents = (quantized(
-        spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet")))
-        .where(F.col("vec_id") < n_centroids)
+        a.spark.read.parquet(os.path.join(a.sf_dir, "embeddings.parquet")))
+        .where(F.col("vec_id") < a.n_centroids)
         .select(F.col("vec_id").alias("cent_id"), F.col("q").alias("cv")))
-    stage = _resolve_stage(spark, sf_dir, stage_dir, "embeddings")
-    src = read_token_stream(spark, stage, files_per_trigger,
-                            schema=EMB_STREAM_SCHEMA)
-    if assign == "arrow":
+    if a.assign == "arrow":
         assigned = ivf_assign_arrow(src, cents=cents, keep=("label",))
     else:
         assigned = _argmax_dot_assign(
             quantized(src).select("vec_id", "q", "label"),
             cents, keep=("label",))
-    out = assigned.select("vec_id", "label", "cent_id")
-    sink = _drain(out, _sink(sink_dir, "vec_id"), checkpoint_dir, listener)
-    return (
-        sink.read(spark)
-        .groupBy("cent_id")
-        .agg(F.count("*").alias("n_vecs"),
-             F.sum("vec_id").cast("bigint").alias("sum_vec_id"),
-             F.countDistinct("label").cast("int").alias("n_labels"))
-    )
+    return assigned.select("vec_id", "label", "cent_id")
 
 
-def run_streaming_dedup(spark: SparkSession, sf_dir: str,
-                        stage_dir: str | None = None,
-                        sink_dir: str | None = None,
-                        checkpoint_dir: str | None = None,
-                        listener=None) -> DataFrame:
+@_runner("ws", "source", variant="dedup")
+def run_streaming_dedup(src, a):
     """Streaming exact dedup under at-least-once delivery.
 
     The stage drop carries every chunk TWICE (duplicate_factor=2);
@@ -910,52 +955,14 @@ def run_streaming_dedup(spark: SparkSession, sf_dir: str,
     so the final sink equals the batch oracle over the UN-duplicated
     table. State for seen keys is evicted as the watermark passes.
     """
-    stage = _resolve_stage(spark, sf_dir, stage_dir, "dedup")
-    src = read_token_stream(spark, stage)
-    agg = _window_agg(
+    return _window_agg(
         src.withWatermark("ts", WATERMARK)
         .dropDuplicatesWithinWatermark(["doc_id", "seq"]),
         F.window("ts", WIDTH), ["source"], _seq_totals(), _flushed())
-    return _drain(agg, _sink(sink_dir, "ws", "source"), checkpoint_dir,
-                  listener).read(spark)
 
 
-EVENTS_SCHEMA = ("event_id BIGINT, ts TIMESTAMP, user_id BIGINT, "
-                 "event_type STRING, value DOUBLE, props STRING")
-EVENTS_FLUSH_TS = pd.Timestamp("2024-03-01")  # beyond the Jan-2024 data
-
-
-def stage_events_stream(spark: SparkSession, sf_dir: str,
-                        stage_dir: str, n_chunks: int = 6) -> int:
-    """Stage the driver-provided events table as event-time-ordered chunk
-    files plus flush sentinels — the same WorkChunkDriver-as-files shape
-    as stage_token_stream, over a REAL (non-derived) table. Distributed
-    (repartitionByRange write), like the token stager."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    n_rows, next_idx, base = _distribute_chunks(
-        ev, stage_dir, n_chunks, ["ts", "event_id"])
-    arrow_schema = pa.schema([
-        ("event_id", pa.int64()), ("ts", pa.timestamp("us")),
-        ("user_id", pa.int64()), ("event_type", pa.string()),
-        ("value", pa.float64()), ("props", pa.string()),
-    ])
-
-    def _rows(k: int):
-        return pd.DataFrame({
-            "event_id": [-1], "ts": [EVENTS_FLUSH_TS + pd.Timedelta(minutes=k)],
-            "user_id": [-1], "event_type": [SENTINEL], "value": [0.0],
-            "props": ["{}"],
-        }), arrow_schema
-
-    _emit_sentinel_files(stage_dir, next_idx, base, _rows)
-    return n_rows
-
-
-def run_streaming_union(spark: SparkSession, sf_dir: str,
-                        stage_dir: str | None = None,
-                        sink_dir: str | None = None,
-                        checkpoint_dir: str | None = None,
-                        listener=None) -> DataFrame:
+@_runner("ws", "source", variant="union", gears=("a", "b"))
+def run_streaming_union(src, a):
     """GearBox as a streaming DAG (GearBox.java:49-56: flatMap N pinion
     outputs onto ONE stream): two independent file-stream sources — the
     staged chunks split across two directories — union into a single
@@ -963,45 +970,29 @@ def run_streaming_union(spark: SparkSession, sf_dir: str,
     streams, so one slow gear holds results for all (exactly GearBox's
     isComplete = all members complete). Sentinels are staged into BOTH
     directories so both watermarks advance."""
-    stage = _resolve_stage(spark, sf_dir, stage_dir, "union")
-    a_dir, b_dir = os.path.join(stage, "a"), os.path.join(stage, "b")
-    src = read_token_stream(spark, a_dir).unionByName(
-        read_token_stream(spark, b_dir))
-    agg = _window_agg(src.withWatermark("ts", WATERMARK),
-                      F.window("ts", WIDTH), ["source"], _seq_totals(),
-                      _flushed())
-    return _drain(agg, _sink(sink_dir, "ws", "source"), checkpoint_dir,
-                  listener).read(spark)
+    return _window_agg(src.withWatermark("ts", WATERMARK),
+                       F.window("ts", WIDTH), ["source"], _seq_totals(),
+                       _flushed())
 
 
-def run_streaming_events(spark: SparkSession, sf_dir: str,
-                         stage_dir: str | None = None,
-                         sink_dir: str | None = None,
-                         checkpoint_dir: str | None = None,
-                         listener=None) -> DataFrame:
+@_runner("ws", "event_type", variant="events", schema=EVENTS_SCHEMA)
+def run_streaming_events(src, a):
     """Daily per-type event stats as a watermarked streaming pipeline
     over the events table (min/max are order-independent, so the
     float column stays oracle-exact where a streamed SUM of doubles
     would not be)."""
-    stage = _resolve_stage(spark, sf_dir, stage_dir, "events")
-    src = read_token_stream(spark, stage, schema=EVENTS_SCHEMA)
     flush_cut = F.lit(EVENTS_FLUSH_TS.to_pydatetime()).cast("timestamp")
-    agg = _window_agg(
+    return _window_agg(
         src.withWatermark("ts", EVENTS_WINDOW),
         F.window("ts", EVENTS_WINDOW), ["event_type"],
         [F.count("*").alias("n_events"),
          F.round(F.min("value"), 6).alias("min_v"),
          F.round(F.max("value"), 6).alias("max_v")],
         F.col("w.start") < flush_cut)
-    return _drain(agg, _sink(sink_dir, "ws", "event_type"), checkpoint_dir,
-                  listener).read(spark)
 
 
-def run_streaming_update_mode(spark: SparkSession, sf_dir: str,
-                              stage_dir: str | None = None,
-                              sink_dir: str | None = None,
-                              checkpoint_dir: str | None = None,
-                              listener=None) -> DataFrame:
+@_runner("ws", "source", variant="nosentinel", output_mode="update")
+def run_streaming_update_mode(src, a):
     """Update-mode tumbling aggregate through the keyed upsert sink: each
     trigger emits the CURRENT value of every changed window and the sink's
     max-epoch-per-key read resolves to the latest — the MERGE-upsert
@@ -1011,19 +1002,12 @@ def run_streaming_update_mode(spark: SparkSession, sf_dir: str,
     re-emits hot windows every trigger (more sink I/O), append emits
     exactly once per window (more latency) — both end states are
     oracle-equal, which this query proves."""
-    stage = _resolve_stage(spark, sf_dir, stage_dir, "nosentinel")
-    src = read_token_stream(spark, stage)
-    agg = _window_agg(src.withWatermark("ts", WATERMARK),
-                      F.window("ts", WIDTH), ["source"], _seq_totals(), None)
-    return _drain(agg, _sink(sink_dir, "ws", "source"), checkpoint_dir,
-                  listener, output_mode="update").read(spark)
+    return _window_agg(src.withWatermark("ts", WATERMARK),
+                       F.window("ts", WIDTH), ["source"], _seq_totals(), None)
 
 
-def run_streaming_enriched(spark: SparkSession, sf_dir: str,
-                           stage_dir: str | None = None,
-                           sink_dir: str | None = None,
-                           checkpoint_dir: str | None = None,
-                           listener=None) -> DataFrame:
+@_runner("ws", "lang")
+def run_streaming_enriched(src, a):
     """Stream-static enrichment: the token stream joined per micro-batch
     against a static dimension (doc language from the documents table),
     then windowed per-language throughput. The dim is broadcast — the
@@ -1033,63 +1017,44 @@ def run_streaming_enriched(spark: SparkSession, sf_dir: str,
     join. LEFT join so the watermark sentinel (which matches no dim row)
     still reaches the aggregate's watermark accounting; its windows are
     cut by the window-column predicate as usual."""
-    stage = _resolve_stage(spark, sf_dir, stage_dir)
     dim = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        a.spark.read.parquet(f"{a.sf_dir}/documents.parquet")
         .select(F.concat(F.lit("d"), F.col("doc_id").cast("string"))
                 .alias("doc_id"),
                 "lang")
     )
-    src = read_token_stream(spark, stage)
-    agg = _window_agg(
+    return _window_agg(
         src.withWatermark("ts", WATERMARK)
         .join(F.broadcast(dim), "doc_id", "left"),
         F.window("ts", WIDTH), ["lang"], _seq_totals(), _flushed())
-    return _drain(agg, _sink(sink_dir, "ws", "lang"), checkpoint_dir,
-                  listener).read(spark)
 
 
-def run_streaming_sliding(spark: SparkSession, sf_dir: str,
-                          stage_dir: str | None = None,
-                          sink_dir: str | None = None,
-                          checkpoint_dir: str | None = None,
-                          listener=None) -> DataFrame:
+@_runner("ws", "source")
+def run_streaming_sliding(src, a):
     """Streaming sliding windows: every row lands in width/slide
     overlapping windows; state closes per window as the watermark passes
     its end. Same sentinel-flush discipline as run_streaming_tumbling;
     sink keyed (ws, source) so replays of overlapping windows stay
     idempotent."""
-    stage = _resolve_stage(spark, sf_dir, stage_dir)
-    src = read_token_stream(spark, stage)
-    agg = _window_agg(src.withWatermark("ts", WATERMARK),
-                      F.window("ts", SLIDING_WIDTH, WIDTH), ["source"],
-                      _seq_totals(), _flushed())
-    return _drain(agg, _sink(sink_dir, "ws", "source"), checkpoint_dir,
-                  listener).read(spark)
+    return _window_agg(src.withWatermark("ts", WATERMARK),
+                       F.window("ts", SLIDING_WIDTH, WIDTH), ["source"],
+                       _seq_totals(), _flushed())
 
 
-def run_streaming_session(spark: SparkSession, sf_dir: str,
-                          stage_dir: str | None = None,
-                          sink_dir: str | None = None,
-                          checkpoint_dir: str | None = None,
-                          listener=None) -> DataFrame:
+@_runner("doc_id", "session_start")
+def run_streaming_session(src, a):
     """Streaming session windows per doc_id: Spark's native session_window
     merges per-key activity separated by < gap into one state-store
     session; results emit in append mode once the watermark closes the
     session. Matches the batch session_token_windows oracle
     (session_end = last event + gap)."""
-    stage = _resolve_stage(spark, sf_dir, stage_dir)
-    src = read_token_stream(spark, stage)
-    sess = _session_agg(src.withWatermark("ts", WATERMARK))
-    return _drain(sess, _sink(sink_dir, "doc_id", "session_start"),
-                  checkpoint_dir, listener).read(spark)
+    return _session_agg(src.withWatermark("ts", WATERMARK))
 
 
 def run_streaming_ordered_merge(spark: SparkSession, sf_dir: str,
                                 stage_dir: str | None = None,
                                 sink_dir: str | None = None,
                                 checkpoint_dir: str | None = None,
-                                listener=None,
                                 mode: str = "jvm") -> DataFrame:
     """Streaming per-doc ordering stage (PHASE ONE→TWO barrier analog).
 
@@ -1112,23 +1077,25 @@ def run_streaming_ordered_merge(spark: SparkSession, sf_dir: str,
     path; the Python path is pinned by the ``mode="python"`` tests and
     by perfbench's live_cep reference check."""
     if mode == "jvm":
-        return run_streaming_ordered_merge_jvm(
-            spark, sf_dir, stage_dir=stage_dir, sink_dir=sink_dir,
-            checkpoint_dir=checkpoint_dir, listener=listener)
-    if mode != "python":
+        runner = run_streaming_ordered_merge_jvm
+    elif mode == "python":
+        runner = _ordered_merge_python
+    else:
         raise ValueError(
             f"mode must be 'jvm' or 'python', got {mode!r}")
-    merged = _assembled(spark, _resolve_stage(spark, sf_dir, stage_dir))
-    sink = _drain(merged, _sink(sink_dir, "doc_id"), checkpoint_dir,
-                  listener)
-    return _merged_docs(sink.read(spark))
+    return runner(spark, sf_dir, stage_dir=stage_dir, sink_dir=sink_dir,
+                  checkpoint_dir=checkpoint_dir)
 
 
-def run_streaming_ordered_merge_jvm(spark: SparkSession, sf_dir: str,
-                                    stage_dir: str | None = None,
-                                    sink_dir: str | None = None,
-                                    checkpoint_dir: str | None = None,
-                                    listener=None) -> DataFrame:
+@_runner("doc_id", fold=lambda out, a: _merged_docs(out))
+def _ordered_merge_python(src, a):
+    """run_streaming_ordered_merge's mode="python" path: the
+    stateful-Python emit-on-complete assembler."""
+    return _assembled(src)
+
+
+@_runner("doc_id", fold=lambda out, a: _merged_docs(out))
+def run_streaming_ordered_merge_jvm(src, a):
     """The PHASE barrier as an ALL-JVM session-window aggregate (the
     throughput path — no Python boundary; see ordered_doc_assembler_jvm).
     gap = 62 min > the fixture's max intra-doc event-time span (1 h), so
@@ -1137,17 +1104,7 @@ def run_streaming_ordered_merge_jvm(spark: SparkSession, sf_dir: str,
     guarantee. Output digest matches the batch merged_doc_check oracle —
     the same rows the stateful-Python path emits, proving the two
     assembler implementations interchangeable."""
-    stage = _resolve_stage(spark, sf_dir, stage_dir)
-    src = read_token_stream(spark, stage)
-    shards = src.select("doc_id", "seq", "tokens", "ts")
-    merged = (
-        ordered_doc_assembler_jvm(shards, watermark=WATERMARK)
-        .where(_flushed())
-        .drop("w")
-    )
-    sink = _drain(merged, _sink(sink_dir, "doc_id"), checkpoint_dir,
-                  listener)
-    return _merged_docs(sink.read(spark))
+    return _assembled_jvm(src)
 
 
 def run_throttled_ingest(spark: SparkSession, stage_dir: str,
@@ -1168,12 +1125,7 @@ def run_throttled_ingest(spark: SparkSession, stage_dir: str,
     the pacing (tests assert consecutive non-empty batch starts are >=
     ~delay apart).
     """
-    listener = RuntimeMetricsListener()
-    # listener registration and query start inside the try: a setup
-    # failure must not leave the listener attached to the shared session
-    q = None
-    spark.streams.addListener(listener)
-    try:
+    with listening(spark) as listener:
         src = read_token_stream(spark, stage_dir, files_per_trigger=1)
         q = (
             src.writeStream.format("noop")
@@ -1182,22 +1134,22 @@ def run_throttled_ingest(spark: SparkSession, stage_dir: str,
             .trigger(processingTime=f"{delay_ms} milliseconds")
             .start()
         )
-        deadline = time.time() + THROTTLE_TIMEOUT_SEC
-        while listener.total_rows < expected_rows:
-            # surface a dead query's real error instead of spinning the
-            # whole timeout and reporting a generic row-count stall
-            if q.exception() is not None:
-                raise q.exception()
-            if time.time() > deadline:
-                raise TimeoutError(
-                    f"throttled ingest saw {listener.total_rows}/"
-                    f"{expected_rows} rows within {THROTTLE_TIMEOUT_SEC}s")
-            time.sleep(delay_ms / 1000.0 / 4)
-    finally:
-        if q is not None:
+        try:
+            deadline = time.time() + THROTTLE_TIMEOUT_SEC
+            while listener.total_rows < expected_rows:
+                # surface a dead query's real error instead of spinning
+                # the whole timeout and reporting a generic row-count stall
+                if q.exception() is not None:
+                    raise q.exception()
+                if time.time() > deadline:
+                    raise TimeoutError(
+                        f"throttled ingest saw {listener.total_rows}/"
+                        f"{expected_rows} rows within "
+                        f"{THROTTLE_TIMEOUT_SEC}s")
+                time.sleep(delay_ms / 1000.0 / 4)
+        finally:
             q.stop()
             q.awaitTermination()
-        spark.streams.removeListener(listener)
     return listener
 
 
@@ -1244,29 +1196,35 @@ def _parity_shard_streams(src: DataFrame, keep_sentinels: bool):
     return even, odd, cond
 
 
-def run_streaming_shard_join(spark: SparkSession, sf_dir: str,
-                             stage_dir: str | None = None,
-                             sink_dir: str | None = None,
-                             checkpoint_dir: str | None = None,
-                             listener=None) -> DataFrame:
+@_runner("doc_id", "seq_a", "seq_b",
+         fold=lambda out, a: out.groupBy("doc_id").agg(*_pair_totals()))
+def run_streaming_shard_join(src, a):
     """Watermarked stream-stream join correlating shard streams on doc_id
     (PinionSystem/SlipWheel keyed analog); per-doc aggregate of the joined
     pairs matches the batch shard_pair_join oracle."""
-    stage = _resolve_stage(spark, sf_dir, stage_dir)
-    src = read_token_stream(spark, stage).where(F.col("source") != SENTINEL)
-    even, odd, cond = _parity_shard_streams(src, keep_sentinels=False)
-    pairs = even.join(odd, cond, "inner") \
+    even, odd, cond = _parity_shard_streams(
+        src.where(F.col("source") != SENTINEL), keep_sentinels=False)
+    return even.join(odd, cond, "inner") \
         .select("doc_id", "seq_a", "seq_b", "n_tok_a", "n_tok_b")
-    sink = _drain(pairs, _sink(sink_dir, "doc_id", "seq_a", "seq_b"),
-                  checkpoint_dir, listener)
-    return sink.read(spark).groupBy("doc_id").agg(*_pair_totals())
 
 
-def run_streaming_left_join(spark: SparkSession, sf_dir: str,
-                            stage_dir: str | None = None,
-                            sink_dir: str | None = None,
-                            checkpoint_dir: str | None = None,
-                            listener=None) -> DataFrame:
+def _left_join_fold(out: DataFrame, a) -> DataFrame:
+    # sentinel pairs DO reach the sink (they match each other and emit
+    # as ordinary join output); cut them here, outside the plan
+    return (
+        out.where(F.col("doc_id") != SENTINEL).groupBy("doc_id")
+        .agg(F.count("*").alias("n_rows"),
+             F.sum((F.col("seq_b") >= 0).cast("int")).cast("bigint")
+             .alias("n_matched"),
+             F.sum((F.col("seq_b") < 0).cast("int")).cast("bigint")
+             .alias("n_lonely"),
+             F.sum(F.col("n_tok_a") + F.col("n_tok_b")).cast("bigint")
+             .alias("pair_tok"))
+    )
+
+
+@_runner("doc_id", "seq_a", "seq_b", fold=_left_join_fold)
+def run_streaming_left_join(src, a):
     """Watermarked stream-stream LEFT OUTER join: even shards that find
     no odd partner within ±MAX_GAP_SEC MUST still be emitted (with
     nulls) — but only once the watermark proves no partner can still
@@ -1286,35 +1244,18 @@ def run_streaming_left_join(spark: SparkSession, sf_dir: str,
     instead dropped at sink-READ time, outside the streaming plan
     (CLAUDE.md sentinel invariant, join-shaped corollary).
     """
-    stage = _resolve_stage(spark, sf_dir, stage_dir)
-    src = read_token_stream(spark, stage)
     even, odd, cond = _parity_shard_streams(src, keep_sentinels=True)
-    joined = even.join(odd, cond, "left_outer").select(
+    return even.join(odd, cond, "left_outer").select(
         "doc_id", "seq_a", "n_tok_a",
         F.coalesce("seq_b", F.lit(-1)).alias("seq_b"),
         F.coalesce("n_tok_b", F.lit(0)).alias("n_tok_b"))
-    sink = _drain(joined, _sink(sink_dir, "doc_id", "seq_a", "seq_b"),
-                  checkpoint_dir, listener)
-    # sentinel pairs DO reach the sink (they match each other and emit
-    # as ordinary join output); cut them here, outside the plan
-    out = sink.read(spark).where(F.col("doc_id") != SENTINEL)
-    return (
-        out.groupBy("doc_id")
-        .agg(F.count("*").alias("n_rows"),
-             F.sum((F.col("seq_b") >= 0).cast("int")).cast("bigint")
-             .alias("n_matched"),
-             F.sum((F.col("seq_b") < 0).cast("int")).cast("bigint")
-             .alias("n_lonely"),
-             F.sum(F.col("n_tok_a") + F.col("n_tok_b")).cast("bigint")
-             .alias("pair_tok"))
-    )
 
 
-def run_streaming_incomplete_audit(spark: SparkSession, sf_dir: str,
-                                   stage_dir: str | None = None,
-                                   sink_dir: str | None = None,
-                                   checkpoint_dir: str | None = None,
-                                   listener=None) -> DataFrame:
+@_runner("doc_id", variant="gaps",
+         fold=lambda out, a: out.where(F.col("total_tok") < 0).select(
+             "doc_id", F.col("n_shard").cast("int").alias("n_received"),
+             (-F.col("total_tok")).cast("int").alias("expected")))
+def run_streaming_incomplete_audit(src, a):
     """Observable drop-and-count: over a lossy staged drop (every 5th
     doc loses its seq=1 shard), the stateful assembler emits an AUDIT
     row for each doc the event-time timeout evicts — doc_id, shards
@@ -1323,23 +1264,11 @@ def run_streaming_incomplete_audit(spark: SparkSession, sf_dir: str,
     the query's result is exactly the incomplete set, which the oracle
     derives arithmetically from the drop rule.
     """
-    stage = _resolve_stage(spark, sf_dir, stage_dir, variant="gaps")
-    merged = _assembled(spark, stage, emit_incomplete=True)
-    sink = _drain(merged, _sink(sink_dir, "doc_id"), checkpoint_dir,
-                  listener)
-    return (
-        sink.read(spark).where(F.col("total_tok") < 0)
-        .select("doc_id",
-                F.col("n_shard").cast("int").alias("n_received"),
-                (-F.col("total_tok")).cast("int").alias("expected"))
-    )
+    return _assembled(src, emit_incomplete=True)
 
 
-def run_streaming_dedup_sessions(spark: SparkSession, sf_dir: str,
-                                 stage_dir: str | None = None,
-                                 sink_dir: str | None = None,
-                                 checkpoint_dir: str | None = None,
-                                 listener=None) -> DataFrame:
+@_runner("doc_id", "session_start", variant="dedup")
+def run_streaming_dedup_sessions(src, a):
     """CHAINED stateful operators in one streaming DAG: exactly-once
     restoration (dropDuplicatesWithinWatermark over the doubled
     at-least-once drop) feeding a session-window aggregate — two state
@@ -1352,19 +1281,23 @@ def run_streaming_dedup_sessions(spark: SparkSession, sf_dir: str,
     dedup state, but the watermark node sits upstream of it, so the
     second sentinel still advances event time before being dropped.
     """
-    stage = _resolve_stage(spark, sf_dir, stage_dir, "dedup")
-    src = read_token_stream(spark, stage)
-    sess = _session_agg(src.withWatermark("ts", WATERMARK)
+    return _session_agg(src.withWatermark("ts", WATERMARK)
                         .dropDuplicatesWithinWatermark(["doc_id", "seq"]))
-    return _drain(sess, _sink(sink_dir, "doc_id", "session_start"),
-                  checkpoint_dir, listener).read(spark)
 
 
-def run_streaming_leaderboard(spark: SparkSession, sf_dir: str,
-                              stage_dir: str | None = None,
-                              sink_dir: str | None = None,
-                              checkpoint_dir: str | None = None,
-                              listener=None) -> DataFrame:
+def _leaderboard_fold(out: DataFrame, a) -> DataFrame:
+    w = Window.orderBy(F.desc("sum_tok"), F.asc("source"))
+    return (
+        out.withColumn("lb_rank", F.row_number().over(w).cast("int"))
+        .where(F.col("lb_rank") <= LEADERBOARD_TOP_N)
+        .select("source", F.col("n_seq").cast("bigint").alias("n_seq"),
+                "sum_tok", "lb_rank")
+    )
+
+
+@_runner("source", variant="nosentinel", output_mode="update",
+         fold=_leaderboard_fold)
+def run_streaming_leaderboard(src, a):
     """Continuously-maintained leaderboard: an update-mode GLOBAL
     running aggregate per source (no window — the all-time total) whose
     changed rows upsert into the keyed sink every trigger; the read
@@ -1372,28 +1305,13 @@ def run_streaming_leaderboard(spark: SparkSession, sf_dir: str,
     state is one row per key, updates supersede, no watermark or
     sentinel involved, and the end state must equal the batch totals.
     """
-    from pyspark.sql.window import Window
-
-    stage = _resolve_stage(spark, sf_dir, stage_dir, "nosentinel")
-    src = read_token_stream(spark, stage)
-    totals = src.groupBy("source").agg(*_seq_totals())
-    sink = _drain(totals, _sink(sink_dir, "source"), checkpoint_dir,
-                  listener, output_mode="update")
-    w = Window.orderBy(F.desc("sum_tok"), F.asc("source"))
-    return (
-        sink.read(spark)
-        .withColumn("lb_rank", F.row_number().over(w).cast("int"))
-        .where(F.col("lb_rank") <= LEADERBOARD_TOP_N)
-        .select("source", F.col("n_seq").cast("bigint").alias("n_seq"),
-                "sum_tok", "lb_rank")
-    )
+    return src.groupBy("source").agg(*_seq_totals())
 
 
 def run_streaming_fanout(spark: SparkSession, sf_dir: str,
                          stage_dir: str | None = None,
                          sink_dir: str | None = None,
-                         checkpoint_dir: str | None = None,
-                         listener=None) -> DataFrame:
+                         checkpoint_dir: str | None = None) -> DataFrame:
     """One-pass fan-out: a SINGLE streaming query maintains TWO outputs
     — the raw shard archive (epoch-partitioned parquet, replay-
     idempotent by the same overwrite discipline as the sink) and an
@@ -1413,14 +1331,18 @@ def run_streaming_fanout(spark: SparkSession, sf_dir: str,
     running totals from the additive fold joined against the archive's
     actual row counts — n_seq must equal n_archived row for row, and
     both must equal the batch oracle over the clean table.
-    """
-    from movement_spark.sinks.idempotent import AdditiveKeyedSink
 
-    stage = _resolve_stage(spark, sf_dir, stage_dir, "nosentinel")
-    src = read_token_stream(spark, stage)
-    archive = _tmp("msfo_arch_")
+    The archive lives INSIDE the counter sink (``<sink>/_archive/
+    epoch=N``), so a resume on the same sink and checkpoint archives
+    into the same place the earlier epochs went, and drop_storage()
+    removes both. The sink's read() and compact() only look at
+    ``epoch=`` and ``_snapshot*`` entries.
+    """
+    src = read_token_stream(
+        spark, _resolve_stage(spark, sf_dir, stage_dir, "nosentinel"))
     counters = AdditiveKeyedSink(sink_dir or _tmp("ms_sink_"),
                                  ["source"], ["n_seq", "sum_tok"])
+    archive = os.path.join(counters.path, "_archive")
 
     def _fanout(batch: DataFrame, epoch_id: int) -> None:
         # unpersist in a finally: a failed write must not leave the
@@ -1434,7 +1356,7 @@ def run_streaming_fanout(spark: SparkSession, sf_dir: str,
         finally:
             batch.unpersist()
 
-    _drain(src, counters, checkpoint_dir, listener, batch_fn=_fanout)
+    _drain(src, counters, checkpoint_dir, batch_fn=_fanout)
     archived = (
         spark.read.parquet(archive)
         .groupBy("source").agg(F.count("*").cast("bigint")
@@ -1445,35 +1367,9 @@ def run_streaming_fanout(spark: SparkSession, sf_dir: str,
     )
 
 
-def run_streaming_full_outer_join(spark: SparkSession, sf_dir: str,
-                                  stage_dir: str | None = None,
-                                  sink_dir: str | None = None,
-                                  checkpoint_dir: str | None = None,
-                                  listener=None) -> DataFrame:
-    """Watermarked stream-stream FULL OUTER join — both lonely sides
-    emit: even shards with no odd partner AND odd shards with no even
-    partner surface with null counterparts once the min of the two
-    watermarks proves no partner can still arrive. Completes the outer-
-    join family (inner = shard_pair, left = run_streaming_left_join);
-    state eviction now happens on BOTH sides, so the sentinel
-    discipline is identical to the left join: sentinels flow through
-    both watermarks, no sentinel predicate exists anywhere in the
-    streaming plan, and sentinel artifacts are cut at sink-READ time.
-    """
-    stage = _resolve_stage(spark, sf_dir, stage_dir)
-    src = read_token_stream(spark, stage)
-    even, odd, cond = _parity_shard_streams(src, keep_sentinels=True)
-    joined = even.join(odd, cond, "full_outer").select(
-        F.coalesce(F.col("doc_id"), F.col("doc_id_b")).alias("doc_id"),
-        F.coalesce("seq_a", F.lit(-1)).alias("seq_a"),
-        F.coalesce("n_tok_a", F.lit(0)).alias("n_tok_a"),
-        F.coalesce("seq_b", F.lit(-1)).alias("seq_b"),
-        F.coalesce("n_tok_b", F.lit(0)).alias("n_tok_b"))
-    sink = _drain(joined, _sink(sink_dir, "doc_id", "seq_a", "seq_b"),
-                  checkpoint_dir, listener)
-    out = sink.read(spark).where(F.col("doc_id") != SENTINEL)
+def _full_outer_join_fold(out: DataFrame, a) -> DataFrame:
     return (
-        out.groupBy("doc_id")
+        out.where(F.col("doc_id") != SENTINEL).groupBy("doc_id")
         .agg(F.count("*").alias("n_rows"),
              F.sum(((F.col("seq_a") >= 0) & (F.col("seq_b") >= 0))
                    .cast("int")).cast("bigint").alias("n_matched"),
@@ -1486,11 +1382,29 @@ def run_streaming_full_outer_join(spark: SparkSession, sf_dir: str,
     )
 
 
-def run_streaming_join_then_window(spark: SparkSession, sf_dir: str,
-                                   stage_dir: str | None = None,
-                                   sink_dir: str | None = None,
-                                   checkpoint_dir: str | None = None,
-                                   listener=None) -> DataFrame:
+@_runner("doc_id", "seq_a", "seq_b", fold=_full_outer_join_fold)
+def run_streaming_full_outer_join(src, a):
+    """Watermarked stream-stream FULL OUTER join — both lonely sides
+    emit: even shards with no odd partner AND odd shards with no even
+    partner surface with null counterparts once the min of the two
+    watermarks proves no partner can still arrive. Completes the outer-
+    join family (inner = shard_pair, left = run_streaming_left_join);
+    state eviction now happens on BOTH sides, so the sentinel
+    discipline is identical to the left join: sentinels flow through
+    both watermarks, no sentinel predicate exists anywhere in the
+    streaming plan, and sentinel artifacts are cut at sink-READ time.
+    """
+    even, odd, cond = _parity_shard_streams(src, keep_sentinels=True)
+    return even.join(odd, cond, "full_outer").select(
+        F.coalesce(F.col("doc_id"), F.col("doc_id_b")).alias("doc_id"),
+        F.coalesce("seq_a", F.lit(-1)).alias("seq_a"),
+        F.coalesce("n_tok_a", F.lit(0)).alias("n_tok_a"),
+        F.coalesce("seq_b", F.lit(-1)).alias("seq_b"),
+        F.coalesce("n_tok_b", F.lit(0)).alias("n_tok_b"))
+
+
+@_runner("ws")
+def run_streaming_join_then_window(src, a):
     """TWO chained stateful operators in ONE streaming query: the
     watermarked stream-stream interval join feeds a tumbling window
     aggregation downstream — join state AND window state live in the
@@ -1507,21 +1421,15 @@ def run_streaming_join_then_window(spark: SparkSession, sf_dir: str,
     window column — the one filter shape that cannot be pushed below
     the EventTimeWatermark nodes (CLAUDE.md sentinel invariant).
     """
-    stage = _resolve_stage(spark, sf_dir, stage_dir)
-    src = read_token_stream(spark, stage)
     even, odd, cond = _parity_shard_streams(src, keep_sentinels=True)
-    agg = _window_agg(even.join(odd, cond, "inner"), F.window("ts_a", WIDTH),
-                      [], _pair_totals(), _flushed())
-    return _drain(agg, _sink(sink_dir, "ws"), checkpoint_dir,
-                  listener).read(spark)
+    return _window_agg(even.join(odd, cond, "inner"),
+                       F.window("ts_a", WIDTH), [], _pair_totals(),
+                       _flushed())
 
 
-def run_streaming_pattern_match(spark: SparkSession, sf_dir: str,
-                                stage_dir: str | None = None,
-                                sink_dir: str | None = None,
-                                checkpoint_dir: str | None = None,
-                                files_per_trigger: int | None = None,
-                                listener=None) -> DataFrame:
+@_runner("user_id", variant="events", schema=EVENTS_SCHEMA,
+         files_per_trigger=None)
+def run_streaming_pattern_match(src, a):
     """Streaming CEP row-pattern matching over the events stream: the
     stateful matcher (operators/patterns.py:user_pattern_stats, with
     its default pattern) closes each user's activity episode on
@@ -1530,22 +1438,12 @@ def run_streaming_pattern_match(spark: SparkSession, sf_dir: str,
     episode and are dropped after the stateful stage (a post-stage
     filter cannot be pushed below the watermark through a Python
     stage)."""
-    from movement_spark.operators.patterns import user_pattern_stats
-
-    stage = _resolve_stage(spark, sf_dir, stage_dir, "events")
-    src = read_token_stream(spark, stage, files_per_trigger,
-                            schema=EVENTS_SCHEMA)
-    stats = user_pattern_stats(src, watermark=EVENTS_WINDOW) \
+    return user_pattern_stats(src, watermark=EVENTS_WINDOW) \
         .where(F.col("user_id") >= 0)
-    return _drain(stats, _sink(sink_dir, "user_id"), checkpoint_dir,
-                  listener).read(spark)
 
 
-def run_streaming_window_rollup(spark: SparkSession, sf_dir: str,
-                                stage_dir: str | None = None,
-                                sink_dir: str | None = None,
-                                checkpoint_dir: str | None = None,
-                                listener=None) -> DataFrame:
+@_runner("ws", "source")
+def run_streaming_window_rollup(src, a):
     """Chained WINDOW aggregations in one streaming query (the second
     multiple-stateful-operator shape, next to join→window): 5-minute
     per-source partials re-aggregated into 1-hour totals by windowing
@@ -1560,27 +1458,22 @@ def run_streaming_window_rollup(spark: SparkSession, sf_dir: str,
     fine windows are cut AFTER the coarse aggregation by a predicate on
     the coarse window column (the only pushdown-safe filter shape —
     cutting between the two aggs would push below the first window)."""
-    stage = _resolve_stage(spark, sf_dir, stage_dir)
-    src = read_token_stream(spark, stage)
     fine_agg = (
         src.withWatermark("ts", WATERMARK)
         .groupBy(F.window("ts", WIDTH).alias("w5"), "source")
         .agg(*_seq_totals())
     )
-    coarse_agg = _window_agg(
+    return _window_agg(
         fine_agg, F.window(F.col("w5"), ROLLUP_WIDTH), ["source"],
         [F.count("*").alias("n_fine"),
          F.sum("n_seq").cast("bigint").alias("n_seq"),
          F.sum("sum_tok").cast("bigint").alias("sum_tok")], _flushed())
-    return _drain(coarse_agg, _sink(sink_dir, "ws", "source"),
-                  checkpoint_dir, listener).read(spark)
 
 
 def run_streaming_neardup_monitor(spark: SparkSession, sf_dir: str,
                                   stage_dir: str | None = None,
                                   sink_dir: str | None = None,
                                   checkpoint_dir: str | None = None,
-                                  listener=None,
                                   files_per_trigger: int | None = None,
                                   sig_mode: str = "stream") -> DataFrame:
     """Streaming near-dup-rate monitor: per (window, source), how many
@@ -1620,40 +1513,21 @@ def run_streaming_neardup_monitor(spark: SparkSession, sf_dir: str,
     the aggs would push the filter below the first window and stall
     the flush.
     """
-    from movement_spark.operators.dedup import shard_signature_expr
+    runner = _neardup_staged if sig_mode == "staged" else _neardup_stream
+    return runner(spark, sf_dir, stage_dir=stage_dir, sink_dir=sink_dir,
+                  checkpoint_dir=checkpoint_dir,
+                  files_per_trigger=files_per_trigger)
 
-    if sig_mode == "staged":
-        stage = _resolve_stage(spark, sf_dir, stage_dir, "ndsig")
-        # fail FAST on a sig-free stage file: parquet schema projection
-        # would silently read the missing column as NULL for every
-        # row, collapsing each (window, source) into one giant "dup"
-        # group — plausible-looking, completely wrong output. EVERY
-        # file's footer is checked (footers only, cheap): one sig-free
-        # file among signature files is just as wrong, and a dataset-
-        # level schema reflects only the first file.
-        sig_free = [f for f in sorted(os.listdir(stage))
-                    if f.endswith(".parquet") and "sig" not in
-                    pq.read_schema(os.path.join(stage, f)).names]
-        if sig_free:
-            raise ValueError(
-                f"sig_mode='staged' needs a signature-enriched stage "
-                f"(with_sig=True / 'ndsig' variant); {stage} has "
-                f"{len(sig_free)} file(s) with no 'sig' column, e.g. "
-                f"{sig_free[0]}")
-        src = read_token_stream(spark, stage, files_per_trigger,
-                                schema=NDSIG_STREAM_SCHEMA)
-        sig_col = F.col("sig")
-    else:
-        stage = _resolve_stage(spark, sf_dir, stage_dir)
-        src = read_token_stream(spark, stage, files_per_trigger)
-        sig_col = F.expr(shard_signature_expr())
+
+def _neardup_plan(src: DataFrame, sig_col: Column) -> DataFrame:
+    """The near-dup monitor's two chained aggregates over ``sig_col``."""
     per_sig = (
         src.withColumn("sig", sig_col)
         .withWatermark("ts", WATERMARK)
         .groupBy(F.window("ts", WIDTH).alias("w5"), "source", "sig")
         .agg(F.count("*").alias("n"))
     )
-    mon = (
+    return (
         per_sig
         .groupBy(F.window(F.col("w5"), WIDTH).alias("w"), "source")
         .agg(F.sum("n").cast("bigint").alias("n_seq"),
@@ -1664,15 +1538,39 @@ def run_streaming_neardup_monitor(spark: SparkSession, sf_dir: str,
                 (F.col("n_seq") - F.col("n_distinct_sig"))
                 .cast("bigint").alias("n_dup_seq"))
     )
-    return _drain(mon, _sink(sink_dir, "ws", "source"), checkpoint_dir,
-                  listener).read(spark)
 
 
-def run_streaming_dedup_join_window(spark: SparkSession, sf_dir: str,
-                                    stage_dir: str | None = None,
-                                    sink_dir: str | None = None,
-                                    checkpoint_dir: str | None = None,
-                                    listener=None) -> DataFrame:
+@_runner("ws", "source", files_per_trigger=None)
+def _neardup_stream(src, a):
+    """sig_mode="stream": the signature computed in-row."""
+    return _neardup_plan(src, F.expr(shard_signature_expr()))
+
+
+@_runner("ws", "source", variant="ndsig", schema=NDSIG_STREAM_SCHEMA,
+         files_per_trigger=None)
+def _neardup_staged(src, a):
+    """sig_mode="staged": the signature read from the stage."""
+    # fail FAST on a sig-free stage file: parquet schema projection
+    # would silently read the missing column as NULL for every row,
+    # collapsing each (window, source) into one giant "dup" group —
+    # plausible-looking, completely wrong output. EVERY file's footer
+    # is checked (footers only, cheap): one sig-free file among
+    # signature files is just as wrong, and a dataset-level schema
+    # reflects only the first file.
+    sig_free = [f for f in sorted(os.listdir(a.stage))
+                if f.endswith(".parquet") and "sig" not in
+                pq.read_schema(os.path.join(a.stage, f)).names]
+    if sig_free:
+        raise ValueError(
+            f"sig_mode='staged' needs a signature-enriched stage "
+            f"(with_sig=True / 'ndsig' variant); {a.stage} has "
+            f"{len(sig_free)} file(s) with no 'sig' column, e.g. "
+            f"{sig_free[0]}")
+    return _neardup_plan(src, F.col("sig"))
+
+
+@_runner("ws", variant="dedup")
+def run_streaming_dedup_join_window(src, a):
     """THREE chained stateful operators in ONE streaming query, under
     at-least-once delivery: per-side dropDuplicatesWithinWatermark
     restores exactly-once rows (every staged chunk arrives TWICE), the
@@ -1687,13 +1585,9 @@ def run_streaming_dedup_join_window(spark: SparkSession, sf_dir: str,
     happens at the per-side EventTimeWatermark nodes below the dedup,
     which see both sentinel files; surviving far-future rows are cut by
     the window-column predicate as in every windowed pipeline."""
-    stage = _resolve_stage(spark, sf_dir, stage_dir, "dedup")
-    src = read_token_stream(spark, stage)
     even, odd, cond = _parity_shard_streams(src, keep_sentinels=True)
     pairs = (even.dropDuplicatesWithinWatermark(["doc_id", "seq_a"])
              .join(odd.dropDuplicatesWithinWatermark(["doc_id_b", "seq_b"]),
                    cond, "inner"))
-    agg = _window_agg(pairs, F.window("ts_a", WIDTH), [], _pair_totals(),
-                      _flushed())
-    return _drain(agg, _sink(sink_dir, "ws"), checkpoint_dir,
-                  listener).read(spark)
+    return _window_agg(pairs, F.window("ts_a", WIDTH), [], _pair_totals(),
+                       _flushed())

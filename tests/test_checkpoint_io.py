@@ -31,8 +31,8 @@ import pyarrow.parquet as pq
 import pytest
 
 from movement_spark.session import _in_process_chmod_jar
-from movement_spark.streaming.metrics import (RuntimeMetricsListener,
-                                              _jvm_counters, _jvm_pid)
+from movement_spark.streaming.metrics import (_jvm_counters, _jvm_pid,
+                                              listening)
 from movement_spark.streaming.pipeline import (
     run_streaming_dedup_join_window, stage_token_stream)
 
@@ -183,10 +183,10 @@ def test_checkpoint_writes_spawn_few_processes(spark, sf_dir, dup_stage):
     created file or directory cost a `chmod` process over Hadoop's stock
     local file system), as the listener's engine-side counters report
     them."""
-    lst, ck = RuntimeMetricsListener(), _mkdir()
-    run_streaming_dedup_join_window(spark, sf_dir, stage_dir=dup_stage,
-                                    sink_dir=_mkdir(), checkpoint_dir=ck,
-                                    listener=lst)
+    ck = _mkdir()
+    with listening(spark) as lst:
+        run_streaming_dedup_join_window(spark, sf_dir, stage_dir=dup_stage,
+                                        sink_dir=_mkdir(), checkpoint_dir=ck)
     s = lst.summary()
     assert s["forked_cpu_s"] is not None and s["forked_cpu_s"] < 0.05, s
     n_files = _n_files(ck)

@@ -22,7 +22,7 @@ from movement_spark.streaming.pipeline import (
     _ARROW_SCHEMA, SENTINEL, read_token_stream, run_streaming_tumbling,
     stage_token_stream,
 )
-from movement_spark.streaming.metrics import RuntimeMetricsListener
+from movement_spark.streaming.metrics import listening
 
 
 def _mkdir():
@@ -155,57 +155,98 @@ def test_ordered_merge_defaults_to_jvm_bulk_path(monkeypatch):
 
 
 def test_read_stream_only_in_read_token_stream():
-    """One source rule: every pipeline reads its staged files through
-    read_token_stream, so a file-source option (pacing, schema) cannot
-    diverge per pipeline. No other function in the module may touch
-    ``readStream``."""
+    """One source, one drain, one listener hook, package-wide: across
+    every module under movement_spark/, ``readStream`` appears only in
+    read_token_stream, ``writeStream`` only in _drain and
+    run_throttled_ingest, and ``addListener`` only in
+    metrics.listening — so a file-source option (pacing, schema), the
+    state-partition pin or the listener detach cannot diverge per
+    caller."""
     import ast
 
-    from movement_spark.streaming import pipeline as P
+    import movement_spark
 
-    tree = ast.parse(open(P.__file__).read())
-    readers = set()
-    for fn in ast.walk(tree):
-        if isinstance(fn, ast.FunctionDef) and any(
-                isinstance(n, ast.Attribute) and n.attr == "readStream"
-                for n in ast.walk(fn)):
-            readers.add(fn.name)
-    assert readers == {"read_token_stream"}, readers
+    root = os.path.dirname(movement_spark.__file__)
+    uses = {"readStream": set(), "writeStream": set(), "addListener": set()}
+
+    class Uses(ast.NodeVisitor):
+        def __init__(self, module):
+            self.where = f"{module}:<module>"
+            self.module = module
+
+        def visit_FunctionDef(self, node):
+            outer, self.where = self.where, f"{self.module}:{node.name}"
+            self.generic_visit(node)
+            self.where = outer
+
+        def visit_Attribute(self, node):
+            if node.attr in uses:
+                uses[node.attr].add(self.where)
+            self.generic_visit(node)
+
+    for dirpath, _, files in os.walk(root):
+        for f in files:
+            if f.endswith(".py"):
+                path = os.path.join(dirpath, f)
+                Uses(os.path.relpath(path, root)).visit(
+                    ast.parse(open(path).read()))
+    assert uses == {
+        "readStream": {"streaming/pipeline.py:read_token_stream"},
+        "writeStream": {"streaming/pipeline.py:_drain",
+                        "streaming/pipeline.py:run_throttled_ingest"},
+        "addListener": {"streaming/metrics.py:listening"},
+    }, uses
 
 
-def test_fanout_failed_write_leaves_nothing_cached(spark, sf_dir,
-                                                   monkeypatch):
+def test_fanout_failed_write_leaves_nothing_cached(spark, sf_dir):
     """The fan-out persists each micro-batch for its two writes; a
     failing archive write must still unpersist it, or the batch stays
-    cached on the shared session after the query dies. The archive dir
-    is replaced by a regular file, so the real parquet write fails."""
+    cached on the shared session after the query dies. The sink's
+    ``_archive`` entry is a regular file, so the real parquet write
+    fails."""
     from pyspark.errors import StreamingQueryException
 
-    from movement_spark.sources import tokens
     from movement_spark.streaming import pipeline as P
 
-    real_tmp = P._tmp
-
-    def tmp(prefix):
-        path = real_tmp(prefix)
-        if prefix.startswith("msfo_arch_"):
-            os.rmdir(path)
-            open(path, "w").close()
-        return path
-
     # staging persists the token table: stage first, then start from an
-    # empty cache (dropping the module's memo too, so later callers
-    # re-derive and re-persist it)
+    # empty cache (later token_sequences callers persist it again)
     P.shared_stage(spark, sf_dir, "nosentinel")
     spark.catalog.clearCache()
-    tokens._TOKEN_CACHE.clear()
-    monkeypatch.setattr(P, "_tmp", tmp)
+    sink_dir = _mkdir()
+    open(os.path.join(sink_dir, "_archive"), "w").close()
     cache = spark._jsparkSession.sharedState().cacheManager()
     assert cache.isEmpty()
     with pytest.raises(StreamingQueryException):
-        P.run_streaming_fanout(spark, sf_dir, sink_dir=_mkdir(),
+        P.run_streaming_fanout(spark, sf_dir, sink_dir=sink_dir,
                                checkpoint_dir=_mkdir())
     assert cache.isEmpty(), "failed fan-out batch left cached"
+
+
+def test_fanout_archive_survives_resume(spark, sf_dir):
+    """Kill/resume for the fan-out: half the staged drop, then the rest
+    on the same sink and checkpoint. The additive counters fold every
+    epoch, so the archive must hold every epoch too: n_archived ==
+    n_seq for every source after the resume."""
+    from movement_spark.streaming.pipeline import (
+        run_streaming_fanout, stage_token_stream)
+
+    full_stage = _mkdir()
+    stage_token_stream(spark, sf_dir, full_stage, sentinel=False)
+    files = sorted(os.listdir(full_stage))
+    part_stage, ck, sink_dir = _mkdir(), _mkdir(), _mkdir()
+    cut = len(files) // 2
+    for f in files[:cut]:
+        shutil.copy2(os.path.join(full_stage, f), os.path.join(part_stage, f))
+    run_streaming_fanout(spark, sf_dir, stage_dir=part_stage,
+                         sink_dir=sink_dir, checkpoint_dir=ck)
+    for f in files[cut:]:
+        shutil.copy2(os.path.join(full_stage, f), os.path.join(part_stage, f))
+    rows = run_streaming_fanout(spark, sf_dir, stage_dir=part_stage,
+                                sink_dir=sink_dir,
+                                checkpoint_dir=ck).collect()
+    n_real = token_sequences(spark, sf_dir).count()
+    assert sum(r.n_seq for r in rows) == n_real
+    assert all(r.n_archived == r.n_seq for r in rows), rows
 
 
 def test_sink_compact_preserves_merge_on_read_view(spark):
@@ -316,12 +357,12 @@ def test_late_rows_dropped_by_watermark(spark):
     _write_chunk(stage, 5, [
         (SENTINEL, 0, [], 0, SENTINEL, _ts(90060), 1)], base + 5)
 
-    listener = RuntimeMetricsListener()
     # one file per micro-batch: the late-vs-finalized semantics under
     # test depend on the window being finalized BEFORE the late file
-    result = run_streaming_tumbling(
-        spark, sf_dir="unused", stage_dir=stage, sink_dir=sink_dir,
-        checkpoint_dir=ck, files_per_trigger=1, listener=listener)
+    with listening(spark) as listener:
+        result = run_streaming_tumbling(
+            spark, sf_dir="unused", stage_dir=stage, sink_dir=sink_dir,
+            checkpoint_dir=ck, files_per_trigger=1)
     rows = {(r.ws, r.source): (r.n_seq, r.sum_tok) for r in result.collect()}
     w0 = (EPOCH_2026, "web")
     # late row contributed nothing: window 0 holds only a+b
@@ -365,8 +406,8 @@ def test_no_duplicates_under_repartition(spark, sf_dir):
 
 
 def test_metrics_listener_counts_rows(spark, sf_dir):
-    listener = RuntimeMetricsListener()
-    run_streaming_tumbling(spark, sf_dir, listener=listener)
+    with listening(spark) as listener:
+        run_streaming_tumbling(spark, sf_dir)
     s = listener.summary()
     # 1250 real rows + 2 sentinels at sf0.001
     assert s["io_ops"] == 1252
@@ -388,10 +429,9 @@ def test_metrics_listener_charges_python_workers(spark, sf_dir):
     from movement_spark.streaming.pipeline import run_streaming_ordered_merge
 
     spark.sparkContext.parallelize([1]).map(lambda x: x).count()
-    listener = RuntimeMetricsListener()
-    run_streaming_ordered_merge(spark, sf_dir, sink_dir=_mkdir(),
-                                checkpoint_dir=_mkdir(), listener=listener,
-                                mode="python")
+    with listening(spark) as listener:
+        run_streaming_ordered_merge(spark, sf_dir, sink_dir=_mkdir(),
+                                    checkpoint_dir=_mkdir(), mode="python")
     assert listener.summary()["python_cpu_s"] > 0
 
 
@@ -989,18 +1029,18 @@ def test_chained_pipelines_run_two_stateful_operators(spark, sf_dir):
     from movement_spark.streaming.pipeline import (
         run_streaming_join_then_window, run_streaming_window_rollup)
 
-    lst = RuntimeMetricsListener()
-    run_streaming_join_then_window(
-        spark, sf_dir, stage_dir=_mkdir(), sink_dir=_mkdir(),
-        checkpoint_dir=_mkdir(), listener=lst)
+    with listening(spark) as lst:
+        run_streaming_join_then_window(
+            spark, sf_dir, stage_dir=_mkdir(), sink_dir=_mkdir(),
+            checkpoint_dir=_mkdir())
     ops = {op for r in lst.records for op in r.state_operators}
     assert any("symmetricHashJoin" in o for o in ops), ops
     assert any("stateStoreSave" in o for o in ops), ops
 
-    lst2 = RuntimeMetricsListener()
-    run_streaming_window_rollup(
-        spark, sf_dir, stage_dir=_mkdir(), sink_dir=_mkdir(),
-        checkpoint_dir=_mkdir(), listener=lst2)
+    with listening(spark) as lst2:
+        run_streaming_window_rollup(
+            spark, sf_dir, stage_dir=_mkdir(), sink_dir=_mkdir(),
+            checkpoint_dir=_mkdir())
     per_batch = {tuple(r.state_operators) for r in lst2.records}
     assert all(len(t) == 2 for t in per_batch), per_batch
     assert all(all("stateStoreSave" in o for o in t) for t in per_batch), \

@@ -38,3 +38,13 @@ def test_schema_matches_input_hint(spark, sf_dir):
     assert schema["n_tok"] == "int"
     assert schema["source"] == "string"
     assert schema["ts"] == "timestamp"
+
+
+def test_token_cache_repersists_after_clear_cache(spark, sf_dir):
+    """The memoized token table must notice that the session's cache
+    dropped it: after clearCache() the next call persists it again,
+    instead of handing out a frame every caller silently recomputes."""
+    token_sequences(spark, sf_dir)
+    spark.catalog.clearCache()
+    token_sequences(spark, sf_dir)
+    assert not spark._jsparkSession.sharedState().cacheManager().isEmpty()
