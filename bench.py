@@ -119,6 +119,19 @@ def main() -> None:
                                      "max": round(st["max"], 3),
                                      "runs": st["runs"]}
 
+    # Every streaming sub-metric stages a synthetic stream into a fresh
+    # work dir, runs its bench there and removes the dir — in a finally,
+    # so a failing sub-run does not leak its whole stage.
+    def _staged_run(n_docs: int, bench, with_sig: bool = False) -> dict:
+        work = tempfile.mkdtemp(prefix="ms_bench_")
+        try:
+            stage = os.path.join(work, "stage")
+            n_rows = stage_synth_stream(spark, n_docs, stage, n_files=64,
+                                        with_sig=with_sig)
+            return bench(stage, n_rows, work)
+        finally:
+            shutil.rmtree(work, ignore_errors=True)
+
     # Streaming throughput. State partitions are pinned at
     # STATE_PARTITIONS (8) by the pipelines' drain: stateful shuffle
     # layout is a deployment constant sized to key cardinality
@@ -130,21 +143,17 @@ def main() -> None:
     # batch-overhead-dominated there — kept ONLY for round-over-round
     # comparability), and the headline steady-state run at ≥2M rows whose
     # seq_per_sec_steady is the number to read against the scaling runs.
-    def _stream_run(n_docs: int) -> dict:
-        work = tempfile.mkdtemp(prefix="ms_bench_")
-        stage = os.path.join(work, "stage")
-        n_rows = stage_synth_stream(spark, n_docs, stage, n_files=64)
-        out = streaming_throughput(
-            spark, stage, n_rows,
-            sink_dir=os.path.join(work, "sink"),
-            checkpoint_dir=os.path.join(work, "ck"),
-            files_per_trigger=8,
-        )
-        shutil.rmtree(work, ignore_errors=True)
-        return out
+    def _bench(fn, tag: str = "", **kw):
+        """``fn`` over one sink and checkpoint, 8 files per trigger."""
+        return lambda stage, n_rows, work: fn(
+            spark, stage, n_rows, sink_dir=os.path.join(work, "sink" + tag),
+            checkpoint_dir=os.path.join(work, "ck" + tag),
+            files_per_trigger=8, **kw)
 
-    stream_small = _stream_run(max(int(800_000 * sf), 20_000))
-    stream = _stream_run(max(int(8_000_000 * sf), 100_000))
+    stream_small = _staged_run(max(int(800_000 * sf), 20_000),
+                               _bench(streaming_throughput))
+    stream = _staged_run(max(int(8_000_000 * sf), 100_000),
+                         _bench(streaming_throughput))
 
     # CEP assembler sub-metric: the flagship stateful stage in both
     # implementations. The JVM session-window path runs at the headline
@@ -155,29 +164,26 @@ def main() -> None:
     # JIT-sensitive (a cold first run measured 75k rows/s where warm
     # repeats hit 199k on the same tree), so a single sample reads as a
     # phantom 2.8x regression. Same best-of-N convention as scaling.py.
-    def _cep_run(mode: str, n_docs: int, reps: int = 2) -> dict:
-        work = tempfile.mkdtemp(prefix="ms_cepbench_")
-        stage = os.path.join(work, "stage")
-        n_rows = stage_synth_stream(spark, n_docs, stage, n_files=64)
-        best = None
-        for rep in range(reps):
-            out = cep_assembler_throughput(
-                spark, stage, n_rows,
-                sink_dir=os.path.join(work, f"sink{rep}"),
-                checkpoint_dir=os.path.join(work, f"ck{rep}"),
-                mode=mode)
-            if best is None or out["rows_per_sec"] > best["rows_per_sec"]:
-                best = out
-        best["runs"] = reps
-        shutil.rmtree(work, ignore_errors=True)
-        return best
+    def _cep(mode: str, reps: int = 2):
+        def bench(stage, n_rows, work):
+            best = None
+            for rep in range(reps):
+                out = cep_assembler_throughput(
+                    spark, stage, n_rows,
+                    sink_dir=os.path.join(work, f"sink{rep}"),
+                    checkpoint_dir=os.path.join(work, f"ck{rep}"), mode=mode)
+                if best is None or out["rows_per_sec"] > best["rows_per_sec"]:
+                    best = out
+            best["runs"] = reps
+            return best
+        return bench
 
     cep = {
-        "jvm": _cep_run("jvm", max(int(8_000_000 * sf), 100_000)),
+        "jvm": _staged_run(max(int(8_000_000 * sf), 100_000), _cep("jvm")),
         # python path: per-group invocation cost dominates (not JIT) and
         # a rep costs ~25 s — one sample, as before
-        "python_small": _cep_run("python", max(int(200_000 * sf), 5_000),
-                                 reps=1),
+        "python_small": _staged_run(max(int(200_000 * sf), 5_000),
+                                    _cep("python", reps=1)),
     }
 
     # Drift-monitor sub-metric (VERDICT r03 #5): the newest stateful
@@ -185,19 +191,8 @@ def main() -> None:
     # the bucketed histogram state (~54x the row volume of the headline
     # agg), at the SAME 2M-row input as the headline streaming run so
     # the seq/s numbers compare directly.
-    def _drift_run(n_docs: int) -> dict:
-        work = tempfile.mkdtemp(prefix="ms_driftbench_")
-        stage = os.path.join(work, "stage")
-        n_rows = stage_synth_stream(spark, n_docs, stage, n_files=64)
-        out = drift_monitor_throughput(
-            spark, stage, n_rows,
-            sink_dir=os.path.join(work, "sink"),
-            checkpoint_dir=os.path.join(work, "ck"),
-            files_per_trigger=8)
-        shutil.rmtree(work, ignore_errors=True)
-        return out
-
-    drift = _drift_run(max(int(8_000_000 * sf), 20_000))
+    drift = _staged_run(max(int(8_000_000 * sf), 20_000),
+                        _bench(drift_monitor_throughput))
 
     # Near-dup-monitor sub-metric at the same 2M-row input as the
     # headline streaming run. Profiling (round 5) showed the 16-probe
@@ -208,43 +203,23 @@ def main() -> None:
     # stage is shared, the extra column is invisible to the projecting
     # "stream" reader), with the self-contained in-stream form kept as
     # the comparison row.
-    def _neardup_run(n_docs: int) -> dict:
-        work = tempfile.mkdtemp(prefix="ms_ndbench_")
-        stage = os.path.join(work, "stage")
-        n_rows = stage_synth_stream(spark, n_docs, stage, n_files=64,
-                                    with_sig=True)
-        out = neardup_monitor_throughput(
-            spark, stage, n_rows,
-            sink_dir=os.path.join(work, "sink"),
-            checkpoint_dir=os.path.join(work, "ck"),
-            files_per_trigger=8, sig_mode="staged")
-        out["instream_sig"] = neardup_monitor_throughput(
-            spark, stage, n_rows,
-            sink_dir=os.path.join(work, "sink2"),
-            checkpoint_dir=os.path.join(work, "ck2"),
-            files_per_trigger=8, sig_mode="stream")
-        shutil.rmtree(work, ignore_errors=True)
+    def _neardup(stage, n_rows, work):
+        out = _bench(neardup_monitor_throughput, sig_mode="staged")(
+            stage, n_rows, work)
+        out["instream_sig"] = _bench(
+            neardup_monitor_throughput, "2", sig_mode="stream")(
+            stage, n_rows, work)
         return out
 
-    neardup = _neardup_run(max(int(8_000_000 * sf), 100_000))
+    neardup = _staged_run(max(int(8_000_000 * sf), 100_000), _neardup,
+                          with_sig=True)
 
     # Quantile-monitor sub-metric: the lightest-state stateful pipeline
     # (one counter increment per row, state pinned at windows × sources
     # × 64) at the same 2M-row input — bounds the floor of stateful-agg
     # overhead next to the drift monitor's token-explode ceiling.
-    def _quantile_run(n_docs: int) -> dict:
-        work = tempfile.mkdtemp(prefix="ms_qmbench_")
-        stage = os.path.join(work, "stage")
-        n_rows = stage_synth_stream(spark, n_docs, stage, n_files=64)
-        out = quantile_monitor_throughput(
-            spark, stage, n_rows,
-            sink_dir=os.path.join(work, "sink"),
-            checkpoint_dir=os.path.join(work, "ck"),
-            files_per_trigger=8)
-        shutil.rmtree(work, ignore_errors=True)
-        return out
-
-    quantile = _quantile_run(max(int(8_000_000 * sf), 100_000))
+    quantile = _staged_run(max(int(8_000_000 * sf), 100_000),
+                           _bench(quantile_monitor_throughput))
 
     # CMS-monitor sub-metric: the new per-row-cost ceiling — every
     # token explodes into CMS_D=4 probe rows before the windowed grid
@@ -252,19 +227,8 @@ def main() -> None:
     # cells collapsing map-side. Quarter of the headline input so the
     # state-update volume matches the drift monitor's 2M-row run;
     # seq/s comparisons against the other monitors must scale by that.
-    def _cms_run(n_docs: int) -> dict:
-        work = tempfile.mkdtemp(prefix="ms_cmsbench_")
-        stage = os.path.join(work, "stage")
-        n_rows = stage_synth_stream(spark, n_docs, stage, n_files=64)
-        out = cms_monitor_throughput(
-            spark, stage, n_rows,
-            sink_dir=os.path.join(work, "sink"),
-            checkpoint_dir=os.path.join(work, "ck"),
-            files_per_trigger=8)
-        shutil.rmtree(work, ignore_errors=True)
-        return out
-
-    cms = _cms_run(max(int(2_000_000 * sf), 20_000))
+    cms = _staged_run(max(int(2_000_000 * sf), 20_000),
+                      _bench(cms_monitor_throughput))
 
     result = {
         "metric": "headline_suite_sec",

@@ -92,11 +92,9 @@ def main() -> None:
     base = _base_run("a")
 
     # (b) kill at the halfway data file, resume from the same checkpoint
-    data_files = sorted(f for f in os.listdir(stage)
-                        if f.endswith(".parquet")
-                        and not f.startswith("zz_sentinel"))
-    sentinels = sorted(f for f in os.listdir(stage)
-                       if f.startswith("zz_sentinel"))
+    # chunk names sort in delivery order; the two flush sentinels last
+    files = sorted(f for f in os.listdir(stage) if f.endswith(".parquet"))
+    data_files, sentinels = files[:-2], files[-2:]
     cut = len(data_files) // 2
     part_stage = os.path.join(work, "part_stage")
     os.makedirs(part_stage)

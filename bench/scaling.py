@@ -30,6 +30,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import subprocess
 import sys
 import tempfile
@@ -66,6 +67,8 @@ def main() -> None:
     # with stray part files used to pass the reuse check)
     manifest = os.path.join(stage, "_rows.json")
     if not os.path.isfile(manifest):
+        # the stager adds files to its dir: clear an interrupted one
+        shutil.rmtree(stage, ignore_errors=True)
         spark = get_spark(app_name="ms_scaling_stage", master="local[32]",
                           extra_conf={"spark.ui.showConsoleProgress": "false"})
         spark.sparkContext.setLogLevel("ERROR")

@@ -155,6 +155,8 @@ def streaming_throughput(spark: SparkSession, stage_dir: str, n_rows: int,
         "steady_batches": steady_batches,
         "windows_emitted": emitted,
         "batches": len(listener.records),
+        "rows_dropped_late": sum(r.rows_dropped_late
+                                 for r in listener.records),
         "sum_tok": int(total_tok or 0),
     }
 
@@ -184,6 +186,8 @@ def _monitor_throughput(spark: SparkSession, runner, stage_dir: str,
         "seq_per_sec_steady": round(steady_seq, 1),
         "steady_batches": steady_batches,
         "batches": len(listener.records),
+        "rows_dropped_late": sum(r.rows_dropped_late
+                                 for r in listener.records),
         **extra,
     }
 

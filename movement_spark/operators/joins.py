@@ -4,8 +4,8 @@ The reference's only join-like primitives are positional stream zips
 (PinionSystem / SlipWheel / GearBox, SURVEY.md §2.4). Re-expressed
 Spark-first, the correlation is KEYED, not positional: shard streams meet
 on doc_id with a time-bound condition — a watermarked stream-stream join
-in streaming mode, a plain equi-join (with Catalyst picking
-broadcast/sort-merge) in batch.
+in streaming mode (streaming/pipeline.py ``run_streaming_shard_join``),
+a plain equi-join (with Catalyst picking broadcast/sort-merge) in batch.
 
 ``shard_pair_join`` is the PinionSystem analog: two derived shard streams
 (even seq = "wheel A", odd seq = "wheel B") joined per doc within a time
@@ -44,26 +44,6 @@ def shard_pair_join(tokens: DataFrame, max_gap_sec: int = 60) -> DataFrame:
         .agg(F.count("*").alias("n_pairs"),
              F.sum(F.col("n_tok_a") + F.col("n_tok_b")).cast("bigint").alias("pair_tok"))
     )
-
-
-def streaming_shard_join(tokens_stream: DataFrame,
-                         watermark: str = "2 minutes",
-                         max_gap_sec: int = 60) -> DataFrame:
-    """Watermarked stream-stream join on doc_id (north rule).
-
-    Both sides carry a watermark and the join condition bounds event-time
-    distance, so Spark can evict state: rows older than
-    watermark - max_gap are dropped from the join state store.
-    """
-    even, odd = split_shard_streams(tokens_stream)
-    even = even.withWatermark("ts_a", watermark)
-    odd = odd.withWatermark("ts_b", watermark)
-    cond = (
-        (even.doc_id == odd.doc_id)
-        & (odd.ts_b >= even.ts_a - F.expr(f"INTERVAL {max_gap_sec} SECONDS"))
-        & (odd.ts_b <= even.ts_a + F.expr(f"INTERVAL {max_gap_sec} SECONDS"))
-    )
-    return even.join(odd, cond, "inner").drop(odd.doc_id)
 
 
 def incident_attribution(events: DataFrame,

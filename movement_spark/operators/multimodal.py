@@ -101,12 +101,6 @@ FRAME_SCHEMA = StructType([
 N_FRAMES = 4
 
 
-def decode_video_frames(payload: bytes, n_frames: int) -> "np.ndarray":
-    """Real frame decode requires ffmpeg/av, absent in this container."""
-    raise NotImplementedError(
-        "video decode stub: wire av.open(io.BytesIO(payload)) here")
-
-
 def _sample_frames(n_frames: int):
     """Deterministic fake decoder: the payload is treated as n_frames
     equal-size chunks; each frame row carries its byte checksum. This is

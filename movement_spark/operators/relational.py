@@ -181,22 +181,6 @@ def revenue_deciles(orders: DataFrame) -> DataFrame:
     )
 
 
-def set_ops_demo(orders: DataFrame) -> DataFrame:
-    """Set operations (the reference only has iterator concat,
-    IteratorUtils.java:417): urgent ∪ high minus cancelled, distinct count
-    per priority."""
-    urgent = orders.where(F.col("o_orderpriority") == "1-URGENT")
-    high = orders.where(F.col("o_orderpriority") == "2-HIGH")
-    cancelled = orders.where(F.col("o_orderstatus") == "F")
-    u = urgent.unionByName(high).exceptAll(
-        cancelled.where(F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")))
-    return (
-        u.groupBy("o_orderpriority")
-        .agg(F.count("*").alias("n_orders"),
-             F.countDistinct("o_custkey").alias("n_cust"))
-    )
-
-
 SCD_OPEN_END = 9_999_999  # day number standing in for "no end date"
 
 

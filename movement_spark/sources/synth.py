@@ -1,113 +1,51 @@
 """Spark-native synthetic token-stream generator for benchmarks.
 
-Generates the same deterministic shape as sources.tokens but from
-``spark.range`` — fully parallel, no driver-side data generation, no
-dependency on the documents table — so benchmark input scales to any
-row count without a single-threaded bottleneck (SURVEY.md §7 risk 5).
+Generates the token rows of sources.tokens from ``spark.range`` — fully
+parallel, no driver-side data generation, no dependency on the
+documents table — so benchmark input scales to any row count without a
+single-threaded bottleneck (SURVEY.md §7 risk 5).
 
-The derivation constants are shared with sources.tokens, so invariants
+The rows come from the same ``token_rows`` derivation, so invariants
 (n_tok == len(tokens), value formula) are identical; only the doc-id
-universe is synthetic (did = 0..n_docs-1).
+universe is synthetic (did = 0..n_docs-1, source = 'src' || did % 20).
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from movement_spark.sources.tokens import (
-    EPOCH_2026, LEN_MOD, TS_MOD, tokens_expr as _tokens_expr,
-)
+from movement_spark.sources.tokens import LEN_MOD, token_rows
+from movement_spark.streaming.pipeline import stage_token_rows
+
+N_SOURCES = 20
 
 
 def synth_token_sequences(spark: SparkSession, n_docs: int,
-                          n_sources: int = 20,
-                          ts_span_sec: int = TS_MOD,
                           len_mod: int = LEN_MOD) -> DataFrame:
-    """~2.5 × n_docs shard rows, generated entirely inside the JVM.
+    """~2.5 × n_docs token rows (did included), generated entirely
+    inside the JVM.
 
     ``len_mod`` sets shard length 1..len_mod (default matches the
     correctness fixture; benchmarks use 512 — the input_hint's upper
     bound — so per-row weight matches real pre-tokenized shards).
     """
-    docs = spark.range(n_docs).select(F.col("id").alias("did"))
-    return (
-        docs
-        .select("did",
-                F.explode(F.expr("sequence(0, cast(did % 4 as int))")).alias("seq"))
-        .select(
-            F.concat(F.lit("d"), F.col("did").cast("string")).alias("doc_id"),
-            F.col("seq").cast("int").alias("seq"),
-            F.expr(_tokens_expr(len_mod)).alias("tokens"),
-            (1 + (F.col("did") * 7 + F.col("seq") * 13) % len_mod)
-            .cast("int").alias("n_tok"),
-            F.concat(F.lit("src"), (F.col("did") % n_sources).cast("string"))
-            .alias("source"),
-            F.timestamp_seconds(
-                F.lit(EPOCH_2026)
-                + (F.col("did") * 37 + F.col("seq") * 11) % ts_span_sec
-            ).alias("ts"),
-            (1 + F.col("did") % 4).cast("int").alias("n_shards"),
-        )
-    )
+    docs = spark.range(n_docs).select(
+        F.col("id").alias("did"),
+        F.concat(F.lit("src"), (F.col("id") % N_SOURCES).cast("string"))
+        .alias("source"))
+    return token_rows(docs, len_mod)
 
 
 def stage_synth_stream(spark: SparkSession, n_docs: int, stage_dir: str,
                        n_files: int = 64, len_mod: int = LEN_MOD,
                        with_sig: bool = False) -> int:
-    """Materialize the synthetic stream as event-time-ordered parquet
-    files (the WorkChunk layout the file-stream source consumes).
-
-    repartitionByRange(ts) gives each output file one contiguous
-    event-time slice; part file names sort in ts order, which is the
-    FileStreamSource tiebreak within one mtime — so the watermark
-    advances monotonically across micro-batches.
-
-    ``with_sig`` stamps the per-shard MinHash signature column at stage
-    time (the near-dup monitor's production landing layout, pipeline.py
-    NDSIG_STREAM_SCHEMA) — computed inside the same distributed write;
-    the extra column is invisible to schema-projecting readers, so one
-    sig-carrying stage serves every pipeline.
-    """
-    df = synth_token_sequences(spark, n_docs, len_mod=len_mod)
-    if with_sig:
-        from movement_spark.operators.dedup import shard_signature_expr
-        df = df.withColumn(
-            "sig", F.expr(shard_signature_expr()).cast("long"))
-    (df.repartitionByRange(n_files, "ts")
-       .write.mode("overwrite").parquet(stage_dir))
-    # row count from the staged footers (free), NOT df.count() — that
-    # would re-run the whole token-array generation a second time just
-    # to count rows, roughly doubling staging wall at bench scale.
-    # Taken BEFORE the sentinel files land below.
-    import pyarrow.parquet as pq
-    n_rows = pq.ParquetDataset(stage_dir).read(columns=[]).num_rows
-    # two flush-sentinel files staged AFTER the data (later mtime); the
-    # file source only lists direct children, so the sentinel part file
-    # is moved up into stage_dir
-    import shutil
-    import tempfile
-    import time
-
-    from movement_spark.streaming.pipeline import SENTINEL
-    later = time.time() + 5
-    for k in range(2):
-        flush = spark.createDataFrame(
-            [("__flush__", 0, [], 0, SENTINEL, None, 1)],
-            "doc_id string, seq int, tokens array<int>, n_tok int, "
-            "source string, ts timestamp, n_shards int",
-        ).withColumn("ts", F.timestamp_seconds(
-            F.lit(EPOCH_2026 + TS_MOD + 7200 + 60 * k)))
-        if with_sig:
-            # NULL sig: exactly what the in-row expression folds an
-            # empty token array to
-            flush = flush.withColumn("sig", F.lit(None).cast("long"))
-        tmp = tempfile.mkdtemp(prefix="ms_sentinel_")
-        flush.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-        dest = os.path.join(stage_dir, f"zz_sentinel_{k}.parquet")
-        shutil.move(os.path.join(tmp, part), dest)
-        shutil.rmtree(tmp, ignore_errors=True)
-        os.utime(dest, (later + k, later + k))
-    return n_rows
+    """Stage the synthetic stream through the pipelines' one token
+    stager (``streaming.pipeline.stage_token_rows``): ``n_files``
+    event-time-ordered chunk files, mtimes increasing in range order,
+    then the two flush sentinels. ``with_sig`` stamps the per-shard
+    MinHash signature column (the near-dup monitor's landing layout,
+    NDSIG_STREAM_SCHEMA); the extra column is invisible to
+    schema-projecting readers, so one sig-carrying stage serves every
+    pipeline. Returns the number of real (non-sentinel) rows staged."""
+    return stage_token_rows(synth_token_sequences(spark, n_docs, len_mod),
+                            stage_dir, n_files, with_sig=with_sig)

@@ -8,9 +8,11 @@ reference's PHASE ONE/TWO vertex-before-edge barrier, Task.java:54-63).
 
 The table is DERIVED deterministically from the driver-provided
 ``documents`` parquet so that the exact same rows are computable by:
-  1. Spark (this module, pure built-in functions — JVM-side, codegen'd),
-  2. the DuckDB oracle (TOKEN_SEQ_DUCKDB_CTE below),
-  3. numpy (movement_spark.sources.synth, for the streaming generator).
+  1. Spark (``token_rows`` below, pure built-in functions — JVM-side,
+     codegen'd),
+  2. the DuckDB oracle (TOKEN_SEQ_DUCKDB_CTE below).
+The benchmark generator (movement_spark.sources.synth) feeds the same
+``token_rows`` a ``spark.range`` doc universe instead of ``documents``.
 
 Derivation (all integer arithmetic, no floats, no RNG):
   did       = documents.doc_id                       (int64)
@@ -31,27 +33,13 @@ from pyspark.sql import functions as F
 
 EPOCH_2026 = 1767225600  # 2026-01-01T00:00:00Z
 
-# Derivation constants — keep in sync with the SQL CTE and synth.py.
+# Derivation constants — keep in sync with the SQL CTE below.
 TOK_MULT = 2654435761  # Knuth multiplicative constant
 SEQ_MULT = 1000003
 POS_MULT = 97
 TOK_MOD = 50261
 LEN_MOD = 120
 TS_MOD = 3600
-
-def tokens_expr(len_mod: int = LEN_MOD) -> str:
-    """The ONE token-array derivation (shared with synth.py's generator
-    — it was duplicated there with this module's copy hard-coding 120,
-    so a LEN_MOD change would have silently broken len(tokens) == n_tok
-    on the Spark side only)."""
-    return (
-        f"transform(sequence(0, cast((did*7 + seq*13) % {len_mod} as int)), "
-        f"i -> cast((did*{TOK_MULT} + seq*{SEQ_MULT} + i*{POS_MULT}) "
-        f"% {TOK_MOD} as int))"
-    )
-
-
-_TOKENS_EXPR = tokens_expr()
 
 
 # doc_id <-> did codec. The string form is 'd' || did (see derivation
@@ -68,6 +56,33 @@ def did_from_doc_id(doc_id_col) -> "F.Column":
     """Inverse of doc_id_from_did: int64 did from the 'd<did>' string."""
     col = F.col(doc_id_col) if isinstance(doc_id_col, str) else doc_id_col
     return F.substring(col, 2, 19).cast("bigint")
+
+
+def token_rows(docs: DataFrame, len_mod: int = LEN_MOD) -> DataFrame:
+    """THE token-row derivation: (doc_id, did, seq, tokens, n_tok,
+    source, ts) from a (did, source) frame — the documents table for
+    ``token_sequences``, a ``spark.range`` universe for the benchmark
+    generator. ``len_mod`` sets shard length 1..len_mod."""
+    return (
+        docs
+        .select("did", "source",
+                F.explode(F.expr("sequence(0, cast(did % 4 as int))")).alias("seq"))
+        .select(
+            doc_id_from_did("did").alias("doc_id"),
+            F.col("did"),
+            F.col("seq").cast("int").alias("seq"),
+            F.expr(
+                f"transform(sequence(0, cast((did*7 + seq*13) % {len_mod} as int)), "
+                f"i -> cast((did*{TOK_MULT} + seq*{SEQ_MULT} + i*{POS_MULT}) "
+                f"% {TOK_MOD} as int))").alias("tokens"),
+            (1 + (F.col("did") * 7 + F.col("seq") * 13) % len_mod)
+            .cast("int").alias("n_tok"),
+            F.col("source"),
+            F.timestamp_seconds(
+                F.lit(EPOCH_2026) + (F.col("did") * 37 + F.col("seq") * 11) % TS_MOD
+            ).alias("ts"),
+        )
+    )
 
 
 # Derived-table cache, keyed by (Spark application, sf_dir). The token
@@ -96,25 +111,8 @@ def token_sequences(spark: SparkSession, sf_dir: str,
     key = (spark.sparkContext.applicationId, sf_dir)
     base = _TOKEN_CACHE.get(key)
     if base is None:
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet") \
-            .select(F.col("doc_id").alias("did"), "source")
-        base = (
-            docs
-            .select("did", "source",
-                    F.explode(F.expr("sequence(0, cast(did % 4 as int))")).alias("seq"))
-            .select(
-                doc_id_from_did("did").alias("doc_id"),
-                F.col("did"),
-                F.col("seq").cast("int").alias("seq"),
-                F.expr(_TOKENS_EXPR).alias("tokens"),
-                (1 + (F.col("did") * 7 + F.col("seq") * 13) % LEN_MOD)
-                .cast("int").alias("n_tok"),
-                F.col("source"),
-                F.timestamp_seconds(
-                    F.lit(EPOCH_2026) + (F.col("did") * 37 + F.col("seq") * 11) % TS_MOD
-                ).alias("ts"),
-            )
-        )
+        base = token_rows(spark.read.parquet(f"{sf_dir}/documents.parquet")
+                          .select(F.col("doc_id").alias("did"), "source"))
         _TOKEN_CACHE[key] = base
     # a memo hit may be a frame that clearCache() or an unpersist
     # dropped: ask the session's cache manager, and persist it again

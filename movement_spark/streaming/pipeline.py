@@ -45,9 +45,9 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 from pyspark.sql.types import (
-    ArrayType, FloatType, IntegerType, LongType, StringType, StructField,
-    StructType, TimestampType,
+    ArrayType, FloatType, IntegerType, LongType, StructField, StructType,
 )
 
 from movement_spark.operators.dataset import window_drift_tvd
@@ -65,18 +65,9 @@ from movement_spark.sinks.idempotent import (
 from movement_spark.sources.tokens import token_sequences, EPOCH_2026, TS_MOD
 from movement_spark.streaming.metrics import listening, observed
 
-STREAM_SCHEMA = StructType([
-    StructField("doc_id", StringType()),
-    StructField("seq", IntegerType()),
-    StructField("tokens", ArrayType(IntegerType())),
-    StructField("n_tok", IntegerType()),
-    StructField("source", StringType()),
-    StructField("ts", TimestampType()),
-    StructField("n_shards", IntegerType()),
-])
-
-SENTINEL = "__flush__"
-
+# Each staged layout is declared ONCE, as the Arrow schema its driver-
+# side files (sentinels, test chunks) are written with; the file
+# source's read schema is derived from it.
 _ARROW_SCHEMA = pa.schema([
     ("doc_id", pa.string()),
     ("seq", pa.int32()),
@@ -86,6 +77,12 @@ _ARROW_SCHEMA = pa.schema([
     ("ts", pa.timestamp("us")),
     ("n_shards", pa.int32()),
 ])
+STREAM_SCHEMA = from_arrow_schema(_ARROW_SCHEMA)
+
+SENTINEL = "__flush__"
+
+# Every staged chunk file is ranged on this key (event time first).
+_TOKEN_RANGE = ["ts", "doc_id", "seq"]
 
 
 def _emit_sentinel_files(stage_dir: str, start_idx: int, base: float,
@@ -106,14 +103,17 @@ def _emit_sentinel_files(stage_dir: str, start_idx: int, base: float,
 
 
 def _distribute_chunks(df: DataFrame, stage_dir: str, n_chunks: int,
-                       range_cols: list[str],
-                       duplicate_factor: int = 1) -> tuple[int, int, float]:
+                       range_cols: list[str], duplicate_factor: int = 1,
+                       start_idx: int = 0, base: float | None = None
+                       ) -> tuple[int, int, float]:
     """Write ``df`` as event-time-ordered chunk files via ONE distributed
     job: repartitionByRange on the event-time key gives each output file
-    a contiguous ts slice; the part files are renamed chunk_{i}_{d} in
+    a contiguous ts slice; the part files are moved to chunk_{i}_{d} in
     range order with increasing mtimes, so the file source replays them
-    as a monotone watermark sequence. Row count comes from the written
-    parquet footers — no second scan, no driver-side data collection.
+    as a monotone watermark sequence. ``start_idx`` and ``base`` continue
+    an earlier call's chunk index and mtime base (a file delivered after
+    the stage). Row count comes from the written parquet footers — no
+    second scan, no driver-side data collection.
     Returns (n_rows, next_chunk_idx, mtime_base)."""
     import shutil
 
@@ -122,19 +122,24 @@ def _distribute_chunks(df: DataFrame, stage_dir: str, n_chunks: int,
     (df.repartitionByRange(n_chunks, *[F.col(c) for c in range_cols])
        .write.mode("overwrite").parquet(tmp))
     parts = sorted(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-    base = time.time() - len(parts) - 10
+    if base is None:
+        base = time.time() - len(parts) - 10
     n_rows = 0
-    for i, part in enumerate(parts):
+    for i, part in enumerate(parts, start_idx):
         src = os.path.join(tmp, part)
         n_rows += pq.ParquetFile(src).metadata.num_rows
         # duplicate_factor > 1 stages each chunk k times (at-least-once
-        # delivery simulation for the streaming dedup stage)
+        # delivery simulation for the streaming dedup stage); the last
+        # copy is the part itself, moved
         for d in range(duplicate_factor):
             dest = os.path.join(stage_dir, f"chunk_{i:04d}_{d}.parquet")
-            shutil.copy2(src, dest)
+            if d + 1 < duplicate_factor:
+                shutil.copy2(src, dest)
+            else:
+                shutil.move(src, dest)
             os.utime(dest, (base + i, base + i))
     shutil.rmtree(tmp, ignore_errors=True)
-    return n_rows, len(parts), base
+    return n_rows, start_idx + len(parts), base
 
 
 def _token_sentinel_rows(k: int):
@@ -151,13 +156,11 @@ def _token_sentinel_rows(k: int):
     }), _ARROW_SCHEMA
 
 
-def _staged_token_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token table in the staged-stream shape (n_shards derived from
-    did, did retained for fixture predicates)."""
-    return (
-        token_sequences(spark, sf_dir, keep_did=True)
-        .withColumn("n_shards", (1 + F.col("did") % 4).cast("int"))
-    )
+def _staged(rows: DataFrame) -> DataFrame:
+    """Token rows (``sources.tokens.token_rows``) in the staged-stream
+    shape: n_shards derived from did, did retained for fixture
+    predicates."""
+    return rows.withColumn("n_shards", (1 + F.col("did") % 4).cast("int"))
 
 
 # Signature-enriched stage (the near-dup monitor's production layout):
@@ -168,11 +171,9 @@ def _staged_token_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 # which CAPPED the monitor at 58k seq/s; the fold itself runs ~6x
 # that). Streams read it as a column; the sentinel's empty token array
 # stages a NULL sig, exactly what the in-row expression folds to.
-NDSIG_STREAM_SCHEMA = StructType(
-    STREAM_SCHEMA.fields + [StructField("sig", LongType())])
-
 _NDSIG_ARROW_SCHEMA = pa.schema(
     list(_ARROW_SCHEMA) + [pa.field("sig", pa.int64())])
+NDSIG_STREAM_SCHEMA = from_arrow_schema(_NDSIG_ARROW_SCHEMA)
 
 
 def _ndsig_sentinel_rows(k: int):
@@ -181,12 +182,11 @@ def _ndsig_sentinel_rows(k: int):
     return pdf, _NDSIG_ARROW_SCHEMA
 
 
-def stage_token_stream(spark: SparkSession, sf_dir: str, stage_dir: str,
-                       n_chunks: int = 6, sentinel: bool = True,
-                       duplicate_factor: int = 1,
-                       gap_docs: bool = False,
-                       with_sig: bool = False) -> int:
-    """Stage the deterministic token table as ordered chunk files.
+def stage_token_rows(rows: DataFrame, stage_dir: str, n_chunks: int = 6,
+                     sentinel: bool = True, duplicate_factor: int = 1,
+                     with_sig: bool = False) -> int:
+    """THE token stager: ``rows`` (a ``token_rows`` frame, did included)
+    as ordered chunk files plus the two flush sentinels.
 
     One file per event-time slice, mtimes increasing, so the file source
     delivers them as consecutive micro-batches with a monotonically
@@ -198,37 +198,53 @@ def stage_token_stream(spark: SparkSession, sf_dir: str, stage_dir: str,
     NDSIG_STREAM_SCHEMA); computed inside the same distributed write.
     Returns the number of real (non-sentinel) rows staged.
     """
-    df = _staged_token_frame(spark, sf_dir)
-    if gap_docs:
-        # Lossy-delivery fixture: every 5th doc loses its seq=1 shard,
-        # so multi-shard docs among them can never complete — the input
-        # the incomplete-doc timeout audit detects.
-        df = df.where(~((F.col("did") % 5 == 0) & (F.col("seq") == 1)))
-    df = df.drop("did")
+    df = _staged(rows).drop("did")
     sentinel_rows = _token_sentinel_rows
     if with_sig:
         df = df.withColumn(
             "sig", F.expr(shard_signature_expr()).cast("long"))
         sentinel_rows = _ndsig_sentinel_rows
     n_rows, next_idx, base = _distribute_chunks(
-        df, stage_dir, n_chunks, ["ts", "doc_id", "seq"], duplicate_factor)
+        df, stage_dir, n_chunks, _TOKEN_RANGE, duplicate_factor)
     if sentinel:
         _emit_sentinel_files(stage_dir, next_idx, base, sentinel_rows)
     return n_rows
 
 
-# The straggler fixture: rows before EPOCH_2026 + STRAGGLER_WIN_SEC
-# whose did is a multiple of STRAGGLER_MOD are held back. Shared by the
-# stager and run_streaming_late_repair's damaged-window derivation — one
-# definition so the two sides of the drop-then-repair contract cannot
-# drift apart.
+def stage_token_stream(spark: SparkSession, sf_dir: str, stage_dir: str,
+                       n_chunks: int = 6, sentinel: bool = True,
+                       duplicate_factor: int = 1,
+                       gap_docs: bool = False,
+                       with_sig: bool = False) -> int:
+    """Stage the deterministic token table through ``stage_token_rows``.
+    Returns the number of real (non-sentinel) rows staged."""
+    rows = token_sequences(spark, sf_dir, keep_did=True)
+    if gap_docs:
+        # Lossy-delivery fixture: every 5th doc loses its seq=1 shard,
+        # so multi-shard docs among them can never complete — the input
+        # the incomplete-doc timeout audit detects.
+        rows = rows.where(~((F.col("did") % 5 == 0) & (F.col("seq") == 1)))
+    return stage_token_rows(rows, stage_dir, n_chunks, sentinel,
+                            duplicate_factor, with_sig)
+
+
+# The straggler fixture (``_is_straggler``): rows before EPOCH_2026 +
+# STRAGGLER_WIN_SEC whose did is a multiple of STRAGGLER_MOD are held
+# back. Shared by the stager and run_streaming_late_repair's
+# damaged-window derivation — one definition so the two sides of the
+# drop-then-repair contract cannot drift apart.
 STRAGGLER_WIN_SEC = 300
 STRAGGLER_MOD = 7
 
 
+def _is_straggler() -> Column:
+    return ((F.col("ts")
+             < F.timestamp_seconds(F.lit(EPOCH_2026 + STRAGGLER_WIN_SEC)))
+            & (F.col("did") % STRAGGLER_MOD == 0))
+
+
 def stage_token_stream_with_stragglers(spark: SparkSession, sf_dir: str,
-                                       stage_dir: str, n_chunks: int = 6,
-                                       straggler_mod: int = STRAGGLER_MOD
+                                       stage_dir: str, n_chunks: int = 6
                                        ) -> tuple[int, int]:
     """Stage the token table with a deterministic subset of
     FIRST-WINDOW rows held back into a straggler file delivered after
@@ -237,32 +253,32 @@ def stage_token_stream_with_stragglers(spark: SparkSession, sf_dir: str,
     window by the full event-time span, so a correct watermark
     implementation MUST drop those rows from the windowed aggregate.
     Returns (n_main_rows, n_straggler_rows)."""
-    import shutil
-
-    df = _staged_token_frame(spark, sf_dir)
-    first_win = (F.col("ts")
-                 < F.timestamp_seconds(F.lit(EPOCH_2026 + STRAGGLER_WIN_SEC)))
-    is_straggler = first_win & (F.col("did") % straggler_mod == 0)
-    main = df.where(~is_straggler).drop("did")
-    strag = df.where(is_straggler).drop("did")
+    df = _staged(token_sequences(spark, sf_dir, keep_did=True))
     n_rows, next_idx, base = _distribute_chunks(
-        main, stage_dir, n_chunks, ["ts", "doc_id", "seq"])
-    tmp = tempfile.mkdtemp(prefix="ms_strag_tmp_")
-    strag.coalesce(1).write.mode("overwrite").parquet(tmp)
-    (part,) = [f for f in os.listdir(tmp) if f.endswith(".parquet")]
-    n_strag = pq.ParquetFile(os.path.join(tmp, part)).metadata.num_rows
-    dest = os.path.join(stage_dir, f"chunk_{next_idx:04d}_0.parquet")
-    shutil.copy2(os.path.join(tmp, part), dest)
-    os.utime(dest, (base + next_idx, base + next_idx))
-    shutil.rmtree(tmp, ignore_errors=True)
-    _emit_sentinel_files(stage_dir, next_idx + 1, base,
-                         _token_sentinel_rows)
+        df.where(~_is_straggler()).drop("did"), stage_dir, n_chunks,
+        _TOKEN_RANGE)
+    n_strag, next_idx, _ = _distribute_chunks(
+        df.where(_is_straggler()).drop("did"), stage_dir, 1, _TOKEN_RANGE,
+        start_idx=next_idx, base=base)
+    _emit_sentinel_files(stage_dir, next_idx, base, _token_sentinel_rows)
     return n_rows, n_strag
 
 
-EVENTS_SCHEMA = ("event_id BIGINT, ts TIMESTAMP, user_id BIGINT, "
-                 "event_type STRING, value DOUBLE, props STRING")
+_EVENTS_ARROW_SCHEMA = pa.schema([
+    ("event_id", pa.int64()), ("ts", pa.timestamp("us")),
+    ("user_id", pa.int64()), ("event_type", pa.string()),
+    ("value", pa.float64()), ("props", pa.string()),
+])
+EVENTS_SCHEMA = from_arrow_schema(_EVENTS_ARROW_SCHEMA)
 EVENTS_FLUSH_TS = pd.Timestamp("2024-03-01")  # beyond the Jan-2024 data
+
+
+def _events_sentinel_rows(k: int):
+    return pd.DataFrame({
+        "event_id": [-1], "ts": [EVENTS_FLUSH_TS + pd.Timedelta(minutes=k)],
+        "user_id": [-1], "event_type": [SENTINEL], "value": [0.0],
+        "props": ["{}"],
+    }), _EVENTS_ARROW_SCHEMA
 
 
 def stage_events_stream(spark: SparkSession, sf_dir: str,
@@ -274,20 +290,7 @@ def stage_events_stream(spark: SparkSession, sf_dir: str,
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     n_rows, next_idx, base = _distribute_chunks(
         ev, stage_dir, n_chunks, ["ts", "event_id"])
-    arrow_schema = pa.schema([
-        ("event_id", pa.int64()), ("ts", pa.timestamp("us")),
-        ("user_id", pa.int64()), ("event_type", pa.string()),
-        ("value", pa.float64()), ("props", pa.string()),
-    ])
-
-    def _rows(k: int):
-        return pd.DataFrame({
-            "event_id": [-1], "ts": [EVENTS_FLUSH_TS + pd.Timedelta(minutes=k)],
-            "user_id": [-1], "event_type": [SENTINEL], "value": [0.0],
-            "props": ["{}"],
-        }), arrow_schema
-
-    _emit_sentinel_files(stage_dir, next_idx, base, _rows)
+    _emit_sentinel_files(stage_dir, next_idx, base, _events_sentinel_rows)
     return n_rows
 
 
@@ -329,7 +332,7 @@ def _auto_trigger(stage_dir: str) -> int:
 
 def read_token_stream(spark: SparkSession, stage_dir: str,
                       files_per_trigger: int | None = None,
-                      schema: StructType | str | None = None) -> DataFrame:
+                      schema: StructType | None = None) -> DataFrame:
     """THE file-source read convention (schema + pacing + parquet) —
     every pipeline reads staged chunks through here so an option change
     (e.g. maxFileAge) can never diverge per-pipeline. ``schema``
@@ -606,7 +609,7 @@ class _Row:
     build: Callable  # (src, a) -> the streaming result plan
     keys: tuple  # the keyed sink's merge keys
     variant: str  # stage variant (_resolve_stage)
-    schema: StructType | str | None  # read schema; None = STREAM_SCHEMA
+    schema: StructType | None  # read schema; None = STREAM_SCHEMA
     output_mode: str
     fold: Callable | None  # (sink table, a) -> result; None = the table
     gears: tuple  # stage sub-directories read as ONE unioned stream
@@ -634,7 +637,7 @@ def run(row: _Row, spark: SparkSession, sf_dir: str,
 
 
 def _runner(*keys: str, variant: str = "base",
-            schema: StructType | str | None = None,
+            schema: StructType | None = None,
             output_mode: str = "append", fold: Callable | None = None,
             gears: tuple = (), **options):
     """Declare one table row. The decorated function is the row's plan
@@ -849,9 +852,7 @@ def run_streaming_late_repair(spark: SparkSession, sf_dir: str,
     t = token_sequences(spark, sf_dir, keep_did=True)
     win_start = (F.floor(F.unix_timestamp("ts") / width_sec)
                  * width_sec).cast("bigint")
-    first_win = (F.col("ts")
-                 < F.timestamp_seconds(F.lit(EPOCH_2026 + STRAGGLER_WIN_SEC)))
-    damaged = (t.where(first_win & (F.col("did") % STRAGGLER_MOD == 0))
+    damaged = (t.where(_is_straggler())
                .select(win_start.alias("ws0")).distinct())
     repair = (
         t.withColumn("ws", win_start)

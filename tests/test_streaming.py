@@ -155,19 +155,24 @@ def test_ordered_merge_defaults_to_jvm_bulk_path(monkeypatch):
 
 
 def test_read_stream_only_in_read_token_stream():
-    """One source, one drain, one listener hook, package-wide: across
-    every module under movement_spark/, ``readStream`` appears only in
-    read_token_stream, ``writeStream`` only in _drain and
-    run_throttled_ingest, and ``addListener`` only in
-    metrics.listening — so a file-source option (pacing, schema), the
-    state-partition pin or the listener detach cannot diverge per
+    """One source, one drain, one listener hook, one stager,
+    package-wide: across every module under movement_spark/,
+    ``readStream`` appears only in read_token_stream, ``writeStream``
+    only in _drain and run_throttled_ingest, ``addListener`` only in
+    metrics.listening, ``os.utime`` (a staged file's delivery order)
+    only in _distribute_chunks and _emit_sentinel_files, and the
+    sentinel literal only once, in SENTINEL — so a file-source option
+    (pacing, schema), the state-partition pin, the listener detach, the
+    staged delivery order or the flush row cannot diverge per
     caller."""
     import ast
 
     import movement_spark
 
     root = os.path.dirname(movement_spark.__file__)
-    uses = {"readStream": set(), "writeStream": set(), "addListener": set()}
+    uses = {"readStream": set(), "writeStream": set(), "addListener": set(),
+            "utime": set()}
+    flush_literals = []
 
     class Uses(ast.NodeVisitor):
         def __init__(self, module):
@@ -184,6 +189,10 @@ def test_read_stream_only_in_read_token_stream():
                 uses[node.attr].add(self.where)
             self.generic_visit(node)
 
+        def visit_Constant(self, node):
+            if node.value == "__flush__":
+                flush_literals.append(self.where)
+
     for dirpath, _, files in os.walk(root):
         for f in files:
             if f.endswith(".py"):
@@ -195,7 +204,13 @@ def test_read_stream_only_in_read_token_stream():
         "writeStream": {"streaming/pipeline.py:_drain",
                         "streaming/pipeline.py:run_throttled_ingest"},
         "addListener": {"streaming/metrics.py:listening"},
+        "utime": {"streaming/pipeline.py:_distribute_chunks",
+                  "streaming/pipeline.py:_emit_sentinel_files"},
     }, uses
+    assert flush_literals == ["streaming/pipeline.py:<module>"], \
+        flush_literals
+    from movement_spark.streaming.pipeline import SENTINEL
+    assert SENTINEL == "__flush__"
 
 
 def test_fanout_failed_write_leaves_nothing_cached(spark, sf_dir):
