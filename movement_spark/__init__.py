@@ -23,9 +23,15 @@ similarity search, text analysis, multimodal plumbing).
 Importing the package makes ``importlib.invalidate_caches()`` re-read a
 zip/jar directory only when the archive changed on disk
 (``movement_spark.zipimport_stat``); PySpark's Python workers call it
-on every task.
+on every task. In a reused PySpark worker (``SPARK_REUSE_WORKER`` set)
+it also moves the imported heap into the collector's permanent
+generation (``movement_spark.worker_gc``), so the daemon's
+``gc.collect()`` after every task walks only what the task allocated.
+Workers import the package when they unpickle the first engine UDF, so
+both imports stay here.
 """
 
+from movement_spark import worker_gc  # noqa: F401  (freezes a reused worker)
 from movement_spark import zipimport_stat  # noqa: F401  (installs the wrap)
 
 __version__ = "0.1.0"

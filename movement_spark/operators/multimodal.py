@@ -1,8 +1,8 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata.
 
 Images/audio/video are carried as ``binary`` columns with a small typed
-metadata struct. The decode step is STUBBED (no image/audio libs in this
-container — see ``decode_image``), but the Spark-side plumbing is real:
+metadata struct. There is no image/audio decode (the engine depends on
+no image or audio library), but the Spark-side plumbing is real:
 Arrow-batched ``mapInPandas`` over binary columns, schema, partitioning,
 batch shape — all tested.
 
@@ -51,12 +51,6 @@ def documents_as_media(documents: DataFrame) -> DataFrame:
         F.lit("text/plain").alias("media_type"),
         F.encode("text", "UTF-8").alias("payload"),
     )
-
-
-def decode_image(payload: bytes) -> "np.ndarray":
-    """Real image decode requires PIL/cv2, absent in this container."""
-    raise NotImplementedError(
-        "image decode stub: wire PIL.Image.open(io.BytesIO(payload)) here")
 
 
 def _extract_features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -1,7 +1,7 @@
 """Checkpoint I/O path: which file manager and file system write the
 checkpoint, what they cost in forked processes, and exactly-once across
-real SIGKILLs; and the zip directories a Python worker re-reads per
-task.
+real SIGKILLs; and the zip directories a Python worker re-reads and
+the heap it collects per task.
 
 Every streaming checkpoint file (offset and commit logs, source logs,
 state-store deltas, operator metadata) goes through the checkpoint file
@@ -13,7 +13,10 @@ it, and resume a checkpoint written under Spark's default manager.
 PySpark's worker calls ``importlib.invalidate_caches()`` per task; two
 tests pin that a zip importer re-reads its archive only when the
 archive changed (``movement_spark.zipimport_stat``), in this process
-and in a worker.
+and in a worker. PySpark's daemon calls ``gc.collect()`` after every
+task in a reused worker; two tests pin that only such a worker freezes
+its imported heap (``movement_spark.worker_gc``), so that collection
+walks what the task allocated.
 """
 
 import importlib
@@ -265,6 +268,62 @@ def test_python_worker_rereads_no_zip_directory(spark):
         probe, "n_zip long, rereads long").collect()
     assert row.n_zip > 0, row  # the worker has zip importers to re-read
     assert row.rereads == 0, row
+
+
+def test_python_worker_collects_only_task_objects(spark):
+    """Tripwire: a reused worker that has imported the engine keeps its
+    imported heap in the permanent generation, so the daemon's
+    ``gc.collect()`` after each task walks a tenth or less of it
+    (without the freeze it walks ~73k objects, 30-40 ms per task). The
+    engine module the task imported is frozen too: the second freeze,
+    after the worker's first full collection, took it in. The probe
+    collects once itself, as the daemon does after every task, so what
+    it counts is what every later collection walks."""
+    def probe(batches):
+        import gc
+
+        import pandas as pd
+
+        import movement_spark.operators.ordering as ordering
+
+        for _ in batches:
+            pass
+        gc.collect()
+        walked = gc.get_objects()
+        yield pd.DataFrame({
+            "frozen": [gc.get_freeze_count()],
+            "tracked": [len(walked)],
+            "engine_walked": [any(o is ordering.__dict__ for o in walked)],
+        })
+
+    def run():
+        (row,) = spark.range(1, numPartitions=1).mapInPandas(
+            probe, "frozen long, tracked long, engine_walked boolean"
+        ).collect()
+        return row
+
+    run()
+    row = run()
+    assert row.frozen > 0, row
+    assert row.tracked < 0.1 * row.frozen, row
+    assert not row.engine_walked, row
+
+
+@pytest.mark.parametrize("reuse", [False, True])
+def test_only_a_reused_worker_freezes_its_heap(reuse):
+    """Importing the package freezes the collector's heap only where
+    ``SPARK_REUSE_WORKER`` is set (a reused PySpark worker); a driver
+    or any other process keeps its garbage collection untouched."""
+    env = {k: v for k, v in os.environ.items() if k != "SPARK_REUSE_WORKER"}
+    if reuse:
+        env["SPARK_REUSE_WORKER"] = "1"
+    out = subprocess.run(
+        [sys.executable, "-c",
+         "import gc, movement_spark; print(gc.get_freeze_count())"],
+        env=env, cwd=os.path.dirname(os.path.dirname(
+            os.path.abspath(__file__))),
+        capture_output=True, text=True, check=True).stdout
+    assert (int(out) > 0) == reuse, out
 
 
 def _reap_group(pgid: int) -> None:
