@@ -24,6 +24,7 @@ from movement_spark.streaming.pipeline import (
     _seq_totals, _window_agg, read_token_stream)
 
 SIG_PROBES = 16  # xxhash64 probes in streaming_throughput's signature
+CEP_FILES_PER_TRIGGER = 16  # cep_assembler_throughput's pacing
 
 # Headline queries for bench.py — a representative slice of the engine:
 # the north-rule token pipeline, a stateful ordering check, joins/aggs
@@ -42,16 +43,12 @@ HEADLINE = (
 )
 
 
-def time_query(fn, spark: SparkSession, sf_dir: str, runs: int = 2) -> float:
-    """Wall time of full materialization (noop sink — no collect cost,
-    no disk cost, full plan executes). Best-of-N."""
-    return time_query_stats(fn, spark, sf_dir, runs)["min"]
-
-
 def time_query_stats(fn, spark: SparkSession, sf_dir: str,
                      runs: int = 3) -> dict:
-    """Median-of-N timing with spread — the per-round headline
-    methodology. Single runs on a shared/noisy hypervisor produced
+    """Wall time of full materialization (noop sink — no collect cost,
+    no disk cost, full plan executes), median-of-N with spread — the
+    per-round headline methodology. Single runs on a shared/noisy
+    hypervisor produced
     ±25-47% round-over-round 'regressions' on unchanged code (VERDICT
     r02 #2); the median plus the reported min/max spread makes round
     deltas signal: a real regression moves the median OUTSIDE the
@@ -73,8 +70,8 @@ def time_query_stats(fn, spark: SparkSession, sf_dir: str,
 
 def cep_assembler_throughput(spark: SparkSession, stage_dir: str,
                              n_rows: int, sink_dir: str,
-                             checkpoint_dir: str, mode: str = "jvm",
-                             files_per_trigger: int = 16) -> dict:
+                             checkpoint_dir: str,
+                             mode: str = "jvm") -> dict:
     """Throughput of the per-doc ordered-assembly stage (the PHASE
     barrier) over a staged stream, in either implementation:
     ``mode="python"`` = applyInPandasWithState emit-on-complete CEP;
@@ -82,7 +79,7 @@ def cep_assembler_throughput(spark: SparkSession, stage_dir: str,
     throughput path). The pipelines' own assembler fragments and drain;
     used by bench.py (per-round sub-metric) and bench/cep_throughput.py
     (standalone A/B)."""
-    src = read_token_stream(spark, stage_dir, files_per_trigger)
+    src = read_token_stream(spark, stage_dir, CEP_FILES_PER_TRIGGER)
     merged = _assembled_jvm(src) if mode == "jvm" else _assembled(src)
     t0 = time.perf_counter()
     sink = _drain(merged, _sink(sink_dir, "doc_id"), checkpoint_dir)

@@ -18,6 +18,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Column, functions as F
 
+from movement_spark.operators.sketches import QSK_BUCKETS, QSK_WIDTH
+
+SALT_BUCKETS = 8  # sub-queues a hot key spreads over
+CHUNK_STATS_BUCKETS = 16
+
 
 def salt_column(df: DataFrame, buckets: int) -> Column:
     """Deterministic per-ROW salt: xxhash64 over every column.
@@ -31,19 +36,18 @@ def salt_column(df: DataFrame, buckets: int) -> Column:
 
 
 def salted_repartition(df: DataFrame, key: str, partitions: int,
-                       salt_buckets: int = 8,
-                       salt_col: str = "_salt") -> DataFrame:
+                       salt_buckets: int = SALT_BUCKETS) -> DataFrame:
     """WorkChunkDriver analog: spread each key over ``salt_buckets``
-    sub-queues, then hash-partition on (key, salt). A hot key now occupies
-    up to salt_buckets tasks instead of one."""
+    sub-queues (column ``_salt``), then hash-partition on (key, salt). A
+    hot key now occupies up to salt_buckets tasks instead of one."""
     return (
-        df.withColumn(salt_col, salt_column(df, salt_buckets))
-          .repartition(partitions, F.col(key), F.col(salt_col))
+        df.withColumn("_salt", salt_column(df, salt_buckets))
+          .repartition(partitions, F.col(key), F.col("_salt"))
     )
 
 
 def two_phase_agg(df: DataFrame, key: str, aggs: dict[str, Column],
-                  salt_buckets: int = 8) -> DataFrame:
+                  salt_buckets: int = SALT_BUCKETS) -> DataFrame:
     """Skew-safe aggregation: partial agg on (key, salt), final on key.
 
     ``aggs`` maps output column -> *re-aggregation* is assumed additive
@@ -57,10 +61,9 @@ def two_phase_agg(df: DataFrame, key: str, aggs: dict[str, Column],
 
 
 def allocate_output_ids(df: DataFrame, order_cols: list[str],
-                        partitions: int = 32,
-                        id_col: str = "out_id") -> DataFrame:
-    """Gap-free, unique, deterministic 1-based output ids in the total
-    order of ``order_cols`` — the OutputIdDriver contract
+                        partitions: int = 32) -> DataFrame:
+    """Gap-free, unique, deterministic 1-based output ids (``out_id``) in
+    the total order of ``order_cols`` — the OutputIdDriver contract
     (RangedOutputIdDriver.java:57-62) WITHOUT its global atomic counter
     and WITHOUT the naive `row_number() OVER (ORDER BY ...)` plan, which
     funnels every row through ONE task.
@@ -102,7 +105,7 @@ def allocate_output_ids(df: DataFrame, order_cols: list[str],
         [(pid, off) for pid, off in offsets.items()], "_pid INT, _off BIGINT")
     return (
         local.join(F.broadcast(off_df), "_pid")
-        .withColumn(id_col, (F.col("_off") + F.col("_rn")).cast("bigint"))
+        .withColumn("out_id", (F.col("_off") + F.col("_rn")).cast("bigint"))
         .drop("_pid", "_rn", "_off")
     )
 
@@ -180,10 +183,9 @@ def reshard_movement_manifest(df: DataFrame, key: str = "doc_id",
     )
 
 
-def range_layout_plan(df: DataFrame, value: str = "n_chars",
-                      n_shards: int = 8, width: int = 16,
-                      buckets: int = 64) -> DataFrame:
-    """Balanced range-partition planning from the additive histogram:
+def range_layout_plan(df: DataFrame, n_shards: int = 8) -> DataFrame:
+    """Balanced range-partition planning from the additive histogram of
+    ``n_chars`` (QSK_WIDTH-wide buckets, QSK_BUCKETS of them):
     derive ``n_shards`` contiguous value ranges whose row counts are as
     equal as whole histogram buckets allow, and report each planned
     shard's edges, row count, and skew vs the ideal share (bps).
@@ -199,7 +201,7 @@ def range_layout_plan(df: DataFrame, value: str = "n_chars",
     bucket's count (the same one-bucket bound the quantile read has).
 
     Scale shape: ONE map-side-combinable aggregate builds the <=
-    ``buckets``-row grid; the cumulative walk and the shard assignment
+    QSK_BUCKETS-row grid; the cumulative walk and the shard assignment
     run on that grid (single-partition window over <= 64 rows — the
     same tiny-grid exemption as the quantile fold). At 10^12 rows the
     plan costs one scan, and per-shard hists sum across corpus shards,
@@ -208,7 +210,8 @@ def range_layout_plan(df: DataFrame, value: str = "n_chars",
     """
     from pyspark.sql.window import Window
 
-    bucket = F.least(F.expr(f"{value} div {width}"), F.lit(buckets - 1))
+    bucket = F.least(F.expr(f"n_chars div {QSK_WIDTH}"),
+                     F.lit(QSK_BUCKETS - 1))
     hist = (df.groupBy(bucket.alias("bucket"))
               .agg(F.count("*").alias("cnt")))
     w_cum = Window.orderBy("bucket").rowsBetween(
@@ -222,8 +225,9 @@ def range_layout_plan(df: DataFrame, value: str = "n_chars",
     return (
         cum.groupBy(shard.cast("bigint").alias("shard_id"))
         .agg(F.count("*").cast("bigint").alias("n_buckets"),
-             (F.min("bucket") * width).cast("bigint").alias("lo_edge"),
-             ((F.max("bucket") + 1) * width).cast("bigint").alias("hi_edge"),
+             (F.min("bucket") * QSK_WIDTH).cast("bigint").alias("lo_edge"),
+             ((F.max("bucket") + 1) * QSK_WIDTH).cast("bigint")
+             .alias("hi_edge"),
              F.sum("cnt").cast("bigint").alias("n_rows"),
              F.expr(f"(sum(cnt) * {n_shards} * 10000)"
                     " div greatest(max(_n), 1)")
@@ -231,11 +235,12 @@ def range_layout_plan(df: DataFrame, value: str = "n_chars",
     )
 
 
-def chunk_stats(df: DataFrame, key: str, buckets: int = 16) -> DataFrame:
+def chunk_stats(df: DataFrame, key: str) -> DataFrame:
     """Observability for the work-queue layout: per-bucket row/doc counts —
     the WORK_CHUNKS counter analog (WorkChunkDriver.java:37)."""
     return (
-        df.withColumn("bucket", F.pmod(F.xxhash64(F.col(key)), F.lit(buckets)).cast("int"))
+        df.withColumn("bucket", F.pmod(F.xxhash64(F.col(key)),
+                                       F.lit(CHUNK_STATS_BUCKETS)).cast("int"))
           .groupBy("bucket")
           .agg(F.count("*").alias("n_rows"),
                F.countDistinct(key).alias("n_keys"))

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from movement_spark.operators.text import packed_bigram_expr, word_bigram_expr
+from movement_spark.sources.tokens import TOK_MOD
 from pyspark.sql.window import Window
 
 # Split hashing — plain integer arithmetic, NOT an engine hash builtin,
@@ -119,7 +120,7 @@ def stratified_sample_stats(documents: DataFrame) -> DataFrame:
 PROBE_COUNT = 64
 
 
-def contamination_probe_keys(tok_mod: int = 50261) -> list[int]:
+def contamination_probe_keys(tok_mod: int = TOK_MOD) -> list[int]:
     """Deterministic benchmark-probe bigrams: even probes follow the
     corpus bigram structure (guaranteed-present pattern), odd probes
     are off-pattern (guaranteed-absent) — so the scan provably detects
@@ -133,7 +134,7 @@ def contamination_probe_keys(tok_mod: int = 50261) -> list[int]:
 
 
 def benchmark_contamination(tokens: DataFrame,
-                            tok_mod: int = 50261) -> DataFrame:
+                            tok_mod: int = TOK_MOD) -> DataFrame:
     """Eval-set contamination scan: count docs (and hits) whose token
     bigrams intersect a broadcast probe set — the n-gram-overlap
     decontamination check run before training. The probe side is tiny
@@ -264,14 +265,15 @@ def corpus_filter_manifest(documents: DataFrame) -> DataFrame:
     )
 
 
-def training_set_manifest(documents: DataFrame,
-                          chars_per_tok: int = 5,
-                          context_len: int = CONTEXT_LEN) -> DataFrame:
+CHARS_PER_TOK = 5  # training_set_manifest's token estimate
+
+
+def training_set_manifest(documents: DataFrame) -> DataFrame:
     """Capstone composition: the full corpus → training-set pipeline in
     one plan — filter funnel (corpus_verdicts) → keep only survivors →
     deterministic train/val/test assignment (split_column) → per-split
-    budget manifest (docs, chars, estimated tokens at chars_per_tok,
-    full context windows of context_len and the leftover tail).
+    budget manifest (docs, chars, estimated tokens at CHARS_PER_TOK,
+    full context windows of CONTEXT_LEN and the leftover tail).
 
     This is the end-to-end artifact a data team signs off on before a
     run: every number is a pure function of the corpus, so two engines
@@ -282,7 +284,7 @@ def training_set_manifest(documents: DataFrame,
     funnel's own.
     """
     kept = corpus_verdicts(documents).where(F.col("verdict") == "keep")
-    est_tok = F.expr(f"cast(n_chars as bigint) div {chars_per_tok}")
+    est_tok = F.expr(f"cast(n_chars as bigint) div {CHARS_PER_TOK}")
     return (
         kept.withColumn("split", split_column(F.col("doc_id")))
         .withColumn("est_tok", est_tok)
@@ -290,9 +292,9 @@ def training_set_manifest(documents: DataFrame,
         .agg(F.count("*").alias("n_docs"),
              F.sum("n_chars").cast("bigint").alias("sum_chars"),
              F.sum("est_tok").cast("bigint").alias("est_tokens"),
-             F.expr(f"cast(sum(est_tok) div {context_len} as bigint)")
+             F.expr(f"cast(sum(est_tok) div {CONTEXT_LEN} as bigint)")
              .alias("n_windows"),
-             F.expr(f"cast(sum(est_tok) % {context_len} as bigint)")
+             F.expr(f"cast(sum(est_tok) % {CONTEXT_LEN} as bigint)")
              .alias("tail_tokens"))
     )
 
@@ -301,12 +303,12 @@ CHUNK_W = 32   # tokens per retrieval chunk
 CHUNK_S = 24   # chunk stride (overlap = CHUNK_W - CHUNK_S)
 
 
-def doc_chunking_stats(tokens: DataFrame, w: int = CHUNK_W,
-                       s: int = CHUNK_S) -> DataFrame:
+def doc_chunking_stats(tokens: DataFrame) -> DataFrame:
     """Overlapping fixed-window chunking plan (the RAG/retrieval layout,
     versus sequence_packing_stats' concatenate-then-chunk training
-    layout): each token sequence splits into windows of ``w`` tokens
-    every ``s`` tokens (overlap w-s), the last window ragged. Emits the
+    layout): each token sequence splits into windows of w = CHUNK_W
+    tokens every s = CHUNK_S tokens (overlap w-s), the last window
+    ragged. Emits the
     per-source chunking manifest: chunk count, chunked token volume,
     ragged-tail count, and the token volume DUPLICATED by overlap —
     the storage-amplification number a retrieval index planner needs.
@@ -319,6 +321,7 @@ def doc_chunking_stats(tokens: DataFrame, w: int = CHUNK_W,
     1 + ceil((n_tok - w) / s) (one chunk when n_tok <= w), so the last
     window always reaches the final token.
     """
+    w, s = CHUNK_W, CHUNK_S
     n_chunks = (
         f"if(n_tok <= {w}, 1, "
         f"1 + (n_tok - {w} + {s} - 1) div {s})"
@@ -351,12 +354,12 @@ def doc_chunking_stats(tokens: DataFrame, w: int = CHUNK_W,
 SAMPLE_K = 40  # weighted-sample size per source
 
 
-def weighted_sample_manifest(documents: DataFrame,
-                             k: int = SAMPLE_K) -> DataFrame:
+def weighted_sample_manifest(documents: DataFrame) -> DataFrame:
     """Per-source weighted sampling without replacement, fully
     deterministic: each doc draws an integer priority
     ``hash(doc_id) div weight`` (weight = n_chars div 100 + 1, a
-    quality/length proxy) and the k SMALLEST priorities per source win —
+    quality/length proxy) and the SAMPLE_K SMALLEST priorities per source
+    win —
     heavier docs divide their hash down and so win more often, the
     integer-arithmetic analog of the Efraimidis–Spirakis reservoir key
     (u^(1/w)) with the float pow replaced by exact division so any
@@ -385,7 +388,7 @@ def weighted_sample_manifest(documents: DataFrame,
         .withColumn("rk", F.row_number().over(
             Window.partitionBy("source")
             .orderBy(F.asc("prio"), F.asc("doc_id"))))
-        .where(F.col("rk") <= k)
+        .where(F.col("rk") <= SAMPLE_K)
     )
     return (
         ranked.groupBy("source")
@@ -396,8 +399,7 @@ def weighted_sample_manifest(documents: DataFrame,
     )
 
 
-def leakage_safe_split_stats(tokens: DataFrame, sample_mod: int = 25,
-                             max_iters: int = 20) -> DataFrame:
+def leakage_safe_split_stats(tokens: DataFrame) -> DataFrame:
     """Near-dup-aware train/val/test split: assign every doc to the
     split of its DUPLICATE-CLUSTER representative (the min-did label
     from the candidate-graph components), so two near-duplicates can
@@ -414,8 +416,7 @@ def leakage_safe_split_stats(tokens: DataFrame, sample_mod: int = 25,
     (cluster label instead of own id)."""
     from movement_spark.operators.dedup import _sampled_component_labels
 
-    sample, labels = _sampled_component_labels(tokens, sample_mod,
-                                               max_iters)
+    sample, labels = _sampled_component_labels(tokens)
     docs = sample.groupBy("doc_id", "did").agg(
         F.sum("n_tok").cast("bigint").alias("tok"))
     labeled = docs.join(labels, "doc_id")
@@ -529,14 +530,13 @@ SHUFFLE_B = 54_321
 N_SHARDS = 16
 
 
-def shard_shuffle_manifest(documents: DataFrame,
-                           n_shards: int = N_SHARDS) -> DataFrame:
+def shard_shuffle_manifest(documents: DataFrame) -> DataFrame:
     """Deterministic corpus shuffle into training shards — the "write
     tokenized data in shuffled order" job at the end of a pretraining
     pipeline (reference analog: the RangedOutputIdDriver's stable
     global layout, OutputIdDriver.java, re-keyed by a permutation).
 
-    shard = h(doc_id) % n_shards is a pure hash partition (ONE shuffle,
+    shard = h(doc_id) % N_SHARDS is a pure hash partition (ONE shuffle,
     no global sort — balanced in expectation at any corpus size);
     within a shard, docs order by (h, doc_id), which is exactly what a
     shard writer's sortWithinPartitions does. The manifest pins both
@@ -549,7 +549,7 @@ def shard_shuffle_manifest(documents: DataFrame,
     return (
         documents
         .select("doc_id", "n_chars", h.alias("h"))
-        .withColumn("shard", (F.col("h") % n_shards).cast("int"))
+        .withColumn("shard", (F.col("h") % N_SHARDS).cast("int"))
         .withColumn("pos", F.row_number().over(w))
         .groupBy("shard")
         .agg(F.count("*").alias("n_docs"),
@@ -763,9 +763,7 @@ EPOCH_BUDGET_MULT = 4     # fixture: budget = 4× the corpus token mass
 EPOCH_CAP_X1000 = 4000    # fixture: at most 4.0 epochs per source
 
 
-def epoch_schedule_manifest(documents: DataFrame,
-                            budget_mult: int = EPOCH_BUDGET_MULT,
-                            cap_x1000: int = EPOCH_CAP_X1000) -> DataFrame:
+def epoch_schedule_manifest(documents: DataFrame) -> DataFrame:
     """Per-source epoch schedule under a token budget: the budget is
     split uniformly across sources; each source serves
     min(cap, budget/corpus) epochs (x1000 fixed point, floored), and
@@ -782,9 +780,10 @@ def epoch_schedule_manifest(documents: DataFrame,
     return (
         per.crossJoin(F.broadcast(tot))
         .withColumn("budget_tokens",
-                    F.expr(f"(total_tokens * {budget_mult}) div n_sources"))
+                    F.expr(f"(total_tokens * {EPOCH_BUDGET_MULT})"
+                           " div n_sources"))
         .withColumn("epochs_x1000",
-                    F.expr(f"least(cast({cap_x1000} as bigint), "
+                    F.expr(f"least(cast({EPOCH_CAP_X1000} as bigint), "
                            f"(budget_tokens * 1000) div corpus_tokens)"))
         .withColumn("tokens_served",
                     F.expr("(corpus_tokens * epochs_x1000) div 1000"))
@@ -793,6 +792,6 @@ def epoch_schedule_manifest(documents: DataFrame,
             "epochs_x1000", "tokens_served",
             (F.col("budget_tokens") - F.col("tokens_served"))
             .cast("bigint").alias("shortfall"),
-            (F.col("epochs_x1000") == cap_x1000).cast("int")
+            (F.col("epochs_x1000") == EPOCH_CAP_X1000).cast("int")
             .alias("capped"))
     )

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from movement_spark.operators.text import word_bigram_expr
+from movement_spark.sources.tokens import TOK_MOD
 
 # MinHash parameters — keep in sync with oracle SQL in queries.py.
 MINHASH_K = 16          # signature length
@@ -40,9 +41,8 @@ def exact_dedup_stats(documents: DataFrame) -> DataFrame:
     )
 
 
-def doc_shingles(tokens: DataFrame,
-                 shingle_mod: int = SHINGLE_MOD) -> DataFrame:
-    """Doc → distinct coarse shingles (token % shingle_mod).
+def doc_shingles(tokens: DataFrame) -> DataFrame:
+    """Doc → distinct coarse shingles (token % SHINGLE_MOD).
 
     explode is vectorized JVM-side; distinct() is a map-side-combined
     aggregate keyed (doc_id, shingle) — no skew (shingles are uniform).
@@ -50,7 +50,7 @@ def doc_shingles(tokens: DataFrame,
     return (
         tokens
         .select("doc_id", F.explode("tokens").alias("t"))
-        .select("doc_id", (F.col("t") % shingle_mod).alias("sh"))
+        .select("doc_id", (F.col("t") % SHINGLE_MOD).alias("sh"))
         .distinct()
     )
 
@@ -105,10 +105,10 @@ def shard_signature_expr(dialect: str = "spark",
     return sig
 
 
-def minhash_signatures(tokens: DataFrame, k: int = MINHASH_K,
+def minhash_signatures(tokens: DataFrame,
                        shingle_mod: int = SHINGLE_MOD) -> DataFrame:
     """MinHash signature per doc, WIDE form: one shuffle keyed doc_id
-    with k min-aggregate columns (map-side partial min does most of the
+    with MINHASH_K min-aggregate columns (map-side partial min does most of the
     work). The naive relational form — explode a doc×k grid then
     min-agg — moves k× the rows through the shuffle; at 10^12 docs that
     k× is the whole game. min() is duplicate-insensitive, so the
@@ -125,7 +125,7 @@ def minhash_signatures(tokens: DataFrame, k: int = MINHASH_K,
         .select("doc_id", (F.col("t") % shingle_mod).alias("sh"))
     )
     return sh.groupBy("doc_id").agg(
-        *[F.min(_hash_j(j)).alias(f"s{j}") for j in range(k)])
+        *[F.min(_hash_j(j)).alias(f"s{j}") for j in range(MINHASH_K)])
 
 
 def minhash_band_buckets(tokens: DataFrame,
@@ -168,22 +168,23 @@ def minhash_lsh_stats(tokens: DataFrame) -> DataFrame:
 
 
 JACCARD_MOD = 64  # coarse enough that docs genuinely overlap
+JACCARD_SAMPLE_MOD = 25  # did % 25 == 0: the all-pairs Jaccard sample
 
 
-def ngram_jaccard_pairs(tokens: DataFrame, sample_mod: int = 25,
-                        n: int = 2) -> DataFrame:
+def ngram_jaccard_pairs(tokens: DataFrame) -> DataFrame:
     """N-gram Jaccard similarity over a deterministic doc sample.
 
     Shingle = coarse 2-gram: consecutive (token % JACCARD_MOD) pairs packed
     into one bigint — coarse enough that near-dup docs overlap. The sample
-    (did % sample_mod == 0) bounds the pair space for the all-pairs oracle
+    (did % JACCARD_SAMPLE_MOD == 0) bounds the pair space for the
+    all-pairs oracle
     shape; the production path is ``lsh_verified_neardups``, where the
     pair space is bounded by MinHash band buckets instead of a sample.
     """
-    base = tokens.where(F.col("did") % sample_mod == 0)
+    base = tokens.where(F.col("did") % JACCARD_SAMPLE_MOD == 0)
     gram_expr = (
-        f"if(n_tok >= {n}, "
-        f"transform(sequence(0, n_tok - {n}), "
+        "if(n_tok >= 2, "
+        "transform(sequence(0, n_tok - 2), "
         f"i -> cast(tokens[i] % {JACCARD_MOD} as bigint) * {JACCARD_MOD} "
         f"   + cast(tokens[i+1] % {JACCARD_MOD} as bigint)), "
         f"array())"
@@ -213,16 +214,16 @@ def ngram_jaccard_pairs(tokens: DataFrame, sample_mod: int = 25,
     )
 
 
-def doc_ngrams(tokens: DataFrame, n: int = 2,
+def doc_ngrams(tokens: DataFrame,
                gram_mod: int = JACCARD_MOD) -> DataFrame:
-    """Doc → distinct packed n-grams (the exact-verification feature set
+    """Doc → distinct packed 2-grams (the exact-verification feature set
     shared by ngram_jaccard_pairs and the LSH-fed path). ``gram_mod``
     defaults to the coarse fixture modulus (oracle parity); scale runs
     pass a wide prime so unrelated docs don't alias into the same
     grams."""
     gram_expr = (
-        f"if(n_tok >= {n}, "
-        f"transform(sequence(0, n_tok - {n}), "
+        "if(n_tok >= 2, "
+        "transform(sequence(0, n_tok - 2), "
         f"i -> cast(tokens[i] % {gram_mod} as bigint) * {gram_mod} "
         f"   + cast(tokens[i+1] % {gram_mod} as bigint)), "
         f"array())"
@@ -296,13 +297,16 @@ def _lsh_pair_overlap(tokens: DataFrame,
         "doc_a", "doc_b", "n_inter", "sz_a", "sz_b")
 
 
+# LSH-verified pairs are kept at jaccard (or containment) >= 1/2
+JACCARD_DEN = CONTAINMENT_DEN = 2
+
+
 def lsh_verified_neardups(tokens: DataFrame,
-                          jaccard_den: int = 2,
                           shingle_mod: int = SHINGLE_MOD,
                           gram_mod: int = JACCARD_MOD) -> DataFrame:
     """The production LSH → exact-Jaccard pipeline, sample-free: MinHash
     band buckets propose candidate pairs; exact n-gram Jaccard verifies
-    ONLY those pairs (keep if jaccard >= 1/jaccard_den). This is the
+    ONLY those pairs (keep if jaccard >= 1/JACCARD_DEN). This is the
     at-scale wiring of ngram_jaccard_pairs' sampled shape. The moduli
     default to the fixture values (oracle parity); bench/dedup_scale.py
     passes production-width ones and measures candidate growth vs
@@ -313,35 +317,36 @@ def lsh_verified_neardups(tokens: DataFrame,
         .select("doc_a", "doc_b", "n_inter",
                 (F.col("sz_a") + F.col("sz_b") - F.col("n_inter"))
                 .alias("n_union"))
-        .where(F.col("n_inter") * jaccard_den >= F.col("n_union"))
+        .where(F.col("n_inter") * JACCARD_DEN >= F.col("n_union"))
     )
 
 
-def lsh_containment_pairs(tokens: DataFrame,
-                          containment_den: int = 2) -> DataFrame:
+def lsh_containment_pairs(tokens: DataFrame) -> DataFrame:
     """Asymmetric shingle containment over the LSH candidate set:
     |A∩B| / min(|A|, |B|) in integer permille. Jaccard misses the
     subset-duplication case (a short doc wholly embedded in a long one
     scores low because the union is dominated by the long doc);
     containment against the SMALLER gram set flags exactly that. Keep a
-    pair when containment >= 1/containment_den. Same LSH-bounded plan as
+    pair when containment >= 1/CONTAINMENT_DEN. Same LSH-bounded plan as
     lsh_verified_neardups — the only new work is the final projection."""
     ov = _lsh_pair_overlap(tokens)
     small = F.least(F.col("sz_a"), F.col("sz_b"))
     return (
-        ov.where(F.col("n_inter") * containment_den >= small)
+        ov.where(F.col("n_inter") * CONTAINMENT_DEN >= small)
         .select("doc_a", "doc_b", "n_inter", small.alias("sz_small"),
                 F.expr("(n_inter * 1000) div least(sz_a, sz_b)")
                 .alias("containment_pmil"))
     )
 
 
-def incremental_ingest_dedup(documents: DataFrame,
-                             batch_mod: int = 5) -> DataFrame:
+INGEST_BATCH_MOD = 5
+
+
+def incremental_ingest_dedup(documents: DataFrame) -> DataFrame:
     """Incremental-ingestion dedup: a new document batch is screened
     against the fingerprint manifest of the already-ingested corpus —
     the daily-crawl shape where the corpus is huge and append-only and
-    only the increment is new work. Corpus = doc_id % batch_mod != 0,
+    only the increment is new work. Corpus = doc_id % INGEST_BATCH_MOD != 0,
     batch = the rest (deterministic stand-ins for yesterday/today).
 
     The manifest join is keyed by content fingerprint (text.py:
@@ -353,13 +358,13 @@ def incremental_ingest_dedup(documents: DataFrame,
 
     fp = F.expr(fingerprint_expr())
     corpus_manifest = (
-        documents.where(F.col("doc_id") % batch_mod != 0)
+        documents.where(F.col("doc_id") % INGEST_BATCH_MOD != 0)
         .select(fp.alias("fingerprint"))
         .distinct()
         .withColumn("seen", F.lit(1))
     )
     batch = (
-        documents.where(F.col("doc_id") % batch_mod == 0)
+        documents.where(F.col("doc_id") % INGEST_BATCH_MOD == 0)
         .select("doc_id", "source", fp.alias("fingerprint"))
     )
     return (
@@ -373,8 +378,10 @@ def incremental_ingest_dedup(documents: DataFrame,
     )
 
 
-def dup_cluster_labels(tokens: DataFrame, sample_mod: int = 25,
-                       max_iters: int = 20) -> DataFrame:
+LABEL_MAX_ITERS = 20  # min-label propagation rounds before giving up
+
+
+def dup_cluster_labels(tokens: DataFrame) -> DataFrame:
     """Connected components over the near-dup candidate graph: group
     pairwise matches into duplicate CLUSTERS (the step that turns pair
     lists into keep-one-per-cluster dedup decisions).
@@ -389,7 +396,7 @@ def dup_cluster_labels(tokens: DataFrame, sample_mod: int = 25,
     only — all data stays distributed; convergence is checked with a
     single scalar aggregate per round.
     """
-    _, labels = _sampled_component_labels(tokens, sample_mod, max_iters)
+    _, labels = _sampled_component_labels(tokens)
     return (
         labels.groupBy("label")
         .agg(F.count("*").alias("n_docs"),
@@ -398,33 +405,29 @@ def dup_cluster_labels(tokens: DataFrame, sample_mod: int = 25,
     )
 
 
-def _sampled_component_labels(tokens: DataFrame, sample_mod: int,
-                              max_iters: int):
+def _sampled_component_labels(tokens: DataFrame):
     """Shared preamble of dup_cluster_labels and
     dedup_canonical_manifest: deterministic did-mod sample → vertex
     set → near-dup candidate pairs → min-label propagation. One
     definition so the sampling and pair predicate (mirrored in both
     DuckDB oracles) cannot drift between the two queries. Returns
     (sampled rows, converged (doc_id, label) frame)."""
-    sample = tokens.where(F.col("did") % sample_mod == 0)
+    sample = tokens.where(F.col("did") % JACCARD_SAMPLE_MOD == 0)
     verts = sample.select("doc_id", "did").distinct()
-    pairs = ngram_jaccard_pairs(tokens, sample_mod=sample_mod) \
-        .select("doc_a", "doc_b")
+    pairs = ngram_jaccard_pairs(tokens).select("doc_a", "doc_b")
     labels = _propagate_min_labels(
-        verts.select("doc_id", F.col("did").alias("label")),
-        pairs, max_iters)
+        verts.select("doc_id", F.col("did").alias("label")), pairs)
     return sample, labels
 
 
-def _propagate_min_labels(labels: DataFrame, pairs: DataFrame,
-                          max_iters: int) -> DataFrame:
+def _propagate_min_labels(labels: DataFrame, pairs: DataFrame) -> DataFrame:
     """Iterative min-label propagation to a fixpoint: ``labels`` is
     (doc_id, label) with every doc initially labeled by its own numeric
     id; ``pairs`` is the undirected match relation (doc_a, doc_b), one
     row per unordered pair. Each round every doc takes the min label
     among itself and its neighbors — one shuffle (edge join + min-agg)
     over O(E) rows; rounds needed = component diameter. The driver holds
-    only the per-round convergence scalar. Raises if max_iters rounds
+    only the per-round convergence scalar. Raises if LABEL_MAX_ITERS rounds
     don't converge (partial labels would silently diverge from the
     recursive-CTE oracle; for deep graphs switch to pointer-doubling
     large-star/small-star, O(log d) rounds)."""
@@ -433,7 +436,7 @@ def _propagate_min_labels(labels: DataFrame, pairs: DataFrame,
                      F.col("doc_a").alias("doc_b")))
     edges = edges.cache()
     converged = False
-    for _ in range(max_iters):
+    for _ in range(LABEL_MAX_ITERS):
         labels = labels.cache()
         neighbor_min = (
             edges.join(labels, edges.doc_a == labels.doc_id)
@@ -459,14 +462,13 @@ def _propagate_min_labels(labels: DataFrame, pairs: DataFrame,
     edges.unpersist()
     if not converged:
         raise RuntimeError(
-            f"label propagation did not converge within {max_iters} "
+            f"label propagation did not converge within {LABEL_MAX_ITERS} "
             f"rounds: a candidate-graph component has diameter > "
-            f"{max_iters}; results would be partial")
+            f"{LABEL_MAX_ITERS}; results would be partial")
     return labels
 
 
-def dedup_canonical_manifest(tokens: DataFrame, sample_mod: int = 25,
-                             max_iters: int = 20) -> DataFrame:
+def dedup_canonical_manifest(tokens: DataFrame) -> DataFrame:
     """The keep/drop DECISION of the dedup pipeline, end to end: near-dup
     pairs → connected components → one CANONICAL doc per component (most
     tokens, ties to the smallest doc_id) → a per-component retention
@@ -482,7 +484,7 @@ def dedup_canonical_manifest(tokens: DataFrame, sample_mod: int = 25,
     """
     from pyspark.sql.window import Window
 
-    sample, labels = _sampled_component_labels(tokens, sample_mod, max_iters)
+    sample, labels = _sampled_component_labels(tokens)
     doc_tok = sample.groupBy("doc_id", "did").agg(
         F.sum("n_tok").cast("bigint").alias("tok"))
     member = labels.join(doc_tok, "doc_id")
@@ -502,22 +504,24 @@ def dedup_canonical_manifest(tokens: DataFrame, sample_mod: int = 25,
 
 
 SIMHASH_BANDS = 4  # 8-bit bands of the 32-bit simhash
+SIMHASH_SAMPLE_MOD = 50       # simhash_docs: did % 50 == 0
+SIMHASH_PAIR_SAMPLE_MOD = 10  # simhash_neardup_pairs samples wider
+SIMHASH_MAX_HAMMING = 8
 
 
-def simhash_neardup_pairs(tokens: DataFrame, sample_mod: int = 10,
-                          max_hamming: int = 8) -> DataFrame:
+def simhash_neardup_pairs(tokens: DataFrame) -> DataFrame:
     """Complete the SimHash dedup pipeline: hash → banded candidate pairs
     → exact hamming verify (the hash-alone query is ``simhash_docs``).
 
     The 32-bit simhash splits into 4 byte-bands; docs sharing any
     (band, value) become candidates (shuffle key = band value — never
     all-pairs), then ``bit_count(xor)`` keeps pairs at hamming distance
-    <= max_hamming. For max_hamming < SIMHASH_BANDS the banding is
+    <= SIMHASH_MAX_HAMMING. For a bound < SIMHASH_BANDS the banding is
     EXACT by pigeonhole; above it recall follows band collisions — the
     standard LSH trade. The oracle mirrors the banded path, so the
     result set is deterministic either way.
     """
-    sh = simhash_docs(tokens, sample_mod=sample_mod)
+    sh = simhash_docs(tokens, sample_mod=SIMHASH_PAIR_SAMPLE_MOD)
     band_structs = [
         F.struct(F.lit(b).alias("band"),
                  (F.shiftright(F.col("simhash"), 8 * b) % 256).alias("bv"))
@@ -544,12 +548,13 @@ def simhash_neardup_pairs(tokens: DataFrame, sample_mod: int = 10,
     hamming = F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b")))
     return (
         pairs.withColumn("hamming", hamming.cast("int"))
-        .where(F.col("hamming") <= max_hamming)
+        .where(F.col("hamming") <= SIMHASH_MAX_HAMMING)
         .select("doc_a", "doc_b", "hamming")
     )
 
 
-def simhash_docs(tokens: DataFrame, sample_mod: int = 50) -> DataFrame:
+def simhash_docs(tokens: DataFrame,
+                 sample_mod: int = SIMHASH_SAMPLE_MOD) -> DataFrame:
     """32-bit SimHash per sampled doc, from coarse shingles.
 
     bit b of h(sh) with h = (sh * SIMHASH_MULT) mod 2^32; simhash bit b set
@@ -593,6 +598,7 @@ SIMHASH_W_P = 1_073_741_789   # prime < 2^30
 SIMHASH_W_K1 = 2_654_435_761
 SIMHASH_W_K2 = 1_103_515_245
 SIMHASH_W_BAND_BITS = 15
+SIMHASH_W_MAX_HAMMING = 15  # same similarity fraction as 8/32
 
 
 def _simhash_wide_hv() -> F.Column:
@@ -603,13 +609,12 @@ def _simhash_wide_hv() -> F.Column:
         + (h2 % (1 << SIMHASH_W_HALF))
 
 
-def simhash_docs_wide(tokens: DataFrame, sample_mod: int = 50,
-                      shingle_mod: int = SHINGLE_MOD) -> DataFrame:
+def simhash_docs_wide(tokens: DataFrame,
+                      sample_mod: int = SIMHASH_SAMPLE_MOD) -> DataFrame:
     """60-bit SimHash per sampled doc — same wide-aggregate shape as
     simhash_docs (the 60 bit-votes are sum columns in ONE
     distinct-shingle shuffle), scale-width hash (see constants note)."""
-    sh = doc_shingles(tokens.where(F.col("did") % sample_mod == 0),
-                      shingle_mod=shingle_mod)
+    sh = doc_shingles(tokens.where(F.col("did") % sample_mod == 0))
     votes = sh.select("doc_id", _simhash_wide_hv().alias("hv")) \
         .groupBy("doc_id").agg(
             *[F.sum(F.shiftright(F.col("hv"), b) % 2 * 2 - 1).alias(f"v{b}")
@@ -623,17 +628,15 @@ def simhash_docs_wide(tokens: DataFrame, sample_mod: int = 50,
     return votes.select("doc_id", total.cast("bigint").alias("simhash"))
 
 
-def simhash_wide_neardup_pairs(tokens: DataFrame, sample_mod: int = 1,
-                               max_hamming: int = 15,
-                               shingle_mod: int = SHINGLE_MOD) -> DataFrame:
+def simhash_wide_neardup_pairs(tokens: DataFrame) -> DataFrame:
     """SimHash dedup pipeline at scale width: 60-bit hash → 4×15-bit
-    band candidates → exact bit_count(xor) verify. Identical plan shape
-    to simhash_neardup_pairs (band-keyed shuffle, never all-pairs), but
-    the 32768-bucket bands keep the candidate set from going quadratic
-    until corpus ~ bucket-space scale. max_hamming defaults to the same
-    similarity fraction as the 32-bit form (8/32 ≈ 15/60)."""
-    sh = simhash_docs_wide(tokens, sample_mod=sample_mod,
-                           shingle_mod=shingle_mod)
+    band candidates → exact bit_count(xor) verify over EVERY doc (no
+    sample). Identical plan shape to simhash_neardup_pairs (band-keyed
+    shuffle, never all-pairs), but the 32768-bucket bands keep the
+    candidate set from going quadratic until corpus ~ bucket-space
+    scale. SIMHASH_W_MAX_HAMMING is the same similarity fraction as the
+    32-bit form (8/32 ≈ 15/60)."""
+    sh = simhash_docs_wide(tokens, sample_mod=1)
     n_bands = SIMHASH_W_BITS // SIMHASH_W_BAND_BITS
     band_structs = [
         F.struct(F.lit(b).alias("band"),
@@ -662,7 +665,7 @@ def simhash_wide_neardup_pairs(tokens: DataFrame, sample_mod: int = 1,
     hamming = F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b")))
     return (
         pairs.withColumn("hamming", hamming.cast("int"))
-        .where(F.col("hamming") <= max_hamming)
+        .where(F.col("hamming") <= SIMHASH_W_MAX_HAMMING)
         .select("doc_a", "doc_b", "hamming")
     )
 
@@ -710,7 +713,10 @@ def segment_dedup_stats(documents: DataFrame) -> DataFrame:
     )
 
 
-def fuzzy_blocked_matches(part: DataFrame, max_lev: int = 4) -> DataFrame:
+FUZZY_MAX_LEV = 4
+
+
+def fuzzy_blocked_matches(part: DataFrame) -> DataFrame:
     """Blocked fuzzy record linkage (entity resolution): candidate
     pairs come ONLY from equality blocks (noun word + size), then the
     expensive edit-distance predicate runs inside each block.
@@ -737,7 +743,7 @@ def fuzzy_blocked_matches(part: DataFrame, max_lev: int = 4) -> DataFrame:
                & (F.col("a.pk") < F.col("b.pk")))
         .select(F.col("a.noun").alias("noun"),
                 F.levenshtein(F.col("a.name"), F.col("b.name")).alias("lev"))
-        .where(F.col("lev") <= max_lev)
+        .where(F.col("lev") <= FUZZY_MAX_LEV)
     )
     return (
         pairs.groupBy("noun")
@@ -748,7 +754,7 @@ def fuzzy_blocked_matches(part: DataFrame, max_lev: int = 4) -> DataFrame:
 
 
 def span_ownership_stats(tokens: DataFrame, sample_mod: int = 10,
-                         tok_mod: int = 50261) -> DataFrame:
+                         tok_mod: int = TOK_MOD) -> DataFrame:
     """Substring-LEVEL dedup accounting (the span analog of doc-level
     near-dup): every exact packed bigram gets one OWNER — the earliest
     (min-did) doc containing it — and each later doc counts the spans
@@ -823,7 +829,7 @@ def cross_source_dup_matrix(documents: DataFrame) -> DataFrame:
 # the coverage metric counts only TRUE repeated trigrams, which is the
 # production semantic. Corpora with wider token ids pass their own
 # width (aliasing then adds a ~1/M² random floor, like any hash).
-TRIGRAM_MOD = 50261
+TRIGRAM_MOD = TOK_MOD  # the full token universe
 
 
 def packed_trigram_expr(gram_mod: int) -> str:
@@ -888,8 +894,7 @@ def duplicate_ngram_coverage(tokens: DataFrame,
     )
 
 
-def dup_span_scrub(tokens: DataFrame,
-                   gram_mod: int = TRIGRAM_MOD) -> DataFrame:
+def dup_span_scrub(tokens: DataFrame) -> DataFrame:
     """Span-level dedup scrub manifest — the WHAT-GETS-REMOVED
     companion to ``duplicate_ngram_coverage``: that operator reports
     how much of each source is duplicated text; this one measures the
@@ -917,7 +922,7 @@ def dup_span_scrub(tokens: DataFrame,
     """
     from pyspark.sql.window import Window
 
-    gram_expr = packed_trigram_expr(gram_mod)
+    gram_expr = packed_trigram_expr(TRIGRAM_MOD)
     per_doc_gram = (
         tokens
         .select("source", "doc_id", "seq",
@@ -1088,10 +1093,9 @@ def exact_substring_scrub(tokens: DataFrame, k: int = EXSUB_K) -> DataFrame:
 PREFIX_W = 6  # words of document head that define a boilerplate key
 
 
-def prefix_boilerplate_clusters(documents: DataFrame,
-                                prefix_w: int = PREFIX_W) -> DataFrame:
+def prefix_boilerplate_clusters(documents: DataFrame) -> DataFrame:
     """Template/boilerplate detection by shared document head: docs
-    whose first ``prefix_w`` words are identical form a cluster — the
+    whose first PREFIX_W words are identical form a cluster — the
     cheap pre-pass that catches mirrored pages and form letters before
     the (much costlier) MinHash stage runs, and the canonical-doc
     choice feeds the same keep-min-id scrub convention as
@@ -1106,9 +1110,9 @@ def prefix_boilerplate_clusters(documents: DataFrame,
     words = documents.select(
         "doc_id", "source", F.split("text", " ").alias("w"))
     pref = (
-        words.where(F.size("w") >= prefix_w)
+        words.where(F.size("w") >= PREFIX_W)
         .select("doc_id", "source",
-                F.expr(f"array_join(slice(w, 1, {prefix_w}), ' ')")
+                F.expr(f"array_join(slice(w, 1, {PREFIX_W}), ' ')")
                 .alias("prefix"))
     )
     return (

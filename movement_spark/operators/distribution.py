@@ -41,11 +41,13 @@ from pyspark.sql.window import Window
 SAMPLE_A = 1_103_515_245
 SAMPLE_B = 12_345
 SAMPLE_P = (1 << 31) - 1
+# coin_flip's key offset: independent flips on one key would each need
+# their own salt so they don't correlate; the registry has one flip.
+COIN_SALT = 0
 
 
-def build_distribution(hist: DataFrame, value_col: str = "value",
-                       count_col: str = "cnt") -> DataFrame:
-    """Number-line layout from a (value, count) histogram.
+def build_distribution(hist: DataFrame) -> DataFrame:
+    """Number-line layout from a (value, cnt) histogram.
 
     Returns one row per value: (value, cnt, range_start, range_end),
     1-based inclusive, ranges laid out in ascending value order —
@@ -54,11 +56,11 @@ def build_distribution(hist: DataFrame, value_col: str = "value",
     count of DISTINCT values (the frame is a histogram), never by the
     corpus size.
     """
-    w = Window.orderBy(value_col).rowsBetween(
+    w = Window.orderBy("value").rowsBetween(
         Window.unboundedPreceding, Window.currentRow)
     return (
-        hist.select(F.col(value_col).cast("bigint").alias("value"),
-                    F.col(count_col).cast("bigint").alias("cnt"))
+        hist.select(F.col("value").cast("bigint").alias("value"),
+                    F.col("cnt").cast("bigint").alias("cnt"))
         .withColumn("range_end", F.sum("cnt").over(w))
         .withColumn("range_start",
                     (F.col("range_end") - F.col("cnt") + 1))
@@ -85,11 +87,11 @@ def likelihood_to_increase_bps(dist: DataFrame) -> DataFrame:
         .cast("bigint").alias("increase_likelihood_bps"))
 
 
-def sample_distribution(spark: SparkSession, dist: DataFrame, n_draws: int,
-                        a: int = SAMPLE_A, b: int = SAMPLE_B,
-                        p: int = SAMPLE_P) -> DataFrame:
+def sample_distribution(spark: SparkSession, dist: DataFrame,
+                        n_draws: int) -> DataFrame:
     """n deterministic draws from the distribution: draw i lands at
-    1-based position ((a*i + b) mod p) mod L + 1; the emitted value is
+    1-based position ((A*i + B) mod P) mod L + 1 (SAMPLE_A/B/P); the
+    emitted value is
     the one whose [range_start, range_end] stretch owns the position
     (Distribution.sample + findRangeStartIdFromNumberLinePosition).
 
@@ -102,7 +104,8 @@ def sample_distribution(spark: SparkSession, dist: DataFrame, n_draws: int,
         spark.range(n_draws).toDF("draw")
         .crossJoin(F.broadcast(dist.agg(F.max("range_end").alias("ll"))))
         .select("draw",
-                (((F.lit(a) * F.col("draw") + F.lit(b)) % F.lit(p))
+                (((F.lit(SAMPLE_A) * F.col("draw") + F.lit(SAMPLE_B))
+                  % F.lit(SAMPLE_P))
                  % F.col("ll") + 1).alias("pos"))
     )
     return (
@@ -112,12 +115,10 @@ def sample_distribution(spark: SparkSession, dist: DataFrame, n_draws: int,
     )
 
 
-def coin_flip(col, weight_bps: int, salt: int = 0,
-              a: int = SAMPLE_A, b: int = SAMPLE_B, p: int = SAMPLE_P):
+def coin_flip(col, weight_bps: int):
     """ProbUtil.coinFlip as a deterministic column predicate: true for
     the ``weight_bps``/10000 fraction of keys, decided by the same
-    a*x+b mod p arithmetic (salted so independent flips on one key
-    don't correlate)."""
+    a*x+b mod p arithmetic (offset by COIN_SALT)."""
     c = F.col(col) if isinstance(col, str) else col
-    return ((F.lit(a) * (c + F.lit(salt)) + F.lit(b)) % F.lit(p)) \
-        % 10000 < F.lit(weight_bps)
+    return ((F.lit(SAMPLE_A) * (c + F.lit(COIN_SALT)) + F.lit(SAMPLE_B))
+            % F.lit(SAMPLE_P)) % 10000 < F.lit(weight_bps)

@@ -23,28 +23,34 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from movement_spark.operators.text import packed_bigram_expr
+from movement_spark.sources.tokens import TOK_MOD
 
+# Every graph here is over the TOK_MOD token universe; round counts and
+# cuts are deployment constants the registry's oracle SQL hard-codes.
 PR_SCALE = 1_000_000_000_000
 PR_DAMP_NUM, PR_DAMP_DEN = 85, 100
+PR_ITERS = 3
+PR_TOP_N = 20
+BFS_ROUNDS = 3
+BFS_SEED_MOD = 29  # BFS seeds: tok % 29 == 0
 
 
-def token_transition_edges(tokens: DataFrame,
-                           tok_mod: int = 50261) -> DataFrame:
+def token_transition_edges(tokens: DataFrame) -> DataFrame:
     """Weighted edge list (u, v, w) of adjacent-token transitions.
     One explode + one map-side-combined count keyed by the packed
     bigram — identical shape to token_bigram_stats' heavy path."""
-    bg_expr = packed_bigram_expr(tok_mod)
+    bg_expr = packed_bigram_expr(TOK_MOD)
     return (
         tokens.select(F.explode(F.expr(bg_expr)).alias("bg"))
         .groupBy("bg").agg(F.count("*").alias("w"))
-        .select(F.expr(f"cast(bg div {tok_mod} as int)").alias("u"),
-                (F.col("bg") % tok_mod).cast("int").alias("v"), "w")
+        .select(F.expr(f"cast(bg div {TOK_MOD} as int)").alias("u"),
+                (F.col("bg") % TOK_MOD).cast("int").alias("v"), "w")
     )
 
 
-def pagerank_top_tokens(tokens: DataFrame, iters: int = 3,
-                        tok_mod: int = 50261, top_n: int = 20) -> DataFrame:
-    """Top-N tokens by fixed-iteration integer PageRank.
+def pagerank_top_tokens(tokens: DataFrame) -> DataFrame:
+    """Top-PR_TOP_N tokens by fixed-iteration (PR_ITERS) integer
+    PageRank.
 
     Scale shape: the edge relation (with its out-weight) is persisted
     ONCE and re-joined every round; each round is exactly one shuffle on
@@ -52,10 +58,10 @@ def pagerank_top_tokens(tokens: DataFrame, iters: int = 3,
     set. The only driver-side values are N (node count) and the derived
     teleport base — control-plane scalars, like the bloom bitmap. At
     100 TB you would also checkpoint the rank relation every few rounds
-    to cut lineage depth; with a fixed iters=3 the lineage is bounded
+    to cut lineage depth; with a fixed PR_ITERS=3 the lineage is bounded
     and Catalyst handles it.
     """
-    edges = token_transition_edges(tokens, tok_mod)
+    edges = token_transition_edges(tokens)
     outw = edges.groupBy("u").agg(F.sum("w").alias("out_w"))
     e2 = edges.join(outw, "u").persist()
     nodes = (edges.select(F.col("u").alias("tok"))
@@ -71,7 +77,7 @@ def pagerank_top_tokens(tokens: DataFrame, iters: int = 3,
     init = PR_SCALE // n_nodes
     base = (PR_DAMP_DEN - PR_DAMP_NUM) * PR_SCALE // PR_DAMP_DEN // n_nodes
     ranks = nodes.withColumn("pr", F.lit(init))
-    for _ in range(iters):
+    for _ in range(PR_ITERS):
         contrib = (
             e2.join(ranks, e2.u == ranks.tok)
             .select(F.col("v").alias("tok"),
@@ -84,7 +90,7 @@ def pagerank_top_tokens(tokens: DataFrame, iters: int = 3,
              + F.expr(f"({PR_DAMP_NUM} * coalesce(sc, 0L)) "
                       f"div {PR_DAMP_DEN}")).cast("bigint").alias("pr"))
     final = (
-        ranks.orderBy(F.desc("pr"), F.asc("tok")).limit(top_n)
+        ranks.orderBy(F.desc("pr"), F.asc("tok")).limit(PR_TOP_N)
         .select(F.col("tok").cast("int").alias("tok"),
                 F.col("pr").cast("bigint").alias("pr_final"))
     )
@@ -99,7 +105,7 @@ def pagerank_top_tokens(tokens: DataFrame, iters: int = 3,
         rows, schema="tok int, pr_final bigint")
 
 
-def skipgram_edges(tokens: DataFrame, tok_mod: int = 50261) -> DataFrame:
+def skipgram_edges(tokens: DataFrame) -> DataFrame:
     """Undirected distinct edge list (a < b) of the window-2 skip-gram
     co-occurrence graph: tokens adjacent OR one apart in a shard
     co-occur. Window 2 is the smallest that yields cliques (every
@@ -109,18 +115,18 @@ def skipgram_edges(tokens: DataFrame, tok_mod: int = 50261) -> DataFrame:
     Derivation is one explode per distance (JVM transform over the
     token array) + one distinct — a single shuffle keyed by the packed
     pair; self-loops are dropped."""
-    d1 = packed_bigram_expr(tok_mod)
+    d1 = packed_bigram_expr(TOK_MOD)
     d2 = (
         f"if(n_tok >= 3, transform(sequence(0, n_tok - 3), "
-        f"i -> cast(tokens[i] as bigint) * {tok_mod} "
+        f"i -> cast(tokens[i] as bigint) * {TOK_MOD} "
         f"+ cast(tokens[i+2] as bigint)), "
         f"cast(array() as array<bigint>))"
     )
     pairs = (
         tokens.select(F.explode(F.expr(d1)).alias("p"))
         .unionAll(tokens.select(F.explode(F.expr(d2)).alias("p")))
-        .select(F.expr(f"p div {tok_mod}").alias("x"),
-                (F.col("p") % tok_mod).alias("y"))
+        .select(F.expr(f"p div {TOK_MOD}").alias("x"),
+                (F.col("p") % TOK_MOD).alias("y"))
         .where(F.col("x") != F.col("y"))
     )
     return (
@@ -130,8 +136,7 @@ def skipgram_edges(tokens: DataFrame, tok_mod: int = 50261) -> DataFrame:
     )
 
 
-def triangle_count_stats(tokens: DataFrame,
-                         tok_mod: int = 50261) -> DataFrame:
+def triangle_count_stats(tokens: DataFrame) -> DataFrame:
     """Exact triangle count of the skip-gram co-occurrence graph via
     degree-ordered edge orientation — the distributed-join formulation
     that survives skewed (power-law) degree distributions.
@@ -154,7 +159,7 @@ def triangle_count_stats(tokens: DataFrame,
     small enough that Catalyst may broadcast it — both plans are
     correct, the orientation bound is what keeps either viable.
     """
-    e = skipgram_edges(tokens, tok_mod).persist()
+    e = skipgram_edges(tokens).persist()
     deg = (
         e.select(F.col("a").alias("v"))
         .unionAll(e.select(F.col("b").alias("v")))
@@ -203,18 +208,16 @@ def triangle_count_stats(tokens: DataFrame,
                      "n_wedges bigint, n_triangles bigint")
 
 
-def bfs_depth_profile(tokens: DataFrame, rounds: int = 3,
-                      tok_mod: int = 50261,
-                      seed_mod: int = 29) -> DataFrame:
+def bfs_depth_profile(tokens: DataFrame) -> DataFrame:
     """Fixed-round breadth-first search on the token-transition graph:
-    min-hop distance from the seed set (tok % seed_mod == 0), profiled
-    as vertex counts per depth 0..rounds (oracle: bounded unrolled
-    CTE).
+    min-hop distance from the seed set (tok % BFS_SEED_MOD == 0),
+    profiled as vertex counts per depth 0..BFS_ROUNDS (oracle: bounded
+    unrolled CTE).
 
     The third fixed-point algorithm beside PageRank and label
     propagation — BFS adds shortest-path semantics. Plan shape: the
     frontier is deduplicated each round (so it is bounded by the vertex
-    space, here ≤ tok_mod) and BROADCAST into the edge join — the big
+    space, here ≤ TOK_MOD) and BROADCAST into the edge join — the big
     edge relation never shuffles, one distinct-shuffle of the tiny
     frontier per round is the whole movement. Min-depth is resolved
     once at the end with a single vertex-keyed aggregate over the
@@ -227,15 +230,15 @@ def bfs_depth_profile(tokens: DataFrame, rounds: int = 3,
     """
     from functools import reduce
 
-    edges = (token_transition_edges(tokens, tok_mod)
+    edges = (token_transition_edges(tokens)
              .select("u", "v").persist())
     nodes = (edges.select(F.col("u").alias("t"))
              .union(edges.select(F.col("v").alias("t")))
              .distinct())
-    seeds = (nodes.where(F.col("t") % seed_mod == 0)
+    seeds = (nodes.where(F.col("t") % BFS_SEED_MOD == 0)
              .select(F.col("t").alias("vtx")).persist())
     frontiers = [seeds]
-    for _ in range(rounds):
+    for _ in range(BFS_ROUNDS):
         nxt = (
             edges.join(F.broadcast(
                 frontiers[-1].select(F.col("vtx").alias("u"))), "u")

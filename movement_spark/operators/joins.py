@@ -28,16 +28,25 @@ def split_shard_streams(tokens: DataFrame) -> tuple[DataFrame, DataFrame]:
     return even, odd
 
 
-def shard_pair_join(tokens: DataFrame, max_gap_sec: int = 60) -> DataFrame:
+# Join bounds are module constants (the registry's oracle SQL hard-codes
+# the same values); the streaming shard joins pair within MAX_GAP_SEC too.
+MAX_GAP_SEC = 60  # shard pairs meet within ±this many seconds
+INCIDENT_WINDOW_SEC = 120
+TOP_CUSTOMERS_K = 10
+
+
+def shard_pair_join(tokens: DataFrame) -> DataFrame:
     """Batch form of the doc_id shard correlation (PinionSystem analog).
 
-    Inner equi-join on doc_id + time-bound |ts_a - ts_b| <= gap; aggregated
+    Inner equi-join on doc_id + time-bound |ts_a - ts_b| <= MAX_GAP_SEC;
+    aggregated
     to a per-doc pair count + combined token volume so the result is a
     stable, SQL-checkable scalar set.
     """
     even, odd = split_shard_streams(tokens)
     pairs = even.join(odd, "doc_id").where(
-        F.abs(F.col("ts_a").cast("long") - F.col("ts_b").cast("long")) <= max_gap_sec
+        F.abs(F.col("ts_a").cast("long") - F.col("ts_b").cast("long"))
+        <= MAX_GAP_SEC
     )
     return (
         pairs.groupBy("doc_id")
@@ -46,16 +55,16 @@ def shard_pair_join(tokens: DataFrame, max_gap_sec: int = 60) -> DataFrame:
     )
 
 
-def incident_attribution(events: DataFrame,
-                         window_sec: int = 120) -> DataFrame:
+def incident_attribution(events: DataFrame) -> DataFrame:
     """Interval-containment join via time bucketing (bin join): every
-    ``error`` event opens an incident window [ts, ts + window_sec); all
+    ``error`` event opens an incident window [ts, ts +
+    INCIDENT_WINDOW_SEC); all
     events falling inside a window are attributed to that incident.
 
     A naive implementation is a non-equi theta join (cross product +
     range filter) — the classic 100 TB killer. Instead both sides get an
     equi-join key: intervals are exploded to the (at most two)
-    ``window_sec``-wide time bins they overlap, probe events carry their
+    INCIDENT_WINDOW_SEC-wide time bins they overlap, probe events carry their
     single bin, and the exact containment predicate runs AFTER the
     equi-join. Each (incident, event) pair meets exactly once (the event
     lives in one bin), so no dedup pass is needed; shuffle volume is
@@ -65,18 +74,18 @@ def incident_attribution(events: DataFrame,
     err = events.where(F.col("event_type") == "error").select(
         F.col("event_id").alias("incident_id"),
         F.unix_timestamp("ts").alias("w_start"))
-    err = err.withColumn("w_end", F.col("w_start") + window_sec)
-    # an interval of width window_sec overlaps exactly bin(start) and,
+    err = err.withColumn("w_end", F.col("w_start") + INCIDENT_WINDOW_SEC)
+    # an interval of width INCIDENT_WINDOW_SEC overlaps exactly bin(start) and,
     # if it crosses the boundary, bin(start)+1
     spans = err.select(
         "incident_id", "w_start", "w_end",
         F.explode(F.array_distinct(F.array(
-            F.expr(f"w_start div {window_sec}"),
-            F.expr(f"(w_end - 1) div {window_sec}")))).alias("bin"))
+            F.expr(f"w_start div {INCIDENT_WINDOW_SEC}"),
+            F.expr(f"(w_end - 1) div {INCIDENT_WINDOW_SEC}")))).alias("bin"))
     probe = events.select(
         "event_id", "user_id", "value",
         F.unix_timestamp("ts").alias("ets"))
-    probe = probe.withColumn("bin", F.expr(f"ets div {window_sec}"))
+    probe = probe.withColumn("bin", F.expr(f"ets div {INCIDENT_WINDOW_SEC}"))
     pairs = (
         spans.join(probe, "bin")
         .where((F.col("ets") >= F.col("w_start"))
@@ -91,8 +100,8 @@ def incident_attribution(events: DataFrame,
     )
 
 
-def top_customers_by_revenue(customer: DataFrame, orders: DataFrame,
-                             k: int = 10) -> DataFrame:
+def top_customers_by_revenue(customer: DataFrame,
+                             orders: DataFrame) -> DataFrame:
     """Relational join + top-k. Catalyst broadcasts the small side under
     AQE; the limit is pushed as TakeOrderedAndProject (no full sort)."""
     rev = (
@@ -104,7 +113,7 @@ def top_customers_by_revenue(customer: DataFrame, orders: DataFrame,
         customer.join(rev, customer.c_custkey == rev.o_custkey)
         .select("c_custkey", "c_name", "c_mktsegment", "revenue", "n_orders")
         .orderBy(F.desc("revenue"), F.asc("c_custkey"))
-        .limit(k)
+        .limit(TOP_CUSTOMERS_K)
     )
 
 

@@ -19,13 +19,13 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
 
-def with_pos(df: DataFrame, order_col: str, pos_col: str = "pos") -> DataFrame:
-    """Assign 0-based positions by an explicit order (the distributed
-    stand-in for pull-stream arrival order — which the reference never
-    guarantees across threads either; its tests fix order by using a
-    single gear thread)."""
+def with_pos(df: DataFrame, order_col: str) -> DataFrame:
+    """Assign 0-based positions (column ``pos``) by an explicit order
+    (the distributed stand-in for pull-stream arrival order — which the
+    reference never guarantees across threads either; its tests fix
+    order by using a single gear thread)."""
     w = Window.orderBy(order_col)
-    return df.withColumn(pos_col, F.row_number().over(w) - 1)
+    return df.withColumn("pos", F.row_number().over(w) - 1)
 
 
 def zip_matched(a: DataFrame, b: DataFrame, order_a: str, order_b: str) -> DataFrame:

@@ -93,6 +93,7 @@ FRAME_SCHEMA = StructType([
 ])
 
 N_FRAMES = 4
+MEDIA_SAMPLE_MOD = 25  # frame sampling and resize see doc_id % 25 == 0
 
 
 def _sample_frames(n_frames: int):
@@ -125,15 +126,14 @@ def _sample_frames(n_frames: int):
     return gen
 
 
-def media_frame_sample(documents: DataFrame, n_frames: int = N_FRAMES,
-                       sample_mod: int = 25) -> DataFrame:
+def media_frame_sample(documents: DataFrame) -> DataFrame:
     """Frame-sampling pipeline over "video" payloads: sampled docs →
-    binary carrier → per-frame rows. The sample predicate sits BEFORE the
-    Python stage so the scan prunes to 1/sample_mod of the corpus and the
-    Arrow boundary only ships sampled payloads."""
+    binary carrier → N_FRAMES per-frame rows. The sample predicate sits
+    BEFORE the Python stage so the scan prunes to 1/MEDIA_SAMPLE_MOD of
+    the corpus and the Arrow boundary only ships sampled payloads."""
     media = documents_as_media(
-        documents.where(F.col("doc_id") % sample_mod == 0))
-    return media.mapInPandas(_sample_frames(n_frames), schema=FRAME_SCHEMA)
+        documents.where(F.col("doc_id") % MEDIA_SAMPLE_MOD == 0))
+    return media.mapInPandas(_sample_frames(N_FRAMES), schema=FRAME_SCHEMA)
 
 
 RESIZE_SCHEMA = StructType([
@@ -172,19 +172,17 @@ def _resize(stride: int):
     return gen
 
 
-def media_resize(documents: DataFrame, stride: int = RESIZE_STRIDE,
-                 sample_mod: int = 25) -> DataFrame:
+def media_resize(documents: DataFrame) -> DataFrame:
     """Resize pipeline over binary media payloads (sampled)."""
     media = documents_as_media(
-        documents.where(F.col("doc_id") % sample_mod == 0))
-    return media.mapInPandas(_resize(stride), schema=RESIZE_SCHEMA)
+        documents.where(F.col("doc_id") % MEDIA_SAMPLE_MOD == 0))
+    return media.mapInPandas(_resize(RESIZE_STRIDE), schema=RESIZE_SCHEMA)
 
 
 BINARY_INGEST_MOD = 5  # stage 1/5 of docs as raw files (fixture-sized)
 
 
-def corpus_stage_key(documents: DataFrame,
-                     sample_mod: int = BINARY_INGEST_MOD) -> str:
+def corpus_stage_key(documents: DataFrame) -> str:
     """Content fingerprint of the staged subset (row count + doc_id sum
     + crc32-of-text sum over the sampled docs — still one small
     aggregate scan). Staging dirs MUST be keyed by this, not by the
@@ -193,7 +191,7 @@ def corpus_stage_key(documents: DataFrame,
     idempotence marker and serve another corpus's files. The crc term
     makes the key CONTENT-sensitive — count/id/length-preserving edits
     (the exact regeneration case the key exists for) change it."""
-    row = (documents.where((F.col("doc_id") % sample_mod == 0)
+    row = (documents.where((F.col("doc_id") % BINARY_INGEST_MOD == 0)
                            & F.col("text").isNotNull())
            .agg(F.count("*").alias("n"),
                 F.sum("doc_id").alias("sid"),
@@ -202,8 +200,7 @@ def corpus_stage_key(documents: DataFrame,
     return f"{row['n']}-{row['sid']}-{row['sch']}"
 
 
-def stage_binary_files(documents: DataFrame, stage_dir: str,
-                       sample_mod: int = BINARY_INGEST_MOD) -> str:
+def stage_binary_files(documents: DataFrame, stage_dir: str) -> str:
     """Materialize a deterministic subset of documents as ONE raw file
     per doc (text writer + partitionBy) — the on-disk layout of a binary
     media lake, written by a distributed job (never a driver loop).
@@ -214,15 +211,15 @@ def stage_binary_files(documents: DataFrame, stage_dir: str,
         # NULL text = no blob to stage (the text writer throws on NULL
         # values); corpus_stage_key applies the same exclusion so the
         # content key always matches the staged file set.
-        (documents.where((F.col("doc_id") % sample_mod == 0)
+        (documents.where((F.col("doc_id") % BINARY_INGEST_MOD == 0)
                          & F.col("text").isNotNull())
          .select("text", "doc_id")
          .write.mode("overwrite").partitionBy("doc_id").text(stage_dir))
     return stage_dir
 
 
-def binary_file_ingest(spark, documents: DataFrame, stage_dir: str,
-                       sample_mod: int = BINARY_INGEST_MOD) -> DataFrame:
+def binary_file_ingest(spark, documents: DataFrame,
+                       stage_dir: str) -> DataFrame:
     """Ingest raw files through Spark's ``binaryFile`` source — the real
     entry point for image/audio blobs at scale (each file becomes one row
     with ``content: binary``; ``spark.sql.files.maxPartitionBytes`` packs
@@ -232,7 +229,7 @@ def binary_file_ingest(spark, documents: DataFrame, stage_dir: str,
     the partition path. md5 is bit-identical across engines (unlike
     xxhash64), so the full read path is oracle-checkable end to end: the
     text writer appends one ``\\n`` per doc, which the oracle mirrors."""
-    stage_binary_files(documents, stage_dir, sample_mod)
+    stage_binary_files(documents, stage_dir)
     raw = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "part-*")

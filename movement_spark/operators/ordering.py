@@ -32,6 +32,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from movement_spark.sources.tokens import TS_MOD
+
 # ---------------------------------------------------------------- batch ----
 
 def merge_doc_shards(tokens: DataFrame) -> DataFrame:
@@ -107,7 +109,6 @@ _COMPLETED = -2
 
 
 def _assemble(key, pdfs: Iterable[pd.DataFrame], state,
-              timeout_margin_ms: int = 60_000,
               emit_incomplete: bool = False):
     """applyInPandasWithState function: buffer shards per doc, emit when
     the doc is complete (all seqs 0..expected-1 present), drop on timeout.
@@ -186,27 +187,36 @@ def _assemble(key, pdfs: Iterable[pd.DataFrame], state,
         })
     else:
         # keep the doc around until the watermark passes its last shard
-        # by the configured margin
+        # by ASSEMBLE_TIMEOUT_MS
         state.update((seqs, toks, expected))
     if max_ts is not None:
         # ONE clamp for both the completed marker and the open doc
         # (previously duplicated per branch — a drift hazard): strictly
         # above the current watermark, because Spark rejects an
-        # event-time timeout at/below it (small caller-supplied
-        # timeout_ms + long watermark delay would crash the query)
+        # event-time timeout at/below it (a small timeout + long
+        # watermark delay would crash the query)
         state.setTimeoutTimestamp(
-            max(int(max_ts.timestamp() * 1000) + timeout_margin_ms,
+            max(int(max_ts.timestamp() * 1000) + ASSEMBLE_TIMEOUT_MS,
                 state.getCurrentWatermarkMs() + 1))
     if out is not None:
         yield out
 
 
-def ordered_doc_assembler_jvm(shards: DataFrame, gap: str = "62 minutes",
-                              watermark: str = "10 minutes") -> DataFrame:
+# Event-time settings of both assemblers. WATERMARK is the delay of
+# every token-stream pipeline too (streaming/pipeline.py imports it).
+# Shard timestamps within one doc can wrap the full TS_MOD hour, so the
+# JVM assembler's session gap and the Python assembler's eviction grace
+# both cover TS_MOD plus slack — state still stays O(open docs).
+WATERMARK = "10 minutes"
+ASSEMBLE_GAP = "62 minutes"
+ASSEMBLE_TIMEOUT_MS = (TS_MOD + 120) * 1000
+
+
+def ordered_doc_assembler_jvm(shards: DataFrame) -> DataFrame:
     """All-JVM variant of the PHASE barrier: each doc's ordered merge is
-    a session-window streaming aggregate keyed (session_window(ts, gap),
-    doc_id) that emits when the watermark closes the session — the doc
-    is "complete" once it has been quiet for ``gap``.
+    a session-window streaming aggregate keyed (session_window(ts,
+    ASSEMBLE_GAP), doc_id) that emits when the watermark closes the
+    session — the doc is "complete" once it has been quiet for the gap.
 
     The trade against ``ordered_doc_assembler`` (applyInPandasWithState):
     completion latency rises to gap + watermark delay, but there is NO
@@ -220,7 +230,7 @@ def ordered_doc_assembler_jvm(shards: DataFrame, gap: str = "62 minutes",
     path; the Python stage remains the low-latency emit-on-complete CEP
     path — both oracle-gated to the same merged_doc_check digest.
 
-    ``gap`` must exceed the max intra-doc event-time gap so every doc is
+    ASSEMBLE_GAP must exceed the max intra-doc event-time gap so every doc is
     exactly ONE session. Input is assumed exactly-once (put
     dropDuplicatesWithinWatermark upstream under at-least-once
     delivery). Returns (w, doc_id, n_shard, total_tok, merged); the
@@ -229,8 +239,8 @@ def ordered_doc_assembler_jvm(shards: DataFrame, gap: str = "62 minutes",
     """
     return (
         shards
-        .withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("w"), "doc_id")
+        .withWatermark("ts", WATERMARK)
+        .groupBy(F.session_window("ts", ASSEMBLE_GAP).alias("w"), "doc_id")
         .agg(F.count("*").cast("int").alias("n_shard"),
              F.flatten(F.sort_array(
                  F.collect_list(F.struct("seq", "tokens"))).tokens)
@@ -240,26 +250,25 @@ def ordered_doc_assembler_jvm(shards: DataFrame, gap: str = "62 minutes",
     )
 
 
-def ordered_doc_assembler(shards: DataFrame, watermark: str = "2 minutes",
-                          timeout_ms: int = 60_000,
+def ordered_doc_assembler(shards: DataFrame,
                           emit_incomplete: bool = False) -> DataFrame:
     """Streaming per-doc ordering stage (PHASE barrier analog).
 
     ``shards`` must be a streaming DataFrame with columns
-    (doc_id, seq, tokens, n_shards, ts). ``timeout_ms`` is the grace
+    (doc_id, seq, tokens, n_shards, ts). ASSEMBLE_TIMEOUT_MS is the grace
     period after a doc's last-seen shard before the incomplete doc is
-    evicted (drop-and-count) — size it to the max expected event-time
-    span of one doc. Requires append output via foreachBatch downstream.
+    evicted (drop-and-count) — the max event-time span of one doc plus
+    slack. Requires append output via foreachBatch downstream.
     """
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     def assemble_with_margin(key, pdfs, state):
-        yield from _assemble(key, pdfs, state, timeout_margin_ms=timeout_ms,
+        yield from _assemble(key, pdfs, state,
                              emit_incomplete=emit_incomplete)
 
     return (
         shards
-        .withWatermark("ts", watermark)
+        .withWatermark("ts", WATERMARK)
         .groupBy("doc_id")
         .applyInPandasWithState(
             assemble_with_margin,

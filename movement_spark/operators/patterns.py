@@ -6,12 +6,12 @@ non-overlapping regex semantics (SQL:2016 ONE ROW PER MATCH / SKIP PAST
 LAST ROW). This module is the STREAMING half of that operator: an
 applyInPandasWithState stage accumulates each user's events and emits
 the per-user pattern statistics once the event-time watermark passes
-the user's last event by ``close_after_ms`` — activity-EPISODE close
+the user's last event by CLOSE_MS — activity-EPISODE close
 semantics, the per-user analog of a session window. A user whose
-consecutive events are never further apart than ``close_after_ms`` has
+consecutive events are never further apart than CLOSE_MS has
 exactly one episode, so the emitted rows equal the batch whole-history
 oracle — which is how the parity gate runs it (the fixture's max
-intra-user gap is ~4.2 days; the default close is 10).
+intra-user gap is ~4.2 days; CLOSE_MS is 10 days).
 
 Scale shape: state per OPEN user is their current episode's (ts,
 event_id, symbol) arrays — bounded by episode length, not history;
@@ -33,6 +33,8 @@ from pyspark.sql.types import (
     ArrayType, IntegerType, LongType, StringType, StructField, StructType,
 )
 
+from movement_spark.operators.relational import CEP_PATTERN
+
 PATTERN_SCHEMA = StructType([
     StructField("user_id", LongType()),
     StructField("n_events", LongType()),
@@ -48,7 +50,7 @@ _STATE_SCHEMA = StructType([
     StructField("sym", ArrayType(StringType())),
 ])
 
-DEFAULT_CLOSE_MS = 10 * 24 * 3600 * 1000  # 10 days of inactivity
+CLOSE_MS = 10 * 24 * 3600 * 1000  # 10 days of inactivity
 
 
 def _emit_stats(user_id: int, ts_us, eid, sym, pattern: str) -> pd.DataFrame:
@@ -105,10 +107,10 @@ def _accumulate(key, pdfs: Iterable[pd.DataFrame], state,
     state.setTimeoutTimestamp(max(timeout_ms, wm_ms + 1))
 
 
-def user_pattern_stats(events: DataFrame, pattern: str = "v+cp",
-                       watermark: str = "1 day",
-                       close_after_ms: int = DEFAULT_CLOSE_MS) -> DataFrame:
-    """Stateful streaming MATCH_RECOGNIZE over per-user event streams.
+def user_pattern_stats(events: DataFrame,
+                       watermark: str = "1 day") -> DataFrame:
+    """Stateful streaming MATCH_RECOGNIZE (CEP_PATTERN) over per-user
+    event streams.
 
     ``events`` must be a streaming DataFrame with (user_id, event_id,
     event_type, ts). Emits one (user_id, n_events, n_matches,
@@ -118,7 +120,7 @@ def user_pattern_stats(events: DataFrame, pattern: str = "v+cp",
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     def fn(key, pdfs, state):
-        yield from _accumulate(key, pdfs, state, pattern, close_after_ms)
+        yield from _accumulate(key, pdfs, state, CEP_PATTERN, CLOSE_MS)
 
     return (
         # CEP-valid events only (same exclusion as the batch matcher

@@ -11,10 +11,17 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
 
-def pricing_summary(lineitem: DataFrame, cutoff: str = "1998-09-01") -> DataFrame:
+# Query parameters are module constants: each registered query's oracle
+# SQL hard-codes the same values, so a per-call override could only
+# desynchronize an operator from its oracle.
+PRICING_CUTOFF = "1998-09-01"
+
+
+def pricing_summary(lineitem: DataFrame) -> DataFrame:
     """TPC-H Q1 shape: scan + filter (pushed to parquet) + hash agg."""
     return (
-        lineitem.where(F.col("l_shipdate") < F.lit(cutoff).cast("timestamp"))
+        lineitem.where(F.col("l_shipdate")
+                       < F.lit(PRICING_CUTOFF).cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
             F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
@@ -26,8 +33,11 @@ def pricing_summary(lineitem: DataFrame, cutoff: str = "1998-09-01") -> DataFram
     )
 
 
-def order_rank_per_customer(orders: DataFrame, k: int = 3) -> DataFrame:
-    """Window function: top-k orders per customer by totalprice.
+ORDER_RANK_K = 3
+
+
+def order_rank_per_customer(orders: DataFrame) -> DataFrame:
+    """Window function: top-ORDER_RANK_K orders per customer by totalprice.
 
     Partition key = custkey (high cardinality → even shuffle); ties broken
     by orderkey for determinism.
@@ -36,7 +46,7 @@ def order_rank_per_customer(orders: DataFrame, k: int = 3) -> DataFrame:
         F.desc("o_totalprice"), F.asc("o_orderkey"))
     return (
         orders.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= k)
+        .where(F.col("rk") <= ORDER_RANK_K)
         .groupBy("o_custkey")
         .agg(F.count("*").alias("n_top"),
              F.round(F.sum("o_totalprice"), 2).alias("top_revenue"),
@@ -74,21 +84,24 @@ def supplier_part_join(part: DataFrame, supplier: DataFrame,
     )
 
 
-def dangling_edge_audit(orders: DataFrame, customer: DataFrame,
-                        drop_mod: int = 3) -> DataFrame:
+DANGLING_DROP_MOD = 3
+
+
+def dangling_edge_audit(orders: DataFrame, customer: DataFrame) -> DataFrame:
     """Referential-integrity check, the reference's edge-encode semantic
     (TinkerPopGraphEncoder.java:87-117: an edge whose endpoint vertex is
     missing is fatal unless dropDanglingEdges; TestDirectoryLoader.java:
     137,158-159 expects 5/5 when one vertex is absent and the flag is on).
 
-    Vertices = customers whose key survives ``% drop_mod != 0`` (the
+    Vertices = customers whose key survives ``% DANGLING_DROP_MOD != 0`` (the
     missing-vertex fixture analog); edges = orders referencing them. A
     LEFT join + null test classifies each edge as kept vs dangling —
     at scale this is one shuffle on the key (or a broadcast when the
     vertex set is dimension-sized); never a driver-side lookup.
     """
     vertices = (
-        customer.where(F.pmod(F.col("c_custkey"), F.lit(drop_mod)) != 0)
+        customer.where(
+            F.pmod(F.col("c_custkey"), F.lit(DANGLING_DROP_MOD)) != 0)
         .select("c_custkey")
     )
     return (
@@ -102,9 +115,11 @@ def dangling_edge_audit(orders: DataFrame, customer: DataFrame,
     )
 
 
-def order_priority_semijoin(orders: DataFrame, lineitem: DataFrame,
-                            start: str = "1995-01-01",
-                            end: str = "1995-10-01") -> DataFrame:
+SEMIJOIN_START, SEMIJOIN_END = "1995-01-01", "1995-10-01"
+
+
+def order_priority_semijoin(orders: DataFrame,
+                            lineitem: DataFrame) -> DataFrame:
     """TPC-H Q4 shape: EXISTS as a left-semi join — orders that have at
     least one returned lineitem, counted per priority. The semi join
     keeps the probe side's row count bounded by orders (no fanout), and
@@ -115,8 +130,10 @@ def order_priority_semijoin(orders: DataFrame, lineitem: DataFrame,
     )
     return (
         orders
-        .where((F.col("o_orderdate") >= F.lit(start).cast("timestamp"))
-               & (F.col("o_orderdate") < F.lit(end).cast("timestamp")))
+        .where((F.col("o_orderdate")
+                >= F.lit(SEMIJOIN_START).cast("timestamp"))
+               & (F.col("o_orderdate")
+                  < F.lit(SEMIJOIN_END).cast("timestamp")))
         .join(late, orders.o_orderkey == late.l_orderkey, "left_semi")
         .groupBy("o_orderpriority")
         .agg(F.count("*").alias("order_count"))
@@ -259,10 +276,13 @@ def segment_priority_mode(orders: DataFrame,
     )
 
 
-def gap_session_ids(events: DataFrame, gap_sec: int = 1800) -> DataFrame:
+SESSION_GAP_SEC = 1800
+
+
+def gap_session_ids(events: DataFrame) -> DataFrame:
     """Per-user gaps-and-islands session assignment — THE shared
     boundary semantics for every fixed-gap session query (a gap of
-    >= gap_sec seconds starts a new session; ties inside a session
+    >= SESSION_GAP_SEC seconds starts a new session; ties inside a session
     break on (ts, event_id) so derived firsts/lasts are deterministic
     under equal timestamps). Adds ``ets`` (epoch seconds) and ``sid``
     (1-based per-user session ordinal). Partition key is user_id —
@@ -275,14 +295,13 @@ def gap_session_ids(events: DataFrame, gap_sec: int = 1800) -> DataFrame:
     prev = F.lag(ets).over(w_user)
     marked = events.withColumn("ets", ets).withColumn(
         "new_s",
-        (prev.isNull() | ((ets - prev) >= gap_sec)).cast("int"))
+        (prev.isNull() | ((ets - prev) >= SESSION_GAP_SEC)).cast("int"))
     sid = F.sum("new_s").over(
         w_user.rowsBetween(Window.unboundedPreceding, 0))
     return marked.withColumn("sid", sid).drop("new_s")
 
 
-def session_touch_attribution(events: DataFrame,
-                              gap_sec: int = 1800) -> DataFrame:
+def session_touch_attribution(events: DataFrame) -> DataFrame:
     """First-touch / last-touch attribution over gap-based sessions:
     each user session (events separated by < gap) is labeled with its
     first and last event types, and session value rolls up per
@@ -295,7 +314,7 @@ def session_touch_attribution(events: DataFrame,
     w_full = w_sess.rowsBetween(Window.unboundedPreceding,
                                 Window.unboundedFollowing)
     per_event = (
-        gap_session_ids(events, gap_sec)
+        gap_session_ids(events)
         .withColumn("first_touch", F.first("event_type").over(w_sess))
         .withColumn("last_touch", F.last("event_type").over(w_full))
     )
@@ -354,8 +373,7 @@ def event_path_trigrams(events: DataFrame) -> DataFrame:
             .groupBy("path").agg(F.count("*").alias("n_paths")))
 
 
-def event_copresence_lift(events: DataFrame,
-                          scale: int = 1_000_000) -> DataFrame:
+def event_copresence_lift(events: DataFrame) -> DataFrame:
     """Market-basket co-presence lift: basket = (user, UTC day); for
     every unordered pair of event types sharing a basket, lift =
     P(a,b) / (P(a)·P(b)) reported as exact integer ppm
@@ -386,7 +404,7 @@ def event_copresence_lift(events: DataFrame,
         .join(F.broadcast(tb), "type_b")
         .crossJoin(F.broadcast(n_baskets))
         .select("type_a", "type_b", "n_ab", "n_a", "n_b",
-                F.expr(f"(n_ab * n_baskets * {scale}L) div (n_a * n_b)")
+                F.expr("(n_ab * n_baskets * 1000000L) div (n_a * n_b)")
                 .alias("lift_ppm"))
     )
 
@@ -417,11 +435,14 @@ def part_best_supplier(lineitem: DataFrame, supplier: DataFrame) -> DataFrame:
     )
 
 
-def brand_value_concentration(lineitem: DataFrame, part: DataFrame,
-                              threshold_ppm: int = 20000) -> DataFrame:
+BRAND_SHARE_MIN_PPM = 20000
+
+
+def brand_value_concentration(lineitem: DataFrame,
+                              part: DataFrame) -> DataFrame:
     """TPC-H Q11 shape (HAVING against a global scalar): per-brand
     discounted revenue, kept only where the brand's share exceeds
-    threshold_ppm of the corpus total. Money goes DECIMAL → exact cents
+    BRAND_SHARE_MIN_PPM of the corpus total. Money goes DECIMAL → exact cents
     (bigint) before the share arithmetic, so the global comparison is
     integer-exact; the share window runs over the tiny per-brand
     aggregate, never raw rows."""
@@ -443,7 +464,7 @@ def brand_value_concentration(lineitem: DataFrame, part: DataFrame,
             "share_ppm",
             F.expr("value_cents * 1000000").cast("bigint") / total)
         .withColumn("share_ppm", F.floor(F.col("share_ppm")).cast("bigint"))
-        .where(F.col("share_ppm") >= threshold_ppm)
+        .where(F.col("share_ppm") >= BRAND_SHARE_MIN_PPM)
     )
 
 
@@ -493,12 +514,16 @@ def merge_upsert(target: DataFrame, source: DataFrame,
     )
 
 
-def pattern_match_stats(events: DataFrame,
-                        pattern: str = "v+cp") -> DataFrame:
+# Row pattern over event-type initials: one-or-more views, a click, a
+# purchase. Shared by the stateful form (patterns.user_pattern_stats).
+CEP_PATTERN = "v+cp"
+
+
+def pattern_match_stats(events: DataFrame) -> DataFrame:
     """MATCH_RECOGNIZE-lite: declarative row-pattern matching over each
     user's event history. The per-user ordered event stream is encoded
-    as a character sequence (one char per event type) and the pattern —
-    here ``v+cp``: one-or-more views, then a click, then a purchase —
+    as a character sequence (one char per event type) and CEP_PATTERN —
+    ``v+cp``: one-or-more views, then a click, then a purchase —
     is scanned with leftmost non-overlapping regex semantics, exactly
     SQL:2016 MATCH_RECOGNIZE's ONE ROW PER MATCH / AFTER MATCH SKIP
     PAST LAST ROW mode for a concatenation-of-symbols pattern.
@@ -529,22 +554,22 @@ def pattern_match_stats(events: DataFrame,
                     "struct(ts, event_id, ch))), x -> x.ch), '')")
              .alias("seq"))
     )
-    m = F.expr(f"regexp_extract_all(seq, '{pattern}', 0)")
+    m = F.expr(f"regexp_extract_all(seq, '{CEP_PATTERN}', 0)")
     return per_user.select(
         "user_id", "n_events",
         F.size(m).alias("n_matches"),
         F.coalesce(
             F.expr(f"aggregate(transform(regexp_extract_all(seq, "
-                   f"'{pattern}', 0), x -> length(x)), 0, "
+                   f"'{CEP_PATTERN}', 0), x -> length(x)), 0, "
                    f"(a, b) -> a + b)"),
             F.lit(0)).cast("int").alias("sum_match_len"),
         F.coalesce(
             F.expr(f"array_max(transform(regexp_extract_all(seq, "
-                   f"'{pattern}', 0), x -> length(x)))"),
+                   f"'{CEP_PATTERN}', 0), x -> length(x)))"),
             F.lit(0)).cast("int").alias("max_match_len"))
 
 
-def ushape_attribution(events: DataFrame, gap_sec: int = 1800) -> DataFrame:
+def ushape_attribution(events: DataFrame) -> DataFrame:
     """Position-based (U-shaped) multi-touch attribution in exact
     integer basis points: every session carries 10,000 bps of credit —
     40% to the first touch, 40% to the last, 20% split evenly across
@@ -562,7 +587,7 @@ def ushape_attribution(events: DataFrame, gap_sec: int = 1800) -> DataFrame:
     """
     w_sess = Window.partitionBy("user_id", "sid").orderBy("ts", "event_id")
     per_event = (
-        gap_session_ids(events, gap_sec)
+        gap_session_ids(events)
         .withColumn("rn", F.row_number().over(w_sess))
         .withColumn("n", F.count("*").over(
             w_sess.rowsBetween(Window.unboundedPreceding,
@@ -633,11 +658,13 @@ def sole_fault_suppliers(lineitem: DataFrame, orders: DataFrame,
     )
 
 
-def funnel_conversion(events: DataFrame,
-                      window_sec: int = 3 * 86400) -> DataFrame:
+FUNNEL_WINDOW_SEC = 3 * 86400
+
+
+def funnel_conversion(events: DataFrame) -> DataFrame:
     """Ordered, time-bounded funnel (view → click → purchase): a user
     converts stage k only with an event STRICTLY after their stage-k-1
-    time and within ``window_sec`` of it — the sessionized-conversion
+    time and within FUNNEL_WINDOW_SEC of it — the sessionized-conversion
     analysis every product pipeline runs.
 
     Scale shape: three conditional min-aggregates chained by joins, ALL
@@ -653,12 +680,12 @@ def funnel_conversion(events: DataFrame,
     c = (events.where(F.col("event_type") == "click")
          .join(v, "user_id")
          .where((ep("ts") > F.col("v_ts"))
-                & (ep("ts") <= F.col("v_ts") + window_sec))
+                & (ep("ts") <= F.col("v_ts") + FUNNEL_WINDOW_SEC))
          .groupBy("user_id").agg(F.min(ep("ts")).alias("c_ts")))
     p = (events.where(F.col("event_type") == "purchase")
          .join(c, "user_id")
          .where((ep("ts") > F.col("c_ts"))
-                & (ep("ts") <= F.col("c_ts") + window_sec))
+                & (ep("ts") <= F.col("c_ts") + FUNNEL_WINDOW_SEC))
          .groupBy("user_id").agg(F.min(ep("ts")).alias("p_ts")))
     staged = (
         v.join(c, "user_id", "left").join(p, "user_id", "left")
@@ -732,11 +759,13 @@ def _rev_x10000() -> F.Column:
     )
 
 
+LARGE_VOLUME_MIN_QTY = 280
+
+
 def large_volume_customers(lineitem: DataFrame, orders: DataFrame,
-                           customer: DataFrame,
-                           min_qty: int = 280) -> DataFrame:
+                           customer: DataFrame) -> DataFrame:
     """TPC-H Q18 shape (large-volume customers): orders whose total
-    line quantity exceeds ``min_qty``, with their customer.
+    line quantity exceeds LARGE_VOLUME_MIN_QTY, with their customer.
 
     Scale shape: the HAVING subquery is ONE per-order aggregate (the
     only full-fact shuffle); the survivors are a ~top-percentile sliver,
@@ -747,7 +776,7 @@ def large_volume_customers(lineitem: DataFrame, orders: DataFrame,
     big = (
         lineitem.groupBy("l_orderkey")
         .agg(F.sum(F.col("l_quantity").cast("bigint")).alias("sum_qty"))
-        .where(F.col("sum_qty") > min_qty)
+        .where(F.col("sum_qty") > LARGE_VOLUME_MIN_QTY)
     )
     hits = (
         orders.join(F.broadcast(big),
@@ -897,14 +926,17 @@ def local_supplier_volume(lineitem: DataFrame, orders: DataFrame,
              F.sum("rev").cast("bigint").alias("rev_x10000"))
     )
 
+SHIP_PRIORITY_SEGMENT = "BUILDING"
+SHIP_PRIORITY_CUTOFF = "1998-06-01"
+SHIP_PRIORITY_K = 10
+
+
 def shipping_priority_topk(customer: DataFrame, orders: DataFrame,
-                           lineitem: DataFrame,
-                           segment: str = "BUILDING",
-                           cutoff: str = "1998-06-01",
-                           k: int = 10) -> DataFrame:
-    """TPC-H Q3 shape (shipping priority): the ``k`` highest-revenue
-    orders placed before ``cutoff`` by customers in ``segment`` with
-    lines still shipping after it.
+                           lineitem: DataFrame) -> DataFrame:
+    """TPC-H Q3 shape (shipping priority): the SHIP_PRIORITY_K
+    highest-revenue orders placed before SHIP_PRIORITY_CUTOFF by
+    customers in SHIP_PRIORITY_SEGMENT with lines still shipping after
+    it.
 
     Scale shape: the segment filter prunes customer at its scan but
     still leaves ~1/5 of a 100-TB customer table — so customer⋈orders
@@ -914,12 +946,12 @@ def shipping_priority_topk(customer: DataFrame, orders: DataFrame,
     aggregate — each partition ships only its local k rows, never the
     full aggregate. Ties are impossible: orderkey is in the sort key.
     """
-    cust = (customer.where(F.col("c_mktsegment") == segment)
+    cust = (customer.where(F.col("c_mktsegment") == SHIP_PRIORITY_SEGMENT)
             .select("c_custkey"))
-    o = (orders.where(F.col("o_orderdate") < cutoff)
+    o = (orders.where(F.col("o_orderdate") < SHIP_PRIORITY_CUTOFF)
          .join(cust, F.col("o_custkey") == F.col("c_custkey"))
          .select("o_orderkey", "o_orderdate"))
-    li = (lineitem.where(F.col("l_shipdate") > cutoff)
+    li = (lineitem.where(F.col("l_shipdate") > SHIP_PRIORITY_CUTOFF)
           .select("l_orderkey", _rev_x10000().alias("rev")))
     return (
         li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
@@ -929,17 +961,21 @@ def shipping_priority_topk(customer: DataFrame, orders: DataFrame,
         .agg(F.count("*").alias("n_lines"),
              F.sum("rev").cast("bigint").alias("rev_x10000"))
         .orderBy(F.col("rev_x10000").desc(), F.col("o_orderkey"))
-        .limit(k)
+        .limit(SHIP_PRIORITY_K)
     )
 
 
-def forecast_revenue_change(lineitem: DataFrame,
-                            year: int = 1997,
-                            disc_lo: int = 5, disc_hi: int = 7,
-                            max_qty: int = 24) -> DataFrame:
+# The years the TPC-H shapes below filter on: single-year queries use
+# YEAR_LO, two-year windows [YEAR_LO, YEAR_HI].
+YEAR_LO, YEAR_HI = 1997, 1998
+FORECAST_DISC_LO, FORECAST_DISC_HI = 5, 7
+FORECAST_MAX_QTY = 24
+
+
+def forecast_revenue_change(lineitem: DataFrame) -> DataFrame:
     """TPC-H Q6 shape (forecast revenue change): revenue that would
-    have been kept had discounts in [disc_lo, disc_hi] cents-percent
-    on small-quantity lines of ``year`` been dropped.
+    have been kept had discounts in [FORECAST_DISC_LO, FORECAST_DISC_HI]
+    cents-percent on small-quantity lines of YEAR_LO been dropped.
 
     Scale shape: the whole query is scan + filter + one scalar
     aggregate; the date/quantity predicates reach the parquet scan as
@@ -952,22 +988,23 @@ def forecast_revenue_change(lineitem: DataFrame,
     kept = F.expr("cast(round(l_extendedprice * 100, 0) as bigint)") * disc
     return (
         lineitem
-        .where((F.col("l_shipdate") >= f"{year}-01-01")
-               & (F.col("l_shipdate") < f"{year + 1}-01-01")
-               & (F.col("l_quantity") < max_qty)
-               & disc.between(disc_lo, disc_hi))
+        .where((F.col("l_shipdate") >= f"{YEAR_LO}-01-01")
+               & (F.col("l_shipdate") < f"{YEAR_LO + 1}-01-01")
+               & (F.col("l_quantity") < FORECAST_MAX_QTY)
+               & disc.between(FORECAST_DISC_LO, FORECAST_DISC_HI))
         .agg(F.count("*").alias("n_lines"),
              F.sum(kept).cast("bigint").alias("forecast_rev_x10000"))
     )
 
 
+VOLUME_PAIR = ("NATION_3", "NATION_14")
+
+
 def volume_shipping(lineitem: DataFrame, orders: DataFrame,
                     customer: DataFrame, supplier: DataFrame,
-                    nation: DataFrame,
-                    pair: tuple[str, str] = ("NATION_3", "NATION_14"),
-                    y_lo: int = 1997, y_hi: int = 1998) -> DataFrame:
+                    nation: DataFrame) -> DataFrame:
     """TPC-H Q7 shape (volume shipping): discounted revenue shipped
-    between the two nations of ``pair`` (both directions), per
+    between the two nations of VOLUME_PAIR (both directions), per
     (supplier nation, customer nation, ship year).
 
     Scale shape: the pair filter lands INSIDE both dimension scans —
@@ -978,7 +1015,7 @@ def volume_shipping(lineitem: DataFrame, orders: DataFrame,
     (supp_nation <> cust_nation) because both sides are already
     pair-limited.
     """
-    ns = nation.where(F.col("n_name").isin(list(pair)))
+    ns = nation.where(F.col("n_name").isin(list(VOLUME_PAIR)))
     supp = (supplier.join(F.broadcast(ns),
                           F.col("s_nationkey") == F.col("n_nationkey"))
             .select("s_suppkey", F.col("n_name").alias("supp_nation")))
@@ -987,8 +1024,8 @@ def volume_shipping(lineitem: DataFrame, orders: DataFrame,
             .select("c_custkey", F.col("n_name").alias("cust_nation")))
     j = (
         lineitem
-        .where((F.col("l_shipdate") >= f"{y_lo}-01-01")
-               & (F.col("l_shipdate") < f"{y_hi + 1}-01-01"))
+        .where((F.col("l_shipdate") >= f"{YEAR_LO}-01-01")
+               & (F.col("l_shipdate") < f"{YEAR_HI + 1}-01-01"))
         .select("l_orderkey", "l_suppkey", "l_shipdate",
                 _rev_x10000().alias("rev"))
         .join(F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"))
@@ -1005,18 +1042,17 @@ def volume_shipping(lineitem: DataFrame, orders: DataFrame,
     )
 
 
+MARKET_NATION, MARKET_REGION, MARKET_PTYPE = "NATION_3", "ASIA", "ECONOMY"
+
+
 def nation_market_share(lineitem: DataFrame, orders: DataFrame,
                         customer: DataFrame, supplier: DataFrame,
                         nation: DataFrame, region: DataFrame,
-                        part: DataFrame,
-                        target: str = "NATION_3",
-                        rgn: str = "ASIA",
-                        ptype: str = "ECONOMY",
-                        y_lo: int = 1997, y_hi: int = 1998) -> DataFrame:
+                        part: DataFrame) -> DataFrame:
     """TPC-H Q8 shape (national market share): of the revenue from
-    ``ptype`` parts sold to ``rgn`` customers in [y_lo, y_hi], the
-    share carried by suppliers of ``target``, per order year, in exact
-    integer basis points.
+    MARKET_PTYPE parts sold to MARKET_REGION customers in [YEAR_LO,
+    YEAR_HI], the share carried by suppliers of MARKET_NATION, per order
+    year, in exact integer basis points.
 
     Scale shape: part (type-pruned), supplier (carrying an is_target
     flag so the share needs no second pass), and the region→nation
@@ -1024,9 +1060,9 @@ def nation_market_share(lineitem: DataFrame, orders: DataFrame,
     keys (orderkey, custkey). The share divides the two exact
     fixed-point sums — CASE inside the aggregate, never a self-join.
     """
-    pt = part.where(F.col("p_type") == ptype).select("p_partkey")
+    pt = part.where(F.col("p_type") == MARKET_PTYPE).select("p_partkey")
     rn = (nation.join(F.broadcast(
-            region.where(F.col("r_name") == rgn)),
+            region.where(F.col("r_name") == MARKET_REGION)),
             F.col("n_regionkey") == F.col("r_regionkey"))
           .select("n_nationkey"))
     supp = (supplier.join(F.broadcast(nation.select(
@@ -1034,15 +1070,16 @@ def nation_market_share(lineitem: DataFrame, orders: DataFrame,
                 F.col("n_name").alias("supp_nation"))),
             F.col("s_nationkey") == F.col("sn_key"))
             .select("s_suppkey",
-                    (F.col("supp_nation") == target).alias("is_target")))
+                    (F.col("supp_nation") == MARKET_NATION)
+                    .alias("is_target")))
     j = (
         lineitem.join(F.broadcast(pt),
                       F.col("l_partkey") == F.col("p_partkey"))
         .select("l_orderkey", "l_suppkey", _rev_x10000().alias("rev"))
         .join(F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"))
         .join(orders
-              .where((F.col("o_orderdate") >= f"{y_lo}-01-01")
-                     & (F.col("o_orderdate") < f"{y_hi + 1}-01-01"))
+              .where((F.col("o_orderdate") >= f"{YEAR_LO}-01-01")
+                     & (F.col("o_orderdate") < f"{YEAR_HI + 1}-01-01"))
               .select("o_orderkey", "o_custkey", "o_orderdate"),
               F.col("l_orderkey") == F.col("o_orderkey"))
         .join(customer.select("c_custkey", "c_nationkey"),
@@ -1061,12 +1098,14 @@ def nation_market_share(lineitem: DataFrame, orders: DataFrame,
     )
 
 
+PROFIT_WORD = "widget"
+
+
 def product_type_profit(lineitem: DataFrame, orders: DataFrame,
                         part: DataFrame, supplier: DataFrame,
-                        nation: DataFrame,
-                        word: str = "widget") -> DataFrame:
+                        nation: DataFrame) -> DataFrame:
     """TPC-H Q9 shape (product type profit): per (supplier nation,
-    order year), profit from parts whose name ends in ``word`` —
+    order year), profit from parts whose name ends in PROFIT_WORD —
     discounted revenue minus quantity-scaled cost. This corpus has no
     partsupp, so p_retailprice stands in for ps_supplycost; the
     name-LIKE dimension prune + nation/year profit rollup is the
@@ -1078,7 +1117,7 @@ def product_type_profit(lineitem: DataFrame, orders: DataFrame,
     cost-cents×qty×100, summed as bigint (may be negative — retail
     overstates cost).
     """
-    pw = (part.where(F.col("p_name").like(f"% {word}"))
+    pw = (part.where(F.col("p_name").like(f"% {PROFIT_WORD}"))
           .select("p_partkey",
                   F.expr("cast(round(p_retailprice * 100, 0) as bigint)")
                   .alias("cost_cents")))
@@ -1104,13 +1143,15 @@ def product_type_profit(lineitem: DataFrame, orders: DataFrame,
     )
 
 
+RETURNS_Q_START, RETURNS_Q_END = "1997-07-01", "1997-10-01"
+RETURNS_K = 20
+
+
 def returned_item_reporting(lineitem: DataFrame, orders: DataFrame,
-                            customer: DataFrame, nation: DataFrame,
-                            q_start: str = "1997-07-01",
-                            q_end: str = "1997-10-01",
-                            k: int = 20) -> DataFrame:
-    """TPC-H Q10 shape (returned item reporting): the ``k`` customers
-    who lost the most revenue to returns in one quarter.
+                            customer: DataFrame,
+                            nation: DataFrame) -> DataFrame:
+    """TPC-H Q10 shape (returned item reporting): the RETURNS_K
+    customers who lost the most revenue to returns in one quarter.
 
     Scale shape: the returnflag and quarter predicates reach their
     scans; lineitem⋈orders shuffles on orderkey, the per-customer
@@ -1120,8 +1161,8 @@ def returned_item_reporting(lineitem: DataFrame, orders: DataFrame,
     """
     li = (lineitem.where(F.col("l_returnflag") == "R")
           .select("l_orderkey", _rev_x10000().alias("rev")))
-    o = (orders.where((F.col("o_orderdate") >= q_start)
-                      & (F.col("o_orderdate") < q_end))
+    o = (orders.where((F.col("o_orderdate") >= RETURNS_Q_START)
+                      & (F.col("o_orderdate") < RETURNS_Q_END))
          .select("o_orderkey", "o_custkey"))
     per_cust = (
         li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
@@ -1139,23 +1180,21 @@ def returned_item_reporting(lineitem: DataFrame, orders: DataFrame,
                 F.col("n_name").alias("cust_nation"),
                 "n_return_lines", "lost_rev_x10000")
         .orderBy(F.col("lost_rev_x10000").desc(), F.col("c_custkey"))
-        .limit(k)
+        .limit(RETURNS_K)
     )
 
 
 SUPPLIER_CNT_SIZES = (9, 14, 19, 23, 36, 45, 49)
+SUPPLIER_CNT_BRAND_EXCL, SUPPLIER_CNT_TYPE_EXCL = "Brand#5", "ECONOMY"
+SUPPLIER_CNT_MIN_BAL = 1000.0
 
 
 def supplier_relation_counts(lineitem: DataFrame, part: DataFrame,
-                             supplier: DataFrame,
-                             brand_excl: str = "Brand#5",
-                             type_excl: str = "ECONOMY",
-                             sizes: tuple[int, ...] = SUPPLIER_CNT_SIZES,
-                             min_bal: float = 1000.0) -> DataFrame:
+                             supplier: DataFrame) -> DataFrame:
     """TPC-H Q16 shape (parts/supplier relationship): distinct
     suppliers able to ship each (brand, type, size) bucket, excluding
     one brand, one type, sizes outside the list, and a complaint set
-    of suppliers (acctbal below ``min_bal`` stands in for the comment
+    of suppliers (acctbal below SUPPLIER_CNT_MIN_BAL stands in for the comment
     match — this corpus has no comments).
 
     Scale shape: this corpus has no partsupp, so the part↔supplier
@@ -1164,10 +1203,11 @@ def supplier_relation_counts(lineitem: DataFrame, part: DataFrame,
     The complaint set broadcasts as a left-anti join; the final
     count-distinct re-shuffles only the deduped relation.
     """
-    pr = part.where((F.col("p_brand") != brand_excl)
-                    & (F.col("p_type") != type_excl)
-                    & F.col("p_size").isin(list(sizes)))
-    bad = supplier.where(F.col("s_acctbal") < min_bal).select("s_suppkey")
+    pr = part.where((F.col("p_brand") != SUPPLIER_CNT_BRAND_EXCL)
+                    & (F.col("p_type") != SUPPLIER_CNT_TYPE_EXCL)
+                    & F.col("p_size").isin(list(SUPPLIER_CNT_SIZES)))
+    bad = supplier.where(
+        F.col("s_acctbal") < SUPPLIER_CNT_MIN_BAL).select("s_suppkey")
     rel = (
         lineitem.select("l_partkey", "l_suppkey")
         .join(F.broadcast(pr), F.col("l_partkey") == F.col("p_partkey"))
@@ -1185,13 +1225,15 @@ def supplier_relation_counts(lineitem: DataFrame, part: DataFrame,
     )
 
 
+DOMINANT_PREFIX = "cold"
+
+
 def dominant_part_suppliers(lineitem: DataFrame, part: DataFrame,
-                            supplier: DataFrame, nation: DataFrame,
-                            prefix: str = "cold",
-                            year: int = 1997) -> DataFrame:
+                            supplier: DataFrame,
+                            nation: DataFrame) -> DataFrame:
     """TPC-H Q20 shape (potential part promotion): suppliers who, for
-    some part named ``prefix …``, shipped MORE than half that part's
-    total ``year`` volume — Q20's correlated availability threshold
+    some part named ``DOMINANT_PREFIX …``, shipped MORE than half that
+    part's total YEAR_LO volume — Q20's correlated availability threshold
     (availqty > 0.5·sum) re-expressed over the shipped relation, with
     the supplier's nation reported instead of filtered (a 10-supplier
     fixture can leave any single nation empty).
@@ -1203,11 +1245,12 @@ def dominant_part_suppliers(lineitem: DataFrame, part: DataFrame,
     broadcasts into the supplier probe (never the reverse — supplier
     is 10 rows here but ~1B at 100 TB); nation broadcasts.
     """
-    pr = part.where(F.col("p_name").like(f"{prefix} %")).select("p_partkey")
+    pr = part.where(
+        F.col("p_name").like(f"{DOMINANT_PREFIX} %")).select("p_partkey")
     ps = (
         lineitem
-        .where((F.col("l_shipdate") >= f"{year}-01-01")
-               & (F.col("l_shipdate") < f"{year + 1}-01-01"))
+        .where((F.col("l_shipdate") >= f"{YEAR_LO}-01-01")
+               & (F.col("l_shipdate") < f"{YEAR_LO + 1}-01-01"))
         .join(F.broadcast(pr), F.col("l_partkey") == F.col("p_partkey"))
         .groupBy("l_partkey", "l_suppkey")
         .agg(F.sum(F.col("l_quantity").cast("bigint")).alias("pair_qty"))
@@ -1249,16 +1292,17 @@ def _doc_agg_state(docs: DataFrame) -> DataFrame:
         .alias("lang_bitmap"))
 
 
-def incremental_state_merge(documents: DataFrame,
-                            delta_mod: int = 10,
-                            delta_from: int = 8) -> DataFrame:
+DELTA_MOD, DELTA_FROM = 10, 8
+
+
+def incremental_state_merge(documents: DataFrame) -> DataFrame:
     """Materialized-view maintenance contract: per-source aggregate
     state computed on the BASE corpus and on a DELTA batch separately,
     then merged state-with-state — the oracle recomputes the view from
     the full corpus in one pass, so hash parity IS the proof that
     merge(state(base), state(delta)) == state(base ∪ delta).
 
-    The split is deterministic (doc_id % delta_mod >= delta_from plays
+    The split is deterministic (doc_id % DELTA_MOD >= DELTA_FROM plays
     the newly-ingested batch), so both engines and every re-run see the
     same base/delta.
 
@@ -1275,8 +1319,8 @@ def incremental_state_merge(documents: DataFrame,
     # vanish from the merged view while the one-pass oracle counts it.
     # NULL rides with the base (bucket 0).
     bucket = F.coalesce(
-        F.pmod(F.col("doc_id"), F.lit(delta_mod)), F.lit(0))
-    is_delta = bucket >= delta_from
+        F.pmod(F.col("doc_id"), F.lit(DELTA_MOD)), F.lit(0))
+    is_delta = bucket >= DELTA_FROM
     base_state = _doc_agg_state(documents.where(~is_delta))
     delta_state = _doc_agg_state(documents.where(is_delta))
     merged = (

@@ -17,6 +17,13 @@ from pyspark.sql.window import Window
 
 QUANT = 1000  # fixed-point scale for oracle-exact arithmetic
 EMB_DIM = 64  # embeddings table dimension (TESTDATA.md)
+# Query batch and result depth of every ANN layout: the first N_QUERIES
+# vectors ask for their top TOP_K; re-rank compositions propose
+# RERANK_POOL candidates per query. The registry's oracle SQL hard-codes
+# the same values.
+N_QUERIES = 10
+TOP_K = 5
+RERANK_POOL = 20
 
 
 def quantized(embeddings: DataFrame) -> DataFrame:
@@ -52,8 +59,8 @@ def _dot(a: str, b: str) -> F.Column:
         f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0L, (acc, v) -> acc + v)")
 
 
-def brute_force_topk(embeddings: DataFrame, n_queries: int = 10,
-                     k: int = 5) -> DataFrame:
+def brute_force_topk(embeddings: DataFrame, n_queries: int = N_QUERIES,
+                     k: int = TOP_K) -> DataFrame:
     """Exact top-k by integer dot product for the first ``n_queries``
     vectors. Query side is broadcast (tiny); corpus side streams through —
     no shuffle of the corpus, one narrow pass + per-query top-k.
@@ -74,8 +81,7 @@ def brute_force_topk(embeddings: DataFrame, n_queries: int = 10,
     )
 
 
-def cosine_topk_float(embeddings: DataFrame, n_queries: int = 10,
-                      k: int = 5) -> DataFrame:
+def cosine_topk_float(embeddings: DataFrame) -> DataFrame:
     """Production float cosine top-k (not oracle-hashed; rank ties broken
     by vec_id so output is still deterministic)."""
     e = embeddings.select(
@@ -84,7 +90,7 @@ def cosine_topk_float(embeddings: DataFrame, n_queries: int = 10,
     e = e.withColumn(
         "norm", F.sqrt(F.expr(
             "aggregate(v, cast(0 as double), (acc, x) -> acc + x * x)")))
-    queries = e.where(F.col("vec_id") < n_queries).select(
+    queries = e.where(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv"),
         F.col("norm").alias("qnorm"))
     scored = (
@@ -98,7 +104,7 @@ def cosine_topk_float(embeddings: DataFrame, n_queries: int = 10,
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= TOP_K)
         .select("query_id", "vec_id", F.round("cos", 6).alias("cos"), "rank")
     )
 
@@ -133,13 +139,12 @@ def lsh_bucket_sql(vec_col: str, planes: int = LSH_PLANES) -> str:
     return "CAST(" + " + ".join(terms) + " AS INT)"
 
 
-def lsh_bucketed_neighbors(embeddings: DataFrame, n_queries: int = 10,
-                           k: int = 5) -> DataFrame:
+def lsh_bucketed_neighbors(embeddings: DataFrame) -> DataFrame:
     """ANN: join query and corpus on LSH bucket, exact top-k inside the
     bucket. The corpus-side shuffle key is the bucket (256 buckets of
     roughly equal size under random vectors)."""
     q = quantized(embeddings).withColumn("bucket", lsh_bucket_expr("q"))
-    queries = q.where(F.col("vec_id") < n_queries).select(
+    queries = q.where(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("q").alias("qv"),
         F.col("bucket"))
     cand = (
@@ -150,7 +155,7 @@ def lsh_bucketed_neighbors(embeddings: DataFrame, n_queries: int = 10,
     w = Window.partitionBy("query_id").orderBy(F.desc("dot"), F.asc("vec_id"))
     return (
         cand.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= TOP_K)
         .select("query_id", "vec_id", "dot", "rank")
     )
 
@@ -158,7 +163,7 @@ def lsh_bucketed_neighbors(embeddings: DataFrame, n_queries: int = 10,
 N_CENTROIDS = 16
 
 
-def ivf_topk(embeddings: DataFrame, n_queries: int = 10, k: int = 5,
+def ivf_topk(embeddings: DataFrame, n_queries: int = N_QUERIES, k: int = TOP_K,
              n_centroids: int = N_CENTROIDS, nprobe: int = 1) -> DataFrame:
     """IVF ANN (nprobe=1): the inverted-file layout that production ANN
     systems use at corpus scale, alongside the LSH-bucket variant.
@@ -242,7 +247,6 @@ def _argmax_dot_assign(q: DataFrame, cents: DataFrame,
 
 def ivf_assign_arrow(embeddings: DataFrame,
                      n_centroids: int = N_CENTROIDS,
-                     dim: int | None = None,
                      cents: DataFrame | None = None,
                      keep: tuple = ()) -> DataFrame:
     """Arrow/numpy scale form of ivf_assign — same (vec_id, q, *keep,
@@ -264,9 +268,9 @@ def ivf_assign_arrow(embeddings: DataFrame,
     ``cents`` overrides the codebook frame (cent_id, cv) — the frozen
     external codebook of the streaming ingest / incremental-assign
     paths; default derives it from ``embeddings`` like ivf_assign.
-    ``dim`` defaults to the codebook's own width (works for the 64-dim
+    The vector width is the codebook's own (works for the 64-dim
     table and the 32-dim bench corpus alike).
-    Contract: assigns exactly-``dim``-length NULL-free vectors (the
+    Contract: assigns exactly-codebook-width NULL-free vectors (the
     explicit malformed-row exclusion, same as pq_encode_arrow); a
     malformed CODEBOOK row is a ValueError, not a silent skew. Oracle
     queries keep the JVM form (registry plan guardrail); this is the
@@ -283,8 +287,8 @@ def ivf_assign_arrow(embeddings: DataFrame,
     rows = sorted(cents.collect(), key=lambda r: r["cent_id"])
     if not rows:
         raise ValueError("empty centroid codebook")
-    if dim is None:  # derive the vector width from the codebook itself
-        dim = len(rows[0]["cv"]) if rows[0]["cv"] is not None else 0
+    # the vector width is the codebook's own
+    dim = len(rows[0]["cv"]) if rows[0]["cv"] is not None else 0
     bad = [r["cent_id"] for r in rows
            if r["cv"] is None or len(r["cv"]) != dim
            or any(v is None for v in r["cv"])]
@@ -340,7 +344,7 @@ def ivf_assign_incremental(index: DataFrame, new_embeddings: DataFrame,
 
 
 def ivf_search(assigned: DataFrame, n_centroids: int,
-               n_queries: int = 10, k: int = 5,
+               n_queries: int = N_QUERIES, k: int = TOP_K,
                nprobe: int = 1) -> DataFrame:
     """Query an IVF index built by ``ivf_assign``: each query probes its
     top-``nprobe`` centroids (same dot ordering + tie-break as the
@@ -379,8 +383,8 @@ def ivf_search(assigned: DataFrame, n_centroids: int,
 FILTER_NPROBE = 2  # filtered search probes wider: predicate thins lists
 
 
-def ivf_filtered_topk(embeddings: DataFrame, n_queries: int = 10,
-                      k: int = 5, n_centroids: int = N_CENTROIDS,
+def ivf_filtered_topk(embeddings: DataFrame, n_queries: int = N_QUERIES,
+                      k: int = TOP_K, n_centroids: int = N_CENTROIDS,
                       nprobe: int = FILTER_NPROBE) -> DataFrame:
     """Metadata-filtered IVF search: top-k among candidates whose
     ``label`` equals the query's label — the attribute-predicate vector
@@ -469,8 +473,7 @@ def pq_codebook(embeddings: DataFrame, m: int = PQ_M, ksub: int = PQ_KSUB,
         .alias("cb"))
 
 
-def pq_codebook_trained(embeddings: DataFrame, m: int = PQ_M,
-                        ksub: int = PQ_KSUB, sub: int = PQ_SUB) -> DataFrame:
+def pq_codebook_trained(embeddings: DataFrame) -> DataFrame:
     """One Lloyd refinement round per subspace over the seed codebook —
     real PQ training (k-means in each subspace), distributed the same
     way as kmeans_centroids: encode is a broadcast-codebook narrow pass,
@@ -480,13 +483,13 @@ def pq_codebook_trained(embeddings: DataFrame, m: int = PQ_M,
     sub-slices to even occur). Measured on the fixture corpus: recall@5
     vs brute force 0.2 (seed) → 0.3, @20 0.46 → 0.6; production would
     run more rounds with identical shapes."""
-    seed = pq_codebook(embeddings, m, ksub, sub)
-    enc0 = pq_encode(embeddings, seed, m, ksub, sub)
+    seed = pq_codebook(embeddings)
+    enc0 = pq_encode(embeddings, seed)
     q = quantized(embeddings)
     subv = (
         q.select("vec_id", F.explode(F.expr(
-            f"transform(sequence(0, {m - 1}), mm -> struct(mm AS m, "
-            f"slice(q, mm * {sub} + 1, {sub}) AS sv))")).alias("s"))
+            f"transform(sequence(0, {PQ_M - 1}), mm -> struct(mm AS m, "
+            f"slice(q, mm * {PQ_SUB} + 1, {PQ_SUB}) AS sv))")).alias("s"))
         .select("vec_id", "s.m", "s.sv"))
     means = (
         enc0.select("vec_id", F.posexplode("codes").alias("m", "code"))
@@ -635,7 +638,7 @@ def _pq_lut_expr(vec_col: str, m: int = PQ_M, ksub: int = PQ_KSUB,
 
 
 def pq_search(encoded: DataFrame, embeddings: DataFrame,
-              codebook: DataFrame, n_queries: int = 10, k: int = 5,
+              codebook: DataFrame, n_queries: int = N_QUERIES, k: int = TOP_K,
               m: int = PQ_M, ksub: int = PQ_KSUB,
               sub: int = PQ_SUB) -> DataFrame:
     """Asymmetric-distance (ADC) top-k over PQ codes: each query
@@ -669,8 +672,8 @@ def pq_search(encoded: DataFrame, embeddings: DataFrame,
     )
 
 
-def pq_topk(embeddings: DataFrame, n_queries: int = 10,
-            k: int = 5) -> DataFrame:
+def pq_topk(embeddings: DataFrame, n_queries: int = N_QUERIES,
+            k: int = TOP_K) -> DataFrame:
     """PQ ANN end-to-end: codebook → encode (the index) → ADC search.
     The fourth ANN layout next to brute-force / sign-LSH / IVF — the one
     that trades recall for a 64× smaller in-memory index. Production
@@ -681,10 +684,9 @@ def pq_topk(embeddings: DataFrame, n_queries: int = 10,
                      n_queries=n_queries, k=k)
 
 
-def pq_rerank_topk(embeddings: DataFrame, n_queries: int = 10,
-                   k: int = 5, pool: int = 20, m: int = PQ_M,
-                   ksub: int = PQ_KSUB, sub: int = PQ_SUB) -> DataFrame:
-    """PQ as deployed: ADC proposes a ``pool``-sized candidate set per
+def pq_rerank_topk(embeddings: DataFrame, n_queries: int = N_QUERIES,
+                   k: int = TOP_K) -> DataFrame:
+    """PQ as deployed: ADC proposes a RERANK_POOL-sized candidate set per
     query, an EXACT integer dot re-ranks it to top-k. The re-rank join
     broadcasts the tiny (query, candidate) pool against the corpus —
     one narrow corpus probe keyed by vec_id, no extra shuffle — so its
@@ -693,10 +695,10 @@ def pq_rerank_topk(embeddings: DataFrame, n_queries: int = 10,
     (fixed 4-byte code budget vs ~3.9k-member clusters), pool=100 +
     re-rank 0.82 for +2.3 s — the quantization error bounds WHICH
     candidates surface, the re-rank restores the ordering."""
-    cb = pq_codebook(embeddings, m, ksub, sub)
-    cands = pq_search(pq_encode(embeddings, cb, m, ksub, sub),
-                      embeddings, cb, n_queries=n_queries, k=pool,
-                      m=m, ksub=ksub, sub=sub).select("query_id", "vec_id")
+    cb = pq_codebook(embeddings)
+    cands = pq_search(pq_encode(embeddings, cb), embeddings, cb,
+                      n_queries=n_queries, k=RERANK_POOL
+                      ).select("query_id", "vec_id")
     return _exact_rerank(embeddings, cands, n_queries, k)
 
 
@@ -726,9 +728,8 @@ def _exact_rerank(embeddings: DataFrame, cands: DataFrame,
 
 
 def ivfpq_build(embeddings: DataFrame, n_centroids: int = N_CENTROIDS,
-                m: int = PQ_M, ksub: int = PQ_KSUB, sub: int = PQ_SUB,
-                arrow: bool = False) -> tuple[DataFrame, DataFrame,
-                                              DataFrame]:
+                m: int = PQ_M, ksub: int = PQ_KSUB, sub: int = PQ_SUB
+                ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Build the IVF-PQ index once: returns (index, cb, cents) where
     index = (vec_id, cent_id, codes) — ivf_assign's list key joined to
     pq_encode's codes — cb the PQ codebook and cents the coarse
@@ -739,25 +740,23 @@ def ivfpq_build(embeddings: DataFrame, n_centroids: int = N_CENTROIDS,
     recall-vs-cost curve (bench/ann_scale.py) measure SEARCH cost, not
     9 redundant index builds.
 
-    ``arrow=True`` swaps the encode stage for pq_encode_arrow — the
-    deployed index-build path (identical codes, pinned by
-    test_pq_encode_arrow_matches_jvm). Default stays the JVM expression
-    form because oracle-registered queries must carry no Python stage
-    (registry plan guardrail)."""
-    encode = pq_encode_arrow if arrow else pq_encode
+    The encode stage is the JVM expression form, because
+    oracle-registered queries must carry no Python stage (registry plan
+    guardrail); pq_encode_arrow is its Arrow twin (identical codes,
+    pinned by test_pq_encode_arrow_matches_jvm)."""
     cb = pq_codebook(embeddings, m, ksub, sub)
     assigned = ivf_assign(embeddings, n_centroids)
     index = (assigned.select("vec_id", "cent_id")
-             .join(encode(embeddings, cb, m, ksub, sub), "vec_id"))
+             .join(pq_encode(embeddings, cb, m, ksub, sub), "vec_id"))
     cents = assigned.where(F.col("vec_id") < n_centroids).select(
         F.col("vec_id").alias("cent_id"), F.col("q").alias("cv"))
     return index, cb, cents
 
 
 def ivfpq_search(index: DataFrame, cb: DataFrame, cents: DataFrame,
-                 embeddings: DataFrame, n_queries: int = 10, k: int = 5,
-                 nprobe: int = 1, m: int = PQ_M, ksub: int = PQ_KSUB,
-                 sub: int = PQ_SUB) -> DataFrame:
+                 embeddings: DataFrame, n_queries: int = N_QUERIES,
+                 k: int = TOP_K, nprobe: int = 1, m: int = PQ_M,
+                 ksub: int = PQ_KSUB, sub: int = PQ_SUB) -> DataFrame:
     """Query a prebuilt IVF-PQ index (see ivfpq_build): probe nprobe
     centroids (exact dot, same tie-break as assignment) then ADC-score
     only those inverted lists. Scores are identical to pq_search over
@@ -799,10 +798,8 @@ def ivfpq_search(index: DataFrame, cb: DataFrame, cents: DataFrame,
     )
 
 
-def ivfpq_topk(embeddings: DataFrame, n_queries: int = 10, k: int = 5,
-               n_centroids: int = N_CENTROIDS, nprobe: int = 1,
-               m: int = PQ_M, ksub: int = PQ_KSUB,
-               sub: int = PQ_SUB) -> DataFrame:
+def ivfpq_topk(embeddings: DataFrame, n_queries: int = N_QUERIES,
+               k: int = TOP_K, nprobe: int = 1) -> DataFrame:
     """IVF-PQ: the layout billion-vector systems actually deploy — IVF
     inverted lists bound WHICH vectors a query touches (corpus /
     n_centroids × nprobe), PQ codes bound HOW MUCH is read per touched
@@ -810,16 +807,15 @@ def ivfpq_topk(embeddings: DataFrame, n_queries: int = 10, k: int = 5,
     ivfpq_build + ivfpq_search; recall inherits both knobs: nprobe
     recovers boundary neighbors, codebook training tightens the
     quantizer."""
-    index, cb, cents = ivfpq_build(embeddings, n_centroids, m, ksub, sub)
+    index, cb, cents = ivfpq_build(embeddings)
     return ivfpq_search(index, cb, cents, embeddings, n_queries=n_queries,
-                        k=k, nprobe=nprobe, m=m, ksub=ksub, sub=sub)
+                        k=k, nprobe=nprobe)
 
 
 NEARDUP_PLANES = 4
 
 
-def cosine_neardup_pairs(embeddings: DataFrame,
-                         planes: int = NEARDUP_PLANES) -> DataFrame:
+def cosine_neardup_pairs(embeddings: DataFrame) -> DataFrame:
     """Embedding-cosine near-duplicate pairs, the scale-sane way: LSH
     buckets prune the candidate space (shuffle key = bucket, never an
     all-pairs cross join), then an EXACT integer test keeps pairs with
@@ -831,7 +827,7 @@ def cosine_neardup_pairs(embeddings: DataFrame,
     q = (
         quantized(embeddings)
         .select("vec_id", "q",
-                lsh_bucket_expr("q", planes).alias("bucket"),
+                lsh_bucket_expr("q", NEARDUP_PLANES).alias("bucket"),
                 _dot("q", "q").alias("n2"))
     )
     a = q.select(F.col("vec_id").alias("vec_a"), F.col("q").alias("qa"),
@@ -850,7 +846,7 @@ def cosine_neardup_pairs(embeddings: DataFrame,
         & (dec("dot") * dec("dot") * 25 >= dec("norm_a") * dec("norm_b")))
 
 
-def label_centroids(embeddings: DataFrame, dim: int = EMB_DIM) -> DataFrame:
+def label_centroids(embeddings: DataFrame) -> DataFrame:
     """Per-label integer centroid of the quantized vectors — the
     aggregation half of k-means / IVF training, oracle-exact because
     sums run over fixed-point ints and the mean uses explicit floor()
@@ -862,7 +858,7 @@ def label_centroids(embeddings: DataFrame, dim: int = EMB_DIM) -> DataFrame:
     vectors. This is exactly how the IVF coarse quantizer's centroids
     are (re)computed distributedly.
     """
-    q = quantized(embeddings).where(F.size("q") == dim)
+    q = quantized(embeddings).where(F.size("q") == EMB_DIM)
     dims = q.select("label", F.posexplode("q").alias("dim", "v"))
     return (
         dims.groupBy("label", "dim")
@@ -926,18 +922,23 @@ def _lloyd_rounds(q: DataFrame, k: int, iters: int):
     return assigned, cent
 
 
-def kmeans_centroids(embeddings: DataFrame, k: int = 4,
-                     iters: int = 2) -> DataFrame:
+# Lloyd's k-means shape shared by kmeans_centroids and semantic_dedup:
+# KMEANS_K clusters seeded by the first vectors, KMEANS_ITERS rounds.
+KMEANS_K = 4
+KMEANS_ITERS = 2
+
+
+def kmeans_centroids(embeddings: DataFrame) -> DataFrame:
     """Fixed-iteration Lloyd's k-means over the quantized vectors — the
     full distributed training loop (assign → re-estimate), companion to
     the single re-estimation step in ``label_centroids`` and to the
     PageRank loop in operators/graph.py: a bounded number of rounds,
     each broadcast-assign + one map-side-combined aggregate
     (``_lloyd_rounds``). Returns (cluster, dim, centroid_q, n_assigned)
-    after ``iters`` rounds.
+    after KMEANS_ITERS rounds.
     """
     q = quantized(embeddings).select("vec_id", "q")
-    assigned, cent = _lloyd_rounds(q, k, iters)
+    assigned, cent = _lloyd_rounds(q, KMEANS_K, KMEANS_ITERS)
     sizes = assigned.groupBy("cluster").agg(
         F.count("*").alias("n_assigned"))
     dims = cent.select(
@@ -958,7 +959,8 @@ def kmeans_centroids(embeddings: DataFrame, k: int = 4,
 SEM_COS_P, SEM_COS_Q = 1, 4
 
 
-def semantic_dedup(embeddings: DataFrame, k: int = 4, iters: int = 2,
+def semantic_dedup(embeddings: DataFrame, k: int = KMEANS_K,
+                   iters: int = KMEANS_ITERS,
                    cos_p: int = SEM_COS_P,
                    cos_q: int = SEM_COS_Q) -> DataFrame:
     """SemDeDup-style semantic deduplication manifest (Abbas et al.
@@ -1041,21 +1043,17 @@ def cluster_neardup_manifest(assigned: DataFrame, cos_p: int = SEM_COS_P,
     )
 
 
-def ivfpq_rerank_topk(embeddings: DataFrame, n_queries: int = 10,
-                      k: int = 5, pool: int = 20,
-                      n_centroids: int = N_CENTROIDS, nprobe: int = 1,
-                      m: int = PQ_M, ksub: int = PQ_KSUB,
-                      sub: int = PQ_SUB) -> DataFrame:
+def ivfpq_rerank_topk(embeddings: DataFrame, n_queries: int = N_QUERIES,
+                      k: int = TOP_K, nprobe: int = 1) -> DataFrame:
     """The full production ANN stack in one plan: IVF lists bound WHICH
     vectors a query touches, PQ/ADC bounds the BYTES read per touched
-    vector to propose a ``pool``, and the exact integer re-rank
+    vector to propose a RERANK_POOL, and the exact integer re-rank
     (_exact_rerank) restores the true ordering over that pool — the
     search path billion-vector deployments actually run. Every stage's
     cost is index-bounded: corpus/n_centroids × nprobe candidates, m
     codes each, then O(pool × dim) exact work per query."""
-    cands = ivfpq_topk(embeddings, n_queries=n_queries, k=pool,
-                       n_centroids=n_centroids, nprobe=nprobe,
-                       m=m, ksub=ksub, sub=sub).select("query_id", "vec_id")
+    cands = ivfpq_topk(embeddings, n_queries=n_queries, k=RERANK_POOL,
+                       nprobe=nprobe).select("query_id", "vec_id")
     return _exact_rerank(embeddings, cands, n_queries, k)
 
 
@@ -1128,8 +1126,8 @@ def sq8_decode(coded: DataFrame, trained: DataFrame,
     )
 
 
-def sq8_search(decoded: DataFrame, n_queries: int = 10,
-               k: int = 5) -> DataFrame:
+def sq8_search(decoded: DataFrame, n_queries: int = N_QUERIES,
+               k: int = TOP_K) -> DataFrame:
     """Compressed-domain top-k over a PREBUILT decoded-code frame (the
     build-once/search-many split, mirroring ivf_assign/ivf_search):
     integer dot product on decoded values, per-query rank ≤ k. Queries
@@ -1150,8 +1148,7 @@ def sq8_search(decoded: DataFrame, n_queries: int = 10,
     )
 
 
-def sq8_topk(embeddings: DataFrame, n_queries: int = 10, k: int = 5,
-             dim: int = EMB_DIM) -> DataFrame:
+def sq8_topk(embeddings: DataFrame, k: int = TOP_K) -> DataFrame:
     """SQ8 compressed-domain top-k: integer dot product over decoded
     8-bit codes (both sides encode→decode), per-query rank ≤ k. Same
     streaming scan shape as brute_force_topk but each stored vector is
@@ -1160,27 +1157,23 @@ def sq8_topk(embeddings: DataFrame, n_queries: int = 10, k: int = 5,
     touched. One-shot composition of sq8_train → sq8_encode →
     sq8_decode → sq8_search; production persists the decoded frame and
     calls sq8_search per query batch."""
-    trained = sq8_train(embeddings, dim)
-    decoded = sq8_decode(sq8_encode(embeddings, trained, dim), trained, dim)
-    return sq8_search(decoded, n_queries=n_queries, k=k)
+    trained = sq8_train(embeddings)
+    decoded = sq8_decode(sq8_encode(embeddings, trained), trained)
+    return sq8_search(decoded, k=k)
 
 
-def sq8_rerank_topk(embeddings: DataFrame, n_queries: int = 10,
-                    k: int = 5, pool: int = 20,
-                    dim: int = EMB_DIM) -> DataFrame:
-    """SQ8 as deployed: the compressed scan proposes a ``pool``-sized
+def sq8_rerank_topk(embeddings: DataFrame) -> DataFrame:
+    """SQ8 as deployed: the compressed scan proposes a RERANK_POOL-sized
     candidate set, the exact integer dot re-ranks it to top-k
     (_exact_rerank: one narrow corpus probe keyed by vec_id). SQ8's
     per-dim error is small, so unlike PQ the pool rarely needs to be
     deep — the composition exists to make the recall exact-verifiable,
     not to rescue it."""
-    cands = sq8_topk(embeddings, n_queries=n_queries, k=pool,
-                     dim=dim).select("query_id", "vec_id")
-    return _exact_rerank(embeddings, cands, n_queries, k)
+    cands = sq8_topk(embeddings, k=RERANK_POOL).select("query_id", "vec_id")
+    return _exact_rerank(embeddings, cands, N_QUERIES, TOP_K)
 
 
-def hard_negative_topk(embeddings: DataFrame, n_queries: int = 10,
-                       k: int = 5) -> DataFrame:
+def hard_negative_topk(embeddings: DataFrame) -> DataFrame:
     """Hard-negative mining for contrastive training pairs: for each
     query vector, the top-k most-similar vectors with a DIFFERENT
     label — the negatives a contrastive loss learns most from.
@@ -1193,7 +1186,7 @@ def hard_negative_topk(embeddings: DataFrame, n_queries: int = 10,
     the ann_*_rerank composition.
     """
     q = quantized(embeddings)
-    queries = q.where(F.col("vec_id") < n_queries).select(
+    queries = q.where(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("label").alias("query_label"),
         F.col("q").alias("qv"))
@@ -1207,17 +1200,16 @@ def hard_negative_topk(embeddings: DataFrame, n_queries: int = 10,
     w = Window.partitionBy("query_id").orderBy(F.desc("dot"), F.asc("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= TOP_K)
     )
 
 
 TRUNC_DIM = 16  # Matryoshka prefix width: first 16 of the 64 dims
 
 
-def truncated_topk(embeddings: DataFrame, n_queries: int = 10,
-                   k: int = 5, d: int = TRUNC_DIM) -> DataFrame:
+def truncated_topk(embeddings: DataFrame, k: int = TOP_K) -> DataFrame:
     """Truncated-dimension ANN (Matryoshka-style): score on the first
-    ``d`` dimensions only — the THIRD compression axis next to PQ
+    TRUNC_DIM dimensions only — the THIRD compression axis next to PQ
     (fewer codewords) and SQ8 (fewer bits): fewer dims. A 4× prefix cut
     means a 4× cheaper scan and 4× smaller resident vectors; recall
     depends on how much mass the embedding packs into its prefix, so
@@ -1228,8 +1220,8 @@ def truncated_topk(embeddings: DataFrame, n_queries: int = 10,
     bytes-per-row, not a different plan.
     """
     q = quantized(embeddings)
-    t = q.select("vec_id", F.expr(f"slice(q, 1, {d})").alias("tq"))
-    queries = t.where(F.col("vec_id") < n_queries).select(
+    t = q.select("vec_id", F.expr(f"slice(q, 1, {TRUNC_DIM})").alias("tq"))
+    queries = t.where(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("tq").alias("qtv"))
     scored = (
         t.crossJoin(F.broadcast(queries))
@@ -1246,18 +1238,16 @@ def truncated_topk(embeddings: DataFrame, n_queries: int = 10,
     )
 
 
-def truncated_rerank_topk(embeddings: DataFrame, n_queries: int = 10,
-                          k: int = 5, pool: int = 20,
-                          d: int = TRUNC_DIM) -> DataFrame:
+def truncated_rerank_topk(embeddings: DataFrame,
+                          pool: int = RERANK_POOL) -> DataFrame:
     """Truncated-dim ANN as deployed: the prefix scan proposes a
     ``pool``-sized candidate set, the exact full-width integer dot
     re-ranks to top-k (_exact_rerank — one narrow vec_id-keyed corpus
     probe, O(pool × dim)/query). Same composition contract as
     sq8_rerank_topk/pq_rerank_topk, so the recall-floor property test
     class applies here too."""
-    cands = truncated_topk(embeddings, n_queries=n_queries, k=pool,
-                           d=d).select("query_id", "vec_id")
-    return _exact_rerank(embeddings, cands, n_queries, k)
+    cands = truncated_topk(embeddings, k=pool).select("query_id", "vec_id")
+    return _exact_rerank(embeddings, cands, N_QUERIES, TOP_K)
 
 
 # MMR diversified re-rank: relevance vs redundancy. λ = MMR_A/(MMR_A +
@@ -1412,9 +1402,7 @@ def _mmr_greedy_bulk(cand: DataFrame, k: int) -> DataFrame:
     )
 
 
-def ivf_recall_audit(embeddings: DataFrame, n_queries: int = 10,
-                     k: int = 5, n_centroids: int = N_CENTROIDS,
-                     nprobe: int = 1) -> DataFrame:
+def ivf_recall_audit(embeddings: DataFrame, nprobe: int = 1) -> DataFrame:
     """Per-query recall@k of the IVF index against the exact scan — the
     index-quality dashboard row a deployed ANN store recomputes after
     every build/re-cluster (bench/ann_scale.py measures the same
@@ -1427,10 +1415,8 @@ def ivf_recall_audit(embeddings: DataFrame, n_queries: int = 10,
     the expensive side (exact top-k); production samples n_queries ≪
     corpus and reuses the persisted index for the approx side — the
     audit costs one bounded scan, not a second index build."""
-    truth = brute_force_topk(embeddings, n_queries, k).select(
-        "query_id", "vec_id")
-    approx = ivf_topk(embeddings, n_queries, k, n_centroids,
-                      nprobe).select("query_id", "vec_id")
+    truth = brute_force_topk(embeddings).select("query_id", "vec_id")
+    approx = ivf_topk(embeddings, nprobe=nprobe).select("query_id", "vec_id")
     hits = (truth.join(approx, ["query_id", "vec_id"])
             .groupBy("query_id").agg(F.count("*").alias("n_hit")))
     base = truth.select("query_id").distinct()
@@ -1438,6 +1424,6 @@ def ivf_recall_audit(embeddings: DataFrame, n_queries: int = 10,
         base.join(hits, "query_id", "left")
         .select("query_id",
                 F.coalesce("n_hit", F.lit(0)).cast("int").alias("n_hit"),
-                F.expr(f"coalesce(n_hit, 0L) * 10000 div {k}")
+                F.expr(f"coalesce(n_hit, 0L) * 10000 div {TOP_K}")
                 .cast("bigint").alias("recall_bps"))
     )

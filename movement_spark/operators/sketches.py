@@ -64,8 +64,12 @@ def cms_cell_sql(col: str) -> str:
             f" % {CMS_P}) % {CMS_W} END")
 
 
-def cms_heavy_hitters(df: DataFrame, key: str, top_n: int = 10) -> DataFrame:
-    """Count-min-sketch frequency estimates for the exact top-N keys.
+CMS_TOP_N = 10
+
+
+def cms_heavy_hitters(df: DataFrame, key: str) -> DataFrame:
+    """Count-min-sketch frequency estimates for the exact top-CMS_TOP_N
+    keys.
 
     Builds the d×w counter grid from per-key partial counts (additivity
     makes that identical to per-row updates), then reports, for the N
@@ -85,7 +89,7 @@ def cms_heavy_hitters(df: DataFrame, key: str, top_n: int = 10) -> DataFrame:
                    .select(key, "cnt", "h.j", "h.cell")
     cells = hashed.groupBy("j", "cell").agg(
         F.sum("cnt").cast("bigint").alias("cell_cnt"))
-    top = counts.orderBy(F.desc("cnt"), F.asc(key)).limit(top_n)
+    top = counts.orderBy(F.desc("cnt"), F.asc(key)).limit(CMS_TOP_N)
     top_hashed = top.select(key, "cnt", F.explode(probe).alias("h")) \
                     .select(key, "cnt", "h.j", "h.cell")
     return (
@@ -280,10 +284,11 @@ def loglog_window_fold(grid: DataFrame, keys: list[str]) -> DataFrame:
 # and the k-th minimum wildly under-represents the range (estimate off
 # by 100×+, caught by tests/test_sketches.py::test_kmv_estimate_within_20pct).
 KMV_A, KMV_B, KMV_P, KMV_K = 1_103_515_245, 12_345, (1 << 31) - 1, 64
+KMV_TYPE_A, KMV_TYPE_B = "click", "purchase"  # kmv_set_algebra's two sets
 
 
-def _kmv_sketch(keys: DataFrame, k: int = KMV_K) -> DataFrame:
-    """k smallest distinct hashes of a one-column key frame — the KMV
+def _kmv_sketch(keys: DataFrame) -> DataFrame:
+    """KMV_K smallest distinct hashes of a one-column key frame — the KMV
     sketch as a (tiny) DataFrame. The global min-k is a TopK plan
     (partial per-partition min-k, then one k-row merge), not a full
     sort."""
@@ -291,25 +296,24 @@ def _kmv_sketch(keys: DataFrame, k: int = KMV_K) -> DataFrame:
     return (
         keys.select(((F.lit(KMV_A) * F.col(col) + KMV_B) % KMV_P)
                     .alias("h"))
-        .distinct().orderBy(F.asc("h")).limit(k)
+        .distinct().orderBy(F.asc("h")).limit(KMV_K)
     )
 
 
-def _kmv_estimate(sketch: DataFrame, k: int = KMV_K):
+def _kmv_estimate(sketch: DataFrame):
     """One-row (n, est) from a sketch: exact count when the sketch holds
-    the whole set (n < k), else the (k-1)*p/h_k KMV estimator."""
+    the whole set (n < k), else the (k-1)*p/h_k KMV estimator
+    (k = KMV_K)."""
     return sketch.agg(
         F.count("*").alias("n"),
-        F.when(F.count("*") < k, F.count("*"))
-        .otherwise(F.floor((k - 1) * F.lit(float(KMV_P)) / F.max("h")))
+        F.when(F.count("*") < KMV_K, F.count("*"))
+        .otherwise(F.floor((KMV_K - 1) * F.lit(float(KMV_P)) / F.max("h")))
         .cast("bigint").alias("est"))
 
 
-def kmv_set_algebra(events: DataFrame, type_a: str = "click",
-                    type_b: str = "purchase",
-                    k: int = KMV_K) -> DataFrame:
+def kmv_set_algebra(events: DataFrame) -> DataFrame:
     """Mergeable-sketch SET ALGEBRA: KMV sketches of two user sets (users
-    with a ``type_a`` event, users with a ``type_b`` event), merged
+    with a KMV_TYPE_A event, users with a KMV_TYPE_B event), merged
     WITHOUT revisiting the raw data — the property that lets a warehouse
     answer "distinct users in A∪B / A∩B" from per-segment sketches
     instead of a giant distinct shuffle.
@@ -329,20 +333,20 @@ def kmv_set_algebra(events: DataFrame, type_a: str = "click",
     2k rows, broadcast-joinable by construction.
     """
     sa = _kmv_sketch(
-        events.where(F.col("event_type") == type_a).select("user_id"), k)
+        events.where(F.col("event_type") == KMV_TYPE_A).select("user_id"))
     sb = _kmv_sketch(
-        events.where(F.col("event_type") == type_b).select("user_id"), k)
+        events.where(F.col("event_type") == KMV_TYPE_B).select("user_id"))
     sa, sb = sa.persist(), sb.persist()
-    merged = sa.unionAll(sb).distinct().orderBy(F.asc("h")).limit(k) \
+    merged = sa.unionAll(sb).distinct().orderBy(F.asc("h")).limit(KMV_K) \
         .persist()
     in_both = (
         merged.join(sa, "h", "semi").join(sb, "h", "semi")
         .agg(F.count("*").alias("k_both")))
-    est_u = _kmv_estimate(merged, k).select(
+    est_u = _kmv_estimate(merged).select(
         F.col("n").alias("k_merged"), F.col("est").alias("est_union"))
     out = (
-        _kmv_estimate(sa, k).select(F.col("est").alias("est_a"))
-        .crossJoin(_kmv_estimate(sb, k).select(F.col("est").alias("est_b")))
+        _kmv_estimate(sa).select(F.col("est").alias("est_a"))
+        .crossJoin(_kmv_estimate(sb).select(F.col("est").alias("est_b")))
         .crossJoin(est_u)
         .crossJoin(in_both)
         .select("est_a", "est_b", "est_union", "k_merged",
@@ -366,13 +370,12 @@ def kmv_set_algebra(events: DataFrame, type_a: str = "click",
 # error bound of one bucket width.
 QSK_WIDTH = 16            # bucket width (value units)
 QSK_BUCKETS = 64          # grid size; values >= width*buckets clamp
+QSK_PS = (50, 90, 99)     # the percentiles every quantile read reports
 
 
-def histogram_quantile_profile(df: DataFrame, key: str = "source",
-                               value: str = "n_chars",
-                               ps: tuple[int, ...] = (50, 90, 99)
-                               ) -> DataFrame:
-    """Per-key quantile estimates from a fixed 64-bucket equi-width
+def histogram_quantile_profile(df: DataFrame) -> DataFrame:
+    """Per-source quantile estimates of ``n_chars`` from a fixed
+    64-bucket equi-width
     histogram: p-th quantile ~ the lower edge of the first bucket whose
     cumulative count reaches ceil(p*n/100). The true quantile lies in
     [edge, edge + QSK_WIDTH) whenever values stay under the clamp — a
@@ -387,19 +390,16 @@ def histogram_quantile_profile(df: DataFrame, key: str = "source",
     one, and a streaming form carries it per window (the same additive
     contract as cms_heavy_hitters' grid).
     """
-    bucket = F.least(F.expr(f"{value} div {QSK_WIDTH}"),
+    bucket = F.least(F.expr(f"n_chars div {QSK_WIDTH}"),
                      F.lit(QSK_BUCKETS - 1))
-    hist = (df.groupBy(F.col(key), bucket.alias("bucket"))
+    hist = (df.groupBy(F.col("source"), bucket.alias("bucket"))
               .agg(F.count("*").alias("cnt")))
-    return histogram_quantile_fold(hist, [key], width=QSK_WIDTH,
-                                   n_alias="n_docs", ps=ps)
+    return histogram_quantile_fold(hist, ["source"], n_alias="n_docs")
 
 
 def histogram_quantile_fold(hist: DataFrame, keys: list[str],
                             width: int = QSK_WIDTH,
-                            n_alias: str = "n_rows",
-                            ps: tuple[int, ...] = (50, 90, 99)
-                            ) -> DataFrame:
+                            n_alias: str = "n_rows") -> DataFrame:
     """Quantile read over a PREBUILT additive histogram — the fold the
     batch profile and the streaming per-window monitor share: the grid
     arrives as (keys..., bucket, cnt) rows (summed from any number of
@@ -416,6 +416,6 @@ def histogram_quantile_fold(hist: DataFrame, keys: list[str],
         F.min(F.when(
             F.col("cum") >= F.expr(f"({p} * _n + 99) div 100"),
             F.col("bucket") * width)).cast("bigint").alias(f"p{p}_lo")
-        for p in ps]
+        for p in QSK_PS]
     return (cum.groupBy(*keys)
             .agg(F.max("_n").cast("bigint").alias(n_alias), *picks))

@@ -10,6 +10,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from movement_spark.sources.tokens import TOK_MOD
+
 STOPWORDS = ("the", "a", "of", "and", "to")
 FP_LEN = 64          # chars fingerprinted
 FP_MOD = 1_000_000_007
@@ -94,11 +96,14 @@ def fingerprint_expr() -> str:
     )
 
 
-def doc_fingerprints(documents: DataFrame, sample_mod: int = 25) -> DataFrame:
+FP_SAMPLE_MOD = 25  # doc_fingerprints samples doc_id % 25 == 0
+
+
+def doc_fingerprints(documents: DataFrame) -> DataFrame:
     """Rolling polynomial fingerprint of the first FP_LEN chars:
     h = fold(h*31 + ascii(c)) mod FP_MOD. Order-sensitive content digest
     (the text analog of merged_doc_check's poly hash)."""
-    sampled = documents.where(F.col("doc_id") % sample_mod == 0)
+    sampled = documents.where(F.col("doc_id") % FP_SAMPLE_MOD == 0)
     fp = fingerprint_expr()
     return sampled.select(
         "doc_id", "lang", "source",
@@ -124,8 +129,9 @@ def packed_bigram_expr(tok_mod: int) -> str:
     )
 
 
-def word_bigram_expr(col: str = "w") -> str:
-    """Distinct adjacent word-pair array over a split-words column —
+def word_bigram_expr() -> str:
+    """Distinct adjacent word-pair array over the split-words column
+    ``w`` —
     the ONE word-bigram rule shared by corpus_verdicts' repetition
     filter and doc_novelty_scores (same convention as
     packed_bigram_expr: change it here and in each oracle SQL mirror,
@@ -135,14 +141,16 @@ def word_bigram_expr(col: str = "w") -> str:
     (the indexed transform form threw INVALID_ARRAY_INDEX there —
     CLAUDE.md totality invariant)."""
     return (
-        f"array_distinct(zip_with(slice({col}, 1, size({col}) - 1), "
-        f"slice({col}, 2, size({col}) - 1), "
-        f"(a, b) -> concat(a, ' ', b)))"
+        "array_distinct(zip_with(slice(w, 1, size(w) - 1), "
+        "slice(w, 2, size(w) - 1), "
+        "(a, b) -> concat(a, ' ', b)))"
     )
 
 
-def token_bigram_stats(tokens: DataFrame, tok_mod: int = 50261,
-                       top_n: int = 20) -> DataFrame:
+BIGRAM_TOP_N = 20
+
+
+def token_bigram_stats(tokens: DataFrame, tok_mod: int = TOK_MOD) -> DataFrame:
     """Top-N token bigrams with integer-scaled PMI — the co-occurrence
     statistic a corpus-analysis pass feeds to tokenizer/quality tooling.
 
@@ -160,7 +168,7 @@ def token_bigram_stats(tokens: DataFrame, tok_mod: int = 50261,
     uc = (tokens.select(F.explode("tokens").alias("t"))
           .groupBy("t").agg(F.count("*").alias("c")))
     tot = bi.agg(F.count("*").alias("n"))
-    top = (bc.orderBy(F.desc("c_bigram"), F.asc("bg")).limit(top_n)
+    top = (bc.orderBy(F.desc("c_bigram"), F.asc("bg")).limit(BIGRAM_TOP_N)
            .withColumn("tok_a", F.expr(f"cast(bg div {tok_mod} as int)"))
            .withColumn("tok_b", (F.col("bg") % tok_mod).cast("int")))
     ua = uc.select(F.col("t").alias("tok_a"), F.col("c").alias("c_a"))
@@ -175,8 +183,11 @@ def token_bigram_stats(tokens: DataFrame, tok_mod: int = 50261,
     )
 
 
-def intra_doc_repetition(tokens: DataFrame, tok_mod: int = 50261,
-                         flag_x1000: int = 200) -> DataFrame:
+REP_FLAG_X1000 = 200  # docs with rep >= 0.2 are flagged
+
+
+def intra_doc_repetition(tokens: DataFrame,
+                         tok_mod: int = TOK_MOD) -> DataFrame:
     """Intra-document repetition filter (the duplicate-n-gram-fraction
     quality signal): per doc, rep = (total_bigrams - distinct_bigrams) /
     total_bigrams over all shards, reported as an exact floor(×1000)
@@ -196,13 +207,13 @@ def intra_doc_repetition(tokens: DataFrame, tok_mod: int = 50261,
     return (
         per_doc.groupBy("source")
         .agg(F.count("*").alias("n_docs"),
-             F.sum((F.col("rep_x1000") >= flag_x1000).cast("int"))
+             F.sum((F.col("rep_x1000") >= REP_FLAG_X1000).cast("int"))
              .cast("bigint").alias("n_flagged"),
              F.sum("rep_x1000").cast("bigint").alias("sum_rep_x1000"))
     )
 
 
-def top_ngram_fraction(tokens: DataFrame, tok_mod: int = 50261,
+def top_ngram_fraction(tokens: DataFrame, tok_mod: int = TOK_MOD,
                        flag_x1000: int = 150) -> DataFrame:
     """Top-n-gram fraction quality filter — Gopher's OTHER repetition
     rule, complementing ``intra_doc_repetition``: that one measures the
@@ -251,7 +262,10 @@ def top_ngram_fraction(tokens: DataFrame, tok_mod: int = 50261,
 IDF_SCALE = 1_000_000
 
 
-def tfidf_top_terms(documents: DataFrame, top_n: int = 5) -> DataFrame:
+TFIDF_TOP_N = 5
+
+
+def tfidf_top_terms(documents: DataFrame) -> DataFrame:
     """Top-N characteristic terms per source by integer-scaled TF-IDF —
     the vocabulary-profile pass a corpus monitor runs per data source.
 
@@ -280,7 +294,7 @@ def tfidf_top_terms(documents: DataFrame, top_n: int = 5) -> DataFrame:
         Window.partitionBy("source").orderBy(F.desc("score"), F.asc("term")))
     return (
         scored.withColumn("rnk", rnk.cast("int"))
-        .where(F.col("rnk") <= top_n)
+        .where(F.col("rnk") <= TFIDF_TOP_N)
         .select("source", "term", F.col("tf").cast("bigint").alias("tf"),
                 F.col("df").cast("bigint").alias("df"),
                 F.col("score").cast("bigint").alias("score"), "rnk")
@@ -290,21 +304,22 @@ def tfidf_top_terms(documents: DataFrame, top_n: int = 5) -> DataFrame:
 SCRUB_PATTERN = "[0-9]+"  # digit runs: the synthetic PII stand-in
 
 
-def scrub_audit(events: DataFrame, pattern: str = SCRUB_PATTERN) -> DataFrame:
+def scrub_audit(events: DataFrame) -> DataFrame:
     """Redaction (PII-scrub) audit over the raw ``props`` payload:
     per event_type, how many records carry at least one match of the
     scrub pattern, the total match-run count, and the byte shrinkage
     after replacing every run with a mask char.
 
     Digit runs stand in for the real pattern set (emails, phone numbers,
-    id numbers — swap ``pattern`` per deployment); the synthetic corpus
+    id numbers — swap SCRUB_PATTERN per deployment); the synthetic corpus
     carries digits only in ``props``. Everything is JVM regexp column
     work (regexp_extract_all / regexp_replace) in one map-side-combined
     aggregate — the scan cost IS the regex, which is the true shape of a
     scrub pass over 100 TB: no shuffle beyond the per-type rollup.
     """
-    n_runs = F.size(F.expr(f"regexp_extract_all(props, '{pattern}', 0)"))
-    red_len = F.length(F.regexp_replace("props", pattern, "#"))
+    n_runs = F.size(F.expr(
+        f"regexp_extract_all(props, '{SCRUB_PATTERN}', 0)"))
+    red_len = F.length(F.regexp_replace("props", SCRUB_PATTERN, "#"))
     return (
         events.select(
             "event_type", n_runs.alias("n_runs"),
@@ -343,12 +358,11 @@ def normalized_dup_stats(documents: DataFrame) -> DataFrame:
     )
 
 
-def lm_fluency_scores(tokens: DataFrame, tok_mod: int = 50261,
-                      scale: int = 1_000_000) -> DataFrame:
+def lm_fluency_scores(tokens: DataFrame, tok_mod: int = TOK_MOD) -> DataFrame:
     """Bigram-LM corpus-fit scorer — the LM-based quality filter of
     pretraining pipelines, kept integer-exact: bigram and prefix counts
     are trained on the corpus itself, and each doc scores
-    floor(scale * Σ c(bigram) / Σ c(prefix)) over its shard-internal
+    floor(10⁶ * Σ c(bigram) / Σ c(prefix)) over its shard-internal
     bigrams — common transitions score high, off-distribution text low.
     Ratio-of-sums (not a float log-prob mean) keeps the whole score in
     two bigint sums per doc; at web scale the products move to
@@ -374,7 +388,7 @@ def lm_fluency_scores(tokens: DataFrame, tok_mod: int = 50261,
         .agg(F.sum("c_bigram").alias("s_bg"),
              F.sum("c_prefix").alias("s_pf"))
         .select("source",
-                F.expr(f"(s_bg * {scale}L) div s_pf").alias("fluency_ppm"))
+                F.expr("(s_bg * 1000000L) div s_pf").alias("fluency_ppm"))
     )
     return (
         docs.groupBy("source")
@@ -415,15 +429,14 @@ def _bpe_word_counts(documents: DataFrame) -> DataFrame:
     )
 
 
-def _apply_merge(col: F.Column, left: str, right: str,
-                 passes: int = BPE_PASSES) -> F.Column:
+def _apply_merge(col: F.Column, left: str, right: str) -> F.Column:
     """Apply one merge to a space-delimited symbol string: sentinel-pad,
-    replace the delimited pair `passes` times (each pass is leftmost
+    replace the delimited pair BPE_PASSES times (each pass is leftmost
     non-overlapping; iteration reaches the fixpoint for any word with
-    ≤ 2 × passes symbols), trim."""
+    ≤ 2 × BPE_PASSES symbols), trim."""
     out = F.concat(F.lit(" "), col, F.lit(" "))
     pat, rep = F.lit(f" {left} {right} "), F.lit(f" {left}{right} ")
-    for _ in range(passes):
+    for _ in range(BPE_PASSES):
         out = F.replace(out, pat, rep)
     return F.trim(out)
 
@@ -699,17 +712,17 @@ def _word_hash_py(w: str) -> int:
     return h
 
 
-def hashed_query_vector(terms: tuple = BM25_TERMS,
-                        buckets: int = HYB_BUCKETS) -> list:
-    """qv[b] = number of query terms feature-hashed into bucket b."""
-    qv = [0] * buckets
+def hashed_query_vector(terms: tuple = BM25_TERMS) -> list:
+    """qv[b] = number of query terms feature-hashed into bucket b of
+    HYB_BUCKETS."""
+    qv = [0] * HYB_BUCKETS
     for t in terms:
-        qv[_word_hash_py(t) % buckets] += 1
+        qv[_word_hash_py(t) % HYB_BUCKETS] += 1
     return qv
 
 
 def hashed_bow_topk(documents: DataFrame, terms: tuple = BM25_TERMS,
-                    k: int = HYB_R, buckets: int = HYB_BUCKETS) -> DataFrame:
+                    k: int = HYB_R) -> DataFrame:
     """Dense-leg top-k: length-normalized hashed-BoW dot product.
 
     score(d) = (Σ_w qv[bucket(w)]) * 1000 div max(dl, 1) with qv the
@@ -718,7 +731,7 @@ def hashed_bow_topk(documents: DataFrame, terms: tuple = BM25_TERMS,
     keeps the division total on empty docs (CLAUDE.md totality rule)."""
     from pyspark.sql.window import Window
 
-    qv = hashed_query_vector(terms, buckets)
+    qv = hashed_query_vector(terms)
     qv_lit = "array(" + ", ".join(f"{v}L" for v in qv) + ")"
     word_hash = (
         "if(length(w) = 0, 0L, "
@@ -726,7 +739,8 @@ def hashed_bow_topk(documents: DataFrame, terms: tuple = BM25_TERMS,
         f"(h, i) -> (h * 31 + ascii(substring(w, cast(i as int), 1))) % {FP_MOD}))"
     )
     dot = (f"aggregate(split(text, ' '), 0L, (acc, w) -> acc + "
-           f"element_at({qv_lit}, cast({word_hash} % {buckets} as int) + 1))")
+           f"element_at({qv_lit}, "
+           f"cast({word_hash} % {HYB_BUCKETS} as int) + 1))")
     scored = documents.select(
         "doc_id",
         F.expr(f"({dot}) * 1000 div greatest(size(split(text, ' ')), 1)")

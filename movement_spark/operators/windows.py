@@ -12,8 +12,19 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+# Windows and gaps are module constants, not per-call options: the
+# registry's oracle SQL hard-codes the same values, and the streaming
+# pipelines (streaming/pipeline.py) window by the same ones.
+WIDTH = "5 minutes"  # tumbling window; the sliding window slides by it
+SLIDING_WIDTH = "10 minutes"
+SESSION_GAP = "90 seconds"  # per-doc shard sessions
+EVENTS_SESSION_GAP = "30 minutes"  # per-user event sessions
+LATE_DELAY_SEC = 1800  # would_be_late_audit's watermark delay
+ANOMALY_LOOKBACK = 6  # trailing windows of the anomaly baseline
+ROLLING_DAYS = 7  # rolling_user_features' trailing calendar days
 
-def tumbling_token_throughput(tokens: DataFrame, width: str = "5 minutes") -> DataFrame:
+
+def tumbling_token_throughput(tokens: DataFrame) -> DataFrame:
     """Per-source token throughput per tumbling window.
 
     The flagship aggregate of the engine (north rule: "per-source
@@ -22,7 +33,7 @@ def tumbling_token_throughput(tokens: DataFrame, width: str = "5 minutes") -> Da
     """
     return (
         tokens
-        .groupBy(F.window("ts", width).alias("w"), "source")
+        .groupBy(F.window("ts", WIDTH).alias("w"), "source")
         .agg(F.count("*").alias("n_seq"),
              F.sum("n_tok").cast("bigint").alias("sum_tok"),
              F.countDistinct("doc_id").alias("n_doc"))
@@ -31,12 +42,12 @@ def tumbling_token_throughput(tokens: DataFrame, width: str = "5 minutes") -> Da
     )
 
 
-def sliding_token_throughput(tokens: DataFrame, width: str = "10 minutes",
-                             slide: str = "5 minutes") -> DataFrame:
-    """Sliding-window variant; each row lands in width/slide windows."""
+def sliding_token_throughput(tokens: DataFrame) -> DataFrame:
+    """Sliding-window variant; each row lands in SLIDING_WIDTH/WIDTH
+    windows."""
     return (
         tokens
-        .groupBy(F.window("ts", width, slide).alias("w"), "source")
+        .groupBy(F.window("ts", SLIDING_WIDTH, WIDTH).alias("w"), "source")
         .agg(F.count("*").alias("n_seq"),
              F.sum("n_tok").cast("bigint").alias("sum_tok"))
         .select(F.unix_timestamp("w.start").alias("ws"),
@@ -44,13 +55,13 @@ def sliding_token_throughput(tokens: DataFrame, width: str = "10 minutes",
     )
 
 
-def session_token_windows(tokens: DataFrame, gap: str = "90 seconds") -> DataFrame:
-    """Per-doc session windows: shards separated by more than ``gap`` start a
-    new session. Spark's session end = last event + gap; the oracle mirrors
-    that with a gaps-and-islands rewrite."""
+def session_token_windows(tokens: DataFrame) -> DataFrame:
+    """Per-doc session windows: shards separated by more than SESSION_GAP
+    start a new session. Spark's session end = last event + gap; the
+    oracle mirrors that with a gaps-and-islands rewrite."""
     return (
         tokens
-        .groupBy(F.session_window("ts", gap).alias("w"), "doc_id")
+        .groupBy(F.session_window("ts", SESSION_GAP).alias("w"), "doc_id")
         .agg(F.count("*").alias("n_shard"),
              F.sum("n_tok").cast("bigint").alias("sum_tok"))
         .select("doc_id",
@@ -60,13 +71,14 @@ def session_token_windows(tokens: DataFrame, gap: str = "90 seconds") -> DataFra
     )
 
 
-def sessionize_events(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
+def sessionize_events(events: DataFrame) -> DataFrame:
     """Sessionization of the generic event stream per user
     (session_window groupBy → per-user rollup). Oracle-gated through
     the ``events_sessionization`` query, which calls this operator."""
     sess = (
         events
-        .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
+        .groupBy(F.session_window("ts", EVENTS_SESSION_GAP).alias("w"),
+                 "user_id")
         .agg(F.count("*").alias("n_events"))
     )
     return (
@@ -121,9 +133,10 @@ def _gap_fill_decimal(events: DataFrame) -> DataFrame:
     )
 
 
-def would_be_late_audit(tokens: DataFrame, delay_sec: int = 1800) -> DataFrame:
+def would_be_late_audit(tokens: DataFrame) -> DataFrame:
     """Batch audit of the late-data policy: rows older than
-    max(event_time) - delay would be dropped by a watermark of ``delay``.
+    max(event_time) - LATE_DELAY_SEC would be dropped by a watermark of
+    that delay.
     Mirrors the reference's dangling-edge drop-and-count policy
     (TinkerPopGraphEncoder.java:103-110) as drop-late-and-count.
 
@@ -135,18 +148,18 @@ def would_be_late_audit(tokens: DataFrame, delay_sec: int = 1800) -> DataFrame:
     return (
         tokens.crossJoin(F.broadcast(max_ts))
         .withColumn("is_late",
-                    (F.col("ts") < F.col("max_ts") - F.expr(f"INTERVAL {delay_sec} SECONDS")).cast("int"))
+                    (F.col("ts") < F.col("max_ts") - F.expr(
+                        f"INTERVAL {LATE_DELAY_SEC} SECONDS")).cast("int"))
         .groupBy("source")
         .agg(F.sum("is_late").cast("bigint").alias("n_late"),
              F.count("*").alias("n_total"))
     )
 
 
-def token_rate_anomalies(tokens: DataFrame, width: str = "5 minutes",
-                         lookback: int = 6) -> DataFrame:
-    """Self-baselined throughput anomaly scan: each (source, window)
-    token volume is scored against the mean of its own trailing
-    ``lookback`` windows; deviation is an integer permille
+def token_rate_anomalies(tokens: DataFrame) -> DataFrame:
+    """Self-baselined throughput anomaly scan: each (source, WIDTH
+    window) token volume is scored against the mean of its own trailing
+    ANOMALY_LOOKBACK windows; deviation is an integer permille
     (vol * 1000 * n_prev) div sum_prev — exact integer division, so
     the monitor's flags are engine-exact even past 2^53 (the
     production alert threshold must not depend on float rounding).
@@ -169,12 +182,12 @@ def token_rate_anomalies(tokens: DataFrame, width: str = "5 minutes",
     from pyspark.sql.window import Window
 
     agg = (
-        tokens.groupBy(F.window("ts", width).alias("w"), "source")
+        tokens.groupBy(F.window("ts", WIDTH).alias("w"), "source")
         .agg(F.sum("n_tok").cast("bigint").alias("sum_tok"))
         .select(F.unix_timestamp("w.start").alias("ws"), "source", "sum_tok")
     )
     trail = (Window.partitionBy("source").orderBy("ws")
-             .rowsBetween(-lookback, -1))
+             .rowsBetween(-ANOMALY_LOOKBACK, -1))
     return (
         agg
         .withColumn("trail_sum", F.sum("sum_tok").over(trail))
@@ -198,9 +211,9 @@ def token_rate_anomalies(tokens: DataFrame, width: str = "5 minutes",
     )
 
 
-def rolling_user_features(events: DataFrame, window_days: int = 7) -> DataFrame:
+def rolling_user_features(events: DataFrame) -> DataFrame:
     """Rolling-window feature engineering over the GAP-FILLED daily
-    series: per user-day, trailing ``window_days`` totals including the
+    series: per user-day, trailing ROLLING_DAYS totals including the
     explicit zero days — the feature a model actually wants ("activity
     in the last 7 calendar days"), which is wrong if computed over the
     sparse series (ROWS frames skip missing days; the resample makes
@@ -214,7 +227,7 @@ def rolling_user_features(events: DataFrame, window_days: int = 7) -> DataFrame:
 
     filled = _gap_fill_decimal(events)
     w = (Window.partitionBy("user_id").orderBy("day_no")
-         .rowsBetween(-(window_days - 1), 0))
+         .rowsBetween(-(ROLLING_DAYS - 1), 0))
     return (
         filled
         .withColumn("roll_events",

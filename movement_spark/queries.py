@@ -611,9 +611,9 @@ def q_cc_pointer_doubling(spark, sf_dir):
     from movement_spark.sources.tokens import (
         did_from_doc_id, doc_id_from_did)
     toks = token_sequences(spark, sf_dir, keep_did=True)
-    verts = (toks.where(F.col("did") % 25 == 0)
+    verts = (toks.where(F.col("did") % dedup.JACCARD_SAMPLE_MOD == 0)
              .select(F.col("did").alias("id")).distinct())
-    pairs = dedup.ngram_jaccard_pairs(toks, sample_mod=25).select(
+    pairs = dedup.ngram_jaccard_pairs(toks).select(
         did_from_doc_id("doc_a").alias("a"),
         did_from_doc_id("doc_b").alias("b"))
     comp = connected_components(verts, pairs)
@@ -3769,7 +3769,7 @@ def q_bounce_rate(spark, sf_dir):
 
     events = load_table(spark, sf_dir, "events")
     sessions = (
-        gap_session_ids(events, gap_sec=1800)
+        gap_session_ids(events)
         .groupBy("user_id", "sid")
         .agg(F.min("ets").alias("s_start"), F.max("ets").alias("s_end"),
              F.count("*").alias("n_events"))

@@ -37,20 +37,20 @@ CSV_NULL = r"\N"
 
 
 def write_directory_csv(df: DataFrame, base_dir: str, phase: str,
-                        label_col: str = "label",
-                        entries_per_file: int = ENTRIES_PER_FILE) -> str:
+                        label_col: str = "label") -> str:
     """Write ``df`` as the per-label CSV directory layout; returns path.
 
     The shuffle-free path: partitionBy(label) splits files by the label
     column inside each task — no repartition needed unless the caller
     wants one file per label. At 100 TB, rotation via maxRecordsPerFile
-    bounds file sizes exactly like the reference's 10k-line splits.
+    (ENTRIES_PER_FILE) bounds file sizes exactly like the reference's
+    10k-line splits.
     """
     out = f"{base_dir}/{phase}"
     (df.write.mode("overwrite")
        .option("header", True)
        .option("nullValue", CSV_NULL)
-       .option("maxRecordsPerFile", entries_per_file)
+       .option("maxRecordsPerFile", ENTRIES_PER_FILE)
        .partitionBy(label_col)
        .csv(out))
     return out

@@ -32,6 +32,19 @@ from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
 
 
+def _union_schema(recorded: StructType | None,
+                  batch: StructType) -> StructType:
+    """The recorded fields in their order (a field the batch carries
+    takes the batch's definition), then the batch's new ones — so a
+    narrower later batch never hides an earlier column."""
+    if recorded is None:
+        return batch
+    new = {f.name: f for f in batch.fields}
+    seen = set(recorded.fieldNames())
+    return StructType([new.get(f.name, f) for f in recorded.fields]
+                      + [f for f in batch.fields if f.name not in seen])
+
+
 class IdempotentKeyedSink:
     """Parquet-backed exactly-once sink keyed by ``keys``."""
 
@@ -40,11 +53,12 @@ class IdempotentKeyedSink:
         self.keys = keys
         self.io_ops = 0          # OutputWriter io_ops counter analog
         self.batches = 0
-        self._schema = None      # last seen batch schema (for empty reads)
 
-    # schema + compaction watermark live BESIDE the epoch log so a fresh
+    # schema + compaction watermark live BESIDE the epoch log. The
+    # schema file is the union of every batch schema written: reads use
+    # it instead of inferring one from the epoch footers, and a fresh
     # process resuming an existing sink (whose epochs may all have been
-    # empty/reclaimed) still reads a typed empty table, and time travel
+    # empty/reclaimed) still reads a typed empty table; time travel
     # can refuse instead of silently answering from a collapsed history
     def _schema_file(self) -> str:
         return os.path.join(self.path, "_schema.json")
@@ -66,14 +80,14 @@ class IdempotentKeyedSink:
         os.replace(tmp, path)
 
     def _load_schema(self) -> StructType | None:
-        if self._schema is not None:
-            return self._schema
+        """The recorded schema, read from disk on every call: another
+        sink object or process may have widened it, and drop_storage()
+        removes it."""
         try:
             with open(self._schema_file()) as f:
-                self._schema = StructType.fromJson(json.load(f))
+                return StructType.fromJson(json.load(f))
         except (OSError, ValueError, KeyError):
             return None
-        return self._schema
 
     def _watermark_state(self) -> dict | None:
         try:
@@ -100,15 +114,13 @@ class IdempotentKeyedSink:
 
     # -- write path (foreachBatch target) --------------------------------
     def foreach_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        if self._schema is None or batch_df.schema != self._schema:
-            # (re)write on first batch AND on schema evolution — a stale
-            # narrow schema on disk would make a fresh process's
-            # empty-sink read drop the evolved columns
+        recorded = self._load_schema()
+        schema = _union_schema(recorded, batch_df.schema)
+        if schema != recorded:
+            # (re)write on first batch AND on schema evolution, BEFORE
+            # the data: read() scans every epoch with this schema
             os.makedirs(self.path, exist_ok=True)
-            self._write_json_atomic(
-                self._schema_file(),
-                batch_df.schema.jsonValue())
-        self._schema = batch_df.schema
+            self._write_json_atomic(self._schema_file(), schema.jsonValue())
         # Raise the epoch high-water mark BEFORE the data write: empty
         # epochs are reclaimed below without trace, but their ids were
         # still CONSUMED by the stream's checkpoint — next_patch_epoch
@@ -234,6 +246,12 @@ class IdempotentKeyedSink:
         are pruned BEFORE the key dedup, and epoch= is a partition
         column so the prune is directory-level, no data read.
 
+        Live epochs are read with the recorded schema (the union of
+        all batch schemas) and the snapshot with the schema compact()
+        recorded beside its watermark, so the read infers nothing from
+        parquet footers and starts no Spark job; older rows read NULL in
+        columns they predate. A sink without a recorded schema raises.
+
         A sink whose every batch was empty has no epoch directories
         (empty epochs are reclaimed); that is a VALID state — a stream
         of gaps, PotentialSequence-style — and reads as a typed empty
@@ -250,27 +268,28 @@ class IdempotentKeyedSink:
         snap_dir = os.path.join(self.path, snap_name)
         has_snapshot = wm is not None and os.path.isdir(snap_dir)
         live_epochs = [f"epoch={e}" for e in self._live_epoch_ids(wm)]
+        schema = self._load_schema()
+        if schema is None:
+            raise ValueError(f"sink at {self.path} has no recorded schema "
+                             f"({self._schema_file()})")
+        if not (has_snapshot or live_epochs):
+            return spark.createDataFrame([], schema)
         frames = []
         if has_snapshot:
-            frames.append(spark.read.parquet(snap_dir)
+            # the fold's own schema (an additive merge widens its sums);
+            # a snapshot compacted before it was recorded is inferred
+            snap = (spark.read.schema(StructType.fromJson(state["schema"]))
+                    if "schema" in state else spark.read)
+            frames.append(snap.parquet(snap_dir)
                           .withColumn("epoch", F.lit(wm).cast("int")))
         if live_epochs:
-            # mergeSchema: epochs written after a schema evolution carry
-            # the wider schema; the multi-path read must see the union,
-            # not whichever file's footer it sampled first
-            frames.append(spark.read.option("basePath", self.path)
-                          .option("mergeSchema", "true").parquet(
+            # epoch= is inferred from the paths as a partition column
+            frames.append(spark.read.schema(schema)
+                          .option("basePath", self.path).parquet(
                 *[os.path.join(self.path, d) for d in live_epochs]))
-        if not frames:
-            schema = self._load_schema()
-            if schema is None:
-                raise ValueError(
-                    f"sink at {self.path} has no data and no recorded schema")
-            return spark.createDataFrame([], schema)
         df = frames[0]
         for extra in frames[1:]:
-            # schema evolution across snapshot/epoch generations: older
-            # rows read with nulls in columns they predate
+            # a snapshot predates columns later epochs added
             df = df.unionByName(extra, allowMissingColumns=True)
         if as_of_epoch is not None:
             df = df.where(F.col("epoch") <= as_of_epoch)
@@ -452,7 +471,8 @@ class IdempotentKeyedSink:
         # old complete state or the new complete state, never between
         self._write_json_atomic(self._watermark_file(),
                                 {"compacted_through": max_epoch,
-                                 "snapshot": new_dirname})
+                                 "snapshot": new_dirname,
+                                 "schema": snap.schema.jsonValue()})
         # reclamation is safe now — everything below is replay residue.
         # Only epochs <= the new watermark are folded; an epoch that
         # landed after the listing stays live.
@@ -486,7 +506,8 @@ class IdempotentKeyedSink:
                                         {"keys": remaining})
 
     def drop_storage(self) -> None:
-        """Output.dropStorage analog (Output.java:37)."""
+        """Output.dropStorage analog (Output.java:37). The recorded schema
+        goes with it: the next batch writes a fresh one."""
         import shutil
         shutil.rmtree(self.path, ignore_errors=True)
 

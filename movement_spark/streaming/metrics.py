@@ -24,14 +24,15 @@ STATUS_FORMAT = ("issued %d total io operations, %d in the last %.2f "
                  "seconds with an overall average of %.2f/sec")
 
 
-def observed(df: DataFrame, name: str = "movement_metrics") -> DataFrame:
+def observed(df: DataFrame) -> DataFrame:
     """Attach RuntimeMetrics-style counters to any stage: row count and
-    token volume flow into each micro-batch's observedMetrics."""
+    token volume flow into each micro-batch's observedMetrics, under
+    the name ``movement_metrics``."""
     cols = df.columns
     metrics = [F.count(F.lit(1)).alias("io_ops")]
     if "n_tok" in cols:
         metrics.append(F.sum("n_tok").alias("tokens"))
-    return df.observe(name, *metrics)
+    return df.observe("movement_metrics", *metrics)
 
 
 def with_lineage(df: DataFrame) -> DataFrame:
@@ -148,12 +149,12 @@ class ProgressRecord:
 
 
 class RuntimeMetricsListener(StreamingQueryListener):
-    """Collects per-batch throughput — the StatusMonitor analog."""
+    """Collects per-batch throughput — the StatusMonitor analog (the
+    status line itself is printed by ``cli.py``)."""
 
-    def __init__(self, log: bool = False):
+    def __init__(self):
         self.records: list[ProgressRecord] = []
         self.total_rows = 0
-        self._log = log
         self._mark_start()
 
     def _mark_start(self):
@@ -185,11 +186,6 @@ class RuntimeMetricsListener(StreamingQueryListener):
         )
         self.records.append(rec)
         self.total_rows += rec.num_input_rows
-        if self._log:
-            elapsed = max(time.time() - self.started_at, 1e-9)
-            print(STATUS_FORMAT % (
-                self.total_rows, rec.num_input_rows,
-                rec.duration_ms / 1000.0, self.total_rows / elapsed))
 
     def onQueryIdle(self, event):
         pass

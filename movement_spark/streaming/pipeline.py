@@ -52,14 +52,17 @@ from pyspark.sql.types import (
 
 from movement_spark.operators.dataset import window_drift_tvd
 from movement_spark.operators.dedup import shard_signature_expr
+from movement_spark.operators.joins import MAX_GAP_SEC
 from movement_spark.operators.ordering import (
-    doc_digest_cols, ordered_doc_assembler, ordered_doc_assembler_jvm)
+    WATERMARK, doc_digest_cols, ordered_doc_assembler,
+    ordered_doc_assembler_jvm)
 from movement_spark.operators.patterns import user_pattern_stats
 from movement_spark.operators.similarity import (
     _argmax_dot_assign, ivf_assign_arrow, quantized)
 from movement_spark.operators.sketches import (
     CMS_AB, CMS_D, CMS_P, CMS_WATCH, LL_M, _cms_cell, cms_watch_estimates,
     histogram_quantile_fold, loglog_window_fold)
+from movement_spark.operators.windows import SESSION_GAP, SLIDING_WIDTH, WIDTH
 from movement_spark.sinks.idempotent import (
     AdditiveKeyedSink, IdempotentKeyedSink)
 from movement_spark.sources.tokens import token_sequences, EPOCH_2026, TS_MOD
@@ -352,12 +355,10 @@ STATE_PARTITIONS = 8  # pinned deployment constant (see CLAUDE.md / SCALE.md)
 # Pipeline tuning: one value per pipeline, not a per-call option. The
 # registry's oracle SQL hard-codes the same windows, gaps and cuts, so
 # an override could only desynchronize a pipeline from its oracle.
-WATERMARK = "10 minutes"  # event-time delay of every token-stream pipeline
-WIDTH = "5 minutes"  # tumbling window; the sliding window slides by it
-SLIDING_WIDTH = "10 minutes"
+# Shared with the operators: WATERMARK, the event-time delay of every
+# token-stream pipeline (operators/ordering.py); WIDTH, SLIDING_WIDTH and
+# SESSION_GAP (operators/windows.py); MAX_GAP_SEC (operators/joins.py).
 ROLLUP_WIDTH = "1 hour"  # window_rollup's coarse window over WIDTH partials
-SESSION_GAP = "90 seconds"
-MAX_GAP_SEC = 60  # stream-stream interval joins pair shards within ±this
 EVENTS_WINDOW = "1 day"  # the events pipelines' window AND watermark
 HIST_BUCKETS = 64  # drift and quantile monitors' histogram width
 LEN_BUCKET_WIDTH = 2  # quantile monitor: n_tok values per length bucket
@@ -471,14 +472,12 @@ def _assembled(src: DataFrame, emit_incomplete: bool = False) -> DataFrame:
     """The stateful-Python per-doc assembler over a staged stream.
     Sentinel rows flow through the stateful stage (their doc completes
     immediately) and are dropped after it — filtering earlier would be
-    pushed below the watermark node and stall the flush. The timeout
-    must cover a doc's max event-time span: shard timestamps within one
-    doc can wrap the full TS_MOD hour, so the grace period is TS_MOD +
-    slack — state still stays O(open docs)."""
+    pushed below the watermark node and stall the flush. Its eviction
+    grace (ordering.ASSEMBLE_TIMEOUT_MS) covers a doc's max event-time
+    span."""
     return (
         ordered_doc_assembler(
             src.select("doc_id", "seq", "tokens", "n_shards", "ts"),
-            watermark=WATERMARK, timeout_ms=(TS_MOD + 120) * 1000,
             emit_incomplete=emit_incomplete)
         .where(F.col("doc_id") != SENTINEL)
     )
@@ -488,8 +487,7 @@ def _assembled_jvm(src: DataFrame) -> DataFrame:
     """The all-JVM session-window assembler over a staged stream, its
     sentinel sessions cut on the window column."""
     return (
-        ordered_doc_assembler_jvm(src.select("doc_id", "seq", "tokens", "ts"),
-                                  watermark=WATERMARK)
+        ordered_doc_assembler_jvm(src.select("doc_id", "seq", "tokens", "ts"))
         .where(_flushed())
         .drop("w")
     )

@@ -320,3 +320,92 @@ def test_novelty_plan_has_no_sort_window(spark, sf_dir):
     txt = explain_text(df)
     assert "Window" not in txt, "sort-window draft crept back in"
     assert plan_audit(df)["python_stages"] == 0
+
+
+# Operator keywords that only tests set — each test passes a second
+# value there (salt fan-out, a recall sweep, a BPE merge count, …).
+# Every OTHER keyword default on an operator needs a non-test caller.
+_TEST_SET_KEYWORDS = {
+    ("chunking", "salted_repartition", "salt_buckets"),
+    ("chunking", "two_phase_agg", "salt_buckets"),
+    ("chunking", "range_layout_plan", "n_shards"),
+    ("dataset", "sequence_packing_stats", "context_len"),
+    ("dataset", "dsir_importance_weights", "target_lang"),
+    ("dedup", "shard_signature_expr", "shingle_mod"),
+    ("dedup", "exact_substring_scrub", "k"),
+    ("graph", "connected_components", "max_rounds"),
+    ("mechanics", "pinion_zip", "rotations"),
+    ("mechanics", "pinion_odometers", "rotations"),
+    ("similarity", "pq_topk", "n_queries"),
+    ("similarity", "pq_topk", "k"),
+    ("similarity", "pq_rerank_topk", "n_queries"),
+    ("similarity", "pq_rerank_topk", "k"),
+    ("similarity", "ivfpq_rerank_topk", "n_queries"),
+    ("similarity", "ivfpq_rerank_topk", "k"),
+    ("similarity", "ivfpq_rerank_topk", "nprobe"),
+    ("similarity", "truncated_rerank_topk", "pool"),
+    ("similarity", "mmr_diversified_topk", "mode"),
+    ("similarity", "ivf_recall_audit", "nprobe"),
+    ("text", "top_ngram_fraction", "flag_x1000"),
+    ("text", "bpe_train", "n_merges"),
+    ("text", "bpe_encode_stats", "n_merges"),
+}
+
+
+def test_operator_keywords_have_non_test_callers():
+    """Operator tuning values are module constants. A keyword default on
+    a module-level function in movement_spark/operators/*.py must be
+    passed (by name or position) at some non-test call site —
+    movement_spark/, bench/, bench.py, __spark_entry__.py. A keyword no
+    caller sets only ever takes its default, and the registry's oracle
+    SQL hard-codes that same value, so an override could only
+    desynchronize the operator from its oracle. Keywords only tests set
+    are listed in _TEST_SET_KEYWORDS; a listed keyword that gains a
+    non-test caller (or goes away) must leave the list."""
+    import ast
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1]
+    params = {}    # function name -> (module, positional names)
+    defaults = set()
+    for path in sorted((root / "movement_spark" / "operators").glob("*.py")):
+        for node in ast.parse(path.read_text()).body:
+            if not isinstance(node, ast.FunctionDef):
+                continue
+            a = node.args
+            pos = [x.arg for x in a.posonlyargs + a.args]
+            assert node.name not in params, f"{node.name} defined twice"
+            params[node.name] = (path.stem, pos)
+            defaults |= {(path.stem, node.name, n)
+                         for n in pos[len(pos) - len(a.defaults):]}
+            defaults |= {(path.stem, node.name, x.arg)
+                         for x, d in zip(a.kwonlyargs, a.kw_defaults)
+                         if d is not None}
+
+    callers = [*(root / "movement_spark").rglob("*.py"),
+               *(root / "bench").glob("*.py"),
+               root / "bench.py", root / "__spark_entry__.py"]
+    passed = set()
+    for path in callers:
+        for call in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(call, ast.Call):
+                continue
+            func, args = call.func, list(call.args)
+            if getattr(func, "id", getattr(func, "attr", None)) == "partial" \
+                    and args:      # functools.partial(op, ...)
+                func, args = args[0], args[1:]
+            name = getattr(func, "id", getattr(func, "attr", None))
+            if name not in params:
+                continue
+            mod, pos = params[name]
+            passed |= {(mod, name, n) for n in pos[:len(args)]}
+            passed |= {(mod, name, k.arg) for k in call.keywords}
+
+    unpassed = defaults - passed
+    assert not unpassed - _TEST_SET_KEYWORDS, (
+        "keyword defaults no non-test caller passes — make them module "
+        f"constants: {sorted(unpassed - _TEST_SET_KEYWORDS)}")
+    assert _TEST_SET_KEYWORDS <= unpassed, (
+        "stale test-set entries (now passed by a non-test caller, or "
+        f"gone): {sorted(_TEST_SET_KEYWORDS - unpassed)}")
+    assert len(defaults) <= 140, len(defaults)

@@ -8,6 +8,7 @@ north rule's checkpoint-resume and watermark-late-drop requirements.
 import os
 import shutil
 import tempfile
+import uuid
 
 import pandas as pd
 import pyarrow as pa
@@ -637,6 +638,67 @@ def test_sink_schema_evolution_on_read(spark):
         [(3, 30, "post")], "k INT, v INT, note STRING"), 2)
     rows = {(r.k, r.v, r.note) for r in sink.read(spark).collect()}
     assert rows == {(1, 10, None), (2, 20, "fresh"), (3, 30, "post")}
+
+
+def test_sink_schema_narrowing_keeps_earlier_columns(spark):
+    """A later NARROWER batch must not hide an earlier column: the
+    recorded schema stays the union (old fields first), across epochs,
+    a snapshot plus epochs, and a fresh process."""
+    path = _mkdir()
+    sink = IdempotentKeyedSink(path, ["k"])
+    sink.foreach_batch(spark.createDataFrame(
+        [(1, 10, "wide")], "k INT, v INT, note STRING"), 0)
+    sink.foreach_batch(spark.createDataFrame([(2, 20)], "k INT, v INT"), 1)
+    out = sink.read(spark)
+    assert out.columns == ["k", "v", "note"]
+    assert {tuple(r) for r in out.collect()} == {(1, 10, "wide"),
+                                                 (2, 20, None)}
+    sink.compact(spark)
+    sink.foreach_batch(spark.createDataFrame([(3, 30)], "k INT, v INT"), 2)
+    fresh = IdempotentKeyedSink(path, ["k"]).read(spark)
+    assert {tuple(r) for r in fresh.collect()} == {
+        (1, 10, "wide"), (2, 20, None), (3, 30, None)}
+
+
+def test_sink_read_over_live_epochs_starts_no_job(spark):
+    """read() takes the schema the sink recorded instead of inferring
+    one from the epoch footers (a mergeSchema read ran a separate
+    schema-merge job over every live epoch on each call)."""
+    sink = IdempotentKeyedSink(_mkdir(), ["k"])
+    for e in range(3):
+        sink.foreach_batch(
+            spark.createDataFrame([(e, e * 10)], "k INT, v INT"), e)
+    assert sink.epochs() == [0, 1, 2]
+    sc = spark.sparkContext
+    group = f"sink_read_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "sink.read")
+    try:
+        out = sink.read(spark)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert {(r.k, r.v) for r in out.collect()} == {(0, 0), (1, 10), (2, 20)}
+
+
+def test_sink_write_after_drop_storage(spark):
+    """drop_storage() removes the recorded schema with the epochs, so
+    the next batch with the SAME schema writes it (and the directory)
+    afresh instead of failing on the missing path."""
+    sink = IdempotentKeyedSink(_mkdir(), ["k"])
+    batch = spark.createDataFrame([(1, 10)], "k INT, v INT")
+    sink.foreach_batch(batch, 0)
+    sink.drop_storage()
+    assert not os.path.exists(sink.path)
+    sink.foreach_batch(batch, 0)
+    assert {(r.k, r.v) for r in sink.read(spark).collect()} == {(1, 10)}
+
+
+def test_sink_with_epochs_but_no_recorded_schema_raises(spark):
+    sink = IdempotentKeyedSink(_mkdir(), ["k"])
+    sink.foreach_batch(spark.createDataFrame([(1, 10)], "k INT, v INT"), 0)
+    os.remove(os.path.join(sink.path, "_schema.json"))
+    with pytest.raises(ValueError, match="no recorded schema"):
+        sink.read(spark)
 
 
 def test_sink_change_data_feed_between_epochs(spark):
