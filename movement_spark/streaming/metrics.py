@@ -239,10 +239,15 @@ def listening(spark):
     ``spark`` runs inside the block, and yield it. THE one place a
     listener meets a session: it is detached in a finally, so a failing
     query cannot leave it on the shared session, where it would receive
-    every later query's events."""
+    every later query's events. Progress events reach it through
+    Spark's asynchronous listener bus, so the bus is drained before the
+    detach: a query's last QueryProgressEvent is otherwise lost."""
     listener = RuntimeMetricsListener()
     spark.streams.addListener(listener)
     try:
         yield listener
     finally:
-        spark.streams.removeListener(listener)
+        try:
+            spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        finally:
+            spark.streams.removeListener(listener)

@@ -19,8 +19,10 @@ append-mode results only emit once the watermark passes the window. The
 stager therefore appends one sentinel row with ts far beyond the real
 data; it advances the watermark through the EventTimeWatermark node and
 is filtered out before any aggregation, so every real window flushes and
-the sentinel never appears in output. (Spark runs a final no-data batch
-to emit — spark.sql.streaming.noDataMicroBatches must stay enabled.)
+the sentinel never appears in output. An unpinned read takes every
+staged file in batch 0; the watermark only advances at the start of the
+next batch, so the flush is Spark's trailing no-data batch (availableNow
+runs it too) — spark.sql.streaming.noDataMicroBatches must stay enabled.
 
 The runners are rows of one table: ``@_runner(...)`` declares a row's
 sink keys, stage variant, read schema, output mode, read-side fold and
@@ -91,11 +93,13 @@ _TOKEN_RANGE = ["ts", "doc_id", "seq"]
 def _emit_sentinel_files(stage_dir: str, start_idx: int, base: float,
                          rows_fn) -> None:
     """Write the TWO flush-sentinel files: the watermark only advances at
-    the START of the batch AFTER the one that saw the max event time, and
-    availableNow does not run a trailing no-data batch. Sentinel #1
-    raises the max event time; the batch processing sentinel #2 then
-    carries a watermark beyond every real window and flushes them.
-    Single control rows — driver-side pyarrow writes, not Spark jobs."""
+    the START of the batch AFTER the one that saw the max event time.
+    Sentinel #1 raises the max event time; the next batch carries a
+    watermark beyond every real window and flushes them. Unpinned, both
+    files land in batch 0 and that next batch is availableNow's trailing
+    no-data batch; under pinned pacing (one file per trigger) it is the
+    batch that reads sentinel #2. Single control rows — driver-side
+    pyarrow writes, not Spark jobs."""
     for k in range(2):
         pdf, schema = rows_fn(k)
         path = os.path.join(stage_dir, f"chunk_{start_idx + k:04d}.parquet")
@@ -315,24 +319,6 @@ def stage_embedding_stream(spark: SparkSession, sf_dir: str,
     return n_rows
 
 
-def _n_stage_files(stage_dir: str) -> int:
-    try:
-        return sum(1 for f in os.listdir(stage_dir) if f.endswith(".parquet"))
-    except OSError:
-        return 0
-
-
-def _auto_trigger(stage_dir: str) -> int:
-    """Fast correctness-path pacing: everything except the LAST file in
-    one micro-batch, the final flush sentinel in a second batch (the
-    minimum that still advances the watermark through the real data).
-    Results are invariant to batching (pinned by
-    test_results_invariant_to_microbatch_boundaries); fewer state-store
-    commits ≈ 4× less wall-clock per pipeline at oracle scale. Benchmarks
-    pass an explicit files_per_trigger to measure steady-state batches."""
-    return max(1, _n_stage_files(stage_dir) - 1)
-
-
 def read_token_stream(spark: SparkSession, stage_dir: str,
                       files_per_trigger: int | None = None,
                       schema: StructType | None = None) -> DataFrame:
@@ -340,14 +326,20 @@ def read_token_stream(spark: SparkSession, stage_dir: str,
     every pipeline reads staged chunks through here so an option change
     (e.g. maxFileAge) can never diverge per-pipeline. ``schema``
     overrides STREAM_SCHEMA for the other staged layouts
-    (NDSIG_STREAM_SCHEMA, EVENTS_SCHEMA, EMB_STREAM_SCHEMA)."""
-    if files_per_trigger is None:
-        files_per_trigger = _auto_trigger(stage_dir)
-    return (
-        spark.readStream.schema(schema or STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", files_per_trigger)
-        .parquet(stage_dir)
-    )
+    (NDSIG_STREAM_SCHEMA, EVENTS_SCHEMA, EMB_STREAM_SCHEMA).
+
+    Pacing: ``files_per_trigger`` caps the files each micro-batch
+    admits (benchmarks and replay tests pin it to measure steady-state
+    batches). Unpinned, availableNow reads every staged file — data and
+    both flush sentinels — in one batch, and Spark's trailing no-data
+    batch then flushes every window, join buffer, dedup key and
+    assembler timeout: a drain is 2 micro-batches. Results are
+    invariant to batching, pinned by
+    test_results_invariant_to_microbatch_boundaries."""
+    reader = spark.readStream.schema(schema or STREAM_SCHEMA)
+    if files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", files_per_trigger)
+    return reader.parquet(stage_dir)
 
 
 STATE_PARTITIONS = 8  # pinned deployment constant (see CLAUDE.md / SCALE.md)

@@ -1,4 +1,5 @@
 import pytest
+from pyspark import SparkContext
 
 from movement_spark.session import get_spark
 
@@ -16,7 +17,11 @@ def spark():
         },
     )
     yield s
-    s.stop()
+    # A module that runs in the same process may have stopped this
+    # session and shut its gateway down already (perfbench's own
+    # fixture does); stop it only while its context is the active one.
+    if SparkContext._active_spark_context is s.sparkContext:
+        s.stop()
 
 
 @pytest.fixture(scope="session")

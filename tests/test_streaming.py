@@ -5,6 +5,7 @@ ordering, no duplicates within a run, count/content parity — plus the
 north rule's checkpoint-resume and watermark-late-drop requirements.
 """
 
+import functools
 import os
 import shutil
 import tempfile
@@ -44,6 +45,16 @@ def _ts(sec):
     return pd.Timestamp((EPOCH_2026 + sec) * 1_000_000_000)
 
 
+def _committed_batches(ck):
+    """Micro-batches the checkpoint has committed (``commits/<id>``)."""
+    return sum(f.isdigit() for f in os.listdir(os.path.join(ck, "commits")))
+
+
+def _copy(files, src, dst):
+    for f in files:
+        shutil.copy2(os.path.join(src, f), os.path.join(dst, f))
+
+
 def test_checkpoint_resume_mid_stream(spark, sf_dir):
     """Kill/resume: run over a partial stage, then add the rest of the
     files and re-run with the SAME checkpoint + sink. Final result must
@@ -73,6 +84,51 @@ def test_checkpoint_resume_mid_stream(spark, sf_dir):
     assert result.count() == expected.count()
     assert result.exceptAll(expected).count() == 0
     assert expected.exceptAll(result).count() == 0
+
+
+@pytest.mark.parametrize("runner", [
+    "run_streaming_tumbling", "run_streaming_dedup_join_window"])
+def test_unpinned_drain_commits_two_batches(spark, sf_dir, runner):
+    """An unpinned read takes every staged file (data and both
+    sentinels) in batch 0; Spark's trailing no-data batch is the flush.
+    No third batch spent on the last sentinel file."""
+    from movement_spark.streaming import pipeline
+
+    ck = _mkdir()
+    getattr(pipeline, runner)(spark, sf_dir, sink_dir=_mkdir(),
+                              checkpoint_dir=ck)
+    assert _committed_batches(ck) == 2
+
+
+@pytest.mark.parametrize("runner,options,variant", [
+    ("run_streaming_dedup_join_window", {}, {"duplicate_factor": 2}),
+    ("run_streaming_ordered_merge", {"mode": "python"}, {}),
+])
+def test_resumed_batch_flushes_chained_state(spark, sf_dir, runner,
+                                             options, variant):
+    """Chained stateful operators (dedup → join → window; the Python
+    emit-on-complete assembler) flushed by ONE trailing no-data batch:
+    half the chunks, then a resume whose single batch holds the rest
+    plus both sentinels, must equal a one-shot drain of the full stage."""
+    from movement_spark.streaming import pipeline
+
+    run = functools.partial(getattr(pipeline, runner), spark, sf_dir,
+                            **options)
+    full_stage = _mkdir()
+    stage_token_stream(spark, sf_dir, full_stage, **variant)
+    files = sorted(os.listdir(full_stage))
+    part_stage, ck, sink_dir = _mkdir(), _mkdir(), _mkdir()
+    _copy(files[: len(files) // 2], full_stage, part_stage)
+    run(stage_dir=part_stage, sink_dir=sink_dir, checkpoint_dir=ck)
+    _copy(files[len(files) // 2:], full_stage, part_stage)
+    resumed = run(stage_dir=part_stage, sink_dir=sink_dir,
+                  checkpoint_dir=ck)
+    one_shot = run(stage_dir=full_stage, sink_dir=_mkdir(),
+                   checkpoint_dir=_mkdir())
+    assert one_shot.count() > 0
+    assert resumed.count() == one_shot.count()
+    assert resumed.exceptAll(one_shot).count() == 0
+    assert one_shot.exceptAll(resumed).count() == 0
 
 
 def test_stateful_ordered_merge_resumes_from_checkpoint(spark, sf_dir):
@@ -422,13 +478,14 @@ def test_no_duplicates_under_repartition(spark, sf_dir):
 
 
 def test_metrics_listener_counts_rows(spark, sf_dir):
+    ck = _mkdir()
     with listening(spark) as listener:
-        run_streaming_tumbling(spark, sf_dir)
+        run_streaming_tumbling(spark, sf_dir, checkpoint_dir=ck)
     s = listener.summary()
     # 1250 real rows + 2 sentinels at sf0.001
     assert s["io_ops"] == 1252
-    # auto trigger pacing: all-but-last files, then the final sentinel
-    assert s["batches"] >= 2
+    # one progress event per committed batch: the last one is not lost
+    assert s["batches"] == _committed_batches(ck) == 2
     assert s["avg_rows_per_sec"] > 0
     # CPU attribution: the test session's JVM is this process's child
     assert s["jvm_cpu_s"] is not None and s["jvm_cpu_s"] > 0
