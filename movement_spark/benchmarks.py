@@ -7,8 +7,9 @@ local[4N] — see bench/scaling.py).
 
 The streaming benches keep no engine of their own: they read through
 ``pipeline.read_token_stream``, build from the pipelines' plan fragments
-(flush cut, windowed aggregate, assemblers, WATERMARK/WIDTH) and run
-through ``pipeline._drain``, which pins STATE_PARTITIONS; their
+(flush cut, windowed aggregate, the assembler runners' rows,
+WATERMARK/WIDTH) and run through ``pipeline._drain``, which pins
+STATE_PARTITIONS and scopes the trailing no-data batch; their
 RuntimeMetricsListener attaches through ``metrics.listening``.
 """
 
@@ -20,8 +21,9 @@ from pyspark.sql import SparkSession, functions as F
 
 from movement_spark.streaming.metrics import listening
 from movement_spark.streaming.pipeline import (
-    WATERMARK, WIDTH, _assembled, _assembled_jvm, _drain, _flushed, _sink,
-    _seq_totals, _window_agg, read_token_stream)
+    WATERMARK, WIDTH, _drain, _flushed, _ordered_merge_python, _sink,
+    _seq_totals, _window_agg, read_token_stream,
+    run_streaming_ordered_merge_jvm)
 
 SIG_PROBES = 16  # xxhash64 probes in streaming_throughput's signature
 CEP_FILES_PER_TRIGGER = 16  # cep_assembler_throughput's pacing
@@ -76,13 +78,17 @@ def cep_assembler_throughput(spark: SparkSession, stage_dir: str,
     barrier) over a staged stream, in either implementation:
     ``mode="python"`` = applyInPandasWithState emit-on-complete CEP;
     ``mode="jvm"`` = session-window streaming aggregate (the zero-Python
-    throughput path). The pipelines' own assembler fragments and drain;
-    used by bench.py (per-round sub-metric) and bench/cep_throughput.py
+    throughput path). The assembler runners' own rows (plan, sink keys,
+    whether the drain waits on the watermark) and drain; used by
+    bench.py (per-round sub-metric) and bench/cep_throughput.py
     (standalone A/B)."""
-    src = read_token_stream(spark, stage_dir, CEP_FILES_PER_TRIGGER)
-    merged = _assembled_jvm(src) if mode == "jvm" else _assembled(src)
+    row = (run_streaming_ordered_merge_jvm if mode == "jvm"
+           else _ordered_merge_python).row
+    merged = row.build(
+        read_token_stream(spark, stage_dir, CEP_FILES_PER_TRIGGER), None)
     t0 = time.perf_counter()
-    sink = _drain(merged, _sink(sink_dir, "doc_id"), checkpoint_dir)
+    sink = _drain(merged, _sink(sink_dir, *row.keys), checkpoint_dir,
+                  waits_on_watermark=row.waits_on_watermark)
     elapsed = time.perf_counter() - t0
     docs_out = sink.read(spark).count()
     return {

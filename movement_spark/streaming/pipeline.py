@@ -22,7 +22,11 @@ is filtered out before any aggregation, so every real window flushes and
 the sentinel never appears in output. An unpinned read takes every
 staged file in batch 0; the watermark only advances at the start of the
 next batch, so the flush is Spark's trailing no-data batch (availableNow
-runs it too) — spark.sql.streaming.noDataMicroBatches must stay enabled.
+runs it too). spark.sql.streaming.noDataMicroBatches.enabled is on
+exactly for rows whose results wait on the watermark, set by ``_drain``
+from the row's ``waits_on_watermark``; a row that emits without the
+watermark (emit-on-complete, update mode) commits its one data batch
+and leaves its expired state to the next data batch's eviction.
 
 The runners are rows of one table: ``@_runner(...)`` declares a row's
 sink keys, stage variant, read schema, output mode, read-side fold and
@@ -97,9 +101,10 @@ def _emit_sentinel_files(stage_dir: str, start_idx: int, base: float,
     Sentinel #1 raises the max event time; the next batch carries a
     watermark beyond every real window and flushes them. Unpinned, both
     files land in batch 0 and that next batch is availableNow's trailing
-    no-data batch; under pinned pacing (one file per trigger) it is the
-    batch that reads sentinel #2. Single control rows — driver-side
-    pyarrow writes, not Spark jobs."""
+    no-data batch, which ``_drain`` enables exactly for rows whose
+    results wait on the watermark; under pinned pacing (one file per
+    trigger) it is the batch that reads sentinel #2. Single control rows
+    — driver-side pyarrow writes, not Spark jobs."""
     for k in range(2):
         pdf, schema = rows_fn(k)
         path = os.path.join(stage_dir, f"chunk_{start_idx + k:04d}.parquet")
@@ -333,9 +338,10 @@ def read_token_stream(spark: SparkSession, stage_dir: str,
     batches). Unpinned, availableNow reads every staged file — data and
     both flush sentinels — in one batch, and Spark's trailing no-data
     batch then flushes every window, join buffer, dedup key and
-    assembler timeout: a drain is 2 micro-batches. Results are
-    invariant to batching, pinned by
-    test_results_invariant_to_microbatch_boundaries."""
+    assembler timeout: a drain is 2 micro-batches. That batch is on
+    exactly for rows whose results wait on the watermark, set by
+    ``_drain``; the others drain in 1. Results are invariant to
+    batching, pinned by test_results_invariant_to_microbatch_boundaries."""
     reader = spark.readStream.schema(schema or STREAM_SCHEMA)
     if files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", files_per_trigger)
@@ -343,6 +349,7 @@ def read_token_stream(spark: SparkSession, stage_dir: str,
 
 
 STATE_PARTITIONS = 8  # pinned deployment constant (see CLAUDE.md / SCALE.md)
+_NO_DATA_BATCHES = "spark.sql.streaming.noDataMicroBatches.enabled"
 
 # Pipeline tuning: one value per pipeline, not a per-call option. The
 # registry's oracle SQL hard-codes the same windows, gaps and cuts, so
@@ -369,7 +376,8 @@ def _sink(sink_dir: str | None, *keys: str) -> IdempotentKeyedSink:
 
 def _drain(result: DataFrame, sink: IdempotentKeyedSink,
            checkpoint_dir: str | None, output_mode: str = "append",
-           batch_fn=None) -> IdempotentKeyedSink:
+           batch_fn=None, waits_on_watermark: bool = True
+           ) -> IdempotentKeyedSink:
     """Start → drain (availableNow) → clean up — THE one
     run-and-cleanup dance for every foreachBatch pipeline. Returns
     ``sink`` for the caller's read; the caller builds it because the
@@ -383,11 +391,19 @@ def _drain(result: DataFrame, sink: IdempotentKeyedSink,
     checkpoint and can never change across a resume — pinning here
     keeps every pipeline and every resume on one constant instead of
     inheriting whatever the ambient session uses; it also cuts
-    state-store commit fan-out ~4x at oracle scale). The ambient value
-    is restored for the caller's batch plans."""
+    state-store commit fan-out ~4x at oracle scale). Spark's trailing
+    no-data batch is scoped the same way, from ``waits_on_watermark``:
+    on, it is the flush that advances the watermark past every window,
+    join buffer, dedup key and timeout; off, the drain ends with its
+    last data batch and expired state is evicted by the next data
+    batch (a resume's). Both ambient values are restored for the
+    caller's batch plans."""
     spark = result.sparkSession
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(STATE_PARTITIONS))
+    scoped = {"spark.sql.shuffle.partitions": str(STATE_PARTITIONS),
+              _NO_DATA_BATCHES: str(waits_on_watermark).lower()}
+    ambient = {k: spark.conf.get(k) for k in scoped}
+    for k, v in scoped.items():
+        spark.conf.set(k, v)
     try:
         q = (
             result.writeStream
@@ -400,7 +416,8 @@ def _drain(result: DataFrame, sink: IdempotentKeyedSink,
         )
         q.awaitTermination()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+        for k, v in ambient.items():
+            spark.conf.set(k, v)
     return sink
 
 
@@ -603,6 +620,10 @@ class _Row:
     output_mode: str
     fold: Callable | None  # (sink table, a) -> result; None = the table
     gears: tuple  # stage sub-directories read as ONE unioned stream
+    # a result row waits for the watermark to pass (window close, join
+    # or dedup expiry, timeout audit): the drain runs Spark's trailing
+    # no-data batch, the flush
+    waits_on_watermark: bool
 
 
 def run(row: _Row, spark: SparkSession, sf_dir: str,
@@ -621,7 +642,8 @@ def run(row: _Row, spark: SparkSession, sf_dir: str,
         read_token_stream(spark, d, options.get("files_per_trigger"),
                           schema=row.schema) for d in dirs])
     sink = _drain(row.build(src, a), _sink(sink_dir, *row.keys),
-                  checkpoint_dir, row.output_mode)
+                  checkpoint_dir, row.output_mode,
+                  waits_on_watermark=row.waits_on_watermark)
     out = sink.read(spark)
     return out if row.fold is None else row.fold(out, a)
 
@@ -629,15 +651,16 @@ def run(row: _Row, spark: SparkSession, sf_dir: str,
 def _runner(*keys: str, variant: str = "base",
             schema: StructType | None = None,
             output_mode: str = "append", fold: Callable | None = None,
-            gears: tuple = (), **options):
+            gears: tuple = (), waits_on_watermark: bool = True, **options):
     """Declare one table row. The decorated function is the row's plan
     builder ``(src, a) -> plan``; the name it defines becomes the runner
     ``(spark, sf_dir, stage_dir=None, sink_dir=None,
     checkpoint_dir=None, **options)`` over ``run``, with the builder's
-    name and docstring. ``options`` are the runner's own keywords with
-    their defaults."""
+    name and docstring and the row as its ``row``. ``options`` are the
+    runner's own keywords with their defaults."""
     def make(build: Callable) -> Callable:
-        row = _Row(build, keys, variant, schema, output_mode, fold, gears)
+        row = _Row(build, keys, variant, schema, output_mode, fold, gears,
+                   waits_on_watermark)
         req = inspect.Parameter.empty
         sig = inspect.Signature([
             inspect.Parameter(name, inspect.Parameter.POSITIONAL_OR_KEYWORD,
@@ -654,6 +677,7 @@ def _runner(*keys: str, variant: str = "base",
 
         functools.update_wrapper(runner, build)
         runner.__signature__ = sig
+        runner.row = row
         return runner
     return make
 
@@ -982,17 +1006,19 @@ def run_streaming_events(src, a):
         F.col("w.start") < flush_cut)
 
 
-@_runner("ws", "source", variant="nosentinel", output_mode="update")
+@_runner("ws", "source", variant="nosentinel", output_mode="update",
+         waits_on_watermark=False)
 def run_streaming_update_mode(src, a):
     """Update-mode tumbling aggregate through the keyed upsert sink: each
     trigger emits the CURRENT value of every changed window and the sink's
     max-epoch-per-key read resolves to the latest — the MERGE-upsert
     pattern (vs append mode's emit-once-on-watermark-close). No flush
-    sentinel is needed: results don't wait on the watermark, late
-    refinements simply supersede. The trade at scale: update mode
-    re-emits hot windows every trigger (more sink I/O), append emits
-    exactly once per window (more latency) — both end states are
-    oracle-equal, which this query proves."""
+    sentinel and no no-data batch are needed: results don't wait on the
+    watermark (eviction emits nothing), late refinements simply
+    supersede. The trade at scale: update mode re-emits hot windows
+    every trigger (more sink I/O), append emits exactly once per window
+    (more latency) — both end states are oracle-equal, which this query
+    proves."""
     return _window_agg(src.withWatermark("ts", WATERMARK),
                        F.window("ts", WIDTH), ["source"], _seq_totals(), None)
 
@@ -1078,10 +1104,14 @@ def run_streaming_ordered_merge(spark: SparkSession, sf_dir: str,
                   checkpoint_dir=checkpoint_dir)
 
 
-@_runner("doc_id", fold=lambda out, a: _merged_docs(out))
+@_runner("doc_id", fold=lambda out, a: _merged_docs(out),
+         waits_on_watermark=False)
 def _ordered_merge_python(src, a):
     """run_streaming_ordered_merge's mode="python" path: the
-    stateful-Python emit-on-complete assembler."""
+    stateful-Python emit-on-complete assembler. A doc emits the moment
+    its last shard arrives and its timeout emits nothing, so the drain
+    runs no trailing no-data batch: completed-doc markers expire in the
+    next data batch instead."""
     return _assembled(src)
 
 
@@ -1253,7 +1283,9 @@ def run_streaming_incomplete_audit(src, a):
     actually received, shards expected — instead of silently removing
     state. Complete docs still emit merged (and are discarded here);
     the query's result is exactly the incomplete set, which the oracle
-    derives arithmetically from the drop rule.
+    derives arithmetically from the drop rule. The audit rows come from
+    the timeout, so this row waits on the watermark (its drain keeps
+    the trailing no-data batch).
     """
     return _assembled(src, emit_incomplete=True)
 

@@ -6,9 +6,11 @@ north rule's checkpoint-resume and watermark-late-drop requirements.
 """
 
 import functools
+import json
 import os
 import shutil
 import tempfile
+import time
 import uuid
 
 import pandas as pd
@@ -87,17 +89,158 @@ def test_checkpoint_resume_mid_stream(spark, sf_dir):
 
 
 @pytest.mark.parametrize("runner", [
-    "run_streaming_tumbling", "run_streaming_dedup_join_window"])
+    "run_streaming_tumbling", "run_streaming_dedup_join_window",
+    "run_streaming_incomplete_audit"])
 def test_unpinned_drain_commits_two_batches(spark, sf_dir, runner):
     """An unpinned read takes every staged file (data and both
-    sentinels) in batch 0; Spark's trailing no-data batch is the flush.
-    No third batch spent on the last sentinel file."""
+    sentinels) in batch 0; for a row whose results wait on the
+    watermark (window close, join/dedup expiry, timeout audit) Spark's
+    trailing no-data batch is the flush. No third batch spent on the
+    last sentinel file."""
     from movement_spark.streaming import pipeline
 
     ck = _mkdir()
     getattr(pipeline, runner)(spark, sf_dir, sink_dir=_mkdir(),
                               checkpoint_dir=ck)
     assert _committed_batches(ck) == 2
+
+
+@pytest.mark.parametrize("runner,options", [
+    ("run_streaming_ordered_merge", {"mode": "python"}),
+    ("run_streaming_update_mode", {}),
+])
+def test_drain_without_watermark_wait_commits_one_batch(spark, sf_dir,
+                                                         runner, options):
+    """Rows whose results never wait on the watermark (the
+    emit-on-complete assembler, update mode) drain in their one data
+    batch: no trailing no-data batch that only advances the watermark
+    to evict state."""
+    from movement_spark.streaming import pipeline
+
+    ck = _mkdir()
+    out = getattr(pipeline, runner)(spark, sf_dir, sink_dir=_mkdir(),
+                                    checkpoint_dir=ck, **options)
+    assert out.count() > 0
+    assert _committed_batches(ck) == 1
+
+
+_NO_DATA = "spark.sql.streaming.noDataMicroBatches.enabled"
+_PARTS = "spark.sql.shuffle.partitions"
+
+
+@pytest.fixture
+def ambient_confs(spark):
+    """Set the two confs ``_drain`` scopes to ambient values of the
+    test's choosing; put the session's own back afterwards."""
+    before = {k: spark.conf.get(k) for k in (_NO_DATA, _PARTS)}
+
+    def set_ambient(no_data, parts):
+        spark.conf.set(_NO_DATA, no_data)
+        spark.conf.set(_PARTS, parts)
+    yield set_ambient
+    for k, v in before.items():
+        spark.conf.set(k, v)
+
+
+def test_ambient_no_data_off_keeps_the_flush(spark, sf_dir, ambient_confs):
+    """``_drain`` sets the trailing no-data batch per row: an ambient
+    ``noDataMicroBatches.enabled=false`` must not cost a row that waits
+    on the watermark its flush (it would silently emit nothing), and
+    both scoped confs are back at their ambient values afterwards."""
+    from movement_spark.streaming.pipeline import (
+        run_streaming_dedup_join_window)
+
+    ambient_confs(no_data="false", parts="5")
+    # the full results at sf0.001 (the conf on)
+    for runner, rows in [(run_streaming_tumbling, 233),
+                         (run_streaming_dedup_join_window, 12)]:
+        ck = _mkdir()
+        out = runner(spark, sf_dir, sink_dir=_mkdir(), checkpoint_dir=ck)
+        assert out.count() == rows
+        assert _committed_batches(ck) == 2
+        assert spark.conf.get(_NO_DATA) == "false"
+        assert spark.conf.get(_PARTS) == "5"
+
+
+def test_drain_restores_scoped_confs_when_batch_fails(spark, sf_dir,
+                                                      ambient_confs):
+    """A drain whose foreachBatch raises still restores both ambient
+    values; inside the query the row's values were in force."""
+    from pyspark.errors import StreamingQueryException
+    from movement_spark.streaming.pipeline import (
+        STATE_PARTITIONS, _drain, _sink)
+
+    stage = _mkdir()
+    _write_chunk(stage, 0, [("d1", 0, [1], 1, "s0", _ts(0), 1)],
+                 time.time())
+    ambient_confs(no_data="true", parts="5")
+    seen = {}
+
+    def fail(batch, epoch_id):
+        conf = batch.sparkSession.conf
+        seen.update({k: conf.get(k) for k in (_NO_DATA, _PARTS)})
+        raise RuntimeError("batch write failed")
+
+    with pytest.raises(StreamingQueryException, match="batch write failed"):
+        _drain(read_token_stream(spark, stage), _sink(None, "doc_id"),
+               _mkdir(), batch_fn=fail, waits_on_watermark=False)
+    assert seen == {_NO_DATA: "false", _PARTS: str(STATE_PARTITIONS)}
+    assert spark.conf.get(_NO_DATA) == "true"
+    assert spark.conf.get(_PARTS) == "5"
+
+
+def _watermark_ms(ck, batch_id):
+    """``batchWatermarkMs`` of one micro-batch's offset log entry."""
+    with open(os.path.join(ck, "offsets", str(batch_id))) as f:
+        return json.loads(f.read().splitlines()[1])["batchWatermarkMs"]
+
+
+def _max_ts_ms(stage_dir):
+    """Max event time over every staged file, in epoch ms."""
+    return max(
+        pq.read_table(os.path.join(stage_dir, f), columns=["ts"])
+        .column("ts").to_pandas().max() for f in os.listdir(stage_dir)
+    ).value // 1_000_000
+
+
+def test_emit_on_complete_defers_eviction_to_next_data_batch(spark, sf_dir):
+    """The Python assembler's drain runs no trailing no-data batch, so
+    after a full stage (sentinels included) every completed-doc marker
+    is still in state; the next resume's DATA batch evicts them. Each
+    resume's batch carries the watermark of the batches before it
+    (event-time max minus WATERMARK, across the restart), so late drops
+    are those of a drain that ran the no-data batch."""
+    from movement_spark.operators.ordering import WATERMARK
+    from movement_spark.sources.tokens import TS_MOD
+    from movement_spark.streaming.pipeline import run_streaming_ordered_merge
+
+    stage, ck = _mkdir(), _mkdir()
+    stage_token_stream(spark, sf_dir, stage)
+    run = functools.partial(
+        run_streaming_ordered_merge, spark, sf_dir, stage_dir=stage,
+        sink_dir=_mkdir(), checkpoint_dir=ck, mode="python")
+    delay_ms = pd.Timedelta(WATERMARK) // pd.Timedelta(milliseconds=1)
+    n_docs = token_sequences(spark, sf_dir).select("doc_id").distinct() \
+        .count()
+    with listening(spark) as drain:
+        run()
+    # one marker per completed doc, plus the sentinel doc's
+    assert [r.state_rows for r in drain.records] == [n_docs + 1]
+    for k in (1, 2):
+        prev_max = _max_ts_ms(stage)
+        # one single-shard doc two hours of event time after the last
+        sec = TS_MOD + 7200 * (k + 1)
+        _write_chunk(stage, 9000 + k, [(f"live{k}", 0, [1, 2], 2, "s0",
+                                        _ts(sec), 1)], time.time() + k)
+        with listening(spark) as resume:
+            run()
+        assert len(resume.records) == 1
+        assert _committed_batches(ck) == 1 + k
+        assert _watermark_ms(ck, k) == prev_max - delay_ms
+        if k == 1:
+            # the data batch evicted every doc's marker; the sentinel's
+            # (its timeout lies beyond this watermark) and live1's remain
+            assert resume.records[0].state_rows == 2
 
 
 @pytest.mark.parametrize("runner,options,variant", [
@@ -107,9 +250,12 @@ def test_unpinned_drain_commits_two_batches(spark, sf_dir, runner):
 def test_resumed_batch_flushes_chained_state(spark, sf_dir, runner,
                                              options, variant):
     """Chained stateful operators (dedup → join → window; the Python
-    emit-on-complete assembler) flushed by ONE trailing no-data batch:
-    half the chunks, then a resume whose single batch holds the rest
-    plus both sentinels, must equal a one-shot drain of the full stage."""
+    emit-on-complete assembler): half the chunks, then a resume whose
+    single data batch holds the rest plus both sentinels, must equal a
+    one-shot drain of the full stage. The trailing no-data batch that
+    flushes is on exactly for rows whose results wait on the watermark,
+    set by ``_drain``: dedup → join → window gets it, the assembler
+    emits on completion without it."""
     from movement_spark.streaming import pipeline
 
     run = functools.partial(getattr(pipeline, runner), spark, sf_dir,
